@@ -63,9 +63,29 @@ CORE_QUERIES = [
 ]
 
 
+#: Marks the worker's result line: Spark or a library may print to stdout
+#: after it, so the orchestrator finds the line by prefix, not position.
+RESULT_PREFIX = "RESULT:"
+
+
+def _worker_result(stdout: str) -> dict:
+    """The JSON object on the worker's ``RESULT_PREFIX`` line."""
+    for line in stdout.splitlines():
+        if line.startswith(RESULT_PREFIX):
+            return json.loads(line[len(RESULT_PREFIX):])
+    raise RuntimeError(f"worker printed no {RESULT_PREFIX} line: {stdout[-500:]}")
+
+
+def _ratio(lo: float | None, hi: float | None) -> float | None:
+    """Low-over-high cpu time ratio; None when either side has no time."""
+    if lo is None or hi is None:
+        return None
+    return round(lo / hi, 3)
+
+
 def _worker(cpus: int, data_dir: str, queries: list[str], passes: int) -> None:
-    """Time every query at local[cpus] over ``data_dir``; print one JSON
-    line. Separate process per core count because master/static confs
+    """Time every query at local[cpus] over ``data_dir``; print one
+    ``RESULT_PREFIX`` JSON line. Separate process per core count because master/static confs
     bind at session creation."""
     from spark_jdbc_limit_spark import build_session
     from spark_jdbc_limit_spark.operators import REGISTRY
@@ -108,7 +128,7 @@ def _worker(cpus: int, data_dir: str, queries: list[str], passes: int) -> None:
             cur = times.get(name)
             times[name] = min(dt, cur) if cur is not None else dt
             print(f"# cpus={cpus} pass{pass_i + 1} {name}: {dt:.2f}s", file=sys.stderr)
-    print(json.dumps({"cpus": cpus, "times": times}))
+    print(RESULT_PREFIX + json.dumps({"cpus": cpus, "times": times}))
 
 
 def main() -> None:
@@ -173,7 +193,7 @@ def main() -> None:
         sys.stderr.write(proc.stderr)
         if proc.returncode != 0:
             raise RuntimeError(f"worker cpus={cpus} failed: {proc.stdout[-500:]}")
-        row = json.loads(proc.stdout.strip().splitlines()[-1])
+        row = _worker_result(proc.stdout)
         cur = per_cpus.setdefault(cpus, {})
         for name, t in row["times"].items():
             cur[name] = min(t, cur[name]) if name in cur else t
@@ -189,11 +209,7 @@ def main() -> None:
         "queries": {
             name: {
                 **{f"t_{c}cpus": per_cpus[c].get(name) for c in cpus_list},
-                "ratio": (
-                    round(per_cpus[lo][name] / per_cpus[hi][name], 3)
-                    if per_cpus[hi].get(name)
-                    else None
-                ),
+                "ratio": _ratio(per_cpus[lo].get(name), per_cpus[hi].get(name)),
             }
             for name in queries
         },

@@ -7,6 +7,8 @@ modules; ``all_queries()`` / ``all_oracles()`` back ``__spark_entry__.py``.
 
 from __future__ import annotations
 
+import functools
+
 from spark_jdbc_limit_spark.operators.registry import (
     QuerySpec,
     all_oracles,
@@ -350,6 +352,7 @@ _QUEUE_BEHIND = (
 _SAMPLE_WINDOW = 50
 
 
+@functools.cache
 def _changed_modules_since(round_: int) -> set[str] | None:
     """Repo-relative paths changed since round ``round_``'s boundary
     commit (subject ``round {N}: verdict/...``) — committed AND working
@@ -360,8 +363,6 @@ def _changed_modules_since(round_: int) -> set[str] | None:
     import subprocess
     import warnings
 
-    if round_ in _CHANGED_SINCE_CACHE:
-        return _CHANGED_SINCE_CACHE[round_]
     root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     changed: set[str] | None = None
     try:
@@ -395,13 +396,10 @@ def _changed_modules_since(round_: int) -> set[str] | None:
             RuntimeWarning,
             stacklevel=2,
         )
-    _CHANGED_SINCE_CACHE[round_] = changed
     return changed
 
 
-_CHANGED_SINCE_CACHE: dict[int, set[str] | None] = {}
-
-
+@functools.cache
 def _module_deps(mod_rel: str) -> frozenset[str]:
     """Repo-relative paths of the package modules ``mod_rel`` imports —
     the helper modules whose change must also churn-promote its entries
@@ -420,8 +418,6 @@ def _module_deps(mod_rel: str) -> frozenset[str]:
     import os
     import re
 
-    if mod_rel in _MODULE_DEPS_CACHE:
-        return _MODULE_DEPS_CACHE[mod_rel]
     root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     deps: set[str] = set()
     try:
@@ -432,12 +428,7 @@ def _module_deps(mod_rel: str) -> frozenset[str]:
     except OSError:
         pass
     deps.discard(mod_rel)
-    out = frozenset(deps)
-    _MODULE_DEPS_CACHE[mod_rel] = out
-    return out
-
-
-_MODULE_DEPS_CACHE: dict[str, frozenset[str]] = {}
+    return frozenset(deps)
 
 
 def _rotate_registry() -> None:

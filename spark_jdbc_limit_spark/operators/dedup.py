@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from spark_jdbc_limit_spark.operators.registry import query
 from spark_jdbc_limit_spark.operators.relational import round_dbl, sql_round_dbl
+from spark_jdbc_limit_spark.operators.reuse import memo
 from spark_jdbc_limit_spark.operators.text import FP_BASE, FP_MOD
 from spark_jdbc_limit_spark.sources.catalog import load_table
 
@@ -1617,11 +1618,6 @@ PREFIX_TAU = PREFIX_TAU_NUM / PREFIX_TAU_DEN
 #: shipped short-posting-list corpus (BASELINE_TOP20.json, round 10).
 PPJOIN_EXHAUSTIVE_R = 64.0
 
-#: memoized r per corpus (input-file set): the path decision is a data
-#: property, so the 1-row parameter fetch runs once per process, not
-#: once per build (the round-11 count-memoization discipline).
-_PPJOIN_R_CACHE: dict[tuple[str, ...], float | None] = {}
-
 
 @query(
     "dedup_jaccard_prefix_filter",
@@ -1717,18 +1713,9 @@ def dedup_jaccard_prefix_filter(
     sh = shingle_hashes(d).localCheckpoint(eager=False)
     freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("freq"))
     if path == "auto":
-        key = tuple(sorted(d.inputFiles()))
-        if key in _PPJOIN_R_CACHE:
-            r = _PPJOIN_R_CACHE[key]
-        else:
-            r = freq.agg(
-                (
-                    F.sum(F.col("freq").cast("double") * F.col("freq"))
-                    / F.sum("freq")
-                ).alias("r")
-            ).head().r
-            if key:
-                _PPJOIN_R_CACHE[key] = r
+        # r is a data property: one 1-row parameter fetch per corpus
+        r_col = (F.sum(F.col("freq").cast("double") * F.col("freq")) / F.sum("freq")).alias("r")
+        r = memo(spark, "ppjoin_posting_r", d, lambda: freq.agg(r_col).head().r)
         path = "exhaustive" if r is not None and r < PPJOIN_EXHAUSTIVE_R else "prefix"
     if path == "exhaustive":
         return _exhaustive_jaccard_pairs(sh, PREFIX_TAU)

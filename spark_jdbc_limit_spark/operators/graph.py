@@ -29,7 +29,6 @@ Scale design (the part that matters at 100 TB):
 
 from __future__ import annotations
 
-import weakref
 from collections.abc import Callable, Sequence
 from functools import reduce
 from operator import or_
@@ -39,6 +38,7 @@ from pyspark.sql import functions as F
 
 from spark_jdbc_limit_spark.operators.registry import query
 from spark_jdbc_limit_spark.operators.relational import round_dbl, sql_round_dbl
+from spark_jdbc_limit_spark.operators.reuse import memo
 from spark_jdbc_limit_spark.sources.catalog import load_table
 
 #: Keep the strongest co-occurrence pairs: weight >= the exact
@@ -66,64 +66,21 @@ TRIANGLE_MIN_W = 2
 #: a 100x/1000x edge set across the cluster.
 EDGE_ROWS_PER_PARTITION = 65536
 
-#: Edge-set cardinality per (session, input-file set): the right-sizing
-#: count is a property of the DATA, so one job per (session, corpus)
-#: suffices — a session that builds all 17 graph entries (pytest's schema
-#: scan, the bench's 3 reps) would otherwise re-run the count job per
-#: build. Keyed by SESSION, not just corpus: the count job is ALSO what
-#: materializes the ``pairs`` cache (see the coalesce-safety note in
-#: ``_supplier_edges``), and Spark's cached blocks live per-session — a
-#: process-wide memo would let a rebuilt session skip the count and hand
-#: ``_size_partitions`` a cold plan. A WeakKeyDictionary (round-12
-#: advice): a flat dict keyed by the session object would pin a strong
-#: reference to every session ever used, leaking stopped sessions (and
-#: their entries) in a long-lived process that rebuilds sessions.
-_EDGE_N_CACHE: "weakref.WeakKeyDictionary[object, dict[tuple[str, ...], int]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-#: Materialized (localCheckpointed) edge relation per (session, corpus)
-#: — optimization round 14, guide §5/§6. Every one of the 17 graph
-#: builders opened with ``_supplier_edges(...).localCheckpoint()``: the
-#: derivation's FACT-sized work was already absorbed by the ``pairs``
-#: cache + count memo above, but the checkpoint itself (cache scan,
-#: threshold broadcast, filter, coalesce, partition write) re-ran on
-#: every build — ~2 s warm at sf0.1, paid 17×(reps) times per bench
-#: session for a byte-identical deterministic relation. One shared
-#: checkpoint per (session, corpus) is what a production deployment does
-#: with a shared edge list (and what bench.py's pipeline_marginal rows
-#:  already measured as the honest shared posture). Memoized WEIGHTED:
-#: the unweighted view is a projection of the same checkpoint, so both
-#: consumer families share one materialization. Same WeakKeyDictionary
-#: discipline as _EDGE_N_CACHE (see its comment for the leak rationale).
-#: Nothing persists across processes: a fresh bench/oracle run derives
-#: everything from the parquet inputs, with the first graph build in a
-#: session paying the materialization inside its own timed region.
-_EDGE_CKPT_CACHE: "weakref.WeakKeyDictionary[object, dict[tuple[str, ...], DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def supplier_edges_ckpt(
     spark: SparkSession, sf_dir: str, keep_weight: bool = False
 ) -> DataFrame:
-    """The shared materialized supplier edge relation (see
-    ``_EDGE_CKPT_CACHE``): first call per (session, corpus) builds
-    ``_supplier_edges(keep_weight=True)`` and eagerly localCheckpoints
-    it; every later call — any graph entry, any rep — reuses the same
-    checkpointed micro relation. ``keep_weight=False`` drops ``w`` from
-    the same checkpoint, so weighted and unweighted consumers can never
-    disagree on the edge set (the original single-derivation guarantee,
-    now also a single MATERIALIZATION)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    corpus = tuple(sorted(li.inputFiles()))
-    per_session = _EDGE_CKPT_CACHE.setdefault(spark, {})
-    df = per_session.get(corpus) if corpus else None
-    if df is None:
-        df = _supplier_edges(spark, sf_dir, keep_weight=True).localCheckpoint()
-        if corpus:
-            per_session[corpus] = df
+    """The shared supplier edge relation, eagerly localCheckpointed once
+    per (session, corpus): every graph entry and rep reuses it instead of
+    re-running the checkpoint (~2 s warm at sf0.1 per build, optimization
+    round 14). ``keep_weight=False`` drops ``w`` from the same checkpoint,
+    so weighted and unweighted consumers can never disagree on the edge
+    set."""
+    df = memo(
+        spark,
+        "supplier_edges_ckpt",
+        load_table(spark, sf_dir, "lineitem"),
+        lambda: _supplier_edges(spark, sf_dir, keep_weight=True).localCheckpoint(),
+    )
     return df if keep_weight else df.drop("w")
 
 
@@ -206,20 +163,13 @@ def _supplier_edges(
     # stage boundary — executed cold, the fact-sized aggregation's merge
     # would run in as few as one task. That is safe here ONLY because the
     # count job below has already materialized the pairs cache in this
-    # same session (the memo key includes the session for exactly that
+    # same session (reuse.memo is keyed by session for exactly that
     # reason), so the coalesced stage reads warm cached blocks. Should the
     # cache ever be evicted under memory pressure, the recompute cost is
     # bounded: the map side still shuffles at full parallelism, and
     # n_parts itself grows with the edge set, so the merge serializes only
     # at scales where the relation is micro anyway.
-    corpus = tuple(sorted(li.inputFiles()))
-    per_session = _EDGE_N_CACHE.setdefault(spark, {})
-    n = per_session.get(corpus) if corpus else None
-    if n is None:
-        n = out.count()
-        if corpus:
-            per_session[corpus] = n
-    return _size_partitions(out, n)
+    return _size_partitions(out, memo(spark, "supplier_edge_count", li, out.count))
 
 
 #: Shared oracle fragment: the supplier co-order edge list (os -> pairs

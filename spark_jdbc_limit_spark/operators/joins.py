@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 from spark_jdbc_limit_spark.operators.asof import asof_join
 from spark_jdbc_limit_spark.operators.registry import query
 from spark_jdbc_limit_spark.operators.relational import dec_sum, sql_dec_sum
-from spark_jdbc_limit_spark.sources.catalog import load_table
+from spark_jdbc_limit_spark.operators.reuse import memo
+from spark_jdbc_limit_spark.sources.catalog import load_table, table_path
 
 
 @query(
@@ -470,14 +471,13 @@ def join_salted_replicated(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: sized so each bucket file lands near the 128-256 MB sweet spot.
 BUCKETS = 8
 
-_BUCKETED_READY: set[str] = set()
-
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize customer + orders as bucketed tables (bucket key =
     custkey, BUCKETS buckets, sorted within buckets) and return their
-    catalog names. Idempotent per (session, sf_dir): bench reps and
-    repeated driver calls reuse the first write.
+    catalog names. Written once per (session, input files): bench reps
+    and repeated calls reuse the first write, and a table dropped since
+    is written again.
 
     This is Spark's answer to the reference's partition-predicate scan
     splitting (reference: JDBCRDDWithLimit.scala:53-63): there the source
@@ -491,40 +491,36 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     # tag = basename + digest of the FULL path: two datasets that share a
     # basename (…/a/sf0.01 vs …/b/sf0.01) must never collide on table
-    # names, or the memo would serve one dataset's buckets for the other
+    # names, or one dataset's buckets would be served for the other
     digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     base_name = "".join(
         ch if ch.isalnum() else "_" for ch in sf_dir.strip("/").split("/")[-1]
     )
     tag = f"{base_name}_{digest}"
     cust_tbl, ord_tbl = f"sjl_bucketed_customer_{tag}", f"sjl_bucketed_orders_{tag}"
-    key = sf_dir
-    if (
-        key in _BUCKETED_READY
-        and spark.catalog.tableExists(cust_tbl)
-        and spark.catalog.tableExists(ord_tbl)
-    ):
-        return cust_tbl, ord_tbl
-    base = f"/tmp/sjl_bucketed/{tag}"
-    (
-        load_table(spark, sf_dir, "customer")
-        .write.format("parquet")
-        .bucketBy(BUCKETS, "c_custkey")
-        .sortBy("c_custkey")
-        .option("path", f"{base}/customer")
-        .mode("overwrite")
-        .saveAsTable(cust_tbl)
+
+    layout = (("customer", "c_custkey", cust_tbl), ("orders", "o_custkey", ord_tbl))
+
+    def write() -> None:
+        for name, key, tbl in layout:
+            (
+                load_table(spark, sf_dir, name)
+                .write.format("parquet")
+                .bucketBy(BUCKETS, key)
+                .sortBy(key)
+                .option("path", f"/tmp/sjl_bucketed/{tag}/{name}")
+                .mode("overwrite")
+                .saveAsTable(tbl)
+            )
+
+    # A binaryFile frame names both input files without the schema-
+    # inference job a parquet read launches on every call.
+    inputs = spark.read.format("binaryFile").load(
+        [table_path(sf_dir, name) for name, _, _ in layout]
     )
-    (
-        load_table(spark, sf_dir, "orders")
-        .write.format("parquet")
-        .bucketBy(BUCKETS, "o_custkey")
-        .sortBy("o_custkey")
-        .option("path", f"{base}/orders")
-        .mode("overwrite")
-        .saveAsTable(ord_tbl)
-    )
-    _BUCKETED_READY.add(key)
+    memo(spark, "bucketed_tables", inputs, write)
+    if not (spark.catalog.tableExists(cust_tbl) and spark.catalog.tableExists(ord_tbl)):
+        write()
     return cust_tbl, ord_tbl
 
 

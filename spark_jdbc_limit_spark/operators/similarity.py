@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from spark_jdbc_limit_spark.operators.registry import query
 from spark_jdbc_limit_spark.operators.relational import round_dbl, sql_round_dbl
+from spark_jdbc_limit_spark.operators.reuse import memo
 from spark_jdbc_limit_spark.sources.catalog import load_table
 
 EMB_DIM = 64
@@ -228,11 +229,6 @@ IVF_NPROBE = 4
 
 _KMEANS_SEED = 42
 _KMEANS_MAX_ITER = 20
-#: fitted centroid matrices keyed by the dataset's input files — the
-#: "fit once, broadcast" posture: at 100 TB the quantizer is trained
-#: offline (optionally on a sample) and only the (k, dim) float matrix
-#: ships with the query, never the training job.
-_IVF_CENTROID_CACHE: dict[tuple[tuple[str, ...], int], np.ndarray] = {}
 
 
 def fit_ivf_centroids(embeddings: DataFrame, k: int = IVF_CENTROIDS) -> np.ndarray:
@@ -240,36 +236,33 @@ def fit_ivf_centroids(embeddings: DataFrame, k: int = IVF_CENTROIDS) -> np.ndarr
     L2-normalized vectors (spherical k-means — Euclidean distance on unit
     vectors is monotone in cosine, matching the cosine assignment below).
     Fixed seed → reproducible centers for a given dataset. Returns the
-    (k, dim) centroid matrix, cached per (input-file set, k) so repeated
-    queries reuse one fit. ``k`` defaults to the module's fixed
-    IVF_CENTROIDS; the kNN-join scale path passes a corpus-derived count
-    so cell SIZE stays bounded as the corpus grows."""
-    key = (tuple(sorted(embeddings.inputFiles())), k)
-    cached = _IVF_CENTROID_CACHE.get(key) if key[0] else None
-    if cached is not None:
-        return cached
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    (k, dim) centroid matrix, memoized per (input files, k): at 100 TB the
+    quantizer is trained offline and only the matrix ships with queries.
+    ``k`` defaults to the module's fixed IVF_CENTROIDS; the kNN-join scale
+    path passes a corpus-derived count so cell SIZE stays bounded."""
 
-    v = _as_double(F.col("embedding"))
+    def fit() -> np.ndarray:
+        from pyspark.ml.clustering import KMeans
+        from pyspark.ml.functions import array_to_vector
 
-    # L2-normalize in ONE Arrow-batched numpy pass. The column-expression
-    # form `transform(v, x -> x / norm(v))` is the expression-re-evaluation
-    # trap text.grams3 documents: CollapseProject inlines a single-use
-    # `norm(v)` alias into the lambda, where it re-runs the O(d) aggregate
-    # per ELEMENT — O(d²) per row over the whole training input.
-    @F.pandas_udf("array<double>")
-    def unit_udf(emb: pd.Series) -> pd.Series:
-        m = np.stack(emb.to_numpy()).astype(np.float64)
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        return pd.Series(list(m))
+        # L2-normalize in ONE Arrow-batched numpy pass. The column-
+        # expression form `transform(v, x -> x / norm(v))` is the
+        # expression-re-evaluation trap text.grams3 documents:
+        # CollapseProject inlines a single-use `norm(v)` alias into the
+        # lambda, where it re-runs the O(d) aggregate per ELEMENT — O(d²)
+        # per row over the whole training input.
+        @F.pandas_udf("array<double>")
+        def unit_udf(emb: pd.Series) -> pd.Series:
+            m = np.stack(emb.to_numpy()).astype(np.float64)
+            m /= np.linalg.norm(m, axis=1, keepdims=True)
+            return pd.Series(list(m))
 
-    unit = embeddings.select(array_to_vector(unit_udf(v)).alias("features"))
-    model = KMeans(k=k, seed=_KMEANS_SEED, maxIter=_KMEANS_MAX_ITER).fit(unit)
-    centers = np.stack([np.asarray(c, dtype=np.float64) for c in model.clusterCenters()])
-    if key[0]:
-        _IVF_CENTROID_CACHE[key] = centers
-    return centers
+        v = _as_double(F.col("embedding"))
+        unit = embeddings.select(array_to_vector(unit_udf(v)).alias("features"))
+        model = KMeans(k=k, seed=_KMEANS_SEED, maxIter=_KMEANS_MAX_ITER).fit(unit)
+        return np.stack([np.asarray(c, dtype=np.float64) for c in model.clusterCenters()])
+
+    return memo(embeddings.sparkSession, ("ivf_centroids", k), embeddings, fit)
 
 
 def ivf_assignments(embeddings: DataFrame) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
@@ -466,8 +459,6 @@ PQ_K = 16  #: codes per subspace → 4 bits/subspace, 8 bytes/vector total
 PQ_SAMPLE = 2048  #: training sample size for the codebooks
 PQ_ADC_CANDIDATES = 50  #: ADC shortlist size fed to the exact reranker
 
-_PQ_CODEBOOK_CACHE: dict[tuple[str, ...], np.ndarray] = {}
-
 
 def fit_pq_codebooks(embeddings: DataFrame) -> np.ndarray:
     """Product-quantization codebooks: per-subspace Lloyd's k-means over a
@@ -479,41 +470,39 @@ def fit_pq_codebooks(embeddings: DataFrame) -> np.ndarray:
     (M, K, dim/M) codebook tensor — 4 KB here — ships with queries. The
     hash ordering (xxhash64 of vec_id) makes the sample reproducible and
     unbiased by file layout. Returns codebooks shaped (PQ_M, PQ_K, sub)."""
-    key = tuple(sorted(embeddings.inputFiles()))
-    cached = _PQ_CODEBOOK_CACHE.get(key) if key else None
-    if cached is not None:
-        return cached
-    rows = (
-        embeddings.select("vec_id", "embedding")
-        .orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(PQ_SAMPLE)
-        .collect()
-    )
-    X = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-    X /= np.linalg.norm(X, axis=1, keepdims=True)
-    sub_dim = EMB_DIM // PQ_M
-    rng = np.random.default_rng(_KMEANS_SEED)
-    books = np.empty((PQ_M, PQ_K, sub_dim))
-    for m in range(PQ_M):
-        sub = X[:, m * sub_dim : (m + 1) * sub_dim]
-        centers = sub[rng.choice(len(sub), PQ_K, replace=False)].copy()
-        for _ in range(_KMEANS_MAX_ITER):
-            d2 = ((sub[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            moved = False
-            for c in range(PQ_K):
-                pts = sub[assign == c]
-                if len(pts):
-                    nc = pts.mean(axis=0)
-                    if not np.allclose(nc, centers[c]):
-                        centers[c] = nc
-                        moved = True
-            if not moved:
-                break
-        books[m] = centers
-    if key:
-        _PQ_CODEBOOK_CACHE[key] = books
-    return books
+
+    def fit() -> np.ndarray:
+        rows = (
+            embeddings.select("vec_id", "embedding")
+            .orderBy(F.xxhash64("vec_id"), "vec_id")
+            .limit(PQ_SAMPLE)
+            .collect()
+        )
+        X = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
+        X /= np.linalg.norm(X, axis=1, keepdims=True)
+        sub_dim = EMB_DIM // PQ_M
+        rng = np.random.default_rng(_KMEANS_SEED)
+        books = np.empty((PQ_M, PQ_K, sub_dim))
+        for m in range(PQ_M):
+            sub = X[:, m * sub_dim : (m + 1) * sub_dim]
+            centers = sub[rng.choice(len(sub), PQ_K, replace=False)].copy()
+            for _ in range(_KMEANS_MAX_ITER):
+                d2 = ((sub[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
+                assign = d2.argmin(axis=1)
+                moved = False
+                for c in range(PQ_K):
+                    pts = sub[assign == c]
+                    if len(pts):
+                        nc = pts.mean(axis=0)
+                        if not np.allclose(nc, centers[c]):
+                            centers[c] = nc
+                            moved = True
+                if not moved:
+                    break
+            books[m] = centers
+        return books
+
+    return memo(embeddings.sparkSession, "pq_codebooks", embeddings, fit)
 
 
 #: minimum |PQ-top-k ∩ exact-top-k| for the in-query recall boolean.
@@ -1201,20 +1190,9 @@ KNN_NPROBE = 4
 #: chunk × |cell| floats regardless of how uneven k-means cells get.
 _KNN_GEMM_CHUNK = 2048
 
-#: corpus cardinality per input-file set — the cost-switch count is a
-#: data property; memoize so repeated builds (schema scans, bench reps)
-#: pay the job once per process.
-_EMB_N_CACHE: dict[tuple[str, ...], int] = {}
-
-
 def _emb_count(e: DataFrame) -> int:
-    key = tuple(sorted(e.inputFiles()))
-    n = _EMB_N_CACHE.get(key) if key else None
-    if n is None:
-        n = e.count()
-        if key:
-            _EMB_N_CACHE[key] = n
-    return n
+    """Corpus cardinality for the kNN cost switch: one count job per corpus."""
+    return memo(e.sparkSession, "emb_count", e, e.count)
 
 
 def _gemm_block_topk(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:

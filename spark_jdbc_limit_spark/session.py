@@ -35,17 +35,15 @@ def build_session(
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     if shuffle_partitions is None:
         shuffle_partitions = cpus
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.driver.memory": driver_memory or os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.ui.enabled": "false",
         # Generated-class cache sized for a multi-query application. The
         # default (100 classes, LRU) is far below what a session running
         # this engine's full registry generates per pass, so under the
@@ -56,33 +54,28 @@ def build_session(
         # data-scale-dependent: the same value is right on a cluster
         # (the cache is per-JVM and generated classes are a few KB).
         # Static conf — applies only at session creation.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            str(_codegen_cache_entries()),
-        )
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+        "spark.sql.codegen.cache.maxEntries": str(_codegen_cache_entries()),
+        **(extra_conf or {}),
+    }
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
+    spark = builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # getOrCreate() silently reuses an existing session, in which case the
     # static codegen-cache conf above is ignored (Spark only logs a JVM
     # warning). Surface that: a caller embedding build_session after
     # another session exists should see the under-sized cache instead of
     # silently re-paying Janino+JIT per query (ADVICE r14).
-    try:
-        actual = spark.conf.get("spark.sql.codegen.cache.maxEntries")
-    except Exception:
-        actual = None
-    if actual is not None and int(actual) != _codegen_cache_entries():
+    actual = spark.conf.get("spark.sql.codegen.cache.maxEntries", None)
+    requested = int(conf["spark.sql.codegen.cache.maxEntries"])
+    if actual is not None and int(actual) != requested:
         import warnings
 
         warnings.warn(
             "build_session: getOrCreate() reused an existing SparkSession "
             f"whose spark.sql.codegen.cache.maxEntries={actual} differs from "
-            f"the requested {_codegen_cache_entries()}; static confs cannot "
-            "change on a live session — repeated multi-query workloads will "
-            "re-pay codegen compilation (see OPTIMIZATION_r14.md #15)",
+            f"the requested {requested}; static confs cannot change on a "
+            "live session — repeated multi-query workloads will re-pay "
+            "codegen compilation (see OPTIMIZATION_r14.md #15)",
             RuntimeWarning,
             stacklevel=2,
         )

@@ -579,21 +579,54 @@ def test_knn_join_ivf_partial_probe_recall(spark, sf_correct, monkeypatch):
     recall ~0.5 of top-5). Also pins the auto switch itself: with the
     brute bound forced to 0 the auto path must produce the forced-ivf
     output, proving dispatch actually flips past the pair bound."""
+    from spark_jdbc_limit_spark.operators import reuse
     from spark_jdbc_limit_spark.operators import similarity as S
+    from spark_jdbc_limit_spark.sources.catalog import load_table
 
     monkeypatch.setattr(S, "KNN_CELL_TARGET", 64)
-    S._IVF_CENTROID_CACHE.clear()
-    try:
-        exact = _knn_rows(S.knn_join_frame(spark, sf_correct, path="brute"))
-        approx = _knn_rows(S.knn_join_frame(spark, sf_correct, path="ivf"))
-        e_pairs = {(q, n) for q, n, _, _ in exact}
-        a_pairs = {(q, n) for q, n, _, _ in approx}
-        recall = len(e_pairs & a_pairs) / len(e_pairs)
-        assert recall >= 0.6, f"partial-probe recall {recall:.3f} < 0.6"
-        monkeypatch.setattr(S, "KNN_BRUTE_MAX_PAIRS", 0)
-        assert _knn_rows(S.knn_join_frame(spark, sf_correct, path="auto")) == approx
-    finally:
-        S._IVF_CENTROID_CACHE.clear()
+    exact = _knn_rows(S.knn_join_frame(spark, sf_correct, path="brute"))
+    approx = _knn_rows(S.knn_join_frame(spark, sf_correct, path="ivf"))
+    e_pairs = {(q, n) for q, n, _, _ in exact}
+    a_pairs = {(q, n) for q, n, _, _ in approx}
+    recall = len(e_pairs & a_pairs) / len(e_pairs)
+    assert recall >= 0.6, f"partial-probe recall {recall:.3f} < 0.6"
+    # the centroid memo is keyed by the cell count, so the forced target
+    # has its own fitted quantizer, and the auto path reuses that fit
+    n = S._emb_count(load_table(spark, sf_correct, "embeddings"))
+    kind = ("ivf_centroids", -(-n // 64))
+    assert reuse.misses[kind] >= 1
+    hits = reuse.hits[kind]
+    monkeypatch.setattr(S, "KNN_BRUTE_MAX_PAIRS", 0)
+    assert _knn_rows(S.knn_join_frame(spark, sf_correct, path="auto")) == approx
+    assert reuse.hits[kind] == hits + 1
+
+
+def test_emb_count_sees_in_place_rewrite(spark, tmp_path):
+    """A parquet file rewritten in place under the same name must not get
+    the old memoized count back: the reuse layer's fingerprint (length,
+    modification time) changes, so the next call misses and recomputes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spark_jdbc_limit_spark.operators import reuse
+    from spark_jdbc_limit_spark.operators.similarity import _emb_count
+
+    path = str(tmp_path / "emb.parquet")
+
+    def write(n: int) -> None:
+        pq.write_table(
+            pa.table({"vec_id": list(range(n)), "embedding": [[0.5, 0.25]] * n}),
+            path,
+        )
+
+    write(10)
+    assert _emb_count(spark.read.parquet(path)) == 10
+    misses = reuse.misses["emb_count"]
+    assert _emb_count(spark.read.parquet(path)) == 10
+    assert reuse.misses["emb_count"] == misses
+    write(25)
+    assert _emb_count(spark.read.parquet(path)) == 25
+    assert reuse.misses["emb_count"] == misses + 1
 
 
 def test_image_dhash_clusters_match_exact_text_dups(spark, sf_large):

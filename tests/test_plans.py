@@ -1028,12 +1028,14 @@ def test_zorder_audit_fact_windows_are_bucketed(spark, sf_dir):
     bare ORDER BY window funnels 600k rows (or 100 TB) through one task
     per layout. The only unpartitioned windows allowed are the offset
     passes over the micro per-bucket count relations (they sit above an
-    aggregate)."""
+    aggregate). Inspects the entry's block summary without its final
+    lazy checkpoint, which would hide the pipeline from the plan."""
     import re
 
+    from spark_jdbc_limit_spark.operators.advanced import _zorder_block_summary
     from spark_jdbc_limit_spark.plans import plan_text
 
-    df = get_query("sort_zorder_skipping_audit").builder(spark, sf_dir)
+    df = _zorder_block_summary(spark, sf_dir, checkpoint=False)
     txt = plan_text(df, "extended")
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", txt)
     assert specs, "expected window specs in the z-order audit plan"

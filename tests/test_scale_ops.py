@@ -313,42 +313,48 @@ def test_size_partitions_grows_with_cardinality(spark):
 
 
 def test_edge_count_memoized_per_corpus(spark, sf_dir, sf_correct):
-    """The right-sizing count is memoized per (session, input-file set):
+    """The right-sizing count is memoized per (session, input files):
     repeated builds (pytest's registry-wide schema scan, bench reps) must
     not re-pay the count job, two SF dirs must not share an entry, and the
     key must carry the session (the count job is what materializes the
     per-session pairs cache that makes the downstream coalesce safe)."""
-    from spark_jdbc_limit_spark.operators.graph import (
-        _EDGE_N_CACHE,
-        _supplier_edges,
-    )
-
-    _supplier_edges(spark, sf_dir)
-    _supplier_edges(spark, sf_correct)
-    # round-12 advice: the cache is a WeakKeyDictionary keyed by the
-    # session (so stopped sessions and their entries are collectable),
-    # mapping corpus (input-file tuple) → count inside
-    per_session = _EDGE_N_CACHE[spark]
-    hits = [
-        v
-        for corpus, v in per_session.items()
-        if any(sf_dir in f for f in corpus)
-    ]
-    hits_c = [
-        v
-        for corpus, v in per_session.items()
-        if any(sf_correct in f for f in corpus)
-    ]
-    assert hits and hits_c and hits[0] != hits_c[0]
-    # a rebuild must reuse the cached count (same dict object, no growth)
-    n_before = len(per_session)
-    _supplier_edges(spark, sf_dir)
-    assert len(per_session) == n_before
-    # dead sessions must be collectable: the weak keying is the fix for
-    # the unbounded strong-ref growth a flat dict had
+    import gc
     import weakref
 
-    assert isinstance(_EDGE_N_CACHE, weakref.WeakKeyDictionary)
+    from pyspark.sql.session import _monkey_patch_RDD
+
+    from spark_jdbc_limit_spark.operators import reuse
+    from spark_jdbc_limit_spark.operators.graph import _supplier_edges
+    from spark_jdbc_limit_spark.sources.catalog import load_table
+
+    kind = "supplier_edge_count"
+    _supplier_edges(spark, sf_dir)
+    _supplier_edges(spark, sf_correct)
+
+    def cached(sf: str) -> int:
+        return reuse.memo(
+            spark, kind, load_table(spark, sf, "lineitem"),
+            lambda: pytest.fail(f"no memoized edge count for {sf}"),
+        )
+
+    # two corpora hold two entries, with their own counts
+    assert cached(sf_dir) != cached(sf_correct)
+    # a rebuild reuses the memoized count: a hit, no new miss
+    hits, misses = reuse.hits[kind], reuse.misses[kind]
+    _supplier_edges(spark, sf_dir)
+    assert (reuse.hits[kind], reuse.misses[kind]) == (hits + 1, misses)
+    # another session misses on the same corpus, and the memo must not
+    # keep that session alive once it is dropped
+    other = spark.newSession()
+    _supplier_edges(other, sf_dir)
+    assert reuse.misses[kind] == misses + 1
+    gone = weakref.ref(other)
+    del other
+    # PySpark binds RDD.toDF to the newest session: bind it back to the
+    # fixture's, so only the memo's weak key could still hold `other`
+    _monkey_patch_RDD(spark)
+    gc.collect()
+    assert gone() is None
 
 
 def test_rfm_scalable_twin_matches_ntile_exactly(spark, sf_correct):
@@ -613,7 +619,8 @@ def test_bench_vs_prev_norm_reads_committed_artifact():
     want = med / prev["anchor_factor"]
     assert abs(norm[name] - want) < 0.01
     # a cpus-mismatched call must disable the bar
-    assert _prev_bench_norm(prev.get("sf"), prev.get("cpus") + 1) == {}
+    if prev.get("cpus") is not None:
+        assert _prev_bench_norm(prev.get("sf"), prev["cpus"] + 1) == {}
     with pytest.warns(RuntimeWarning):
         assert _prev_bench_norm("no-such-sf", prev.get("cpus")) == {}
 
@@ -690,7 +697,7 @@ def test_rotation_churn_lookup_against_real_git():
     checkout without the boundary commit — never raise)."""
     import spark_jdbc_limit_spark.operators as ops
 
-    ops._CHANGED_SINCE_CACHE.clear()
+    ops._changed_modules_since.cache_clear()
     changed = ops._changed_modules_since(12)
     assert changed is None or all(
         p.startswith("spark_jdbc_limit_spark/") for p in changed
@@ -728,6 +735,26 @@ def test_bench_baseline_constants_frozen():
     assert 2.0 < ANCHOR_REF_SEC < 3.5
 
 
+def test_bench_cores_result_line_and_ratio():
+    """bench_cores.py finds the worker's result by its prefix, not as the
+    last stdout line, and a query timed on only one side has no ratio
+    (a missing time is None, never a crash)."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
+    from bench_cores import RESULT_PREFIX, _ratio, _worker_result
+
+    out = f'noise\n{RESULT_PREFIX}{{"cpus": 8, "times": {{"q": 1.5}}}}\ntrailing line\n'
+    assert _worker_result(out) == {"cpus": 8, "times": {"q": 1.5}}
+    with pytest.raises(RuntimeError):
+        _worker_result("no result here\n")
+    assert _ratio(3.0, 1.5) == 2.0
+    assert _ratio(None, 1.5) is None and _ratio(3.0, None) is None
+
+
 def test_codegen_class_cache_sized_for_registry(spark):
     """The session factory raises spark.sql.codegen.cache.maxEntries from
     Spark's default 100 (round-14 optimization #15): one registry pass
@@ -743,6 +770,30 @@ def test_codegen_class_cache_sized_for_registry(spark):
 
     expected = int(os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= expected
+
+
+def test_codegen_cache_warning_compares_requested_size(spark):
+    """A reused session asked for a different generated-class cache size
+    must warn: the check compares the live value with the size actually
+    requested (after the ``extra_conf`` override), not with the env
+    default. Same arguments as the session fixture, so no runtime conf
+    changes; only the static cache size differs."""
+    from spark_jdbc_limit_spark import build_session
+
+    live = int(spark.conf.get("spark.sql.codegen.cache.maxEntries"))
+    with pytest.warns(RuntimeWarning, match="codegen.cache.maxEntries"):
+        again = build_session(
+            app_name="tests",
+            cpus=8,
+            shuffle_partitions=8,
+            driver_memory="6g",
+            extra_conf={
+                "spark.sql.warehouse.dir": spark.conf.get("spark.sql.warehouse.dir"),
+                "spark.sql.codegen.cache.maxEntries": str(live // 2),
+            },
+        )
+    assert again is spark
+    assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) == live
 
 
 def test_equidepth_two_phase_cuts_exact(spark, sf_correct):
