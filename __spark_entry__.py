@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import rotation  # noqa: E402
 from spark_jdbc_limit_spark import operators  # noqa: E402
 from spark_jdbc_limit_spark.session import ship_package  # noqa: E402
 
@@ -36,12 +37,16 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
+    """One entry per implemented operator from SURVEY.md §2, in the
+    driver's sampling order (``rotation.order`` over the committed
+    CORRECTNESS round files and git history).
 
     Builders are wrapped so the package zip is shipped to executors before
     the first UDF runs — the driver may import this file from any cwd.
     """
-    return {name: _shipped(b) for name, b in operators.all_queries().items()}
+    latest, current = rotation.read_rounds()
+    names = rotation.order(operators.REGISTRY, latest, current, rotation.changed_since)
+    return {name: _shipped(operators.REGISTRY[name].builder) for name in names}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -633,11 +633,13 @@ def main() -> None:
         f.write("\n")
     # committed staleness artifact (round-10 verdict #8): how far behind
     # the stalest driver-green entry is, given the rotation's
-    # stalest-green-first ordering
-    from spark_jdbc_limit_spark.operators import rotation_stats
+    # stalest-green-first ordering. Computed before the file is opened,
+    # so a failure cannot leave the committed artifact truncated
+    from rotation import rotation_stats
 
+    stats = rotation_stats()
     with open(os.path.join(here, "ROTATION.json"), "w") as f:
-        json.dump(rotation_stats(), f, indent=1)
+        json.dump(stats, f, indent=1)
         f.write("\n")
     # The grading driver keeps only the last 2000 chars of stdout; the full
     # 100-query timings dict overflows that and the line becomes

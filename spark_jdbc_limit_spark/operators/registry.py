@@ -10,13 +10,13 @@ so builders alias every computed column to the exact name used in the SQL.
 Approximate / non-relational operators (LSH bucketing, streaming state)
 register with ``oracle=None`` → the driver records a rows-only check.
 
-REGISTRY iteration order is a DRIVER-SAMPLING INTERFACE, not cosmetic: the
-grading driver samples the first ~50 entries each round, and
-``operators.__init__._rotate_registry`` reorders the dict at import so that
-never-driver-green queries (new additions, red-rowed fixes) sit at the
-front and already-green ones rotate to the back. Do not shuffle insertion
-order for style, and never bypass the rotation — pinned by
-tests/test_scale_ops.py::test_rotation_* .
+REGISTRY keeps registration (catalog) order, module by module in the
+order ``operators/__init__.py`` imports them. The grading driver samples
+the first ~50 entries of ``__spark_entry__.queries()`` each round; that
+order is computed from REGISTRY by the repo-root ``rotation.order``, so
+nothing reorders or refills REGISTRY after registration. That order still
+keeps registration order among unverified entries and breaks its ties, so
+do not shuffle insertion order for style.
 """
 
 from __future__ import annotations
@@ -63,10 +63,6 @@ def query(
         return fn
 
     return deco
-
-
-def all_queries() -> dict[str, Builder]:
-    return {name: spec.builder for name, spec in REGISTRY.items()}
 
 
 def all_oracles() -> dict[str, str]:

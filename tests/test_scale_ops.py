@@ -4,9 +4,13 @@ the value-hash differential alone wouldn't explain on failure."""
 
 from __future__ import annotations
 
+import dataclasses
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
+import rotation
 from spark_jdbc_limit_spark.operators import get_query
 
 
@@ -74,110 +78,140 @@ def test_scd2_intervals_tile_each_user_timeline(spark, sf_correct):
     assert same_neighbor == 0
 
 
-def test_rotation_moves_sampled_names_to_back(monkeypatch, tmp_path):
-    """The automatic correctness-sampling rotation must push every name
-    recorded in a CORRECTNESS_r*.json to the back of the registry and
-    keep never-sampled names (carried-over first, then _QUEUE_BEHIND
-    order) at the front — exercised against a synthetic round file so
-    the mechanism is pinned independently of the real repo history."""
-    import importlib
-    import json
+_GREEN = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
 
-    import spark_jdbc_limit_spark.operators as ops
 
-    names = list(ops.REGISTRY)
-    fake_sampled = names[:3] + names[-3:]
-    green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-    f = tmp_path / "CORRECTNESS_r99.json"
-    f.write_text(json.dumps({n: green for n in fake_sampled}))
+def _specs() -> dict:
+    """A copy of the live registry as ``rotation.order``'s input: tests
+    add synthetic entries to the copy, never to REGISTRY."""
+    from spark_jdbc_limit_spark.operators import REGISTRY
 
-    real_glob = importlib.import_module("glob").glob
-    monkeypatch.setattr(
-        "glob.glob", lambda pattern: [str(f)] if "CORRECTNESS_r" in pattern else real_glob(pattern)
+    return dict(REGISTRY)
+
+
+def _no_churn(module: str, round_: int) -> bool:
+    return False
+
+
+def _module_of(spec) -> str:
+    return spec.builder.__module__.replace(".", "/") + ".py"
+
+
+def test_import_has_no_side_effects():
+    """Importing the operator library reads no driver artifact and starts
+    no process: the sampling rotation's round files, ROTATION.json and
+    git history belong to ``__spark_entry__.queries()``, not to the
+    import. Observed with an audit hook in a fresh interpreter."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    code = textwrap.dedent(
+        """
+        import json, os, sys
+
+        events = []
+
+        def hook(event, args):
+            if event == "subprocess.Popen":
+                events.append([event, repr(args[1])])
+            elif event in ("open", "glob.glob") and isinstance(args[0], (str, bytes)):
+                base = os.path.basename(os.fsdecode(args[0]))
+                if base.startswith("CORRECTNESS_r") or base == "ROTATION.json":
+                    events.append([event, base])
+
+        sys.addaudithook(hook)
+        import spark_jdbc_limit_spark.operators
+        print(json.dumps(events))
+        """
     )
-    assert ops._driver_sampled_names() == set(fake_sampled)
-
-    before = dict(ops.REGISTRY)
-    try:
-        ops._rotate_registry()
-        rotated = list(ops.REGISTRY)
-        assert set(rotated) == set(names), "rotation must not drop entries"
-        assert rotated[-len(fake_sampled):] == [
-            n for n in rotated if n in set(fake_sampled)
-        ], "sampled names must all sit at the back"
-        assert all(n not in set(fake_sampled) for n in rotated[: len(rotated) - len(fake_sampled)])
-    finally:
-        ops.REGISTRY.clear()
-        ops.REGISTRY.update(before)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, timeout=300
+    )
+    assert res.returncode == 0, res.stderr
+    assert json.loads(res.stdout.splitlines()[-1]) == []
 
 
-def test_rotation_requeues_errored_and_stale_rows_only_records(monkeypatch, tmp_path):
-    """A CORRECTNESS record whose driver check CRASHED (non-null err other
-    than 'no_oracle') is unverified and must NOT count as sampled; a
-    rows-only 'no_oracle' record goes stale (re-queued) once the query
-    has since gained an oracle, and stays sampled while it hasn't."""
-    import dataclasses
-    import importlib
-    import json
+def test_queries_applies_the_rotation():
+    """``queries()`` is the one place the sampling order is applied: it
+    equals ``rotation.order`` over the live round files, lists every
+    registered name exactly once, and leaves REGISTRY in registration
+    order."""
+    import __spark_entry__ as e
+    from spark_jdbc_limit_spark.operators import REGISTRY
 
-    import spark_jdbc_limit_spark.operators as ops
+    registered = list(REGISTRY)
+    got = list(e.queries())
+    want = rotation.order(REGISTRY, *rotation.read_rounds(), rotation.changed_since)
+    assert got == want
+    assert len(got) == len(set(got)) and set(got) == set(registered)
+    assert list(REGISTRY) == registered
 
-    names = list(ops.REGISTRY)
-    with_oracle = next(n for n in names if ops.REGISTRY[n].oracle is not None)
-    # every registry entry is oracle-paired as of round 7, so synthesize a
-    # rows-only spec (the rotation logic must keep handling the case — a
-    # future genuinely-non-SQL-expressible op would reintroduce it)
+
+def test_rotation_moves_sampled_names_to_back(tmp_path):
+    """Every name with a green record in a CORRECTNESS_r*.json goes to the
+    back; never-sampled names keep catalog order at the front. Pinned on
+    a synthetic round file, independent of the real repo history."""
+    specs = _specs()
+    names = list(specs)
+    sampled = names[:3] + names[-3:]
+    (tmp_path / "CORRECTNESS_r99.json").write_text(
+        json.dumps({n: _GREEN for n in sampled})
+    )
+    latest, current = rotation.read_rounds(str(tmp_path))
+    assert current == 99
+    assert set(rotation.verified_rounds(specs, latest)) == set(sampled)
+
+    got = rotation.order(specs, latest, current, _no_churn)
+    assert sorted(got) == sorted(names), "rotation must not drop entries"
+    assert got[: -len(sampled)] == [n for n in names if n not in sampled]
+    assert set(got[-len(sampled):]) == set(sampled)
+
+
+def test_rotation_requeues_errored_and_stale_rows_only_records():
+    """A record whose driver check CRASHED (non-null err other than
+    'no_oracle') is unverified and must NOT count as sampled; a rows-only
+    'no_oracle' record goes stale (re-queued) once the query has since
+    gained an oracle, and stays sampled while it hasn't."""
+    specs = _specs()
+    with_oracle, clean, crashed = [n for n in specs if specs[n].oracle is not None][:3]
+    # every registry entry is oracle-paired, so synthesize a rows-only
+    # spec (a future genuinely non-SQL-expressible op would reintroduce it)
     without_oracle = "_synthetic_rows_only"
-    clean = next(n for n in names if n != with_oracle)
-    f = tmp_path / "CORRECTNESS_r99.json"
-    f.write_text(
-        json.dumps(
-            {
-                clean: {"rows_match": True, "schema_match": True, "hash_match": True, "err": None},
-                # REAL driver shape for rows-only checks (r01-r05 on disk):
-                # all match fields null — there is no verdict to be red on
-                with_oracle: {"rows_match": None, "schema_match": None, "hash_match": None, "err": "no_oracle"},
-                without_oracle: {"rows_match": None, "schema_match": None, "hash_match": None, "err": "no_oracle"},
-                names[0]: {"err": "TypeError: unhashable type: 'list'"},
-            }
-        )
+    specs[without_oracle] = dataclasses.replace(
+        specs[with_oracle], name=without_oracle, oracle=None
     )
-    real_glob = importlib.import_module("glob").glob
-    monkeypatch.setattr(
-        "glob.glob",
-        lambda pattern: [str(f)] if "CORRECTNESS_r" in pattern else real_glob(pattern),
-    )
-    before = dict(ops.REGISTRY)
-    try:
-        ops.REGISTRY[without_oracle] = dataclasses.replace(
-            ops.REGISTRY[with_oracle], name=without_oracle, oracle=None
-        )
-        sampled = ops._driver_sampled_names()
-        assert clean in sampled
-        assert without_oracle in sampled
-        assert with_oracle not in sampled, "rows-only record must go stale once an oracle exists"
-        assert names[0] not in sampled, "crashed check must re-enter the window"
-    finally:
-        ops.REGISTRY.clear()
-        ops.REGISTRY.update(before)
+    # the driver's real shape for rows-only checks: all match fields null
+    rows_only = {"rows_match": None, "schema_match": None, "hash_match": None, "err": "no_oracle"}
+    latest = {
+        clean: (99, _GREEN),
+        with_oracle: (99, rows_only),
+        without_oracle: (99, rows_only),
+        crashed: (99, {"err": "TypeError: unhashable type: 'list'"}),
+    }
+    sampled = rotation.verified_rounds(specs, latest)
+    assert clean in sampled
+    assert without_oracle in sampled
+    assert with_oracle not in sampled, "rows-only record must go stale once an oracle exists"
+    assert crashed not in sampled, "crashed check must re-enter the window"
+
+    got = rotation.order(specs, latest, 99, _no_churn)
+    front = got[: len(got) - len(sampled)]
+    assert with_oracle in front and crashed in front
+    assert clean not in front and without_oracle not in front
 
 
-def test_rotation_requeues_red_records_at_front(monkeypatch, tmp_path):
+def test_rotation_requeues_red_records_at_front(tmp_path):
     """A driver record with any of rows/schema/hash FALSE is a red row:
-    the query is broken-then-fixed and must re-enter the front of the
-    sampling window until the driver signs a green row. A red row that
-    rotated to the back bit rounds 6-8 (sql_shared_text_rollup,
-    join_bloom_prefilter: cast-fixed in-tree but never re-drawn). A
-    LATER green record for the same name still marks it sampled."""
-    import importlib
-    import json
-
-    import spark_jdbc_limit_spark.operators as ops
-
-    names = list(ops.REGISTRY)
-    red_hash, red_rows, red_then_green = names[0], names[1], names[2]
-    f1 = tmp_path / "CORRECTNESS_r97.json"
-    f1.write_text(
+    the query must re-enter the front of the sampling window until the
+    driver signs a green row (a red row that rotated to the back was
+    fixed in-tree but never re-drawn). A LATER green record for the same
+    name still marks it sampled."""
+    specs = _specs()
+    red_hash, red_rows, red_then_green = list(specs)[:3]
+    (tmp_path / "CORRECTNESS_r97.json").write_text(
         json.dumps(
             {
                 red_hash: {"rows_match": True, "schema_match": True, "hash_match": False, "err": None},
@@ -186,107 +220,197 @@ def test_rotation_requeues_red_records_at_front(monkeypatch, tmp_path):
             }
         )
     )
-    f2 = tmp_path / "CORRECTNESS_r99.json"
-    f2.write_text(
-        json.dumps(
-            {red_then_green: {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}}
-        )
-    )
-    real_glob = importlib.import_module("glob").glob
-    monkeypatch.setattr(
-        "glob.glob",
-        lambda pattern: [str(f1), str(f2)] if "CORRECTNESS_r" in pattern else real_glob(pattern),
-    )
-    sampled = ops._driver_sampled_names()
+    (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps({red_then_green: _GREEN}))
+    latest, current = rotation.read_rounds(str(tmp_path))
+    sampled = rotation.verified_rounds(specs, latest)
     assert red_hash not in sampled, "hash-red record must re-enter the window"
     assert red_rows not in sampled, "rows-red record must re-enter the window"
     assert red_then_green in sampled, "a later green record marks the query sampled"
 
-    before = dict(ops.REGISTRY)
-    try:
-        ops._rotate_registry()
-        rotated = list(ops.REGISTRY)
-        unsampled_front = rotated[: len(rotated) - len(sampled & set(names))]
-        assert red_hash in unsampled_front and red_rows in unsampled_front
-    finally:
-        ops.REGISTRY.clear()
-        ops.REGISTRY.update(before)
+    got = rotation.order(specs, latest, current, _no_churn)
+    assert got[-1] == red_then_green
+    front = got[: len(got) - len(sampled)]
+    assert red_hash in front and red_rows in front
 
 
-def test_rotation_latest_record_wins_green_then_red(monkeypatch, tmp_path):
-    """A green in an OLD round must not outvote a later red: only the
-    LATEST round's record per name decides. Without latest-wins, a
-    regression after a past green rotates to the back and its fix never
-    re-enters the driver window — the mirror image of the red-then-green
-    case the red-record rule fixed."""
-    import importlib
-    import json
-
-    import spark_jdbc_limit_spark.operators as ops
-
-    names = list(ops.REGISTRY)
-    regressed = names[0]
-    f_old = tmp_path / "CORRECTNESS_r05.json"
-    f_old.write_text(
-        json.dumps(
-            {regressed: {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}}
-        )
+def test_rotation_latest_record_wins_green_then_red(tmp_path):
+    """Only the LATEST round's record per name decides: a green in an old
+    round must not outvote a later red (the regression would rotate to
+    the back and its fix never re-enter the window), and a later green
+    supersedes an old red. The fixture holds both directions, so the
+    precedence is checked whichever file the directory lists first."""
+    specs = _specs()
+    regressed, recovered = list(specs)[:2]
+    red = {"rows_match": True, "schema_match": True, "hash_match": False, "err": None}
+    (tmp_path / "CORRECTNESS_r05.json").write_text(
+        json.dumps({regressed: _GREEN, recovered: red})
     )
-    f_new = tmp_path / "CORRECTNESS_r11.json"
-    f_new.write_text(
-        json.dumps(
-            {regressed: {"rows_match": True, "schema_match": True, "hash_match": False, "err": None}}
-        )
+    (tmp_path / "CORRECTNESS_r11.json").write_text(
+        json.dumps({regressed: red, recovered: _GREEN})
     )
-    real_glob = importlib.import_module("glob").glob
-    # deliberately list the newer file FIRST: precedence must come from
-    # the round number in the filename, not glob order
-    monkeypatch.setattr(
-        "glob.glob",
-        lambda pattern: [str(f_new), str(f_old)] if "CORRECTNESS_r" in pattern else real_glob(pattern),
-    )
-    # this fixture's only name ends red, so the parser legitimately finds
-    # ZERO sampled names — assert the designed no-rotation warning fires
-    # here (and is not a live-file parse failure: see
-    # test_rotation_parses_live_correctness_files)
+    latest, current = rotation.read_rounds(str(tmp_path))
+    assert current == 11
+    assert latest[regressed] == (11, red) and latest[recovered] == (11, _GREEN)
+    assert rotation.verified_rounds(specs, latest) == {recovered: 11}
+    # a fixture whose only name ends red legitimately yields ZERO sampled
+    # names: the designed no-rotation warning fires (and is not a
+    # live-file parse failure: see test_rotation_parses_live_correctness_files)
     with pytest.warns(RuntimeWarning, match="no sampled names parsed"):
-        sampled = ops._driver_sampled_names()
-    assert regressed not in sampled, "later red must supersede the old green"
+        assert rotation.verified_rounds(specs, {regressed: latest[regressed]}) == {}
 
 
 def test_rotation_parses_live_correctness_files():
     """The REAL committed CORRECTNESS_r*.json files must parse from the
-    repo root at import time: if the driver's filename/format ever drifts
-    from the parser, the stalest-first ordering silently no-ops (round-10
-    verdict #6). Rounds 1-10 drove all 314 registry entries green, so the
-    live parse must yield (nearly) the whole registry with plausible
-    verifying rounds."""
-    import spark_jdbc_limit_spark.operators as ops
+    repo root: if the driver's filename/format ever drifts from the
+    parser, the stalest-first ordering silently no-ops. Past rounds drove
+    the whole registry green, so the live parse must yield (nearly) all
+    of it with plausible verifying rounds."""
+    from spark_jdbc_limit_spark.operators import REGISTRY
 
-    rounds = ops._driver_sampled_rounds()
+    latest, current = rotation.read_rounds()
+    rounds = rotation.verified_rounds(REGISTRY, latest)
     assert len(rounds) >= 300, (
         f"live CORRECTNESS parse found only {len(rounds)} verified names"
     )
-    in_registry = set(rounds) & set(ops.REGISTRY)
-    assert len(in_registry) >= 300
     assert all(isinstance(r, int) and r >= 1 for r in rounds.values())
-    stats = ops.rotation_stats()
+    stats = rotation.rotation_stats()
     assert stats["current_round"] >= 10
     assert stats["n_verified_green"] >= 300
-    # with a ~50-row window over ~314 entries a full re-confirmation
-    # cycle is ceil(314/50)=7 rounds; the stalest-first ordering keeps
-    # the achieved staleness bounded by that (allow +1: an all-red or
-    # unprocessed latest round advances the filename-derived clock —
-    # round-11 advice — without re-greening anything yet)
+    # with a 50-row window over ~325 entries a full re-confirmation cycle
+    # is ceil(325/50)=7 rounds; the stalest-first ordering keeps the
+    # achieved staleness bounded by that (allow +1: an all-red or
+    # unprocessed latest round advances the filename-derived clock
+    # without re-greening anything yet)
     assert stats["max_rounds_since_green"] <= 8
-    # the rotation clock comes from the highest CORRECTNESS filename, not
-    # the max green record (an all-red round must still advance it)
-    assert stats["current_round"] == ops._latest_correctness_round()
-    # growth-vs-staleness trend (round-11 verdict #7): the committed
-    # artifact carries a per-round history including the current round
+    # the clock comes from the highest CORRECTNESS filename, not the max
+    # green record (an all-red round must still advance it)
+    assert stats["current_round"] == current
+    # growth-vs-staleness trend: the history includes the current round
     hist = stats["history"]
     assert hist and hist[-1]["round"] == stats["current_round"]
     assert hist[-1]["n_entries"] == stats["n_entries"]
+
+
+def test_rotation_warns_on_unreadable_round_file(tmp_path):
+    """A truncated or non-dict round file is skipped with a warning, never
+    an exception: its queries may re-enter the window, visibly."""
+    import warnings
+
+    (tmp_path / "CORRECTNESS_r97.json").write_text("[1, 2]")
+    (tmp_path / "CORRECTNESS_r98.json").write_text("{not json")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        latest, current = rotation.read_rounds(str(tmp_path))
+    assert latest == {} and current == 98
+    assert sum("sampling window" in str(w.message) for w in caught) == 2
+
+
+def test_rotation_staleness(tmp_path):
+    """Within the already-verified block, STALEST green first: an entry
+    verified in an earlier round must precede one verified later, so the
+    50-row sample window re-confirms long-unverified entries first and
+    rounds-since-last-green is bounded by ceil(n_entries / window).
+    Pinned on a synthetic two-round history AND on the order over the
+    real repo history."""
+    import math
+
+    specs = _specs()
+    names = list(specs)
+    old_green = names[:3]  # verified long ago (round 1)
+    new_green = names[3:6]  # verified last round (round 9)
+    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({n: _GREEN for n in old_green}))
+    (tmp_path / "CORRECTNESS_r09.json").write_text(json.dumps({n: _GREEN for n in new_green}))
+    latest, current = rotation.read_rounds(str(tmp_path))
+    assert rotation.verified_rounds(specs, latest) == {
+        **{n: 1 for n in old_green},
+        **{n: 9 for n in new_green},
+    }
+    # churn held empty so this pin isolates the staleness sort; the churn
+    # tier has its own tests below
+    got = rotation.order(specs, latest, current, _no_churn)
+    assert got[-6:] == old_green + new_green
+
+    # real history: the verified block is ordered in tiers (staleness-
+    # critical, churned, rest; each ascending in verifying round), so the
+    # redraw distance of the stalest entry stays bounded by
+    # ceil(n_entries / window) windows while churn gets the budget the
+    # critical tier leaves free
+    from spark_jdbc_limit_spark.operators import REGISTRY
+
+    latest, current = rotation.read_rounds()
+    real_rounds = rotation.verified_rounds(REGISTRY, latest)
+    got = rotation.order(REGISTRY, latest, current, rotation.changed_since)
+    verified_in_order = [n for n in got if n in real_rounds]
+    window = rotation._SAMPLE_WINDOW
+    if verified_in_order:
+        bound = max(2, math.ceil(len(REGISTRY) / window))
+        # every staleness-critical entry must sit inside the first sample
+        # window of the verified block: the invariant churn must not break
+        critical = [
+            n for n in verified_in_order if current - real_rounds[n] >= bound - 1
+        ]
+        assert len(critical) <= window, "critical tier over-subscribed"
+        assert set(critical) <= set(verified_in_order[:window]), (
+            "staleness-critical entries displaced from the sample window"
+        )
+        # the critical prefix itself is stalest-first
+        rs_crit = [real_rounds[n] for n in verified_in_order[: len(critical)]]
+        assert rs_crit == sorted(rs_crit)
+        stalest_pos = verified_in_order.index(
+            min(verified_in_order, key=lambda n: real_rounds[n])
+        )
+        assert stalest_pos < window
+
+
+def test_rotation_churn_tier_promotes_changed_modules(monkeypatch):
+    """An entry whose implementing module changed since the round that
+    greened it carries a stale driver signature: it must outrank
+    unchanged recently-green entries, but NEVER displace a
+    staleness-critical one."""
+    specs = _specs()
+    names = list(specs)
+    # recent precedes churned in catalog order, so only the tier can put
+    # churned first; relational.py does not import dedup.py
+    critical = names[0]
+    recent = next(n for n in names[1:] if _module_of(specs[n]).endswith("/relational.py"))
+    churned = next(n for n in names if _module_of(specs[n]).endswith("/dedup.py"))
+    churned_mod = _module_of(specs[churned])
+    assert churned_mod not in rotation.module_deps(_module_of(specs[recent]))
+    monkeypatch.setattr(
+        rotation, "changed_paths", lambda r: {churned_mod} if r == 98 else set()
+    )
+    # current round = 99 and bound ceil(325/50) = 7: green at 93 is
+    # critical, greens at 98 are fresh
+    latest = {critical: (93, _GREEN), churned: (98, _GREEN), recent: (98, _GREEN)}
+    got = rotation.order(specs, latest, 99, rotation.changed_since)
+    # the verified block: critical (tier 1), churned (tier 2), untouched
+    # recent green (tier 3), in exactly that order
+    assert got[-3:] == [critical, churned, recent]
+
+
+def test_rotation_churn_tier_follows_helper_modules(monkeypatch):
+    """Entries whose logic lives in IMPORTED helper modules must
+    churn-promote when the helper changes: the capstone's builder is in
+    pipeline.py but its cut runs in dedup.py, so a dedup.py refactor
+    must pull it into tier 2 ahead of an untouched same-round green."""
+    dep_mod = "spark_jdbc_limit_spark/operators/dedup.py"
+    deps = rotation.module_deps("spark_jdbc_limit_spark/operators/pipeline.py")
+    assert dep_mod in deps and "spark_jdbc_limit_spark/operators/text.py" in deps
+    # derived, not hand-maintained: a module that cannot be read is empty
+    assert rotation.module_deps("spark_jdbc_limit_spark/operators/no_such.py") == frozenset()
+
+    specs = _specs()
+    helper_entry = "curate_span_cut_pipeline"  # builder pipeline.py, cut dedup.py
+    other = next(n for n in specs if _module_of(specs[n]).endswith("/relational.py"))
+    monkeypatch.setattr(
+        rotation, "changed_paths", lambda r: {dep_mod} if r == 98 else set()
+    )
+    latest = {helper_entry: (98, _GREEN), other: (98, _GREEN)}
+    got = rotation.order(specs, latest, 99, rotation.changed_since)
+    # same verifying round and `other` registers first, so only the tier
+    # can order them: the helper-dependent entry (tier 2 via dedup.py)
+    # must precede the untouched relational entry (tier 3)
+    assert got.index(helper_entry) < got.index(other)
 
 
 def test_size_partitions_grows_with_cardinality(spark):
@@ -372,213 +496,6 @@ def test_rfm_scalable_twin_matches_ntile_exactly(spark, sf_correct):
     plan = b._jdf.queryExecution().executedPlan().toString()
     assert "ntile" not in plan
     assert "hashpartitioning(bucket" in plan
-
-
-def test_rotation_warns_on_unreadable_round_file(monkeypatch, tmp_path):
-    import warnings
-
-    import spark_jdbc_limit_spark.operators as ops
-
-    bad = tmp_path / "CORRECTNESS_r98.json"
-    bad.write_text("{not json")
-    monkeypatch.setattr(
-        "glob.glob", lambda pattern: [str(bad)] if "CORRECTNESS_r" in pattern else []
-    )
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        names = ops._driver_sampled_names()
-    assert names == set()
-    assert any("sampling window" in str(w.message) for w in caught)
-
-
-def test_queue_behind_names_all_exist_in_registry():
-    """A typo in _QUEUE_BEHIND silently drops the query from its intended
-    queue slot — pin every listed name to a real registry entry."""
-    import spark_jdbc_limit_spark.operators as ops
-
-    missing = [n for n in ops._QUEUE_BEHIND if n not in ops.REGISTRY]
-    assert not missing, f"_QUEUE_BEHIND names not in registry: {missing}"
-
-
-def test_rotation_staleness(monkeypatch, tmp_path):
-    """Round-9 verdict #7: within the already-verified block, STALEST
-    green first — an entry verified in an earlier round must precede one
-    verified later, so the ~50-row sample window re-confirms
-    long-unverified entries first and rounds-since-last-green is bounded
-    by ceil(n_verified / window) once the never-green pools drain.
-    Pinned against synthetic two-round history AND the real repo
-    history's resulting order."""
-    import importlib
-    import json
-    import math
-
-    import spark_jdbc_limit_spark.operators as ops
-
-    names = list(ops.REGISTRY)
-    old_green = names[:3]  # verified long ago (round 1)
-    new_green = names[3:6]  # verified last round (round 9)
-    green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-    f1 = tmp_path / "CORRECTNESS_r01.json"
-    f1.write_text(json.dumps({n: green for n in old_green}))
-    f9 = tmp_path / "CORRECTNESS_r09.json"
-    f9.write_text(json.dumps({n: green for n in new_green}))
-
-    real_glob = importlib.import_module("glob").glob
-    monkeypatch.setattr(
-        "glob.glob",
-        lambda pattern: [str(f1), str(f9)]
-        if "CORRECTNESS_r" in pattern
-        else real_glob(pattern),
-    )
-    rounds = ops._driver_sampled_rounds()
-    assert all(rounds[n] == 1 for n in old_green)
-    assert all(rounds[n] == 9 for n in new_green)
-
-    # hold churn fixed (empty) so this pin isolates the staleness sort;
-    # the churn tier has its own test below
-    monkeypatch.setattr(ops, "_changed_modules_since", lambda r: set())
-    before = dict(ops.REGISTRY)
-    try:
-        ops._rotate_registry()
-        rotated = list(ops.REGISTRY)
-        seen_block = rotated[-6:]
-        # stalest greens (round 1) come before the recent greens (round 9)
-        assert seen_block[:3] == old_green
-        assert seen_block[3:] == new_green
-    finally:
-        ops.REGISTRY.clear()
-        ops.REGISTRY.update(before)
-
-    # real history: the verified block of the live registry is ordered in
-    # tiers (round-12 verdict #2) — staleness-critical first, churned
-    # second, rest third, each ascending in verifying round — so the
-    # redraw distance of the stalest entry stays bounded by
-    # ceil(n_verified/window) sample windows while module churn gets the
-    # window budget the critical tier leaves free.
-    # UNDO the monkeypatches first — otherwise this half re-reads the
-    # synthetic fixture and pins nothing about the repo's actual files.
-    monkeypatch.undo()
-    real_rounds = ops._driver_sampled_rounds()
-    verified_in_order = [n for n in ops.REGISTRY if n in real_rounds]
-    window = ops._SAMPLE_WINDOW
-    if verified_in_order:
-        current = ops._latest_correctness_round()
-        bound = max(2, math.ceil(len(ops.REGISTRY) / window))
-        # every staleness-critical entry (would exceed the bound if not
-        # re-drawn this round) must sit inside the first sample window of
-        # the verified block — the hard invariant churn must not break
-        critical = [
-            n for n in verified_in_order if current - real_rounds[n] >= bound - 1
-        ]
-        head = set(verified_in_order[:window])
-        assert len(critical) <= window, "critical tier over-subscribed"
-        assert set(critical) <= head, (
-            "staleness-critical entries displaced from the sample window"
-        )
-        # the critical prefix itself is stalest-first
-        rs_crit = [real_rounds[n] for n in verified_in_order[: len(critical)]]
-        assert rs_crit == sorted(rs_crit)
-        stalest_pos = verified_in_order.index(
-            min(verified_in_order, key=lambda n: real_rounds[n])
-        )
-        assert stalest_pos < window
-
-
-def test_rotation_churn_tier_promotes_changed_modules(monkeypatch, tmp_path):
-    """Round-12 verdict #2: an entry whose implementing module changed
-    since the round that greened it carries a stale driver signature —
-    it must outrank unchanged recently-green entries, but NEVER displace
-    a staleness-critical one."""
-    import importlib
-    import json
-
-    import spark_jdbc_limit_spark.operators as ops
-
-    names = list(ops.REGISTRY)
-    critical, churned, recent = names[0], names[1], names[2]
-    green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-    # current round = 99; bound with the live registry ≈ 7 → green at 93
-    # is critical; 98-greens are fresh
-    f93 = tmp_path / "CORRECTNESS_r93.json"
-    f93.write_text(json.dumps({critical: green}))
-    f98 = tmp_path / "CORRECTNESS_r98.json"
-    f98.write_text(json.dumps({churned: green, recent: green}))
-    f99 = tmp_path / "CORRECTNESS_r99.json"
-    f99.write_text(json.dumps({}))
-
-    real_glob = importlib.import_module("glob").glob
-    monkeypatch.setattr(
-        "glob.glob",
-        lambda pattern: [str(f93), str(f98), str(f99)]
-        if "CORRECTNESS_r" in pattern
-        else real_glob(pattern),
-    )
-    churned_mod = ops.REGISTRY[churned].builder.__module__.replace(".", "/") + ".py"
-    monkeypatch.setattr(
-        ops, "_changed_modules_since", lambda r: {churned_mod} if r == 98 else set()
-    )
-    before = dict(ops.REGISTRY)
-    try:
-        ops._rotate_registry()
-        rotated = list(ops.REGISTRY)
-        # seen block is the last 3: critical (tier 1), churned (tier 2),
-        # untouched recent green (tier 3) — in exactly that order
-        assert rotated[-3:] == [critical, churned, recent]
-    finally:
-        ops.REGISTRY.clear()
-        ops.REGISTRY.update(before)
-
-
-def test_rotation_churn_tier_follows_helper_modules(monkeypatch, tmp_path):
-    """Round-13 advice: entries whose logic lives in IMPORTED helper
-    modules must churn-promote when the helper changes — the capstone's
-    builder is in pipeline.py but its cut runs in dedup.py, so a
-    dedup.py refactor must pull it into tier 2 ahead of an untouched
-    same-round green."""
-    import importlib
-    import json
-
-    import spark_jdbc_limit_spark.operators as ops
-
-    dep_mod = "spark_jdbc_limit_spark/operators/dedup.py"
-    deps = ops._module_deps("spark_jdbc_limit_spark/operators/pipeline.py")
-    assert dep_mod in deps and "spark_jdbc_limit_spark/operators/text.py" in deps
-    # derived, not hand-maintained: a module with no package imports is empty
-    assert ops._module_deps("spark_jdbc_limit_spark/operators/no_such.py") == frozenset()
-
-    helper_entry = "curate_span_cut_pipeline"  # builder pipeline.py, cut dedup.py
-    other = next(
-        n
-        for n in ops.REGISTRY
-        if ops.REGISTRY[n].builder.__module__
-        == "spark_jdbc_limit_spark.operators.relational"
-    )
-    green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-    f98 = tmp_path / "CORRECTNESS_r98.json"
-    f98.write_text(json.dumps({helper_entry: green, other: green}))
-    f99 = tmp_path / "CORRECTNESS_r99.json"
-    f99.write_text(json.dumps({}))
-    real_glob = importlib.import_module("glob").glob
-    monkeypatch.setattr(
-        "glob.glob",
-        lambda pattern: [str(f98), str(f99)]
-        if "CORRECTNESS_r" in pattern
-        else real_glob(pattern),
-    )
-    monkeypatch.setattr(
-        ops, "_changed_modules_since", lambda r: {dep_mod} if r == 98 else set()
-    )
-    before = dict(ops.REGISTRY)
-    try:
-        ops._rotate_registry()
-        rotated = list(ops.REGISTRY)
-        # same verifying round, so only the tier can order them: the
-        # helper-dependent entry (tier 2 via dedup.py) must precede the
-        # untouched relational entry (tier 3)
-        assert rotated.index(helper_entry) < rotated.index(other)
-    finally:
-        ops.REGISTRY.clear()
-        ops.REGISTRY.update(before)
 
 
 def test_bench_vs_prev_norm_reads_committed_artifact():
@@ -695,17 +612,15 @@ def test_rotation_churn_lookup_against_real_git():
     """The git plumbing itself: boundary-commit lookup + name-only diff
     must produce a set of repo-relative module paths (or None on a
     checkout without the boundary commit — never raise)."""
-    import spark_jdbc_limit_spark.operators as ops
-
-    ops._changed_modules_since.cache_clear()
-    changed = ops._changed_modules_since(12)
+    rotation.changed_paths.cache_clear()
+    changed = rotation.changed_paths(12)
     assert changed is None or all(
         p.startswith("spark_jdbc_limit_spark/") for p in changed
     )
     # memoized: second call must hit the cache
-    assert ops._changed_modules_since(12) is changed
+    assert rotation.changed_paths(12) is changed
     # a round with no boundary commit → None (fallback, not a crash)
-    assert ops._changed_modules_since(10**6) is None
+    assert rotation.changed_paths(10**6) is None
 
 
 def test_bench_baseline_constants_frozen():
