@@ -137,13 +137,25 @@ BASELINE_QUERY_SEC = {
 }
 
 
+def _vs_prev_state(prev: dict, sf_val, cpus: int) -> str:
+    """``"on"`` when a previous close artifact may define this run's
+    regression bar, else ``"off: <why>"``: an artifact recorded at another
+    scale factor (a smoke-scale artifact must not define the bar) or core
+    count (round-14 verdict #6: medians at different core counts are not
+    comparable; a legacy artifact without ``cpus`` cannot be checked and
+    is allowed). Printed in the one-line JSON so a bar that switched
+    itself off is visible, not only a stderr warning."""
+    if prev.get("sf") != sf_val:
+        return f"off: artifact sf={prev.get('sf')!r}, run sf={sf_val!r}"
+    if prev.get("cpus") is not None and prev.get("cpus") != cpus:
+        return f"off: artifact cpus={prev.get('cpus')!r}, run cpus={cpus!r}"
+    return "on"
+
+
 def _prev_norm_from_artifact(prev: dict, sf_val, cpus: int) -> dict[str, float]:
     """Pure core of ``_prev_bench_norm`` (unit-testable without git): the
     per-query slot-normalized regression bar from a previous close
-    artifact, or {} when that artifact was recorded at a different scale
-    factor OR core count (round-14 verdict #6: an 8-cpu scaling run that
-    leaks into the committed artifact must not define a 32-cpu run's
-    bar — medians at different core counts are not comparable). Per
+    artifact, or {} with a warning when ``_vs_prev_state`` is off. Per
     query the bar seed is the CONTENTION-ROBUST value min(median,
     reprobe-solo-median) (round-14 verdict #9: a contended committed
     median — e.g. q1 at 5.79 s vs ≤2.6 s solo — silently weakened the
@@ -151,20 +163,10 @@ def _prev_norm_from_artifact(prev: dict, sf_val, cpus: int) -> dict[str, float]:
     for exactly those, so prefer them)."""
     import warnings
 
-    if prev.get("sf") != sf_val:
+    state = _vs_prev_state(prev, sf_val, cpus)
+    if state != "on":
         warnings.warn(
-            f"bench: committed BENCH_FULL.json is sf={prev.get('sf')!r}, this "
-            f"run is sf={sf_val!r}; vs_prev disabled (a smoke-scale artifact "
-            "must not define the regression bar)",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-        return {}
-    if prev.get("cpus") is not None and prev.get("cpus") != cpus:
-        warnings.warn(
-            f"bench: committed BENCH_FULL.json was recorded at cpus="
-            f"{prev.get('cpus')!r}, this run is cpus={cpus!r}; vs_prev "
-            "disabled (medians at different core counts are not comparable)",
+            f"bench: committed BENCH_FULL.json gives vs_prev {state}",
             RuntimeWarning,
             stacklevel=3,
         )
@@ -180,10 +182,11 @@ def _prev_norm_from_artifact(prev: dict, sf_val, cpus: int) -> dict[str, float]:
     return out
 
 
-def _prev_bench_norm(sf_val, cpus: int) -> dict[str, float]:
+def _prev_bench_norm(sf_val, cpus: int) -> tuple[dict[str, float], str]:
     """Per-query slot-normalized bar values from git HEAD's committed
-    BENCH_FULL.json (the previous round's close artifact), or {} when
-    unavailable / recorded at a different scale factor or core count.
+    BENCH_FULL.json (the previous round's close artifact) and the bar's
+    state; ({}, "off: <why>") when unavailable / recorded at a different
+    scale factor or core count.
     Normalizing both sides by their run's anchor factor makes the
     comparison a machine-swing-free plan signal (the same move as
     value_anchor_norm)."""
@@ -208,8 +211,8 @@ def _prev_bench_norm(sf_val, cpus: int) -> dict[str, float]:
             RuntimeWarning,
             stacklevel=2,
         )
-        return {}
-    return _prev_norm_from_artifact(prev, sf_val, cpus)
+        return {}, "off: no committed BENCH_FULL.json"
+    return _prev_norm_from_artifact(prev, sf_val, cpus), _vs_prev_state(prev, sf_val, cpus)
 
 
 def _vs_prev_exceeds(
@@ -519,7 +522,7 @@ def main() -> None:
     # factor needs the last bracket, which deliberately runs after the
     # reprobes; first-bracket-vs-final divergence is visible in
     # anchor_series either way.
-    prev_norm = _prev_bench_norm(sf_val, cpus)
+    prev_norm, vs_prev_state = _prev_bench_norm(sf_val, cpus)
     provisional_factor = max(anchor_first / ANCHOR_REF_SEC, 1e-9)
     reprobe: dict[str, dict] = {}
     for name in REGISTRY:
@@ -606,6 +609,8 @@ def main() -> None:
         "sf": sf_val,
         "n_queries": len(timings),
         "cpus": cpus,
+        # whether the previous close artifact defined the regression bar
+        "vs_prev": vs_prev_state,
         # machine-contention instrumentation: this run's fixed-anchor-set
         # time over the recorded quiet-slot reference, plus the total
         # normalized by it — compare value_anchor_norm across rounds

@@ -85,25 +85,70 @@ def test_limit_clause_is_dialect_aware(spark, derby):
     assert limit_clause(spark, "jdbc:postgresql:x", 7) == "LIMIT 7"
 
 
+def _jdbc_where_clauses(df, plan="optimizedPlan"):
+    """Each JDBC relation's partition WHERE fragments, read from the
+    relation itself through the plan's ``LogicalRelation`` leaves (Spark's
+    plan text prints the external query without them). ``plan="analyzed"``
+    reads the relation as built, before the optimizer may prune it."""
+    leaves = getattr(df._jdf.queryExecution(), plan)().collectLeaves()
+    rels = [leaves.apply(i).relation() for i in range(leaves.size())]
+    return [[p.whereClause() for p in rel.parts()] for rel in rels]
+
+
+PARTS = ['"grp" < 3', '"grp" >= 3 AND "grp" < 7', '"grp" >= 7']
+
+
 def test_per_partition_limit_pushdown(spark, derby):
-    """Op 5-6 parity: every partition's external query carries the limit
-    (≤ partitions × n rows cross the wire), the retained global limit
-    yields exactly n, and partition splitting + predicate compile down."""
-    parts = ['"grp" < 3', '"grp" >= 3 AND "grp" < 7', '"grp" >= 7']
+    """Op 5-6 parity: ONE JDBC relation whose every partition query ends
+    with the limit clause (≤ partitions × n rows cross the wire), the
+    retained global limit yields exactly n, and partition splitting +
+    predicate compile down — the reference's per-partition SQL
+    (JDBCRDDWithLimit.scala:130-137)."""
     q = jdbc_scan_with_limit(
         spark, derby, "src", limit=7,
         columns=["id", "grp"], predicate='"id" >= 0',
-        partition_predicates=parts, driver=DRIVER,
+        partition_predicates=PARTS, driver=DRIVER,
     )
-    plan = plan_text(q)
-    assert "FETCH FIRST 7 ROWS ONLY" in plan
-    for i in range(len(parts)):
-        # each partition is its own scan whose pushed subquery carries the limit
-        assert f"FETCH FIRST 7 ROWS ONLY) spark_part_{i}" in plan
-    assert "CollectLimit" in plan  # the retained global limit (ref rule keeps LocalLimit)
+    tree = plan_text(q).split("\n\n")[0]
+    assert tree.count("Scan JDBCRelation(src) [numPartitions=3]") == 1
+    assert "Union" not in tree
+    (wheres,) = _jdbc_where_clauses(q)
+    clause = limit_clause(spark, derby, 7)
+    assert wheres == [f'("id" >= 0) AND ({p}) {clause}' for p in PARTS]
+    assert "CollectLimit" in tree  # the retained global limit (ref rule keeps LocalLimit)
     rows = q.collect()
     assert len(rows) == 7
     assert all(r.id >= 0 for r in rows)
+
+
+def test_filter_after_limited_scan_stays_above_the_limit(spark, derby):
+    """A filter on the returned frame runs above the retained global limit:
+    it never reaches the scan's PushedFilters, where Spark would wrap the
+    partition fragment (and its limit clause) in parentheses."""
+    q = jdbc_scan_with_limit(
+        spark, derby, "src", limit=7, partition_predicates=PARTS, driver=DRIVER,
+    ).filter(F.col("grp") == 3)
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    assert "PushedFilters: []" in plan
+    assert "EqualTo(grp,3)" not in plan.replace('"', "")
+    assert plan.index("Filter") < plan.index("GlobalLimit") < plan.index("Scan JDBCRelation")
+    rows = q.collect()
+    assert len(rows) <= 7 and all(r.grp == 3 for r in rows)
+
+
+@pytest.mark.parametrize("limit", [0, -1])
+def test_non_positive_limit_pushes_no_clause(spark, derby, limit):
+    """limit <= 0 is never pushed (JDBCRDDWithLimit.scala:65-71): no
+    partition fragment carries a limit clause; 0 still yields 0 rows
+    through the global limit, -1 means no limit at all."""
+    q = jdbc_scan_with_limit(
+        spark, derby, "src", limit=limit, predicate='"grp" = 3',
+        partition_predicates=PARTS, driver=DRIVER,
+    )
+    # limit 0 optimizes to an empty relation, so read the scan as built
+    (wheres,) = _jdbc_where_clauses(q, plan="analyzed")
+    assert wheres == [f'("grp" = 3) AND ({p})' for p in PARTS]
+    assert q.count() == (0 if limit == 0 else N_ROWS // 10)
 
 
 def test_empty_projection_emits_select_one(spark, derby):
@@ -139,6 +184,23 @@ def test_dsv2_catalog_aggregate_pushdown(spark, derby):
     assert "PushedAggregates" in plan and "COUNT(*)" in plan
     got = {(r.grp, r.n) for r in agg.collect()}
     assert got == {(g, N_ROWS // 10) for g in range(10)}
+
+
+def test_v1_reader_does_not_push_aggregates(spark, derby):
+    """The negative side of the catalog pin above: ``jdbc_reader(...).load()``
+    is the DSv1 ``JdbcRelationProvider``, so a groupBy/agg over it runs in
+    Spark over shipped rows — no ``PushedAggregates``, whatever
+    ``pushDownAggregate`` says."""
+    agg = (
+        jdbc_reader(spark, url=derby, table="src", driver=DRIVER)
+        .load()
+        .groupBy("grp")
+        .agg(F.count("*").alias("n"))
+    )
+    plan = plan_text(agg)
+    assert "Scan JDBCRelation(src)" in plan and "HashAggregate" in plan
+    assert "PushedAggregates" not in plan
+    assert {(r.grp, r.n) for r in agg.collect()} == {(g, N_ROWS // 10) for g in range(10)}
 
 
 def test_write_jdbc_atomic_append_and_overwrite(spark, derby):

@@ -524,8 +524,9 @@ def test_bench_vs_prev_norm_reads_committed_artifact():
     if res.returncode != 0:
         pytest.skip("no committed BENCH_FULL.json on this checkout")
     prev = json.loads(res.stdout)
-    norm = _prev_bench_norm(prev.get("sf"), prev.get("cpus"))
+    norm, state = _prev_bench_norm(prev.get("sf"), prev.get("cpus"))
     assert norm, "committed artifact present but vs_prev map empty"
+    assert state == "on"
     name = "q1_pricing_summary"
     import statistics
 
@@ -537,9 +538,9 @@ def test_bench_vs_prev_norm_reads_committed_artifact():
     assert abs(norm[name] - want) < 0.01
     # a cpus-mismatched call must disable the bar
     if prev.get("cpus") is not None:
-        assert _prev_bench_norm(prev.get("sf"), prev["cpus"] + 1) == {}
+        assert _prev_bench_norm(prev.get("sf"), prev["cpus"] + 1)[0] == {}
     with pytest.warns(RuntimeWarning):
-        assert _prev_bench_norm("no-such-sf", prev.get("cpus")) == {}
+        assert _prev_bench_norm("no-such-sf", prev.get("cpus"))[0] == {}
 
 
 def test_bench_vs_prev_trigger_boundaries():
@@ -606,6 +607,26 @@ def test_bench_vs_prev_bar_guards_and_robust_seed():
     # a legacy artifact without a cpus field cannot be checked → allowed
     legacy = {k: v for k, v in art.items() if k != "cpus"}
     assert _prev_norm_from_artifact(legacy, 0.1, 32)["a"] == 2.0
+
+
+def test_bench_vs_prev_state_reports_cpu_mismatch():
+    """A regression bar that switched itself off says so: the state bench.py
+    prints as ``"vs_prev"`` in its one-line JSON names both core counts on
+    a cpu mismatch (and both scale factors on an sf mismatch), and reads
+    "on" when the artifact matches or predates the ``cpus`` field."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
+    from bench import _vs_prev_state
+
+    art = {"sf": 0.1, "cpus": 8, "queries": {"a": 1.0}}
+    assert _vs_prev_state(art, 0.1, 4) == "off: artifact cpus=8, run cpus=4"
+    assert _vs_prev_state(art, 0.001, 8) == "off: artifact sf=0.1, run sf=0.001"
+    assert _vs_prev_state(art, 0.1, 8) == "on"
+    assert _vs_prev_state({"sf": 0.1}, 0.1, 4) == "on"
 
 
 def test_rotation_churn_lookup_against_real_git():
