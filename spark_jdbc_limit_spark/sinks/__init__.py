@@ -12,7 +12,6 @@ from spark_jdbc_limit_spark.sinks.transactional import (
     AtomicWriteError,
     append_jdbc_epoch,
     recover_atomic_publish,
-    recover_partition_publish,
     run_stream_jdbc_atomic,
     write_jdbc_atomic,
     write_parquet_atomic,
@@ -25,7 +24,6 @@ __all__ = [
     "standard_sink_metrics",
     "write_with_observations",
     "recover_atomic_publish",
-    "recover_partition_publish",
     "run_stream_jdbc_atomic",
     "write_jdbc_atomic",
     "write_parquet_atomic",

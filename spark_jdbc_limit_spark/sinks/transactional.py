@@ -18,15 +18,22 @@ This engine replaces that with the portable staging+publish protocol:
 3. success → publish staging to the target via rename (files) or a
    single target-side transaction (JDBC).
 
-Crash windows and their recovery (the reference's analogue is a log line
-saying "clean table manually", ExtJdbcUtils.scala:97-100):
-- every multi-rename publish (overwrite swap, append file-moves, dynamic
-  partition overwrite) first writes a durable PUBLISH MANIFEST; deleting
-  the manifest is the commit point. A driver crash at any rename boundary
-  is rolled back to the pre-publish state by ``recover_atomic_publish`` /
-  ``recover_partition_publish`` (run them at pipeline startup; idempotent);
-- manifest absent ⇒ the publish committed; leftover trash/staging dirs
-  are swept as orphans, never restored;
+Every parquet publish (overwrite swap, append, per-partition swap) is one
+JOURNAL: an ordered list of ``(src, dst)`` renames, written to the sibling
+manifest ``<target>__publish_manifest_<token>.json`` before the first
+rename. Crash windows and their recovery (the reference's analogue is a
+log line saying "clean table manually", ExtJdbcUtils.scala:97-100):
+
+- crash before the manifest exists ⇒ only staging was written; the target
+  is untouched and ``recover_atomic_publish`` sweeps the orphan staging;
+- manifest present ⇒ the publish did not commit. The moves done are the
+  leading moves whose ``dst`` exists; recovery undoes them last first (a
+  move out of staging by deleting its ``dst``, any other by renaming
+  ``dst`` back to ``src``), then drops staging and the manifest;
+- manifest deleted ⇒ committed (the deletion is the commit point);
+  leftover trash/staging dirs are swept as orphans, never restored;
+- an in-process failure undoes the same way at once; if an undo fails,
+  the manifest is kept and the error says to run recovery;
 - object stores without atomic rename (S3) degrade rename to
   copy+delete; use a table format (Iceberg/Delta) there instead.
 """
@@ -82,6 +89,25 @@ def _delete_staging_stubborn(fs, path, attempts: int = 10, pause_s: float = 0.3)
         )
 
 
+def _stage_parquet(df: DataFrame, fs, jvm, base: str, token: str, partition_by) -> str:
+    """Phase 1: distributed write to a staging dir nobody reads. Task and
+    speculative-retry atomicity inside this step is Spark's
+    FileOutputCommitter; a failure of ANY task fails the whole job and
+    staging is deleted — the target is untouched."""
+    staging = f"{base}__staging_{token}"
+    try:
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staging)
+    except Exception as exc:
+        _delete_staging_stubborn(fs, jvm.org.apache.hadoop.fs.Path(staging))
+        raise AtomicWriteError(
+            f"staging write to {staging} failed; staging removed, target {base} untouched"
+        ) from exc
+    return staging
+
+
 def write_parquet_atomic(
     df: DataFrame,
     target: str,
@@ -91,244 +117,215 @@ def write_parquet_atomic(
     """Write ``df`` to ``target`` as parquet with SaveMode semantics
     (mirroring the reference's provider, ExtJdbcRelationProvider.scala:21-56:
     Overwrite → replace, Append → add, ErrorIfExists → raise, Ignore →
-    no-op) and all-or-nothing visibility via staging+publish."""
+    no-op) and all-or-nothing visibility via staging+publish.
+
+    Overwrite (or any write to an absent target) swaps whole dirs:
+    ``target→trash``, then ``staging→target``. Append moves each staged
+    data file to the same relative path in the target (partition dirs
+    included, created when the target lacks them), its name prefixed with
+    the write's token so it cannot collide with an existing file."""
     if mode not in _VALID_MODES:
         raise ValueError(f"mode must be one of {_VALID_MODES}, got {mode!r}")
-    spark = df.sparkSession
-    jvm, fs, target_path = _hadoop_fs(spark, target)
+    jvm, fs, target_path = _hadoop_fs(df.sparkSession, target)
     target_exists = fs.exists(target_path)
-
     if target_exists and mode == "error":
         raise AtomicWriteError(f"target {target} already exists (SaveMode=error)")
     if target_exists and mode == "ignore":
         return
 
-    token = uuid.uuid4().hex[:12]
-    staging = f"{target.rstrip('/')}__staging_{token}"
-    staging_path = jvm.org.apache.hadoop.fs.Path(staging)
-
-    # Phase 1: distributed write to staging. Task/speculative-retry
-    # atomicity inside this step is Spark's FileOutputCommitter; a failure
-    # of ANY task fails the whole job and we delete staging — the target
-    # is untouched.
-    try:
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(staging)
-    except Exception as exc:
-        _delete_staging_stubborn(fs, staging_path)
-        raise AtomicWriteError(
-            f"staging write to {staging} failed; staging removed, target {target} untouched"
-        ) from exc
-
-    # Phase 2: publish, under a durable sibling manifest so a driver crash
-    # at ANY rename boundary is recoverable by recover_atomic_publish()
-    # (manifest deletion is the commit point, same protocol as the
-    # partition-overwrite path below). Manifest lifecycle is owned by the
-    # publish functions: deleted on commit AND on fully-rolled-back
-    # in-process failures, RETAINED when rollback itself failed so the
-    # recovery record survives exactly when it is needed.
-    is_swap = mode == "overwrite" or not target_exists
-    trash = str(target_path) + f"__trash_{token}" if is_swap and target_exists else None
-    manifest_path = jvm.org.apache.hadoop.fs.Path(
-        f"{target.rstrip('/')}__publish_manifest_{token}.json"
-    )
-    _fs_write_text(
-        fs,
-        manifest_path,
-        json.dumps(
-            {
-                "token": token,
-                "mode": "swap" if is_swap else "append",
-                "staging": staging,
-                "trash": trash,
-            }
-        ),
-    )
-    if is_swap:
-        _publish_swap(jvm, fs, staging_path, target_path, trash, manifest_path)
+    base, token = target.rstrip("/"), uuid.uuid4().hex[:12]
+    staging = _stage_parquet(df, fs, jvm, base, token, partition_by)
+    if not target_exists:
+        moves = [(staging, base)]
+    elif mode == "overwrite":
+        moves = [(base, f"{base}__trash_{token}"), (staging, base)]
     else:
-        _publish_append(jvm, fs, staging_path, target_path, token, manifest_path)
+        Path = jvm.org.apache.hadoop.fs.Path
+        moves = []
+        for rel in _data_files(fs, Path(staging)):
+            folder, _, name = rel.rpartition("/")
+            dst_dir = f"{base}/{folder}".rstrip("/")
+            if not fs.exists(Path(dst_dir)):
+                fs.mkdirs(Path(dst_dir))
+            moves.append((f"{staging}/{rel}", f"{dst_dir}/{token}-{name}"))
+    _publish(jvm, fs, base, token, staging, moves)
 
 
-def _publish_swap(jvm, fs, staging_path, target_path, trash_str, manifest_path) -> None:
-    trash = None
-    if trash_str is not None:
-        trash = jvm.org.apache.hadoop.fs.Path(trash_str)
-        if not fs.rename(target_path, trash):
-            fs.delete(staging_path, True)
-            fs.delete(manifest_path, False)  # nothing moved — clean abort
-            raise AtomicWriteError(f"could not move old {target_path} aside; staging removed")
-    if not fs.rename(staging_path, target_path):
-        # roll the old data back into place
-        if trash is not None and not fs.rename(trash, target_path):
-            # manifest RETAINED: recover_atomic_publish can restore trash
-            raise AtomicWriteError(
-                f"publish failed AND rollback failed: old data stranded at {trash}; "
-                f"run recover_atomic_publish"
-            )
-        fs.delete(staging_path, True)
-        fs.delete(manifest_path, False)  # rolled back — clean abort
-        raise AtomicWriteError(f"publish rename to {target_path} failed; old data restored")
-    fs.delete(manifest_path, False)  # COMMIT POINT — before trash cleanup
-    if trash is not None:
-        fs.delete(trash, True)
+def _data_files(fs, path, prefix: str = "") -> list[str]:
+    """Paths, relative to ``path``, of the data files under it — partition
+    dirs walked, ``_``/``.``-prefixed names (markers, checksums) skipped."""
+    out = []
+    for st in fs.listStatus(path):
+        name = st.getPath().getName()
+        if name.startswith(("_", ".")):
+            continue
+        if st.isDirectory():
+            out += _data_files(fs, st.getPath(), f"{prefix}{name}/")
+        else:
+            out.append(prefix + name)
+    return out
 
 
-def _publish_append(jvm, fs, staging_path, target_path, token: str, manifest_path) -> None:
-    """Move staging data files into the target with unique names; on
-    partial failure, compensating-delete the files already moved."""
+def write_parquet_overwrite_partitions(
+    df: DataFrame,
+    target: str,
+    partition_col: str,
+) -> None:
+    """Dynamic partition overwrite: replace ONLY the partitions present in
+    ``df``, leave every other partition of ``target`` untouched.
+
+    This is the incremental-backfill primitive a 100 TB pipeline runs
+    daily: recompute ``dt=2026-08-13`` and swap it in without rewriting
+    (or even listing) the other 3000 partitions. Spark's built-in
+    ``partitionOverwriteMode=dynamic`` has no cross-partition atomicity —
+    a mid-job failure leaves some partitions new and some old; here each
+    partition directory is swapped by rename (``target/p→trash_p``, then
+    ``staging/p→target/p``) AFTER the full staging write succeeded, and a
+    mid-publish failure restores every already-swapped partition from its
+    trash (same compensation posture as the reference's xmin delete,
+    ExtJdbcUtils.scala:324-337, but restoring instead of destroying).
+
+    Single partition column only (the common date-partition case);
+    multi-level layouts should swap at their leaf level via a table
+    format (Iceberg/Delta) instead.
+    """
+    jvm, fs, target_path = _hadoop_fs(df.sparkSession, target)
     Path = jvm.org.apache.hadoop.fs.Path
-    moved: list = []
-    data_files = [
-        st.getPath()
-        for st in fs.listStatus(staging_path)
-        if not st.getPath().getName().startswith("_")
-    ]
+    base, token = target.rstrip("/"), uuid.uuid4().hex[:12]
+    staging = _stage_parquet(df, fs, jvm, base, token, [partition_col])
+    if not fs.exists(target_path):
+        moves = [(staging, base)]
+    else:
+        moves = []
+        for st in fs.listStatus(Path(staging)):
+            part = st.getPath().getName()
+            if st.isDirectory() and part.startswith(f"{partition_col}="):
+                if fs.exists(Path(f"{base}/{part}")):
+                    moves.append((f"{base}/{part}", f"{base}/__trash_{token}_{part}"))
+                moves.append((f"{staging}/{part}", f"{base}/{part}"))
+    _publish(jvm, fs, base, token, staging, moves)
+
+
+def _from_staging(src: str, staging: str) -> bool:
+    return src == staging or src.startswith(staging + "/")
+
+
+def _publish(jvm, fs, base: str, token: str, staging: str, moves) -> None:
+    """Apply ``moves`` in order under the journal manifest. Deleting the
+    manifest is the commit point; trash (every ``dst`` not fed from
+    staging) and staging are cleaned up after it. On a failed rename the
+    moves already done are undone and the manifest dropped — unless an
+    undo failed, in which case ``_undo`` raises and the manifest stays for
+    :func:`recover_atomic_publish`."""
+    Path = jvm.org.apache.hadoop.fs.Path
+    manifest = Path(f"{base}__publish_manifest_{token}.json")
+    _fs_write_text(
+        fs, manifest, json.dumps({"token": token, "staging": staging, "moves": moves})
+    )
+    done = 0
     try:
-        for src in data_files:
-            dst = Path(target_path, f"{token}-{src.getName()}")
-            if not fs.rename(src, dst):
-                raise AtomicWriteError(f"rename {src} → {dst} failed")
-            moved.append(dst)
+        for src, dst in moves:
+            if not fs.rename(Path(src), Path(dst)):
+                raise AtomicWriteError(f"rename {src} -> {dst} failed")
+            done += 1
     except Exception as exc:
-        failed_cleanup = []
-        for dst in moved:
-            if not fs.delete(dst, False):
-                failed_cleanup.append(str(dst))
-        fs.delete(staging_path, True)
-        if failed_cleanup:
-            # manifest RETAINED: recovery can still delete the <token>-*
-            # files this process failed to compensate
-            raise AtomicWriteError(
-                f"append publish failed and compensation left files behind: "
-                f"{failed_cleanup}; run recover_atomic_publish"
-            ) from exc
-        fs.delete(manifest_path, False)  # fully compensated — clean abort
+        _undo(fs, Path, staging, moves[:done])
+        fs.delete(Path(staging), True)
+        fs.delete(manifest, False)
         raise AtomicWriteError(
-            f"append publish to {target_path} failed; {len(moved)} published files compensated"
+            f"publish to {base} failed; its {done} completed moves were undone"
         ) from exc
-    fs.delete(manifest_path, False)  # COMMIT POINT — before staging cleanup
-    fs.delete(staging_path, True)
+    fs.delete(manifest, False)  # COMMIT POINT — before trash/staging cleanup
+    for src, dst in moves:
+        if not _from_staging(src, staging):
+            fs.delete(Path(dst), True)
+    fs.delete(Path(staging), True)
+
+
+def _undo(fs, Path, staging: str, done) -> None:
+    """Reverse the completed ``done`` moves, last first: a move out of
+    staging by deleting its ``dst``, any other by renaming ``dst`` back to
+    ``src``. Stops at the first failure, so what is left done is still a
+    leading run of the journal — the state recovery reads."""
+    for src, dst in reversed(done):
+        if _from_staging(src, staging):
+            ok = fs.delete(Path(dst), True)
+        else:
+            ok = fs.rename(Path(dst), Path(src))
+        if not ok:
+            raise AtomicWriteError(
+                f"undoing {src} -> {dst} failed; data is stranded at {dst} and the "
+                f"publish manifest is kept: run recover_atomic_publish"
+            )
 
 
 def recover_atomic_publish(spark, target: str) -> list[str]:
-    """Crash recovery for :func:`write_parquet_atomic`: find sibling
-    publish manifests (``<target>__publish_manifest_<token>.json``) and
-    roll each interrupted publish BACK (manifest present ⇒ uncommitted;
-    manifest deletion is the commit point, so a committed publish never
-    reaches this code). States, in rename order:
+    """Crash recovery for every parquet publish of ``target``
+    (:func:`write_parquet_atomic` in any mode and
+    :func:`write_parquet_overwrite_partitions`). Run it at pipeline
+    startup; it is idempotent and returns the rolled-back tokens.
 
-    - nothing renamed yet (target present or absent as before, staging
-      present, no trash) → drop staging;
-    - old target moved to trash, staging not yet renamed in (target
-      absent) → restore trash → target, drop staging;
-    - staging renamed in but commit not reached (target present, trash
-      present / or swap-with-no-prior-data with staging gone) → drop the
-      new target, restore trash if any;
-    - append half-moved (mode=append) → delete ``<token>-*`` files from
-      the target, drop staging.
+    Each surviving manifest ``<target>__publish_manifest_<token>.json``
+    is an uncommitted publish (deleting it is the commit point). Its moves
+    ran in order, so the moves done are the leading moves whose ``dst``
+    exists; those are undone last first, then staging and the manifest
+    are dropped. A manifest that planned a trash which is absent means
+    nothing moved, so the live target is kept. A manifest that cannot be
+    parsed or has no ``moves`` raises :class:`AtomicWriteError` before
+    anything is touched.
 
-    After the manifest rollbacks, sibling ``<target>__trash_*`` /
-    ``<target>__staging_*`` dirs with no surviving manifest are orphans of
-    COMMITTED publishes (crash between the manifest-delete commit point and
-    cleanup) and are swept, never restored — the same policy as
-    :func:`recover_partition_publish`. Without the sweep every such crash
-    permanently doubles the table's footprint.
+    Then sibling ``<target>__staging_*`` / ``<target>__trash_*`` dirs and
+    in-target ``__trash_*`` dirs are swept: with every manifest resolved,
+    they belong to committed publishes whose cleanup crashed, or to a
+    crash before the manifest was written, and are never restored.
 
-    Idempotent; returns the rolled-back tokens.
-
-    SINGLE-WRITER ASSUMPTION: run recovery only at pipeline startup, never
-    concurrently with a live writer on the same target — the orphan sweep
-    distinguishes live from dead staging solely by manifest presence, and a
-    writer that has staged data but not yet written its manifest looks
-    identical to a pre-manifest crash. Concurrent-writer coordination
-    belongs to a table format (Iceberg/Delta), not this protocol.
+    SINGLE-WRITER ASSUMPTION: never run concurrently with a live writer on
+    the same target — a writer that has staged data but not yet written
+    its manifest looks identical to a pre-manifest crash, and the sweep
+    would delete its staging. Concurrent writers belong to a table format
+    (Iceberg/Delta), not this protocol.
     """
     jvm, fs, target_path = _hadoop_fs(spark, target)
     Path = jvm.org.apache.hadoop.fs.Path
-    parent = target_path.getParent()
-    base = target_path.getName()
+    parent, base = target_path.getParent(), target_path.getName()
     if parent is None or not fs.exists(parent):
         return []
+    journals = []
+    for st in fs.listStatus(parent):
+        name = st.getPath().getName()
+        if name.startswith(f"{base}__publish_manifest_") and name.endswith(".json"):
+            try:
+                man = json.loads(_fs_read_text(jvm, fs, st.getPath()))
+                moves = [(src, dst) for src, dst in man["moves"]]
+                journals.append((st.getPath(), man["token"], man["staging"], moves))
+            except (ValueError, KeyError, TypeError) as exc:
+                raise AtomicWriteError(
+                    f"publish manifest {st.getPath()} is not a rename journal; "
+                    f"nothing was recovered or swept"
+                ) from exc
     recovered = []
-    for st in fs.listStatus(parent):
-        name = st.getPath().getName()
-        if not (name.startswith(f"{base}__publish_manifest_") and name.endswith(".json")):
-            continue
-        man = json.loads(_fs_read_text(jvm, fs, st.getPath()))
-        token = man["token"]
-        staging_path = Path(man["staging"])
-        staging_exists = fs.exists(staging_path)
-        if man["mode"] == "swap":
-            trash_path = Path(man["trash"]) if man.get("trash") else None
-            trash_exists = trash_path is not None and fs.exists(trash_path)
-            if trash_exists:
-                # target dir, if present, is the un-committed new data
-                fs.delete(target_path, True)
-                if not fs.rename(trash_path, target_path):
-                    raise AtomicWriteError(f"recovery could not restore {trash_path}")
-            elif man.get("trash") is None and not staging_exists and fs.exists(target_path):
-                # no prior data existed and staging was renamed in → undo.
-                # Guarded on trash-is-None: if the manifest PLANNED a trash
-                # (prior data existed) but neither trash nor staging is on
-                # disk, nothing was ever renamed (staging was lost some
-                # other way) and the target IS the live pre-publish data —
-                # deleting it here would destroy the only copy.
-                fs.delete(target_path, True)
-        else:  # append
-            if fs.exists(target_path):
-                for f in fs.listStatus(target_path):
-                    if f.getPath().getName().startswith(f"{token}-"):
-                        fs.delete(f.getPath(), False)
-        fs.delete(staging_path, True)
-        fs.delete(st.getPath(), False)
+    for manifest, token, staging, moves in journals:
+        done = 0
+        while done < len(moves) and fs.exists(Path(moves[done][1])):
+            done += 1
+        _undo(fs, Path, staging, moves[:done])
+        fs.delete(Path(staging), True)
+        fs.delete(manifest, False)
         recovered.append(token)
-    # orphan sweep: trash/staging siblings whose manifest is gone belong to
-    # committed publishes whose cleanup crashed — drop them, never restore.
-    # EXCEPT dirs still referenced by a surviving manifest of EITHER
-    # protocol (partition-publish manifests live INSIDE the target dir but
-    # their staging dirs are siblings): sweeping those would destroy the
-    # state the other recovery needs to roll back correctly.
-    protected = _live_manifest_refs(jvm, fs, target_path)
-    for st in fs.listStatus(parent):
-        name = st.getPath().getName()
-        if name.startswith(f"{base}__trash_") or name.startswith(f"{base}__staging_"):
-            if name not in protected:
-                fs.delete(st.getPath(), True)
-    return recovered
-
-
-def _live_manifest_refs(jvm, fs, target_path) -> set:
-    """Names of staging/trash dirs referenced by any SURVIVING publish
-    manifest for this target, across BOTH publish protocols: sibling
-    ``<base>__publish_manifest_*.json`` (atomic swap/append) and
-    ``<target>/__publish_manifest_*.json`` (dynamic partition overwrite).
-    Orphan sweeps must skip these — a dir is only an orphan once no
-    manifest can still name it. Compared by dir NAME (token-unique) so
-    qualified vs unqualified path strings can't defeat the check."""
-    Path = jvm.org.apache.hadoop.fs.Path
-    refs = set()
-
-    def _absorb(man: dict) -> None:
-        for key in ("staging", "trash"):
-            if man.get(key):
-                refs.add(Path(man[key]).getName())
-
-    parent = target_path.getParent()
-    base = target_path.getName()
-    if parent is not None and fs.exists(parent):
-        for st in fs.listStatus(parent):
-            name = st.getPath().getName()
-            if name.startswith(f"{base}__publish_manifest_") and name.endswith(".json"):
-                _absorb(json.loads(_fs_read_text(jvm, fs, st.getPath())))
+    orphans = [
+        st.getPath()
+        for st in fs.listStatus(parent)
+        if st.getPath().getName().startswith((f"{base}__staging_", f"{base}__trash_"))
+    ]
     if fs.exists(target_path):
-        for st in fs.listStatus(target_path):
-            name = st.getPath().getName()
-            if name.startswith("__publish_manifest_") and name.endswith(".json"):
-                _absorb(json.loads(_fs_read_text(jvm, fs, st.getPath())))
-    return refs
+        orphans += [
+            st.getPath()
+            for st in fs.listStatus(target_path)
+            if st.getPath().getName().startswith("__trash_")
+        ]
+    for orphan in orphans:
+        fs.delete(orphan, True)
+    return recovered
 
 
 def jdbc_publish_statements(table: str, staging: str, mode: str) -> list[str]:
@@ -378,33 +375,53 @@ def write_jdbc_atomic(
     """
     if mode not in ("append", "overwrite"):
         raise ValueError("write_jdbc_atomic supports append/overwrite")
-    spark = df.sparkSession
-    props = properties or {}
     staging = staging_table or f"{table}__staging_{uuid.uuid4().hex[:12]}"
+    _stage_publish_drop(
+        df, url, properties or {}, table, staging,
+        jdbc_publish_statements(table, staging, mode),
+    )
 
-    from spark_jdbc_limit_spark.sources.jdbc import connect_with_retry, map_reference_options
 
+def _stage_publish_drop(
+    df: DataFrame,
+    url: str,
+    props: dict[str, str],
+    table: str,
+    staging: str,
+    publish: list[str],
+    label: str = "",
+    before_publish=None,
+) -> None:
+    """The JDBC sinks' one sequence: write ``df`` into the ``staging``
+    table, call ``before_publish()`` if given, run ``publish`` in ONE
+    transaction (honouring Spark's ``isolationLevel`` write option,
+    negotiated down against database metadata), and drop staging on
+    every path."""
+    from spark_jdbc_limit_spark.sources.jdbc import map_reference_options
+
+    spark = df.sparkSession
     opts = map_reference_options({"url": url, "table": staging, **props})
     try:
-        df.write.format("jdbc").options(**opts).mode("overwrite").save()
-    except Exception as exc:
+        try:
+            df.write.format("jdbc").options(**opts).mode("overwrite").save()
+        except Exception as exc:
+            raise AtomicWriteError(
+                f"{label}staging write to {staging} failed; staging dropped"
+            ) from exc
+        if before_publish is not None:
+            before_publish()
+        try:
+            _jdbc_exec(
+                spark, url, props, publish, autocommit=False,
+                isolation=props.get("isolationLevel"),
+            )
+        except Exception as exc:
+            raise AtomicWriteError(
+                f"{label}publish transaction failed; target {table} unchanged, "
+                f"staging dropped"
+            ) from exc
+    finally:
         _drop_table_quiet(spark, url, props, staging)
-        raise AtomicWriteError(f"staging write to {staging} failed; staging dropped") from exc
-
-    publish = jdbc_publish_statements(table, staging, mode)
-    try:
-        # honor Spark's isolationLevel write option on the publish
-        # transaction, negotiated down against database metadata
-        _jdbc_exec(
-            spark, url, props, publish, autocommit=False,
-            isolation=props.get("isolationLevel"),
-        )
-    except Exception as exc:
-        _drop_table_quiet(spark, url, props, staging)
-        raise AtomicWriteError(
-            f"publish transaction failed; target {table} unchanged, staging dropped"
-        ) from exc
-    _drop_table_quiet(spark, url, props, staging)
 
 
 def _drop_table_quiet(spark, url: str, props: dict[str, str], table: str) -> None:
@@ -597,190 +614,6 @@ def _jdbc_exec(
         conn.close()
 
 
-def write_parquet_overwrite_partitions(
-    df: DataFrame,
-    target: str,
-    partition_col: str,
-) -> None:
-    """Dynamic partition overwrite: replace ONLY the partitions present in
-    ``df``, leave every other partition of ``target`` untouched.
-
-    This is the incremental-backfill primitive a 100 TB pipeline runs
-    daily: recompute ``dt=2026-08-13`` and swap it in without rewriting
-    (or even listing) the other 3000 partitions. Spark's built-in
-    ``partitionOverwriteMode=dynamic`` has no cross-partition atomicity —
-    a mid-job failure leaves some partitions new and some old; here each
-    partition directory is swapped by rename AFTER the full staging write
-    succeeded, and on a mid-publish failure every already-swapped
-    partition is restored from its trash location (same compensation
-    posture as the reference's xmin delete, ExtJdbcUtils.scala:324-337,
-    but restoring instead of destroying).
-
-    Single partition column only (the common date-partition case);
-    multi-level layouts should swap at their leaf level via a table
-    format (Iceberg/Delta) instead.
-    """
-    spark = df.sparkSession
-    jvm, fs, target_path = _hadoop_fs(spark, target)
-    Path = jvm.org.apache.hadoop.fs.Path
-
-    token = uuid.uuid4().hex[:12]
-    staging = f"{target.rstrip('/')}__staging_{token}"
-    staging_path = Path(staging)
-    try:
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-    except Exception as exc:
-        _delete_staging_stubborn(fs, staging_path)
-        raise AtomicWriteError(
-            f"staging write to {staging} failed; staging removed, target {target} untouched"
-        ) from exc
-
-    if not fs.exists(target_path):
-        if not fs.rename(staging_path, target_path):
-            fs.delete(staging_path, True)
-            raise AtomicWriteError(f"publish rename to {target_path} failed")
-        return
-
-    part_dirs = [
-        st.getPath()
-        for st in fs.listStatus(staging_path)
-        if st.isDirectory() and st.getPath().getName().startswith(f"{partition_col}=")
-    ]
-    # Durable publish manifest: written BEFORE the first swap so a driver
-    # crash mid-swap is detectable — recover_partition_publish() reads it
-    # and rolls the half-published partitions back (target state = before
-    # the publish). Deleted only after all swaps + trash cleanup succeed.
-    manifest_path = Path(target_path, f"__publish_manifest_{token}.json")
-    _fs_write_text(
-        fs,
-        manifest_path,
-        json.dumps(
-            {
-                "token": token,
-                "staging": staging,
-                "partition_col": partition_col,
-                "partitions": [p.getName() for p in part_dirs],
-            }
-        ),
-    )
-    swapped: list = []  # (trash_or_None, target_dir) in swap order
-    try:
-        for src in part_dirs:
-            dst = Path(target_path, src.getName())
-            trash = None
-            if fs.exists(dst):
-                trash = Path(str(target_path), f"__trash_{token}_{src.getName()}")
-                if not fs.rename(dst, trash):
-                    raise AtomicWriteError(f"could not move old {dst} aside")
-            if not fs.rename(src, dst):
-                if trash is not None:
-                    fs.rename(trash, dst)
-                raise AtomicWriteError(f"rename {src} -> {dst} failed")
-            swapped.append((trash, dst))
-    except Exception as exc:
-        stranded: list[str] = []
-        for trash, dst in reversed(swapped):
-            fs.delete(dst, True)
-            if trash is not None and not fs.rename(trash, dst):
-                stranded.append(str(trash))
-        fs.delete(staging_path, True)
-        if stranded:
-            raise AtomicWriteError(
-                f"partition publish failed and rollback stranded old data at: {stranded}"
-            ) from exc
-        fs.delete(manifest_path, False)
-        raise AtomicWriteError(
-            f"partition publish to {target_path} failed; "
-            f"{len(swapped)} swapped partitions restored"
-        ) from exc
-    # COMMIT POINT: deleting the manifest makes the publish final. It must
-    # happen BEFORE trash/staging cleanup — in the reverse order, a crash
-    # between cleanup and manifest-delete would leave a manifest whose
-    # partitions have neither a trash copy (cleaned) nor a staging copy
-    # (renamed away), and rollback would delete the published partition
-    # with nothing left to restore.
-    fs.delete(manifest_path, False)
-    for trash, _ in swapped:
-        if trash is not None:
-            fs.delete(trash, True)
-    fs.delete(staging_path, True)
-
-
-def recover_partition_publish(spark, target: str) -> list[str]:
-    """Crash recovery for :func:`write_parquet_overwrite_partitions`: find
-    publish manifests left behind by a driver that died mid-swap and ROLL
-    BACK each half-published publish, restoring the pre-publish target
-    state. Per manifest partition:
-
-    - trash dir exists → the swap touched it: drop the (new) partition dir
-      and rename the trash back;
-    - no trash but the staging copy is gone and the partition dir exists →
-      it was swapped in with no prior data: drop it;
-    - staging copy still present → never swapped: leave the target alone.
-
-    Then delete the staging dir and the manifest. A publish whose manifest
-    is already gone is COMMITTED (manifest deletion is the commit point) —
-    its leftover ``__trash_*`` dirs, if the cleanup crashed, are orphans of
-    a successful publish and are deleted here, never restored. The policy
-    is deterministic: manifest present → roll back; manifest absent → the
-    published state stands. Run at pipeline startup (idempotent, no-op on
-    a clean target). Returns the recovered publish tokens.
-
-    SINGLE-WRITER ASSUMPTION: never run concurrently with a live writer on
-    the same target — a writer mid-staging-write (manifest not yet on disk)
-    is indistinguishable from a pre-manifest crash, and the sweep would
-    delete its staging under it. Startup-only, like its sibling
-    :func:`recover_atomic_publish`.
-    """
-    jvm, fs, target_path = _hadoop_fs(spark, target)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(target_path):
-        return []
-    recovered = []
-    for st in fs.listStatus(target_path):
-        name = st.getPath().getName()
-        if not (name.startswith("__publish_manifest_") and name.endswith(".json")):
-            continue
-        man = json.loads(_fs_read_text(jvm, fs, st.getPath()))
-        token = man["token"]
-        staging_path = Path(man["staging"])
-        for part in man["partitions"]:
-            dst = Path(target_path, part)
-            trash = Path(str(target_path), f"__trash_{token}_{part}")
-            if fs.exists(trash):
-                fs.delete(dst, True)
-                if not fs.rename(trash, dst):
-                    raise AtomicWriteError(f"recovery could not restore {trash} -> {dst}")
-            elif not fs.exists(Path(staging_path, part)) and fs.exists(dst):
-                fs.delete(dst, True)
-        fs.delete(staging_path, True)
-        fs.delete(st.getPath(), False)
-        recovered.append(token)
-    # orphan trash dirs (manifest already gone = publish committed, cleanup
-    # crashed): safe to drop — the published partitions are the live state
-    for st in fs.listStatus(target_path):
-        if st.getPath().getName().startswith("__trash_"):
-            fs.delete(st.getPath(), True)
-    # orphan SIBLING staging dirs: left by a crash before the manifest was
-    # written (target untouched) or after the commit point (staging cleanup
-    # crashed) — in both states the target is consistent and staging is
-    # dead weight (found by the crash-point sweep test: a crash during
-    # manifest creation leaked the staging dir forever). A sibling staging
-    # referenced by a surviving ATOMIC-publish manifest is NOT an orphan —
-    # recover_atomic_publish still needs it to decide rename-progress, and
-    # sweeping it here would make that recovery read "staging gone" and
-    # delete the live target (cross-protocol data loss).
-    parent = target_path.getParent()
-    base = target_path.getName()
-    if parent is not None and fs.exists(parent):
-        protected = _live_manifest_refs(jvm, fs, target_path)
-        for st in fs.listStatus(parent):
-            name = st.getPath().getName()
-            if name.startswith(f"{base}__staging_") and name not in protected:
-                fs.delete(st.getPath(), True)
-    return recovered
-
-
 def _fs_write_text(fs, path, text: str) -> None:
     out = fs.create(path, True)
     try:
@@ -891,47 +724,30 @@ def append_jdbc_epoch(
     if batch_df.isEmpty():
         return False
 
-    from spark_jdbc_limit_spark.sources.jdbc import map_reference_options
-
     staging = f"{table}__staging_{uuid.uuid4().hex[:12]}"
-    opts = map_reference_options({"url": url, "table": staging, **props})
-    try:
-        batch_df.write.format("jdbc").options(**opts).mode("overwrite").save()
-    except Exception as exc:
-        _drop_table_quiet(spark, url, props, staging)
-        raise AtomicWriteError(
-            f"epoch {epoch_id}: staging write to {staging} failed; staging dropped"
-        ) from exc
-    try:
-        _jdbc_exec(
-            spark, url, props, [f"SELECT 1 FROM {table} WHERE 1=0"], autocommit=True
-        )
-    except Exception:
+
+    def ensure_target() -> None:
         try:
             _jdbc_exec(
-                spark, url, props,
-                [f"CREATE TABLE {table} AS SELECT * FROM {staging} WITH NO DATA"],
-                autocommit=True,
+                spark, url, props, [f"SELECT 1 FROM {table} WHERE 1=0"], autocommit=True
             )
-        except Exception as exc:
-            _drop_table_quiet(spark, url, props, staging)
-            raise AtomicWriteError(
-                f"epoch {epoch_id}: target {table} absent and could not be created"
-            ) from exc
-    try:
-        _jdbc_exec(
-            spark, url, props,
-            epoch_publish_statements(table, staging, ledger, epoch_id),
-            autocommit=False,
-            isolation=props.get("isolationLevel"),
-        )
-    except Exception as exc:
-        _drop_table_quiet(spark, url, props, staging)
-        raise AtomicWriteError(
-            f"epoch {epoch_id}: publish transaction failed; target {table} "
-            f"unchanged, ledger unchanged, staging dropped"
-        ) from exc
-    _drop_table_quiet(spark, url, props, staging)
+        except Exception:
+            try:
+                _jdbc_exec(
+                    spark, url, props,
+                    [f"CREATE TABLE {table} AS SELECT * FROM {staging} WITH NO DATA"],
+                    autocommit=True,
+                )
+            except Exception as exc:
+                raise AtomicWriteError(
+                    f"epoch {epoch_id}: target {table} absent and could not be created"
+                ) from exc
+
+    _stage_publish_drop(
+        batch_df, url, props, table, staging,
+        epoch_publish_statements(table, staging, ledger, epoch_id),
+        label=f"epoch {epoch_id}: ", before_publish=ensure_target,
+    )
     return True
 
 

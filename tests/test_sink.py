@@ -89,6 +89,24 @@ def test_partitioned_write(spark, target):
     assert set(got.columns) == {"id", "v", "bucket"}
 
 
+def test_partitioned_append_keeps_table_readable(spark, target):
+    """A partitioned append moves each data file into its partition dir
+    (creating a partition the table lacks), so the table stays one
+    readable hive layout with the exact rows of both appends."""
+    write_parquet_atomic(
+        spark.createDataFrame([(1, 0), (2, 1)], "id long, bucket int"),
+        target, mode="append", partition_by=["bucket"],
+    )
+    write_parquet_atomic(
+        spark.createDataFrame([(3, 1), (4, 2)], "id long, bucket int"),
+        target, mode="append", partition_by=["bucket"],
+    )
+    got = spark.read.parquet(target)
+    assert got.columns == ["id", "bucket"]
+    assert dict(got.dtypes)["bucket"] == "int"
+    assert sorted((r.id, r.bucket) for r in got.collect()) == [(1, 0), (2, 1), (3, 1), (4, 2)]
+
+
 def test_overwrite_partitions_replaces_only_touched(spark, sf_dir, tmp_path):
     """Dynamic partition overwrite: rewrite ONE event_type partition;
     every other partition's bytes stay untouched."""
@@ -120,13 +138,12 @@ def test_overwrite_partitions_replaces_only_touched(spark, sf_dir, tmp_path):
 
 
 def test_partition_publish_crash_recovery(spark, tmp_path):
-    """Driver crash mid-swap: the publish manifest (written before the first
-    rename) lets recover_partition_publish roll the half-published state
-    back to exactly the pre-publish target."""
-    import json
+    """Driver crash mid-swap: the journal manifest (written before the
+    first rename) lets recover_atomic_publish roll the half-published
+    state back to exactly the pre-publish target."""
     import shutil
 
-    from spark_jdbc_limit_spark.sinks import recover_partition_publish
+    from spark_jdbc_limit_spark.sinks import recover_atomic_publish
 
     target = tmp_path / "t"
     # pre-publish target: partitions p=a (v=1) and p=b (v=2)
@@ -139,28 +156,31 @@ def test_partition_publish_crash_recovery(spark, tmp_path):
     staging = tmp_path / "t__staging_deadbeef0000"
     patch = spark.createDataFrame([(10, "a"), (20, "b"), (30, "c")], "v int, p string")
     patch.write.partitionBy("p").parquet(str(staging))
-    shutil.move(str(target / "p=a"), str(target / "__trash_deadbeef0000_p=a"))
+    trash_a = target / "__trash_deadbeef0000_p=a"
+    shutil.move(str(target / "p=a"), str(trash_a))
     shutil.move(str(staging / "p=a"), str(target / "p=a"))
     shutil.move(str(staging / "p=c"), str(target / "p=c"))
-    (target / "__publish_manifest_deadbeef0000.json").write_text(
-        json.dumps(
-            {
-                "token": "deadbeef0000",
-                "staging": str(staging),
-                "partition_col": "p",
-                "partitions": ["p=a", "p=b", "p=c"],
-            }
-        )
+    # the journal plans p=b last, so the moves done are a leading run of it
+    manifest = tmp_path / "t__publish_manifest_deadbeef0000.json"
+    _journal(
+        manifest, "deadbeef0000", staging,
+        [
+            (target / "p=a", trash_a),
+            (staging / "p=a", target / "p=a"),
+            (staging / "p=c", target / "p=c"),
+            (target / "p=b", target / "__trash_deadbeef0000_p=b"),
+            (staging / "p=b", target / "p=b"),
+        ],
     )
 
-    recovered = recover_partition_publish(spark, str(target))
+    recovered = recover_atomic_publish(spark, str(target))
     assert recovered == ["deadbeef0000"]
     got = {(r.v, r.p) for r in spark.read.parquet(str(target)).collect()}
     assert got == {(1, "a"), (2, "b")}  # pre-publish state, p=c gone
     assert not staging.exists()
-    assert not (target / "__publish_manifest_deadbeef0000.json").exists()
+    assert not manifest.exists()
     # idempotent no-op on a clean target
-    assert recover_partition_publish(spark, str(target)) == []
+    assert recover_atomic_publish(spark, str(target)) == []
 
 
 def test_compact_parquet_small_files(spark, sf_dir, tmp_path):
@@ -193,7 +213,7 @@ def test_partition_publish_committed_crash_keeps_new_data(spark, tmp_path):
     orphan trash — the window that would otherwise lose the partition."""
     import shutil
 
-    from spark_jdbc_limit_spark.sinks import recover_partition_publish
+    from spark_jdbc_limit_spark.sinks import recover_atomic_publish
 
     target = tmp_path / "t"
     base = spark.createDataFrame([(1, "a"), (2, "b")], "v int, p string")
@@ -207,16 +227,37 @@ def test_partition_publish_committed_crash_keeps_new_data(spark, tmp_path):
     shutil.move(str(target / "p=a"), str(target / "__trash_cafecafe0000_p=a"))
     shutil.move(str(staging / "p=a"), str(target / "p=a"))
 
-    assert recover_partition_publish(spark, str(target)) == []  # no manifest
+    assert recover_atomic_publish(spark, str(target)) == []  # no manifest
     got = {(r.v, r.p) for r in spark.read.parquet(str(target)).collect()}
     assert got == {(10, "a"), (2, "b")}  # published state stands
     assert not (target / "__trash_cafecafe0000_p=a").exists()  # orphan swept
 
 
+def _journal(manifest, token, staging, moves):
+    """Hand-write a publish journal manifest, as ``_publish`` does."""
+    import json
+
+    manifest.write_text(
+        json.dumps(
+            {"token": token, "staging": str(staging),
+             "moves": [[str(src), str(dst)] for src, dst in moves]}
+        )
+    )
+
+
+def _swap_journal(t, token):
+    """Journal of an overwrite of existing ``t``: t→trash, staging→t."""
+    staging = t.parent / f"{t.name}__staging_{token}"
+    trash = t.parent / f"{t.name}__trash_{token}"
+    _journal(
+        t.parent / f"{t.name}__publish_manifest_{token}.json",
+        token, staging, [(t, trash), (staging, t)],
+    )
+
+
 def test_atomic_swap_crash_states_recover(spark, tmp_path):
     """Every crash point of the overwrite swap rolls back to the
     pre-publish state via the sibling manifest."""
-    import json
     import shutil
 
     from spark_jdbc_limit_spark.sinks import recover_atomic_publish
@@ -226,17 +267,10 @@ def test_atomic_swap_crash_states_recover(spark, tmp_path):
         spark.createDataFrame(rows, "v int").write.parquet(str(t))
         return t
 
-    def manifest(t, token, trash):
-        (tmp_path / f"{t.name}__publish_manifest_{token}.json").write_text(
-            json.dumps({"token": token, "mode": "swap",
-                        "staging": str(tmp_path / f"{t.name}__staging_{token}"),
-                        "trash": str(tmp_path / f"{t.name}__trash_{token}") if trash else None})
-        )
-
     # state A: crash before any rename (staging written, target untouched)
     ta = fresh("a", [(1,)])
     spark.createDataFrame([(9,)], "v int").write.parquet(str(tmp_path / "a__staging_t1"))
-    manifest(ta, "t1", trash=True)
+    _swap_journal(ta, "t1")
     assert recover_atomic_publish(spark, str(ta)) == ["t1"]
     assert {r.v for r in spark.read.parquet(str(ta)).collect()} == {1}
     assert not (tmp_path / "a__staging_t1").exists()
@@ -245,7 +279,7 @@ def test_atomic_swap_crash_states_recover(spark, tmp_path):
     tb = fresh("b", [(2,)])
     spark.createDataFrame([(9,)], "v int").write.parquet(str(tmp_path / "b__staging_t2"))
     shutil.move(str(tb), str(tmp_path / "b__trash_t2"))
-    manifest(tb, "t2", trash=True)
+    _swap_journal(tb, "t2")
     assert recover_atomic_publish(spark, str(tb)) == ["t2"]
     assert {r.v for r in spark.read.parquet(str(tb)).collect()} == {2}
 
@@ -253,7 +287,7 @@ def test_atomic_swap_crash_states_recover(spark, tmp_path):
     tc = fresh("c", [(3,)])
     shutil.move(str(tc), str(tmp_path / "c__trash_t3"))
     spark.createDataFrame([(9,)], "v int").write.parquet(str(tc))
-    manifest(tc, "t3", trash=True)
+    _swap_journal(tc, "t3")
     assert recover_atomic_publish(spark, str(tc)) == ["t3"]
     assert {r.v for r in spark.read.parquet(str(tc)).collect()} == {3}
 
@@ -261,22 +295,19 @@ def test_atomic_swap_crash_states_recover(spark, tmp_path):
 def test_atomic_append_crash_recovers_partial_files(spark, tmp_path):
     """Append crash mid-move: manifest-driven recovery deletes exactly the
     half-published token files."""
-    import json
-
     from spark_jdbc_limit_spark.sinks import recover_atomic_publish
 
     t = tmp_path / "t"
     spark.createDataFrame([(1,), (2,)], "v int").write.parquet(str(t))
     n_before = spark.read.parquet(str(t)).count()
-    # fake half-moved append: one token-prefixed data file in the target
+    # fake half-moved append: the first of the journal's token-prefixed
+    # data-file moves is done, the rest are still in staging
     staging = tmp_path / "t__staging_tok9"
     spark.createDataFrame([(8,), (9,)], "v int").write.parquet(str(staging))
-    data = next(p for p in staging.iterdir() if p.name.endswith(".parquet"))
-    data.rename(t / f"tok9-{data.name}")
-    (tmp_path / "t__publish_manifest_tok9.json").write_text(
-        json.dumps({"token": "tok9", "mode": "append",
-                    "staging": str(staging), "trash": None})
-    )
+    files = sorted(p for p in staging.iterdir() if p.name.endswith(".parquet"))
+    moves = [(f, t / f"tok9-{f.name}") for f in files]
+    _journal(tmp_path / "t__publish_manifest_tok9.json", "tok9", staging, moves)
+    files[0].rename(moves[0][1])
     assert recover_atomic_publish(spark, str(t)) == ["tok9"]
     got = spark.read.parquet(str(t))
     assert got.count() == n_before
@@ -299,33 +330,47 @@ def test_atomic_committed_orphans_swept(spark, tmp_path):
     assert not (tmp_path / "t__staging_tokB").exists()
 
 
+class _RefusingFS:
+    """Proxy over the Hadoop FileSystem whose ``rename`` returns False — a
+    failed rename, not a crash — for every source path ``refuse`` accepts.
+    Everything else passes through."""
+
+    def __init__(self, real, refuse):
+        self._real = real
+        self._refuse = refuse
+
+    def rename(self, src, dst):
+        return False if self._refuse(str(src)) else self._real.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._real, name)
+
+
+def _refuse_renames(monkeypatch, refuse):
+    import spark_jdbc_limit_spark.sinks.transactional as tx
+
+    real_hfs = tx._hadoop_fs
+    monkeypatch.setattr(
+        tx,
+        "_hadoop_fs",
+        lambda s, p: (lambda j, f, h: (j, _RefusingFS(f, refuse), h))(*real_hfs(s, p)),
+    )
+
+
 def test_atomic_stranded_rollback_retains_manifest(spark, tmp_path, monkeypatch):
     """Double failure (publish rename fails AND trash rollback fails): the
     manifest must SURVIVE so recover_atomic_publish can still restore the
     trash — deleting it there would orphan the old data forever."""
-    import spark_jdbc_limit_spark.sinks.transactional as tx
     from spark_jdbc_limit_spark.sinks import recover_atomic_publish
 
     t = tmp_path / "t"
     spark.createDataFrame([(7,)], "v int").write.parquet(str(t))
-
-    def failing_swap(jvm, fs, staging_path, target_path, trash_str, manifest_path):
-        # move old data to trash (first rename), then fail BOTH the
-        # staging->target rename and the trash rollback
-        trash = jvm.org.apache.hadoop.fs.Path(trash_str)
-        assert fs.rename(target_path, trash)
-        raise tx.AtomicWriteError(
-            f"publish failed AND rollback failed: old data stranded at {trash}; "
-            f"run recover_atomic_publish"
-        )
-
-    monkeypatch.setattr(tx, "_publish_swap", failing_swap)
-    import pytest as _pytest
-
-    with _pytest.raises(tx.AtomicWriteError, match="stranded"):
-        tx.write_parquet_atomic(
-            spark.createDataFrame([(9,)], "v int"), str(t), mode="overwrite"
-        )
+    # the first rename (old data to trash) succeeds; the staging->target
+    # rename and the trash rollback both fail
+    _refuse_renames(monkeypatch, lambda src: "__staging_" in src or "__trash_" in src)
+    with pytest.raises(AtomicWriteError, match="stranded"):
+        write_parquet_atomic(spark.createDataFrame([(9,)], "v int"), str(t), mode="overwrite")
+    monkeypatch.undo()
     manifests = list(tmp_path.glob("t__publish_manifest_*.json"))
     assert manifests, "manifest was deleted on the stranded path"
     recovered = recover_atomic_publish(spark, str(t))
@@ -334,52 +379,71 @@ def test_atomic_stranded_rollback_retains_manifest(spark, tmp_path, monkeypatch)
     assert not list(tmp_path.glob("t__trash_*")) and not list(tmp_path.glob("t__staging_*"))
 
 
-@pytest.mark.parametrize("order", ["partition_first", "atomic_first"])
+def test_partition_swap_failed_restore_keeps_manifest(spark, tmp_path, monkeypatch):
+    """A partition swap whose staging->target rename AND trash restore both
+    fail must raise and keep its manifest, so recovery restores the old
+    partition instead of sweeping its trash as an orphan."""
+    from spark_jdbc_limit_spark.sinks import recover_atomic_publish
+    from spark_jdbc_limit_spark.sinks.transactional import write_parquet_overwrite_partitions
+
+    t = tmp_path / "t"
+    spark.createDataFrame([(1, "a"), (2, "b")], "v int, p string").write.partitionBy(
+        "p"
+    ).parquet(str(t))
+    _refuse_renames(monkeypatch, lambda src: "__staging_" in src or "__trash_" in src)
+    with pytest.raises(AtomicWriteError, match="recover_atomic_publish"):
+        write_parquet_overwrite_partitions(
+            spark.createDataFrame([(10, "a")], "v int, p string"), str(t), "p"
+        )
+    monkeypatch.undo()
+    assert list(tmp_path.glob("t__publish_manifest_*.json")), "manifest was deleted"
+    assert len(recover_atomic_publish(spark, str(t))) == 1
+    assert {(r.v, r.p) for r in spark.read.parquet(str(t)).collect()} == {(1, "a"), (2, "b")}
+    assert not [p.name for p in tmp_path.rglob("*") if "__trash_" in p.name]
+
+
+def test_recovery_refuses_a_manifest_that_is_not_a_journal(spark, tmp_path):
+    """A manifest with no ``moves`` (or no JSON at all) raises before any
+    sweep: its staging and trash dirs may be the only copy of the data."""
+    from spark_jdbc_limit_spark.sinks import recover_atomic_publish
+
+    t = tmp_path / "t"
+    spark.createDataFrame([(1,)], "v int").write.parquet(str(t))
+    staging, trash = tmp_path / "t__staging_old1", tmp_path / "t__trash_old1"
+    spark.createDataFrame([(9,)], "v int").write.parquet(str(staging))
+    spark.createDataFrame([(8,)], "v int").write.parquet(str(trash))
+    manifest = tmp_path / "t__publish_manifest_old1.json"
+    for text in (
+        f'{{"token": "old1", "mode": "swap", "staging": "{staging}", "trash": "{trash}"}}',
+        "{not json",
+    ):
+        manifest.write_text(text)
+        with pytest.raises(AtomicWriteError, match="not a rename journal"):
+            recover_atomic_publish(spark, str(t))
+        assert staging.exists() and trash.exists() and manifest.exists()
+
+
+@pytest.mark.parametrize("order", ["atomic_first", "partition_first"])
 def test_cross_protocol_recovery_preserves_live_target(spark, tmp_path, order):
-    """Running BOTH recoveries at startup (as the docs instruct) must not
-    lose data regardless of order. Regression for the cross-protocol sweep
-    bug: each recovery's orphan sweep deleted the OTHER protocol's
-    still-manifested staging dir, after which the second recovery misread
-    'staging gone' as 'staging was renamed in' and deleted the live target.
-    """
-    import json
-
-    from spark_jdbc_limit_spark.sinks import (
-        recover_atomic_publish,
-        recover_partition_publish,
-    )
-
-    def run_both(t):
-        if order == "partition_first":
-            recover_partition_publish(spark, t)
-            recover_atomic_publish(spark, t)
-        else:
-            recover_atomic_publish(spark, t)
-            recover_partition_publish(spark, t)
-        # second pass: both again, other order — idempotent, still safe
-        recover_atomic_publish(spark, t)
-        recover_partition_publish(spark, t)
+    """Two crashes before the first rename, side by side in one parent dir:
+    an overwrite swap of ``a`` and a partition swap of ``b``. Recovering
+    the targets in either order keeps both live targets, and running it
+    twice (a second startup) is still safe: one target's orphan sweep must
+    never take the other's still-journaled staging, and a swept staging
+    dir must never be read as 'staging was renamed in'."""
+    from spark_jdbc_limit_spark.sinks import recover_atomic_publish
 
     # Scenario A: write_parquet_atomic crashed BEFORE its first rename —
     # sibling manifest (trash planned, never created) + sibling staging,
-    # target = live old data. Any sweep order must keep the old target.
+    # target = live old data.
     ta = tmp_path / "a"
     spark.createDataFrame([(1,), (2,)], "v int").write.parquet(str(ta))
     spark.createDataFrame([(9,)], "v int").write.parquet(str(tmp_path / "a__staging_x1"))
-    (tmp_path / "a__publish_manifest_x1.json").write_text(
-        json.dumps({"token": "x1", "mode": "swap",
-                    "staging": str(tmp_path / "a__staging_x1"),
-                    "trash": str(tmp_path / "a__trash_x1")})
-    )
-    run_both(str(ta))
-    assert {r.v for r in spark.read.parquet(str(ta)).collect()} == {1, 2}
-    assert not (tmp_path / "a__staging_x1").exists()
-    assert not (tmp_path / "a__publish_manifest_x1.json").exists()
+    _swap_journal(ta, "x1")
 
-    # Scenario B (mirror): write_parquet_overwrite_partitions crashed
-    # BEFORE the first swap — manifest inside the target, staging sibling
-    # with the never-swapped new partitions. The pre-existing partitions
-    # must all survive both recoveries in either order.
+    # Scenario B: write_parquet_overwrite_partitions crashed BEFORE the
+    # first swap — staging holds the never-swapped new partition. The
+    # pre-existing partitions must all survive.
     tb = tmp_path / "b"
     spark.createDataFrame([(1, "a"), (2, "b")], "v int, p string").write.partitionBy(
         "p"
@@ -388,15 +452,25 @@ def test_cross_protocol_recovery_preserves_live_target(spark, tmp_path, order):
     spark.createDataFrame([(10, "a")], "v int, p string").write.partitionBy("p").parquet(
         str(staging)
     )
-    (tb / "__publish_manifest_x2.json").write_text(
-        json.dumps({"token": "x2", "staging": str(staging),
-                    "partition_col": "p", "partitions": ["p=a"]})
+    manifest = tmp_path / "b__publish_manifest_x2.json"
+    _journal(
+        manifest, "x2", staging,
+        [(tb / "p=a", tb / "__trash_x2_p=a"), (staging / "p=a", tb / "p=a")],
     )
-    run_both(str(tb))
+
+    targets = [str(ta), str(tb)]
+    if order == "partition_first":
+        targets.reverse()
+    for t in targets + targets[::-1]:
+        recover_atomic_publish(spark, t)
+
+    assert {r.v for r in spark.read.parquet(str(ta)).collect()} == {1, 2}
+    assert not (tmp_path / "a__staging_x1").exists()
+    assert not (tmp_path / "a__publish_manifest_x1.json").exists()
     got = {(r.v, r.p) for r in spark.read.parquet(str(tb)).collect()}
     assert got == {(1, "a"), (2, "b")}  # pre-publish state, nothing lost
     assert not staging.exists()
-    assert not (tb / "__publish_manifest_x2.json").exists()
+    assert not manifest.exists()
 
 
 def test_atomic_recovery_ambiguous_missing_staging_keeps_target(spark, tmp_path):
@@ -404,17 +478,11 @@ def test_atomic_recovery_ambiguous_missing_staging_keeps_target(spark, tmp_path)
     trash nor staging is on disk: nothing was ever renamed, so the target
     is the live pre-publish data. Recovery must leave it untouched instead
     of misreading 'staging gone' as 'staging was renamed in'."""
-    import json
-
     from spark_jdbc_limit_spark.sinks import recover_atomic_publish
 
     t = tmp_path / "t"
     spark.createDataFrame([(4,), (5,)], "v int").write.parquet(str(t))
-    (tmp_path / "t__publish_manifest_zz.json").write_text(
-        json.dumps({"token": "zz", "mode": "swap",
-                    "staging": str(tmp_path / "t__staging_zz"),
-                    "trash": str(tmp_path / "t__trash_zz")})
-    )
+    _swap_journal(t, "zz")
     assert recover_atomic_publish(spark, str(t)) == ["zz"]
     assert {r.v for r in spark.read.parquet(str(t)).collect()} == {4, 5}
 
@@ -544,7 +612,7 @@ def test_partition_overwrite_crash_sweep(spark, tmp_path, monkeypatch):
         old.write.partitionBy("p").parquet(str(target))
         return set(range(9)), set(range(100, 109))
 
-    from spark_jdbc_limit_spark.sinks import recover_partition_publish
+    from spark_jdbc_limit_spark.sinks import recover_atomic_publish
     from spark_jdbc_limit_spark.sinks.transactional import write_parquet_overwrite_partitions
 
     def write_new(s, t):
@@ -558,7 +626,7 @@ def test_partition_overwrite_crash_sweep(spark, tmp_path, monkeypatch):
         monkeypatch,
         tmp_path,
         write_new,
-        recover_partition_publish,
+        recover_atomic_publish,
         lambda s, t: {r.id for r in s.read.parquet(t).collect()},
     )
     assert n_ops >= 6  # manifest + 2x(trash,swap) + commit + cleanup
