@@ -1,17 +1,42 @@
 #!/usr/bin/env python
-"""Benchmark harness: run every registered query at $SPARK_GRAFT_SF_DIR
-(default sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON line.
+"""Benchmark harness: the one timing core every timing scenario runs on.
 
-Execution uses the noop sink — the full physical plan runs JVM-side
-(scans, shuffles, aggregations) without driver collection, so timings
-measure the engine, not toPandas serialization.
+    python bench.py                      # suite: every registered query, one JSON line
+    python bench.py --record-anchor-ref  # re-measure ANCHOR_REF_SEC
+    python bench.py --scale              # replication sweep → BENCH_SCALE.json queries/value
+    python bench.py --cores              # data-bound core scaling → BENCH_SCALE.json core_scaling
+    python bench.py --baseline           # engine vs plain twins → BASELINE_TOP20.json
+    python bench.py --levers             # lever A/Bs → BENCH_SCALE.json levers
+
+Every timed sample goes through ``_passes``: one builder's plan run to
+the noop sink — the full physical plan runs JVM-side (scans, shuffles,
+aggregations) without driver collection, so timings measure the engine,
+not toPandas serialization. A subcommand rewrites only its own block of
+its artifact; every other key stays. A subset run's rows merge into the
+block when the block was recorded with the same corpus (and replication,
+cpus, passes for ``--cores``); a subset run under another setting
+refuses, and a whole-set run replaces the block's rows.
+
+The only knobs (environment):
+
+- ``SPARK_GRAFT_SF_DIR``: corpus dir (default sf0.1 for the suite,
+  ``--cores`` and ``--baseline``; sf0.01 for ``--scale`` and ``--levers``);
+- ``SPARK_GRAFT_CPUS``: ``local[N]`` (default: the cpus this process may
+  use; ``--cores`` times N and N/2);
+- ``SPARK_GRAFT_BENCH_REPS``: passes (default 3 for the suite and
+  ``--levers``, 2 for ``--scale``, ``--cores`` and ``--baseline``);
+- ``SPARK_GRAFT_BENCH_QUERIES``: comma subset of a subcommand's entries
+  or levers (the suite always runs the whole registry).
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
+import shutil
 import statistics
+import subprocess
 import sys
 import time
 
@@ -19,7 +44,17 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from spark_jdbc_limit_spark import build_session  # noqa: E402
 from spark_jdbc_limit_spark.operators import REGISTRY  # noqa: E402
+from spark_jdbc_limit_spark.sources.catalog import (  # noqa: E402
+    DEFAULT_SF_DIR,
+    TABLES,
+    load_table,
+)
 
+HERE = os.path.dirname(os.path.abspath(__file__))
+#: The generated corpora (sf0.001 / sf0.01 / sf0.1) sit side by side.
+TESTDATA = os.path.dirname(DEFAULT_SF_DIR)
+BENCH_SCALE = os.path.join(HERE, "BENCH_SCALE.json")
+BASELINE_TOP20 = os.path.join(HERE, "BASELINE_TOP20.json")
 
 #: Fixed anchor set: five stable, plan-frozen entries timed FIRST and LAST
 #: in every bench run. Their total against the recorded quiet-slot total
@@ -36,20 +71,16 @@ ANCHOR_QUERIES = (
     "scan_project_filter_topk",
     "window_topk_per_group",
 )
-#: Quiet-slot reference total for ANCHOR_QUERIES at sf0.1, 32 cpus.
-#: RE-RECORDED round 13 with the SAME procedure the run-time probes use
-#: (median of 5 single-shot passes over the set, after one unrecorded
-#: warm pass, in a warmed session; `python bench.py --record-anchor-ref`)
-#: — the round-11 constant (2.602) was min-of-5 PER QUERY, which made
-#: anchor_factor systematically >= 1 on a quiet slot and then read 0.841
-#: in round 12 when the machine-day beat the reference slot, flipping
-#: value_anchor_norm's direction vs raw (round-12 verdict #1). Recorded
-#: value: the QUIETEST of three slots sampled across the round-13
-#: session (run medians 2.59 / 2.698 / 3.08 — the documented same-day
-#: swing); like-for-like procedure means a comparably quiet slot reads
-#: ~1.0 by construction, [0.95, 1.05] is the quiet band, and a factor
-#: below it means a slot quieter than the reference day, not a bug.
+#: Quiet-slot reference total for ANCHOR_QUERIES at sf0.1, 32 cpus,
+#: recorded with the procedure the run-time probes use (`python bench.py
+#: --record-anchor-ref`: median of ANCHOR_PASSES single-shot passes after
+#: one unrecorded warm pass) on the quietest of three round-13 slots (run
+#: medians 2.59 / 2.698 / 3.08). A comparably quiet slot reads ~1.0 by
+#: construction; [0.95, 1.05] is the quiet band, and a factor below it
+#: means a slot quieter than the reference day, not a bug.
 ANCHOR_REF_SEC = 2.590
+#: Single-shot anchor passes whose median --record-anchor-ref reports.
+ANCHOR_PASSES = 5
 
 #: Interleave an anchor probe into the main rep loop every N query
 #: executions (round-11 verdict #3): first/last brackets can both land in
@@ -190,13 +221,11 @@ def _prev_bench_norm(sf_val, cpus: int) -> tuple[dict[str, float], str]:
     Normalizing both sides by their run's anchor factor makes the
     comparison a machine-swing-free plan signal (the same move as
     value_anchor_norm)."""
-    import subprocess
     import warnings
 
-    here = os.path.dirname(os.path.abspath(__file__))
     try:
         committed = subprocess.run(
-            ["git", "-C", here, "show", "HEAD:BENCH_FULL.json"],
+            ["git", "-C", HERE, "show", "HEAD:BENCH_FULL.json"],
             capture_output=True,
             text=True,
             timeout=30,
@@ -231,52 +260,138 @@ def _vs_prev_exceeds(
     )
 
 
-def _time_anchors(spark, sf_dir: str) -> float:
-    total = 0.0
-    for name in ANCHOR_QUERIES:
-        t0 = time.perf_counter()
-        REGISTRY[name].builder(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        total += time.perf_counter() - t0
-    return round(total, 3)
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _passes(arms, passes: int, cap_s: float | None = None, after=None) -> dict:
+    """The timing core. ``arms`` maps names to zero-argument builders of a
+    DataFrame; each sample is one builder call plus a noop-sink run of its
+    plan, in seconds. Arms run as ROUND-ROBIN PASSES (pass 1 over every
+    arm in order, then pass 2, ...), not back-to-back per arm: adjacent
+    arms alternate, and a multi-second VM noise window lands in at most
+    one sample of any arm (back-to-back reps once recorded 5.1 s min for
+    a query that times 2.6 s alone — one window swallowed all three). An
+    arm with a sample above ``cap_s`` is not re-run. ``after(n)`` runs
+    after the n-th sample. Returns name → samples."""
+    samples: dict[str, list[float]] = {name: [] for name in arms}
+    n = 0
+    for p in range(passes):
+        for name, build in arms.items():
+            if cap_s is not None and any(t > cap_s for t in samples[name]):
+                continue
+            t0 = time.perf_counter()
+            _noop(build())
+            samples[name].append(round(time.perf_counter() - t0, 3))
+            print(f"# pass{p + 1} {name}: {samples[name][-1]:.2f}s", file=sys.stderr)
+            n += 1
+            if after is not None:
+                after(n)
+    return samples
+
+
+def _entry_arms(spark, sf_dir: str, names) -> dict:
+    """Registry entries over ``sf_dir`` as ``_passes`` arms."""
+    return {n: (lambda n=n: REGISTRY[n].builder(spark, sf_dir)) for n in names}
+
+
+def _knobs(default_sf: str, default_reps: int):
+    """The four environment knobs under a scenario's defaults: corpus dir,
+    cpus, passes, and the entry subset (None: the whole set)."""
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", os.path.join(TESTDATA, default_sf))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
+    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", str(default_reps))))
+    only = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
+    return sf_dir, cpus, reps, (only.split(",") if only else None)
+
+
+def _session(name: str, cpus: int, **conf):
+    return build_session(
+        app_name=f"bench_{name}", cpus=cpus, shuffle_partitions=cpus, **conf
+    )
+
+
+def _warm(spark, sf_dir: str, cpus: int) -> None:
+    """Touch every catalog table (parquet footers, OS page cache) and the
+    Arrow/Python worker pool, so the first timed sample isn't charged them."""
+    for t in TABLES:
+        _noop(load_table(spark, sf_dir, t))
+    _noop(spark.range(0, cpus * 10, 1, cpus).mapInPandas(lambda it: it, "id long"))
+
+
+def _write_json(path: str, obj) -> None:
+    with open(path, "w") as f:
+        json.dump(obj, f, indent=1)
+        f.write("\n")
+
+
+def _load(path: str) -> dict:
+    with open(path) as f:
+        return json.load(f)
+
+
+def _update_artifact(path: str, update) -> None:
+    """Read-modify-write the JSON artifact at ``path``: ``update(art)`` sets
+    its scenario's keys in place; every other key stays."""
+    art = _load(path)
+    update(art)
+    _write_json(path, art)
+
+
+def _subset(universe, names) -> list:
+    """The entries of ``universe`` a run times: all of them, or the
+    ``SPARK_GRAFT_BENCH_QUERIES`` subset ``names`` in ``universe`` order.
+    An unknown name raises before anything is timed: a typo would
+    otherwise time nothing and still rewrite the artifact."""
+    if names is None:
+        return list(universe)
+    unknown = sorted(set(names) - set(universe))
+    if unknown:
+        raise ValueError(f"unknown entries {unknown}; choose from {sorted(universe)}")
+    return [n for n in universe if n in names]
+
+
+def _prior_rows(block: dict, stamp: dict, full: bool) -> dict:
+    """The per-entry rows of an artifact ``block`` that a run's rows merge
+    into: the block's ``queries`` when its ``stamp`` keys (corpus,
+    replication, cpus, ...) equal the run's; none when the block has no
+    rows or the run covers its scenario's whole set (it replaces them). A
+    subset run under another stamp would mix incomparable rows: it raises."""
+    if all(block.get(k) == v for k, v in stamp.items()):
+        return block.get("queries", {})
+    if full or not block.get("queries"):
+        return {}
+    recorded = {k: block.get(k) for k in stamp}
+    raise ValueError(
+        f"a subset run at {stamp} cannot merge into rows recorded at "
+        f"{recorded}: run the whole set"
+    )
+
+
+def _time_anchors(spark, sf_dir: str, passes: int = 1) -> list[float]:
+    """Total seconds of each single-shot pass over ANCHOR_QUERIES."""
+    samples = _passes(_entry_arms(spark, sf_dir, ANCHOR_QUERIES), passes)
+    return [round(sum(p), 3) for p in zip(*samples.values())]
 
 
 def _warm_session(spark, sf_dir: str, cpus: int) -> None:
-    """Session warmup shared by the main bench and --record-anchor-ref:
-    codegen/compiler init, first-touch parquet footers, every catalog
-    table once (OS page cache), the Arrow/Python worker pool, and one
-    unrecorded anchor pass (see the warm-pass note in main)."""
-    for warm in ("limit_semantics", "q1_pricing_summary"):
-        REGISTRY[warm].builder(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    from spark_jdbc_limit_spark.sources.catalog import TABLES, load_table
-
-    for t in TABLES:
-        load_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-    spark.range(0, cpus * 10, 1, cpus).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    """Warm-up of the suite and --record-anchor-ref: ``_warm``, then one
+    unrecorded anchor pass, which also pays codegen/compiler init (see the
+    warm-pass note in main)."""
+    _warm(spark, sf_dir, cpus)
     _time_anchors(spark, sf_dir)
 
 
 def record_anchor_ref() -> None:
     """Re-record ANCHOR_REF_SEC with the run-time procedure itself
     (round-12 verdict #1): warmed session, one unrecorded warm pass,
-    then ANCHOR_REF_PASSES single-shot passes over the anchor set —
-    median is the constant. Run on a quiet slot; the printed spread is
-    the slot evidence to commit alongside the new value."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(
-        app_name="anchor_ref", cpus=cpus, shuffle_partitions=cpus
-    )
+    then ANCHOR_PASSES single-shot passes over the anchor set — median
+    is the constant. Run on a quiet slot; the printed spread is the slot
+    evidence to commit alongside the new value."""
+    sf_dir, cpus, _, _ = _knobs("sf0.1", 3)
+    spark = _session("anchor_ref", cpus)
     _warm_session(spark, sf_dir, cpus)
-    passes = [
-        _time_anchors(spark, sf_dir)
-        for _ in range(int(os.environ.get("SPARK_GRAFT_ANCHOR_PASSES", "5")))
-    ]
+    passes = _time_anchors(spark, sf_dir, ANCHOR_PASSES)
     print(
         json.dumps(
             {
@@ -294,15 +409,14 @@ def record_anchor_ref() -> None:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    sf_dir, cpus, reps, _ = _knobs("sf0.1", 3)
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
     try:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
 
-    spark = build_session(app_name="bench", cpus=cpus, shuffle_partitions=cpus)
+    spark = _session("bench", cpus)
     # Warm the JVM once (codegen/compiler init plus first-touch parquet
     # footer reads, ~7 s of pure session warm-up measured at sf0.1, would
     # otherwise be misattributed to the first query), every catalog table
@@ -327,38 +441,23 @@ def main() -> None:
     # crosses processes.
     from spark_jdbc_limit_spark.operators.graph import supplier_edges_ckpt
 
-    t0 = time.perf_counter()
-    supplier_edges_ckpt(spark, sf_dir, keep_weight=True).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    supplier_edges_ckpt_sec = round(time.perf_counter() - t0, 3)
+    (supplier_edges_ckpt_sec,) = _passes(
+        {"ckpt": lambda: supplier_edges_ckpt(spark, sf_dir, keep_weight=True)}, 1
+    )["ckpt"]
 
-    # Per-query MEDIAN over n reps: a single-shot timing on a shared VM
-    # reads contention windows as 10x plan regressions (round-2 bench
-    # recorded 11.0s for a query that warm-times 1.37s). Reps run as
-    # ROUND-ROBIN PASSES over the whole registry (pass 1 all queries,
-    # then pass 2, ...), not back-to-back per query: a multi-second VM
-    # noise window then lands in at most one rep of any query, so the
-    # recorded MIN stays contention-free (back-to-back reps once
-    # recorded 5.1s min for a query that times 2.6s alone — one window
-    # swallowed all three samples).
-    anchor_first = _time_anchors(spark, sf_dir)
-
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    anchor_every = int(os.environ.get("SPARK_GRAFT_ANCHOR_EVERY", str(ANCHOR_EVERY)))
+    # Per-query MEDIAN over n round-robin reps: a single-shot timing on a
+    # shared VM reads contention windows as 10x plan regressions (round-2
+    # bench recorded 11.0s for a query that warm-times 1.37s).
+    (anchor_first,) = _time_anchors(spark, sf_dir)
     anchor_series: list[dict] = [{"at": 0, "sec": anchor_first}]
-    all_reps: dict[str, list[float]] = {name: [] for name in REGISTRY}
-    n_exec = 0
-    for _ in range(reps):
-        for name, spec in REGISTRY.items():
-            t0 = time.perf_counter()
-            spec.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            all_reps[name].append(round(time.perf_counter() - t0, 3))
-            n_exec += 1
-            if anchor_every > 0 and n_exec % anchor_every == 0:
-                anchor_series.append(
-                    {"at": n_exec, "sec": _time_anchors(spark, sf_dir)}
-                )
+
+    def anchor_probe(n_exec: int) -> None:
+        if n_exec % ANCHOR_EVERY == 0:
+            (sec,) = _time_anchors(spark, sf_dir)
+            anchor_series.append({"at": n_exec, "sec": sec})
+
+    all_reps = _passes(_entry_arms(spark, sf_dir, REGISTRY), reps, after=anchor_probe)
+    n_exec = sum(len(samples) for samples in all_reps.values())
     timings: dict[str, float] = {}
     mins: dict[str, float] = {}
     for name, samples in all_reps.items():
@@ -374,141 +473,78 @@ def main() -> None:
     # recompute so its oracle stays self-contained. In production CC is a
     # materialized intermediate, so ALSO time the survivor step against a
     # checkpointed CC relation — the operator's true marginal cost.
+    from pyspark.sql import functions as F
+
+    from spark_jdbc_limit_spark.operators import graph as G
     from spark_jdbc_limit_spark.operators.dedup import (
+        _dup_anchors,
         _dup_survivors,
         best_representative_frame,
         dedup_connected_components,
         dup_span_extract_frame,
     )
-
-    from spark_jdbc_limit_spark.operators.graph import (
-        _supplier_edges,
-        bfs_hops_until_settled,
-        connected_components_until_settled,
-        graph_bfs_hops,
-        graph_closeness_multisource,
-        graph_connected_components,
-        graph_jaccard_link_prediction,
-        graph_kcore_peeling,
-        graph_label_propagation,
-        graph_local_clustering_topk,
-        graph_resource_allocation_links,
-        graph_sssp_bellman_ford,
-        graph_triangle_stats,
-        kcore_until_settled,
-        label_propagation_until_settled,
-        pagerank_frame,
-    )
-
-    cc = dedup_connected_components(spark, sf_dir).localCheckpoint()
-    edges = _supplier_edges(spark, sf_dir).localCheckpoint()
-    w_edges = _supplier_edges(spark, sf_dir, keep_weight=True).localCheckpoint()
-    # the suffix-dedup pair shares one surviving-suffix relation in a
-    # pipeline; each standalone entry re-derives it for its oracle
-    from spark_jdbc_limit_spark.sources.catalog import load_table as _lt
-
-    dup_sv = _dup_survivors(_lt(spark, sf_dir, "documents")).localCheckpoint()
-    # the composed curation capstone's maintained intermediate: the eval
-    # gram-digest index (benchmark-sized; re-derived in the
-    # self-contained entry, materialized once per eval release in
-    # production)
-    from pyspark.sql import functions as _F
-
-    from spark_jdbc_limit_spark.operators.dedup import _dup_anchors
     from spark_jdbc_limit_spark.operators.pipeline import (
         DECON_EVAL_MOD,
         curate_full_frame,
     )
 
-    _docs = _lt(spark, sf_dir, "documents")
+    cc = dedup_connected_components(spark, sf_dir).localCheckpoint()
+    edges = G._supplier_edges(spark, sf_dir).localCheckpoint()
+    w_edges = G._supplier_edges(spark, sf_dir, keep_weight=True).localCheckpoint()
+    docs = load_table(spark, sf_dir, "documents")
+    # the suffix-dedup pair shares one surviving-suffix relation in a
+    # pipeline; each standalone entry re-derives it for its oracle
+    dup_sv = _dup_survivors(docs).localCheckpoint()
+    # the composed curation capstone's maintained intermediate: the eval
+    # gram-digest index (benchmark-sized; re-derived in the
+    # self-contained entry, materialized once per eval release in
+    # production)
     ev_idx = (
-        _dup_anchors(
-            _docs.filter(_F.pmod(_F.col("doc_id"), _F.lit(DECON_EVAL_MOD)) == 0)
-        )[1]
+        _dup_anchors(docs.filter(F.pmod(F.col("doc_id"), F.lit(DECON_EVAL_MOD)) == 0))[1]
         .select("ah")
         .distinct()
         .localCheckpoint()
     )
 
     marginal_builders = {
-        "curate_full_pipeline": lambda: curate_full_frame(_docs, ev_grams=ev_idx),
+        "curate_full_pipeline": lambda: curate_full_frame(docs, ev_grams=ev_idx),
         "dedup_cluster_best_representative": lambda: best_representative_frame(
             spark, sf_dir, cc
         ),
         # the single plan body shared with the registry entry (round-12
         # advice: the inline copy the bench carried could drift)
         "dedup_dup_span_extract": lambda: dup_span_extract_frame(dup_sv),
-        # the graph analytics share one materialized edge relation in a
-        # pipeline; their standalone entries re-derive it for the oracle
-        "graph_pagerank_supplier": lambda: pagerank_frame(spark, sf_dir, edges=edges),
-        "graph_label_propagation": lambda: graph_label_propagation(
-            spark, sf_dir, edges=edges
-        ),
-        "graph_triangle_stats": lambda: graph_triangle_stats(
-            spark, sf_dir, edges=edges
-        ),
-        "graph_connected_components": lambda: graph_connected_components(
-            spark, sf_dir, edges=edges
-        ),
-        "graph_bfs_hops": lambda: graph_bfs_hops(spark, sf_dir, edges=edges),
-        "graph_kcore_peeling": lambda: graph_kcore_peeling(spark, sf_dir, edges=edges),
-        "graph_jaccard_link_prediction": lambda: graph_jaccard_link_prediction(
-            spark, sf_dir, edges=edges
-        ),
-        "graph_resource_allocation_links": lambda: graph_resource_allocation_links(
-            spark, sf_dir, edges=edges
-        ),
-        "graph_closeness_multisource": lambda: graph_closeness_multisource(
-            spark, sf_dir, edges=edges
-        ),
-        "graph_local_clustering_topk": lambda: graph_local_clustering_topk(
-            spark, sf_dir, edges=edges
-        ),
-        # the weighted family shares its OWN materialized relation (the
-        # same derivation with the co-order count retained)
-        "graph_sssp_bellman_ford": lambda: graph_sssp_bellman_ford(
-            spark, sf_dir, edges=w_edges
-        ),
     }
-
-    # the until-settled family's marginals: same shared edge relation;
-    # the convergence loop's per-round count jobs are part of the
-    # operator's cost and stay inside the timed call (the returned state
-    # is what a pipeline consumes)
-    def _settled_marginal(fn):
-        def build():
-            state, _rounds, _settled = fn(spark, sf_dir, edges=edges)
-            return state
-
-        return build
-
-    marginal_builders.update(
-        {
-            "graph_cc_until_settled": _settled_marginal(
-                connected_components_until_settled
-            ),
-            "graph_bfs_until_settled": _settled_marginal(bfs_hops_until_settled),
-            "graph_kcore_until_settled": _settled_marginal(kcore_until_settled),
-            "graph_lpa_until_settled": _settled_marginal(
-                label_propagation_until_settled
-            ),
-        }
-    )
-    from spark_jdbc_limit_spark.operators.graph import sssp_until_settled
-
-    def _sssp_settled_marginal():
-        state, _rounds, _settled = sssp_until_settled(spark, sf_dir, edges=w_edges)
-        return state
-
-    marginal_builders["graph_sssp_until_settled"] = _sssp_settled_marginal
-    # Marginal reps are round-robin passes like the main loop, so one VM
-    # noise window lands in at most one rep of any marginal builder.
-    marginal_reps: dict[str, list[float]] = {m: [] for m in marginal_builders}
-    for _ in range(reps):
-        for mname, build in marginal_builders.items():
-            t0 = time.perf_counter()
-            build().write.format("noop").mode("overwrite").save()
-            marginal_reps[mname].append(round(time.perf_counter() - t0, 3))
+    # the graph analytics share one materialized edge relation in a
+    # pipeline; their standalone entries re-derive it for the oracle. The
+    # weighted family shares its OWN relation (the same derivation with
+    # the co-order count retained).
+    for name, fn, e in (
+        ("graph_pagerank_supplier", G.pagerank_frame, edges),
+        ("graph_label_propagation", G.graph_label_propagation, edges),
+        ("graph_triangle_stats", G.graph_triangle_stats, edges),
+        ("graph_connected_components", G.graph_connected_components, edges),
+        ("graph_bfs_hops", G.graph_bfs_hops, edges),
+        ("graph_kcore_peeling", G.graph_kcore_peeling, edges),
+        ("graph_jaccard_link_prediction", G.graph_jaccard_link_prediction, edges),
+        ("graph_resource_allocation_links", G.graph_resource_allocation_links, edges),
+        ("graph_closeness_multisource", G.graph_closeness_multisource, edges),
+        ("graph_local_clustering_topk", G.graph_local_clustering_topk, edges),
+        ("graph_sssp_bellman_ford", G.graph_sssp_bellman_ford, w_edges),
+    ):
+        marginal_builders[name] = lambda fn=fn, e=e: fn(spark, sf_dir, edges=e)
+    # the until-settled family's marginals: the convergence loop's
+    # per-round count jobs are part of the operator's cost and stay inside
+    # the timed call (the returned state is what a pipeline consumes)
+    for name, fn, e in (
+        ("graph_cc_until_settled", G.connected_components_until_settled, edges),
+        ("graph_bfs_until_settled", G.bfs_hops_until_settled, edges),
+        ("graph_kcore_until_settled", G.kcore_until_settled, edges),
+        ("graph_lpa_until_settled", G.label_propagation_until_settled, edges),
+        ("graph_sssp_until_settled", G.sssp_until_settled, w_edges),
+    ):
+        marginal_builders[name] = lambda fn=fn, e=e: fn(spark, sf_dir, edges=e)[0]
+    marginal_reps = _passes(marginal_builders, reps)
     pipeline_marginal = {
         mname: round(statistics.median(samples), 3)
         for mname, samples in marginal_reps.items()
@@ -536,13 +572,7 @@ def main() -> None:
         prev_hit = _vs_prev_exceeds(med, provisional_factor, pn)
         if not (spread_hit or base_hit or prev_hit or name in ALWAYS_REPROBE):
             continue
-        solo = []
-        for _ in range(REPROBE_REPS):
-            t0 = time.perf_counter()
-            REGISTRY[name].builder(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            solo.append(round(time.perf_counter() - t0, 3))
+        solo = _passes(_entry_arms(spark, sf_dir, [name]), REPROBE_REPS)[name]
         solo_min = min(solo)
         triggers = [
             t
@@ -580,7 +610,7 @@ def main() -> None:
         rec["noise_confirmed"] = solo_min <= 1.25 * mn
         reprobe[name] = rec
 
-    anchor_last = _time_anchors(spark, sf_dir)
+    (anchor_last,) = _time_anchors(spark, sf_dir)
     anchor_series.append({"at": n_exec, "sec": anchor_last})
     # min of first/last: the contention-free-er of the two bracketing
     # samples (a noise window at one end shouldn't read as a slow machine)
@@ -632,10 +662,7 @@ def main() -> None:
         # marginal against this warm memo. NOT added to `value`.
         "supplier_edges_ckpt_sec": supplier_edges_ckpt_sec,
     }
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "BENCH_FULL.json"), "w") as f:
-        json.dump(full, f, indent=1)
-        f.write("\n")
+    _write_json(os.path.join(HERE, "BENCH_FULL.json"), full)
     # committed staleness artifact (round-10 verdict #8): how far behind
     # the stalest driver-green entry is, given the rotation's
     # stalest-green-first ordering. Computed before the file is opened,
@@ -643,9 +670,7 @@ def main() -> None:
     from rotation import rotation_stats
 
     stats = rotation_stats()
-    with open(os.path.join(here, "ROTATION.json"), "w") as f:
-        json.dump(stats, f, indent=1)
-        f.write("\n")
+    _write_json(os.path.join(HERE, "ROTATION.json"), stats)
     # The grading driver keeps only the last 2000 chars of stdout; the full
     # 100-query timings dict overflows that and the line becomes
     # unparseable (round-1 BENCH: "parsed": null). Print a compact line
@@ -684,8 +709,338 @@ def main() -> None:
     print(line)
 
 
+# ---------------------------------------------------------------------------
+# Subcommands. Each takes (corpus dir, cpus, passes, entry subset or None)
+# from ``_knobs``, builds its session unless given one, and rewrites its
+# own block of its artifact.
+# ---------------------------------------------------------------------------
+
+#: Replication factors of the --scale sweep.
+SCALE_REPLICATIONS = (1, 10, 100)
+#: A --scale sample above this many seconds is not re-run (the min of one
+#: sample is that sample; the cap bounds total bench time).
+SCALE_CAP_S = 150.0
+SCALE_WORK = "/tmp/spark_graft_scale"
+
+
+def _slope(by_r: dict[int, float]) -> float:
+    """Least-squares slope of log(wall) over log(R); 0.0 for one R."""
+    if len(by_r) < 2:
+        return 0.0
+    rs = sorted(by_r)
+    xs = [math.log(r) for r in rs]
+    ys = [math.log(max(by_r[r], 1e-3)) for r in rs]
+    return round(statistics.linear_regression(xs, ys).slope, 3)
+
+
+def run_scale(
+    sf_dir, cpus, passes, names, spark=None,
+    replications=SCALE_REPLICATIONS, work=SCALE_WORK, artifact=BENCH_SCALE,
+) -> dict:
+    """--scale: time each entry of bench_scale.QUERIES over the corpus
+    replicated R× for every R (min over passes) and fit its scaling
+    exponent. Rows merge into the artifact's ``queries`` (see
+    ``_prior_rows``); ``value`` is the worst exponent of the linear family."""
+    from bench_scale import QUERIES, _replicate
+
+    queries = _subset(QUERIES, names)
+    stamp = {"base": sf_dir, "reps": list(replications)}
+    prior = _prior_rows(_load(artifact), stamp, len(queries) == len(QUERIES))
+    spark = spark or _session("scale", cpus)
+    times: dict[str, dict[int, float]] = {n: {} for n in queries}
+    for r in replications:
+        rd = f"{work}/x{r}"
+        shutil.rmtree(rd, ignore_errors=True)
+        _replicate(spark, sf_dir, rd, r)
+        print(f"# built {rd}", file=sys.stderr)
+        _warm(spark, rd, cpus)
+        arms = _entry_arms(spark, rd, queries)
+        for name, samples in _passes(arms, passes, SCALE_CAP_S).items():
+            times[name][r] = min(samples)
+        shutil.rmtree(rd, ignore_errors=True)
+    rows = {
+        name: {
+            "t_by_replication": {str(r): by_r[r] for r in sorted(by_r)},
+            "exponent": _slope(by_r),
+            "expected": QUERIES[name],
+        }
+        for name, by_r in times.items()
+    }
+
+    def put(art: dict) -> None:
+        art.update(metric="scale_exponent_max_linear_family", unit="exponent", **stamp)
+        art["queries"] = {**prior, **rows}
+        linear = [q["exponent"] for q in art["queries"].values() if q["expected"] == "linear"]
+        art["value"] = max(linear, default=0.0)
+
+    _update_artifact(artifact, put)
+    return rows
+
+
+#: --cores replication factor, file count per table, and scan split size.
+#: The split is finer than the 128 MB default so a 10x table's scan
+#: stage yields enough tasks for every core count to engage; both core
+#: counts run with the same value, so the comparison stays like-for-like.
+CORES_R = 10
+CORES_FILES = 64
+CORES_SPLIT = "16m"
+CORES_WORK = "/tmp/spark_graft_cores"
+#: Marks the --cores child's result line: Spark or a library may print to
+#: stdout after it, so the parent finds the line by prefix, not position.
+RESULT_PREFIX = "RESULT:"
+
+
+def _worker_result(stdout: str) -> dict:
+    """The JSON object on the child's ``RESULT_PREFIX`` line."""
+    for line in stdout.splitlines():
+        if line.startswith(RESULT_PREFIX):
+            return json.loads(line[len(RESULT_PREFIX):])
+    raise RuntimeError(f"worker printed no {RESULT_PREFIX} line: {stdout[-500:]}")
+
+
+def _ratio(lo: float | None, hi: float | None) -> float | None:
+    """Low-over-high cpu time ratio; None when either side has no time."""
+    if lo is None or hi is None:
+        return None
+    return round(lo / hi, 3)
+
+
+def run_cores(
+    sf_dir, cpus, passes, names, spark=None,
+    r=CORES_R, files=CORES_FILES, work=CORES_WORK, artifact=BENCH_SCALE,
+) -> dict:
+    """--cores: time bench_scale.CORE_QUERIES over the corpus replicated
+    ``r``× into ``files`` files per table, at ``cpus`` and ``cpus // 2``.
+    Each core count runs in its own child (``bench.py --cores-worker``)
+    because ``local[N]`` binds at launch. The replicated corpus is built
+    once per base corpus name and kept under ``work``. Rows merge into the
+    artifact's ``core_scaling`` (see ``_prior_rows``); ``total_ratio``
+    covers the merged rows."""
+    from bench_scale import CORE_QUERIES, _replicate
+
+    queries = _subset(CORE_QUERIES, names)
+    counts = sorted({cpus, max(1, cpus // 2)})
+    stamp = {"base": sf_dir, "replication": r, "cpus": counts, "passes": passes}
+    prior = _prior_rows(
+        _load(artifact).get("core_scaling", {}), stamp, len(queries) == len(CORE_QUERIES)
+    )
+    data_dir = f"{work}/{os.path.basename(sf_dir.rstrip('/'))}_x{r}_f{files}"
+    if not os.path.exists(f"{data_dir}/_BUILT"):
+        build = spark or _session("cores_build", cpus)
+        shutil.rmtree(data_dir, ignore_errors=True)
+        _replicate(build, sf_dir, data_dir, r, files=files)
+        open(f"{data_dir}/_BUILT", "w").close()
+        print(f"# built {data_dir}", file=sys.stderr)
+        if spark is None:
+            build.stop()
+    per_cpus: dict[int, dict[str, float]] = {}
+    for c in counts:
+        env = {
+            **os.environ,
+            "SPARK_GRAFT_SF_DIR": data_dir,
+            "SPARK_GRAFT_CPUS": str(c),
+            "SPARK_GRAFT_BENCH_REPS": str(passes),
+            "SPARK_GRAFT_BENCH_QUERIES": ",".join(queries),
+        }
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--cores-worker"],
+            env=env, capture_output=True, text=True, cwd=HERE,
+        )
+        sys.stderr.write(proc.stderr)
+        if proc.returncode != 0:
+            raise RuntimeError(f"worker cpus={c} failed: {proc.stderr[-500:]}")
+        per_cpus[c] = _worker_result(proc.stdout)["times"]
+    lo, hi = per_cpus[counts[0]], per_cpus[counts[-1]]
+    rows = {
+        name: {
+            **{f"t_{c}cpus": per_cpus[c].get(name) for c in counts},
+            "ratio": _ratio(lo.get(name), hi.get(name)),
+        }
+        for name in queries
+    }
+    merged = {**prior, **rows}
+    lo_k, hi_k = f"t_{counts[0]}cpus", f"t_{counts[-1]}cpus"
+    timed = [q for q in merged.values() if q[lo_k] is not None and q[hi_k] is not None]
+    block = {
+        "metric": "core_scaling_ratio_low_over_high",
+        **stamp,
+        "queries": merged,
+        "total_ratio": round(
+            sum(q[lo_k] for q in timed) / max(sum(q[hi_k] for q in timed), 1e-9), 3
+        ),
+    }
+    _update_artifact(artifact, lambda art: art.update(core_scaling=block))
+    return block
+
+
+def _cores_worker() -> None:
+    """The --cores child: time the subset at local[SPARK_GRAFT_CPUS] over
+    SPARK_GRAFT_SF_DIR and print one ``RESULT_PREFIX`` line of per-entry
+    min-over-passes seconds."""
+    data_dir, cpus, passes, queries = _knobs("sf0.1", 2)
+    spark = _session(
+        f"cores_{cpus}", cpus,
+        extra_conf={"spark.sql.files.maxPartitionBytes": CORES_SPLIT},
+    )
+    _warm(spark, data_dir, cpus)
+    samples = _passes(_entry_arms(spark, data_dir, queries or []), passes)
+    times = {name: min(s) for name, s in samples.items()}
+    print(RESULT_PREFIX + json.dumps({"cpus": cpus, "times": times}))
+
+
+#: --baseline: an arm with a sample above this many seconds is not re-run
+#: (bounds bench time; avoids re-materializing pathological naive plans).
+BASELINE_CAP_S = 30.0
+#: Self-clearing quiet-pair reprobes (round-14): in a FULL run the engine
+#: arm of a light row can land right after a naive monster's uncut cached
+#: plans (GC / Python-worker-pool pressure) and read 1.5-4x its quiet-pair
+#: value — r14 measured jaccard's engine arm at 8.55 s in-suite vs 2.15 s
+#: solo. A row above this ratio after the main passes re-runs as an
+#: ISOLATED alternating pair (2x each arm, min taken); the pair is the
+#: canonical row and the main-pass values stay in ``reprobe``.
+BASELINE_REPROBE_RATIO = 1.4
+#: Every twin is validated row-identical to its entry here before timing.
+BASELINE_VALIDATE_SF = os.path.join(TESTDATA, "sf0.01")
+
+
+def run_baseline(
+    sf_dir, cpus, passes, names, spark=None, artifact=BASELINE_TOP20
+) -> dict:
+    """--baseline: time each top-heavy entry against its plain-PySpark
+    twin (bench_baseline), alternating, min per arm, after validating the
+    twin at BASELINE_VALIDATE_SF. Rows merge into the artifact's
+    ``queries`` (see ``_prior_rows``); ``value`` is the worst
+    engine/baseline ratio."""
+    from bench_baseline import _canon, _rows_equal, baselines
+
+    every = baselines()
+    twins = {n: every[n] for n in _subset(every, names)}
+    stamp = {"sf_dir": sf_dir}
+    prior = _prior_rows(_load(artifact), stamp, len(twins) == len(every))
+    # the naive arms carry deliberately-uncut lineage (the plain user's
+    # .cache() loops) whose plan trees are large — give the driver heap
+    # room for them
+    spark = spark or _session("baseline", cpus, driver_memory="10g")
+    for name, fn in twins.items():
+        ec, er = _canon(REGISTRY[name].builder(spark, BASELINE_VALIDATE_SF))
+        bc, br = _canon(fn(spark, BASELINE_VALIDATE_SF))
+        assert ec == bc, f"{name}: column mismatch {ec} vs {bc}"
+        assert _rows_equal(er, br), f"{name}: baseline values diverge"
+        print(f"# validated {name}: {len(er)} rows identical", file=sys.stderr)
+        spark.catalog.clearCache()
+    _warm(spark, sf_dir, cpus)
+
+    def pair(name: str) -> dict:
+        return {
+            f"{name}:engine": lambda: REGISTRY[name].builder(spark, sf_dir),
+            f"{name}:baseline": lambda: twins[name](spark, sf_dir),
+        }
+
+    def clear(_n: int) -> None:
+        spark.catalog.clearCache()
+
+    arms = {k: v for name in twins for k, v in pair(name).items()}
+    walls = _passes(arms, passes, BASELINE_CAP_S, after=clear)
+    eng = {n: min(walls[f"{n}:engine"]) for n in twins}
+    bas = {n: min(walls[f"{n}:baseline"]) for n in twins}
+    reprobe: dict[str, dict] = {}
+    for name in twins:
+        if bas[name] and eng[name] / bas[name] <= BASELINE_REPROBE_RATIO:
+            continue
+        if eng[name] > BASELINE_CAP_S or bas[name] > BASELINE_CAP_S:
+            continue  # capped monsters: a second pair would double bench wall
+        quiet = _passes(pair(name), 2, after=clear)
+        pe, pb = min(quiet[f"{name}:engine"]), min(quiet[f"{name}:baseline"])
+        reprobe[name] = {
+            "main_engine_sec": eng[name],
+            "main_baseline_sec": bas[name],
+            "pair_engine_sec": pe,
+            "pair_baseline_sec": pb,
+            "pair_ratio": round(pe / pb, 3) if pb else None,
+        }
+        eng[name], bas[name] = pe, pb
+    rows = {
+        n: {
+            "engine_sec": eng[n],
+            "baseline_sec": bas[n],
+            "ratio": round(eng[n] / bas[n], 3) if bas[n] else None,
+        }
+        for n in twins
+    }
+
+    def put(art: dict) -> None:
+        art.update(metric="engine_over_baseline_ratio_top_heavy", unit="ratio")
+        art.update(stamp)
+        art["queries"] = {**prior, **rows}
+        kept = {
+            n: v for n, v in art.pop("reprobe", {}).items() if n in prior and n not in rows
+        }
+        if kept or reprobe:
+            art["reprobe"] = {**kept, **reprobe}
+        merged = art["queries"].values()
+        art["value"] = max((q["ratio"] for q in merged if q["ratio"]), default=0.0)
+        art["total_engine_sec"] = round(sum(q["engine_sec"] for q in merged), 3)
+        art["total_baseline_sec"] = round(sum(q["baseline_sec"] for q in merged), 3)
+
+    _update_artifact(artifact, put)
+    return rows
+
+
+LEVER_WORK = "/tmp/spark_graft_levers"
+
+
+def run_levers(
+    sf_dir, cpus, passes, names, spark=None, work=LEVER_WORK, artifact=BENCH_SCALE
+) -> dict:
+    """--levers: for each lever of bench_levers.LEVERS, a check that its two
+    arms return the same rows, one unrecorded warm pass, then ``passes``
+    alternating passes over the arms in one session. Each row lands in the
+    artifact's ``levers`` under its name."""
+    from bench_levers import LEVERS
+
+    spark = spark or _session("levers", cpus)
+    rows = {}
+    for name in _subset(LEVERS, names):
+        facts, arms, fast = LEVERS[name](spark, sf_dir, work)
+        a, b = ({tuple(r) for r in arm().collect()} for arm in arms.values())
+        assert a and a == b, f"{name}: arms disagree on {len(a ^ b)} rows"
+        print(f"# {name}: arms agree on {len(a)} rows", file=sys.stderr)
+        _passes(arms, 1)
+        walls = _passes(arms, passes)
+        (slow,) = [a for a in arms if a != fast]
+        med = {a: statistics.median(w) for a, w in walls.items()}
+        rows[name] = {
+            **facts,
+            **{f"wall_{a}": w for a, w in walls.items()},
+            **{f"wall_{a}_median": m for a, m in med.items()},
+            f"speedup_{fast}_median": round(med[slow] / med[fast], 2),
+            f"speedup_{fast}_min": round(min(walls[slow]) / min(walls[fast]), 2),
+        }
+        _update_artifact(
+            artifact, lambda art: art.setdefault("levers", {}).update({name: rows[name]})
+        )
+    return rows
+
+
+#: Subcommand → (scenario, default corpus, default passes).
+SCENARIOS = {
+    "--scale": (run_scale, "sf0.01", 2),
+    "--cores": (run_cores, "sf0.1", 2),
+    "--baseline": (run_baseline, "sf0.1", 2),
+    "--levers": (run_levers, "sf0.01", 3),
+}
+
+
 if __name__ == "__main__":
-    if "--record-anchor-ref" in sys.argv:
-        record_anchor_ref()
-    else:
+    flag = sys.argv[1] if len(sys.argv) > 1 else None
+    if flag is None:
         main()
+    elif flag == "--record-anchor-ref":
+        record_anchor_ref()
+    elif flag == "--cores-worker":
+        _cores_worker()
+    elif flag in SCENARIOS:
+        run, default_sf, default_reps = SCENARIOS[flag]
+        print(json.dumps(run(*_knobs(default_sf, default_reps))))
+    else:
+        sys.exit(f"unknown option {flag!r}: use one of --record-anchor-ref, {', '.join(SCENARIOS)}")

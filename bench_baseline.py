@@ -1,10 +1,9 @@
-#!/usr/bin/env python
 """Baseline refresh for the top-20 heaviest catalog entries (round-9
 verdict #8): the recorded 57-query plain-PySpark baseline predates the
 graph/stats/dedup-audit family, so the 2x bar measured only the catalog's
-oldest fifth. This harness gives every current heavyweight a PLAIN
-PySpark twin and times engine vs baseline A/B in ONE session
-(alternating passes, min per arm — the repo's timing discipline).
+oldest fifth. This module gives every current heavyweight a PLAIN
+PySpark twin; ``bench.py --baseline`` times engine vs baseline A/B in ONE
+session (alternating passes, min per arm) into BASELINE_TOP20.json.
 
 What "plain" means here, per arm:
 
@@ -30,30 +29,19 @@ that computes something easier would make the ratio meaningless.
 Not re-recorded here: dedup_minhash_verified, dedup_ngram_jaccard_
 exhaustive, q1_pricing_summary — the round-1 baseline already holds
 rows for them (BASELINE.md "Recorded baseline").
-
-Run:  python bench_baseline.py            # writes BASELINE_TOP20.json
-Env:  SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
-      SPARK_GRAFT_BASELINE_VALIDATE_SF (default sf0.01; "skip" skips)
 """
 
 from __future__ import annotations
 
-import json
 import math
-import os
 import re
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
+from pyspark.sql import functions as F
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
-from pyspark.sql import Window as W  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-from spark_jdbc_limit_spark import build_session  # noqa: E402
-from spark_jdbc_limit_spark.operators import REGISTRY  # noqa: E402
-from spark_jdbc_limit_spark.sources.catalog import TABLES, load_table  # noqa: E402
+from spark_jdbc_limit_spark.operators import REGISTRY
+from spark_jdbc_limit_spark.sources.catalog import TABLES, load_table
 
 #: oracle-as-baseline entries: the translated oracle SQL runs via
 #: spark.sql — Catalyst gets the same declarative text DuckDB verified.
@@ -183,10 +171,6 @@ def _naive_cc_labels(spark, sf_dir, rounds: int = 6) -> DataFrame:
             .cache()
         )
     return labels
-
-
-def naive_dedup_connected_components(spark, sf_dir) -> DataFrame:
-    return _naive_cc_labels(spark, sf_dir)
 
 
 def naive_cluster_best_representative(spark, sf_dir) -> DataFrame:
@@ -346,26 +330,14 @@ def naive_pca_power_iteration(spark, sf_dir) -> DataFrame:
     )
 
 
-def naive_longest_dup_substring(spark, sf_dir, docs: DataFrame | None = None) -> DataFrame:
-    """ALL cross-doc suffix pairs within each anchor bucket (the
-    exhaustive strategy the oracle runs) instead of the engine's
-    sorted-adjacency plan — same survivors relation, same LCP fold, so
-    the only difference timed is pair generation: O(bucket²) vs
-    O(bucket) rows through the fold. ``docs`` overrides the corpus (the
-    hot-boilerplate lever A/B in bench_levers.py feeds a synthetic one)."""
-    from spark_jdbc_limit_spark.operators.dedup import _LCP_EXPR, _dup_survivors
+def _all_suffix_pairs(sv: DataFrame) -> DataFrame:
+    """ALL cross-doc suffix pairs within each anchor bucket of the
+    survivors ``sv`` (the exhaustive strategy the oracle runs), with their
+    LCP: O(bucket²) rows through the fold where the engine's
+    sorted-adjacency plan pushes O(bucket)."""
+    from spark_jdbc_limit_spark.operators.dedup import _LCP_EXPR
 
-    if docs is None:
-        docs = load_table(spark, sf_dir, "documents")
-    # NOT .cache(): _dup_survivors already ends in a lazy localCheckpoint,
-    # so within the one action both self-join sides and the count branch
-    # reuse one materialization; a .cache() here additionally registered a
-    # NEW CacheManager entry per invocation (each call checkpoints a fresh
-    # RDD, so the analyzed plans never match) and bench_levers.py's 5+
-    # calls per run accumulated copies that skewed the timed A/B
-    # (round-13 advice).
-    sv = _dup_survivors(docs)
-    pairs = (
+    return (
         sv.alias("a")
         .join(
             sv.alias("b"),
@@ -379,7 +351,26 @@ def naive_longest_dup_substring(spark, sf_dir, docs: DataFrame | None = None) ->
         )
         .withColumn("lcp", F.expr(_LCP_EXPR))
     )
-    mx = pairs.groupBy("doc_id").agg(F.max("lcp").alias("max_dup_len"))
+
+
+def naive_longest_dup_substring(spark, sf_dir, docs: DataFrame | None = None) -> DataFrame:
+    """Exhaustive-pairs twin of the suffix-dedup length entry: same
+    survivors relation, same LCP fold, so the only difference timed is
+    pair generation. ``docs`` overrides the corpus (the hot-boilerplate
+    lever in bench_levers.py feeds a synthetic one)."""
+    from spark_jdbc_limit_spark.operators.dedup import _dup_survivors
+
+    if docs is None:
+        docs = load_table(spark, sf_dir, "documents")
+    # NOT .cache(): _dup_survivors already ends in a lazy localCheckpoint,
+    # so within the one action both self-join sides and the count branch
+    # reuse one materialization; a .cache() here additionally registered a
+    # NEW CacheManager entry per invocation (each call checkpoints a fresh
+    # RDD, so the analyzed plans never match) and the lever A/B's 5+
+    # calls per run accumulated copies that skewed the timed A/B
+    # (round-13 advice).
+    sv = _dup_survivors(docs)
+    mx = _all_suffix_pairs(sv).groupBy("doc_id").agg(F.max("lcp").alias("max_dup_len"))
     cnt = sv.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_dup_anchors"))
     return (
         cnt.join(mx, "doc_id")
@@ -390,23 +381,12 @@ def naive_longest_dup_substring(spark, sf_dir, docs: DataFrame | None = None) ->
 
 def naive_dup_span_extract(spark, sf_dir) -> DataFrame:
     """Exhaustive-pairs twin of the span extraction entry."""
-    from spark_jdbc_limit_spark.operators.dedup import _LCP_EXPR, _dup_survivors
+    from spark_jdbc_limit_spark.operators.dedup import _dup_survivors
 
     # same no-.cache() rationale as naive_longest_dup_substring above
     sv = _dup_survivors(load_table(spark, sf_dir, "documents"))
     spans = (
-        sv.alias("a")
-        .join(
-            sv.alias("b"),
-            (F.col("a.ah") == F.col("b.ah"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id"),
-            F.col("a.s").alias("s"),
-            F.col("b.s").alias("ps"),
-        )
-        .withColumn("lcp", F.expr(_LCP_EXPR))
+        _all_suffix_pairs(sv)
         .withColumn(
             "span",
             F.expr("array_join(slice(split(s, ' '), 1, int(lcp)), ' ')"),
@@ -433,7 +413,7 @@ def naive_dup_span_extract(spark, sf_dir) -> DataFrame:
 
 PY_BASELINES = {
     "dedup_jaccard_prefix_filter": naive_jaccard_prefix_filter,
-    "dedup_connected_components": naive_dedup_connected_components,
+    "dedup_connected_components": _naive_cc_labels,
     "dedup_cluster_best_representative": naive_cluster_best_representative,
     "dedup_minhash_estimate_audit": naive_minhash_estimate_audit,
     "embedding_pca_power_iteration": naive_pca_power_iteration,
@@ -445,28 +425,29 @@ PY_BASELINES = {
 
 
 def baselines() -> dict:
-    out = {n: sql_baseline(n) for n in SQL_BASELINES}
-    out.update(PY_BASELINES)
-    # optional subset (comma-separated names): bench additions without
-    # re-timing the whole top-20; merge the JSON into BASELINE_TOP20.json
-    only = os.environ.get("SPARK_GRAFT_BASELINE_QUERIES")
-    if only:
-        keep = set(only.split(","))
-        out = {n: f for n, f in out.items() if n in keep}
-    return out
+    """Entry name → its plain twin ``(spark, sf_dir) -> DataFrame``."""
+    return {**{n: sql_baseline(n) for n in SQL_BASELINES}, **PY_BASELINES}
 
 
 # ---------------------------------------------------------------------------
 
 
 def _canon(df: DataFrame):
+    """``df``'s sorted column names and its rows (columns in that order),
+    sorted, with every cell normalized for comparison by ``_rows_equal``."""
     from decimal import Decimal
 
     def cell(v):
         # normalize BEFORE sorting: a Decimal('0.0053000') and the float
-        # 0.0053 must sort identically or the pairwise compare misaligns
+        # 0.0053 must sort identically or the pairwise compare misaligns.
+        # Spark SQL parses round-literal arithmetic as DECIMAL where the
+        # DataFrame arm emits DOUBLE — same value, compared as float. NaN
+        # becomes None: Spark's double NaN and SQL NULL both mean
+        # "undefined" at degenerate tiny-SF inputs (0/0 ratios)
         if isinstance(v, Decimal):
             return float(v)
+        if isinstance(v, float) and math.isnan(v):
+            return None
         return v
 
     def sort_key(row):
@@ -488,162 +469,13 @@ def _canon(df: DataFrame):
 
 
 def _rows_equal(a, b, tol=2e-4) -> bool:
-    if len(a) != len(b):
-        return False
-    from decimal import Decimal
+    """Whether two ``_canon`` row lists match pairwise, floats within ``tol``."""
 
-    def _absent(v) -> bool:
-        return v is None or (isinstance(v, float) and math.isnan(v))
+    def same(x, y) -> bool:
+        if isinstance(x, float) and isinstance(y, float):
+            return abs(x - y) <= tol
+        return x == y
 
-    for ra, rb in zip(a, b):
-        if len(ra) != len(rb):
-            return False
-        for x, y in zip(ra, rb):
-            # Spark SQL parses round-literal arithmetic as DECIMAL where
-            # the DataFrame arm emits DOUBLE — same value, compare as float
-            if isinstance(x, Decimal):
-                x = float(x)
-            if isinstance(y, Decimal):
-                y = float(y)
-            if _absent(x) or _absent(y):
-                # NaN-vs-NULL: Spark's double NaN and SQL NULL both mean
-                # "undefined" at degenerate tiny-SF inputs (0/0 ratios)
-                if _absent(x) and _absent(y):
-                    continue
-                return False
-            if isinstance(x, float) and isinstance(y, float):
-                if abs(x - y) > tol:
-                    return False
-            elif x != y:
-                return False
-    return True
-
-
-def _noop(df: DataFrame) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    val_sf = os.environ.get(
-        "SPARK_GRAFT_BASELINE_VALIDATE_SF", "/root/testdata/sf0.01"
+    return len(a) == len(b) and all(
+        len(ra) == len(rb) and all(map(same, ra, rb)) for ra, rb in zip(a, b)
     )
-    # the naive arms carry deliberately-uncut lineage (the plain user's
-    # .cache() loops) whose plan trees are large — give the driver heap
-    # room for them
-    spark = build_session(
-        app_name="bench_baseline",
-        cpus=cpus,
-        shuffle_partitions=cpus,
-        driver_memory="10g",
-    )
-    base = baselines()
-
-    if val_sf != "skip":
-        for name, fn in base.items():
-            ec, er = _canon(REGISTRY[name].builder(spark, val_sf))
-            bc, br = _canon(fn(spark, val_sf))
-            assert ec == bc, f"{name}: column mismatch {ec} vs {bc}"
-            assert _rows_equal(er, br), f"{name}: baseline values diverge"
-            print(f"# validated {name}: {len(er)} rows identical", file=sys.stderr)
-            spark.catalog.clearCache()
-
-    # warm at the bench SF
-    for t in TABLES:
-        _noop(load_table(spark, sf_dir, t))
-    spark.range(0, cpus * 10, 1, cpus).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    # per-arm second-pass cap: an arm whose first sample exceeded this
-    # runs once (its min is that sample) — bounds total bench time and
-    # avoids re-materializing the pathological naive plans
-    cap_s = 30.0
-    eng: dict[str, float] = {}
-    bas: dict[str, float] = {}
-    for pass_i in range(2):
-        for name, fn in base.items():
-            if not (pass_i and eng.get(name, 0.0) > cap_s):
-                t0 = time.perf_counter()
-                _noop(REGISTRY[name].builder(spark, sf_dir))
-                dt = time.perf_counter() - t0
-                eng[name] = round(min(dt, eng.get(name, dt)), 3)
-            if not (pass_i and bas.get(name, 0.0) > cap_s):
-                t0 = time.perf_counter()
-                _noop(fn(spark, sf_dir))
-                dt = time.perf_counter() - t0
-                bas[name] = round(min(dt, bas.get(name, dt)), 3)
-            spark.catalog.clearCache()
-            print(
-                f"# {name}: engine {eng[name]}s baseline {bas[name]}s",
-                file=sys.stderr,
-            )
-
-    # Self-clearing quiet-pair reprobes (round-14): in a FULL run the
-    # engine arm of a light row can land right after a naive monster's
-    # uncut cached plans (GC / Python-worker-pool pressure) and read
-    # 1.5-4x its quiet-pair value — r14 measured jaccard's engine arm at
-    # 8.55 s in-suite vs 2.15 s solo. Any row above REPROBE_RATIO after
-    # the main passes re-runs as an ISOLATED alternating pair (2x each
-    # arm, min taken) and the artifact records both readings, so a
-    # contended full refresh clears its own outliers the way bench.py's
-    # solo reprobes do.
-    REPROBE_RATIO = float(
-        os.environ.get("SPARK_GRAFT_BASELINE_REPROBE_RATIO", "1.4")
-    )
-    reprobe: dict[str, dict] = {}
-    for name, fn in base.items():
-        if bas[name] and eng[name] / bas[name] <= REPROBE_RATIO:
-            continue
-        if eng[name] > cap_s or bas[name] > cap_s:
-            continue  # capped monsters: a second pair would double bench wall
-        re_e, re_b = [], []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            _noop(REGISTRY[name].builder(spark, sf_dir))
-            re_e.append(round(time.perf_counter() - t0, 3))
-            t0 = time.perf_counter()
-            _noop(fn(spark, sf_dir))
-            re_b.append(round(time.perf_counter() - t0, 3))
-            spark.catalog.clearCache()
-        pe, pb = min(re_e), min(re_b)
-        reprobe[name] = {
-            "main_engine_sec": eng[name],
-            "main_baseline_sec": bas[name],
-            "pair_engine_sec": pe,
-            "pair_baseline_sec": pb,
-            "pair_ratio": round(pe / pb, 3) if pb else None,
-        }
-        print(
-            f"# reprobe {name}: pair engine {pe}s baseline {pb}s",
-            file=sys.stderr,
-        )
-        # the quiet pair is the canonical row; main-pass values stay in
-        # the reprobe record for the contention forensics
-        eng[name], bas[name] = pe, pb
-
-    out = {
-        "metric": "engine_over_baseline_ratio_top_heavy",
-        "unit": "ratio",
-        "sf_dir": sf_dir,
-        "queries": {
-            n: {
-                "engine_sec": eng[n],
-                "baseline_sec": bas[n],
-                "ratio": round(eng[n] / bas[n], 3) if bas[n] else None,
-            }
-            for n in base
-        },
-    }
-    if reprobe:
-        out["reprobe"] = reprobe
-    ratios = [v["ratio"] for v in out["queries"].values() if v["ratio"]]
-    out["value"] = round(max(ratios), 3)
-    out["total_engine_sec"] = round(sum(eng.values()), 3)
-    out["total_baseline_sec"] = round(sum(bas.values()), 3)
-    print(json.dumps(out))
-
-
-if __name__ == "__main__":
-    main()

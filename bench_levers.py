@@ -1,8 +1,15 @@
-#!/usr/bin/env python
-"""Lever measurements: targeted A/B experiments whose rows merge into
-BENCH_SCALE.json's ``levers`` map (the ``chain_cc_rounds_per_check`` row
-is the round-12 precedent; this script makes the mechanism repeatable
-instead of a one-off).
+"""Lever scenarios for ``bench.py --levers``: targeted A/B experiments
+whose rows land in BENCH_SCALE.json's ``levers`` map (the
+``chain_cc_rounds_per_check`` row is the round-12 precedent).
+
+Each lever builds its corpus and returns ``(facts, arms, fast)``: the
+row's fixed facts, the two arms (name → zero-argument builder, in
+alternation order), and the arm whose speedup the row reports. bench.py
+first checks that both arms return the same rows on that corpus (the
+lemma a lever relies on must hold on the shape being timed, not just on
+the shipped corpora), then times the arms in alternating passes in ONE
+session (machine-days on a shared VM differ 1.2-1.5x — never A/B across
+sessions).
 
 Round-13 lever — ``suffix_adjacency_hot_boilerplate`` (round-12 verdict
 #4): at sf0.1 the suffix-dedup adjacency plan TIES its exhaustive
@@ -16,43 +23,19 @@ the block lands its bucket one suffix PER INJECTED DOC. With ~1.8k
 injected docs, the exhaustive twin pushes ~bucket² ≈ 3.4M pairs per block
 anchor through the LCP fold while the adjacency plan windows ~bucket rows.
 
-Both arms first have their RESULTS verified identical on the synthetic
-corpus (the adjacency lemma must hold on the shape being timed, not just
-on the shipped corpora), then run alternating round-robin reps in ONE
-session (machine-days on this VM differ 1.2-1.5x — never A/B across
-sessions).
-
-Round-14 lever — ``stream_ingest_static_index`` (round-13 verdict #4):
-the streaming ingest gate's per-trigger static-index re-resolution cost,
-derived-from-corpus vs materialized-parquet index (see
-``lever_stream_ingest_static_index``).
-
-Run:  python bench_levers.py            # merges into BENCH_SCALE.json
-Env:  SPARK_GRAFT_LEVER_BASE  (default /root/testdata/sf0.01)
-      SPARK_GRAFT_LEVER_CPUS  (default 32)
-      SPARK_GRAFT_LEVER_REPS  (default 3)
-      SPARK_GRAFT_LEVERS     (comma list; default: all)
+Round-14 lever — ``stream_ingest_static_index``: see its function.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import statistics
-import sys
-import time
+from pyspark.sql import functions as F
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from pyspark.sql import functions as F  # noqa: E402
-
-from spark_jdbc_limit_spark import build_session  # noqa: E402
-from spark_jdbc_limit_spark.operators.dedup import (  # noqa: E402
+from spark_jdbc_limit_spark.operators.dedup import (
     DUP_ANCHOR_L,
     _dup_survivors,
     longest_dup_substring_frame,
 )
-from spark_jdbc_limit_spark.sources.catalog import load_table  # noqa: E402
+from spark_jdbc_limit_spark.sources.catalog import load_table
 
 #: The injected block: 50 distinct pseudo-legal tokens, no collision with
 #: the corpus vocabulary (``lic##`` prefix), so every duplicated run it
@@ -86,11 +69,7 @@ def _boilerplate_corpus(spark, base: str):
     )
 
 
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def lever_suffix_adjacency(spark, base: str, reps: int) -> dict:
+def lever_suffix_adjacency(spark, base: str, work: str):
     """The round-13 hot-boilerplate A/B (docstring above): suffix-dedup
     adjacency plan vs its exhaustive all-pairs twin on a corpus with a
     genuinely hot anchor bucket."""
@@ -98,18 +77,15 @@ def lever_suffix_adjacency(spark, base: str, reps: int) -> dict:
 
     # materialize the synthetic corpus once (both arms read the same
     # parquet, like the scale bench's replicated corpora)
-    work = "/tmp/spark_graft_levers/boilerplate.parquet"
-    docs_plan = _boilerplate_corpus(spark, base)
-    docs_plan.write.mode("overwrite").parquet(work)
-    docs = spark.read.parquet(work)
-    n_docs = docs.count()
-    n_injected = docs.filter(F.col("text").contains("lic00")).count()
+    path = f"{work}/boilerplate.parquet"
+    _boilerplate_corpus(spark, base).write.mode("overwrite").parquet(path)
+    docs = spark.read.parquet(path)
 
     # bucket-shape evidence: the injected block must actually create hot
     # anchor buckets (size ~= n_injected), or the lever measures nothing
-    sv = _dup_survivors(docs)
     bstats = (
-        sv.groupBy("ah")
+        _dup_survivors(docs)
+        .groupBy("ah")
         .agg(F.count(F.lit(1)).alias("n"))
         .agg(
             F.max("n").alias("max_bucket"),
@@ -118,47 +94,19 @@ def lever_suffix_adjacency(spark, base: str, reps: int) -> dict:
         )
         .collect()[0]
     )
-
-    def adjacency():
-        return longest_dup_substring_frame(docs)
-
-    def exhaustive():
-        return naive_longest_dup_substring(spark, base, docs=docs)
-
-    # value check: both arms must agree on the hot-boilerplate shape
-    a = {(r["doc_id"], r["max_dup_len"], r["n_dup_anchors"]) for r in adjacency().collect()}
-    b = {(r["doc_id"], r["max_dup_len"], r["n_dup_anchors"]) for r in exhaustive().collect()}
-    assert a == b, f"arms disagree: {len(a ^ b)} differing rows"
-    print(f"# arms agree on {len(a)} rows", file=sys.stderr)
-
-    # warm both arms once, then alternate
-    _noop(adjacency())
-    _noop(exhaustive())
-    walls: dict[str, list[float]] = {"adjacency": [], "exhaustive": []}
-    for _ in range(reps):
-        for arm, build in (("adjacency", adjacency), ("exhaustive", exhaustive)):
-            t0 = time.perf_counter()
-            _noop(build())
-            walls[arm].append(round(time.perf_counter() - t0, 3))
-            print(f"# {arm}: {walls[arm][-1]:.2f}s", file=sys.stderr)
-
-    med = {k: statistics.median(v) for k, v in walls.items()}
-    mn = {k: min(v) for k, v in walls.items()}
-    row = {
+    arms = {
+        "adjacency": lambda: longest_dup_substring_frame(docs),
+        "exhaustive": lambda: naive_longest_dup_substring(spark, base, docs=docs),
+    }
+    facts = {
         "corpus": base,
-        "n_docs": n_docs,
-        "n_injected": n_injected,
+        "n_docs": docs.count(),
+        "n_injected": docs.filter(F.col("text").contains("lic00")).count(),
         "block_tokens": len(LICENSE_BLOCK.split()),
         "anchor_l": DUP_ANCHOR_L,
         "max_bucket": bstats["max_bucket"],
         "avg_bucket": round(bstats["avg_bucket"], 2),
         "n_buckets": bstats["n_buckets"],
-        "wall_adjacency": walls["adjacency"],
-        "wall_exhaustive": walls["exhaustive"],
-        "wall_adjacency_median": med["adjacency"],
-        "wall_exhaustive_median": med["exhaustive"],
-        "speedup_adjacency_median": round(med["exhaustive"] / med["adjacency"], 2),
-        "speedup_adjacency_min": round(mn["exhaustive"] / mn["adjacency"], 2),
         "note": (
             "one 50-token licence block injected into ~30% of sf0.01 docs "
             "(deterministic by doc_id decile): block anchors bucket one "
@@ -168,7 +116,7 @@ def lever_suffix_adjacency(spark, base: str, reps: int) -> dict:
             "this corpus before timing, alternating reps in one session"
         ),
     }
-    return row
+    return facts, arms, "adjacency"
 
 
 #: Part-file count for the streaming-ingest lever's corpus: with
@@ -178,7 +126,7 @@ def lever_suffix_adjacency(spark, base: str, reps: int) -> dict:
 INGEST_STREAM_FILES = 6
 
 
-def lever_stream_ingest_static_index(spark, base: str, reps: int) -> dict:
+def lever_stream_ingest_static_index(spark, base: str, work: str):
     """Round-13 verdict #4's missing scale row: the streaming ingest
     gate's per-trigger static-index re-resolution cost. The gate's
     static sides (corpus content digests + distinct band buckets) are
@@ -189,8 +137,7 @@ def lever_stream_ingest_static_index(spark, base: str, reps: int) -> dict:
     index as parquet, so re-resolution is a footer read + scan of two
     benchmark-of-corpus-digest-sized relations. Both arms run the REAL
     multi-trigger Structured Streaming job (maxFilesPerTrigger=1 over an
-    {INGEST_STREAM_FILES}-part corpus), are first verified
-    row-identical, then alternate in one session."""
+    {INGEST_STREAM_FILES}-part corpus)."""
     from spark_jdbc_limit_spark.streaming import (
         materialize_corpus_index,
         run_stream_to_memory,
@@ -198,50 +145,24 @@ def lever_stream_ingest_static_index(spark, base: str, reps: int) -> dict:
     )
 
     # corpus as a directory of part files → one micro-batch per file
-    work = "/tmp/spark_graft_levers/ingest_corpus"
-    docs = load_table(spark, base, "documents")
-    docs.repartition(INGEST_STREAM_FILES).write.mode("overwrite").parquet(
-        f"{work}/documents.parquet"
-    )
-    n_docs = spark.read.parquet(f"{work}/documents.parquet").count()
-    idx = f"{work}/index"
-    materialize_corpus_index(spark, work, idx)
-
-    def derived():
-        return run_stream_to_memory(
-            stream_ingest_dedup_gate(spark, work), "complete"
-        )
-
-    def materialized():
-        return run_stream_to_memory(
-            stream_ingest_dedup_gate(spark, work, index_dir=idx), "complete"
-        )
-
-    a = {tuple(r) for r in derived().collect()}
-    b = {tuple(r) for r in materialized().collect()}
-    assert a == b and a, f"arms disagree: {len(a ^ b)} differing rows"
-    print(f"# ingest arms agree on {len(a)} rows", file=sys.stderr)
-
-    walls: dict[str, list[float]] = {"derived": [], "materialized": []}
-    for _ in range(reps):
-        for arm, run in (("derived", derived), ("materialized", materialized)):
-            t0 = time.perf_counter()
-            run().count()
-            walls[arm].append(round(time.perf_counter() - t0, 3))
-            print(f"# ingest {arm}: {walls[arm][-1]:.2f}s", file=sys.stderr)
-
-    med = {k: statistics.median(v) for k, v in walls.items()}
-    mn = {k: min(v) for k, v in walls.items()}
-    return {
+    corpus = f"{work}/ingest_corpus"
+    load_table(spark, base, "documents").repartition(INGEST_STREAM_FILES).write.mode(
+        "overwrite"
+    ).parquet(f"{corpus}/documents.parquet")
+    idx = f"{corpus}/index"
+    materialize_corpus_index(spark, corpus, idx)
+    arms = {
+        "derived": lambda: run_stream_to_memory(
+            stream_ingest_dedup_gate(spark, corpus), "complete"
+        ),
+        "materialized": lambda: run_stream_to_memory(
+            stream_ingest_dedup_gate(spark, corpus, index_dir=idx), "complete"
+        ),
+    }
+    facts = {
         "corpus": base,
-        "n_docs": n_docs,
+        "n_docs": spark.read.parquet(f"{corpus}/documents.parquet").count(),
         "n_stream_files": INGEST_STREAM_FILES,
-        "wall_derived": walls["derived"],
-        "wall_materialized": walls["materialized"],
-        "wall_derived_median": med["derived"],
-        "wall_materialized_median": med["materialized"],
-        "speedup_materialized_median": round(med["derived"] / med["materialized"], 2),
-        "speedup_materialized_min": round(mn["derived"] / mn["materialized"], 2),
         "note": (
             "real multi-trigger availableNow run of the ingest dedup gate "
             "(one micro-batch per part file): the derived arm recomputes "
@@ -253,38 +174,10 @@ def lever_stream_ingest_static_index(spark, base: str, reps: int) -> dict:
             "alternating reps in one session"
         ),
     }
+    return facts, arms, "materialized"
 
 
 LEVERS = {
     "suffix_adjacency_hot_boilerplate": lever_suffix_adjacency,
     "stream_ingest_static_index": lever_stream_ingest_static_index,
 }
-
-
-def main() -> None:
-    base = os.environ.get("SPARK_GRAFT_LEVER_BASE", "/root/testdata/sf0.01")
-    cpus = int(os.environ.get("SPARK_GRAFT_LEVER_CPUS", "32"))
-    reps = int(os.environ.get("SPARK_GRAFT_LEVER_REPS", "3"))
-    names = [
-        n
-        for n in os.environ.get("SPARK_GRAFT_LEVERS", ",".join(LEVERS)).split(",")
-        if n
-    ]
-    spark = build_session(
-        app_name="bench_levers", cpus=cpus, shuffle_partitions=cpus
-    )
-    here = os.path.dirname(os.path.abspath(__file__))
-    path = os.path.join(here, "BENCH_SCALE.json")
-    for name in names:
-        row = LEVERS[name](spark, base, reps)
-        with open(path) as f:
-            scale = json.load(f)
-        scale.setdefault("levers", {})[name] = row
-        with open(path, "w") as f:
-            json.dump(scale, f, indent=1)
-            f.write("\n")
-        print(json.dumps({"lever": name, **row}))
-
-
-if __name__ == "__main__":
-    main()

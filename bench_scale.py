@@ -1,10 +1,9 @@
-#!/usr/bin/env python
-"""Scaling bench (round-9 verdict #1): measure — don't argue — how the
-heaviest operators' wall-time grows with data volume.
+"""Scenario data for ``bench.py --scale`` and ``bench.py --cores``: the
+measured entry sets and the replication writer.
 
-The corpus at ``$SPARK_GRAFT_SCALE_BASE`` (default sf0.01) is replicated
-R× for each R in ``$SPARK_GRAFT_SCALE_REPS`` (default ``1,10,100``) with
-replica-DISJOINT identity:
+``--scale`` (round-9 verdict #1) measures — doesn't argue — how the
+heaviest operators' wall-time grows with data volume. The base corpus is
+replicated R× with replica-DISJOINT identity:
 
 - ``lineitem``: l_orderkey / l_suppkey / l_partkey shifted per replica →
   the supplier co-order graph becomes R disjoint isomorphic copies (node
@@ -21,37 +20,19 @@ replica-DISJOINT identity:
   and IVF cells fill ×R instead of stacking R identical vectors into
   the same cell.
 
-Each (query, R) is timed with the noop sink (full JVM plan, no driver
-collection), two round-robin passes, MIN taken (shared-VM noise inflates
-but never deflates; queries whose first pass exceeds the cap run once).
 The per-query scaling exponent is the least-squares slope of
-log(wall) vs log(R) — ~1.0 is linear, the bar everything except the
-exact kNN join (inherently |Q|×|C| compute; its IVF twin is the linear
-scale path and is benched alongside as the comparator) must meet.
+log(wall) vs log(R) — ~1.0 is linear, the bar every entry in QUERIES
+must meet.
 
-Run:  python bench_scale.py          # writes BENCH_SCALE.json
-Env:  SPARK_GRAFT_SCALE_BASE  (default /root/testdata/sf0.01)
-      SPARK_GRAFT_SCALE_REPS  (default 1,10,100)
-      SPARK_GRAFT_SCALE_CPUS  (default 32)
-      SPARK_GRAFT_SCALE_WORK  (default /tmp/spark_graft_scale)
+``--cores`` times CORE_QUERIES on the same replicated corpus at one R:
+at sf0.1 the suite is scheduling-bound, so only a replicated corpus shows
+whether the plans parallelize once data binds.
 """
 
 from __future__ import annotations
 
-import json
-import math
-import os
-import shutil
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from pyspark.sql import SparkSession  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-from spark_jdbc_limit_spark import build_session  # noqa: E402
-from spark_jdbc_limit_spark.operators import REGISTRY  # noqa: E402
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 #: The measured set: the verdict's named heavy family. `expected` is the
 #: a-priori complexity in the replication regime (R disjoint copies);
@@ -146,15 +127,52 @@ QUERIES: dict[str, str] = {
     "curate_full_pipeline": "linear",
 }
 
-#: A first pass above this many seconds skips the second pass (the min
-#: of one sample is that sample; the cap bounds total bench time).
-SECOND_PASS_CAP_S = 150.0
+#: Shuffle-heavy subset spanning the operator families (TPC-H joins and
+#: aggregations, window, two-phase ranks, dedup/anchor Arrow pipelines,
+#: graph propagation, sketch audits): the entries whose 100 TB posture
+#: depends on exchanges actually spreading across cores.
+CORE_QUERIES = [
+    "q1_pricing_summary",
+    "q18_large_volume_customers",
+    "join_sortmerge_facts",
+    "window_range_frame",
+    "agg_spearman_rank_correlation",
+    "sort_range_equidepth_audit",
+    "sort_zorder_skipping_audit",
+    "agg_cms_join_size_audit",
+    "agg_approx_percentile_audit",
+    "text_bm25_retrieval",
+    "dedup_minhash_verified",
+    "dedup_minhash_estimate_audit",
+    "dedup_jaccard_prefix_filter",
+    "dedup_longest_dup_substring",
+    "curate_span_cut_pipeline",
+    "curate_full_pipeline",
+    "basket_lift_rules",
+    "graph_connected_components",
+    "embedding_pca_power_iteration",
+    "events_peak_concurrency_sweep",
+]
 
 
-def _replicate(spark: SparkSession, base: str, out: str, r: int) -> None:
+def _replicate(
+    spark: SparkSession, base: str, out: str, r: int, files: int | None = None
+) -> None:
     """Write the R×-replicated corpus under ``out`` (all scales — R=1
     included — go through this writer so every scale reads the same
-    storage layout and the 1× point isn't advantaged by OS cache)."""
+    storage layout and the 1× point isn't advantaged by OS cache).
+
+    ``files`` sets each table's file count. Left unset, a table inherits
+    its base's 1-3 input partitions, so a replicated table lands as 1-3
+    big files that cap SCAN parallelism at 2-4 tasks whatever the core
+    count (measured: q1 at 10x read flat 8 s on both 8 and 32 cpus); the
+    core-scaling run writes a production-like multi-file layout instead."""
+
+    def put(df, table: str) -> None:
+        (df.repartition(files) if files else df).write.mode("overwrite").parquet(
+            f"{out}/{table}.parquet"
+        )
+
     # rep must be LONG before any shift product: rep * 100_000_000 in
     # int32 overflows at rep >= 22 (ANSI mode raises, not wraps). A
     # generator can't be cast inline, so the sequence itself is long.
@@ -163,60 +181,57 @@ def _replicate(spark: SparkSession, base: str, out: str, r: int) -> None:
     ).alias("rep")
 
     d = spark.read.parquet(f"{base}/documents.parquet").select("*", reps)
-    d.select(
-        (F.col("doc_id").cast("long") + F.col("rep") * 10_000_000).alias("doc_id"),
-        F.when(F.col("rep") == 0, F.col("text"))
-        .otherwise(
-            F.regexp_replace(
-                F.col("text"),
-                F.lit(" "),
-                F.concat(F.lit(" r"), F.col("rep").cast("string"), F.lit("_")),
+    put(
+        d.select(
+            (F.col("doc_id").cast("long") + F.col("rep") * 10_000_000).alias("doc_id"),
+            F.when(F.col("rep") == 0, F.col("text"))
+            .otherwise(
+                F.regexp_replace(
+                    F.col("text"),
+                    F.lit(" "),
+                    F.concat(F.lit(" r"), F.col("rep").cast("string"), F.lit("_")),
+                )
             )
-        )
-        .alias("text"),
-        "lang",
-        "source",
-        "n_chars",
-    ).write.mode("overwrite").parquet(f"{out}/documents.parquet")
+            .alias("text"),
+            "lang",
+            "source",
+            "n_chars",
+        ),
+        "documents",
+    )
 
     e = spark.read.parquet(f"{base}/embeddings.parquet").select("*", reps)
-    e.select(
-        (F.col("vec_id").cast("long") + F.col("rep") * 10_000_000).alias("vec_id"),
-        F.expr(
-            "concat(slice(embedding, pmod(rep, size(embedding)) + 1,"
-            "             size(embedding) - pmod(rep, size(embedding))),"
-            "       slice(embedding, 1, pmod(rep, size(embedding))))"
-        ).alias("embedding"),
-        "label",
-    ).write.mode("overwrite").parquet(f"{out}/embeddings.parquet")
+    put(
+        e.select(
+            (F.col("vec_id").cast("long") + F.col("rep") * 10_000_000).alias("vec_id"),
+            F.expr(
+                "concat(slice(embedding, pmod(rep, size(embedding)) + 1,"
+                "             size(embedding) - pmod(rep, size(embedding))),"
+                "       slice(embedding, 1, pmod(rep, size(embedding))))"
+            ).alias("embedding"),
+            "label",
+        ),
+        "embeddings",
+    )
 
-    li = spark.read.parquet(f"{base}/lineitem.parquet").select("*", reps)
-    li.select(
-        *[
-            (
-                (F.col(c).cast("long") + F.col("rep") * 100_000_000).alias(c)
-                if c == "l_orderkey"
-                else (F.col(c).cast("long") + F.col("rep") * 10_000_000).alias(c)
-                if c in ("l_suppkey", "l_partkey")
-                else F.col(c)
-            )
-            for c in spark.read.parquet(f"{base}/lineitem.parquet").columns
-        ]
-    ).write.mode("overwrite").parquet(f"{out}/lineitem.parquet")
-
-    o = spark.read.parquet(f"{base}/orders.parquet").select("*", reps)
-    o.select(
-        *[
-            (
-                (F.col(c).cast("long") + F.col("rep") * 100_000_000).alias(c)
-                if c == "o_orderkey"
-                else (F.col(c).cast("long") + F.col("rep") * 10_000_000).alias(c)
-                if c == "o_custkey"
-                else F.col(c)
-            )
-            for c in spark.read.parquet(f"{base}/orders.parquet").columns
-        ]
-    ).write.mode("overwrite").parquet(f"{out}/orders.parquet")
+    # fact keys shift per replica: order keys by 1e8, the rest by 1e7
+    for table, shifts in (
+        ("lineitem", {"l_orderkey": 100_000_000, "l_suppkey": 10_000_000,
+                      "l_partkey": 10_000_000}),
+        ("orders", {"o_orderkey": 100_000_000, "o_custkey": 10_000_000}),
+    ):
+        raw = spark.read.parquet(f"{base}/{table}.parquet")
+        put(
+            raw.select("*", reps).select(
+                *[
+                    (F.col(c).cast("long") + F.col("rep") * shifts[c]).alias(c)
+                    if c in shifts
+                    else F.col(c)
+                    for c in raw.columns
+                ]
+            ),
+            table,
+        )
 
     # events: ids shifted AND ts shifted +rep MICROSECONDS — replicas land
     # in the same hour buckets but at distinct instants, so the sweep-line
@@ -227,120 +242,28 @@ def _replicate(spark: SparkSession, base: str, out: str, r: int) -> None:
     from spark_jdbc_limit_spark.sources.catalog import load_table as _lt
 
     ev = _lt(spark, base, "events").select("*", reps)
-    ev.select(
-        (F.col("event_id").cast("long") + F.col("rep") * 100_000_000).alias(
-            "event_id"
+    put(
+        ev.select(
+            (F.col("event_id").cast("long") + F.col("rep") * 100_000_000).alias(
+                "event_id"
+            ),
+            # raw parquet reads give TIMESTAMP_NTZ; unix_micros needs
+            # TIMESTAMP. The session is UTC, so the round-trip preserves
+            # the wall clock.
+            F.timestamp_micros(
+                F.unix_micros(F.col("ts").cast("timestamp")) + F.col("rep")
+            )
+            .cast("timestamp_ntz")
+            .alias("ts"),
+            (F.col("user_id").cast("long") + F.col("rep") * 10_000_000).alias(
+                "user_id"
+            ),
+            "event_type",
+            "value",
+            "props",
         ),
-        # raw parquet reads give TIMESTAMP_NTZ; unix_micros needs TIMESTAMP.
-        # The session is UTC, so the round-trip preserves the wall clock.
-        F.timestamp_micros(
-            F.unix_micros(F.col("ts").cast("timestamp")) + F.col("rep")
-        )
-        .cast("timestamp_ntz")
-        .alias("ts"),
-        (F.col("user_id").cast("long") + F.col("rep") * 10_000_000).alias("user_id"),
-        "event_type",
-        "value",
-        "props",
-    ).write.mode("overwrite").parquet(f"{out}/events.parquet")
-
-    for t in ("region", "nation", "customer", "supplier", "part"):
-        spark.read.parquet(f"{base}/{t}.parquet").write.mode(
-            "overwrite"
-        ).parquet(f"{out}/{t}.parquet")
-
-
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def main() -> None:
-    base = os.environ.get("SPARK_GRAFT_SCALE_BASE", "/root/testdata/sf0.01")
-    reps = [
-        int(x)
-        for x in os.environ.get("SPARK_GRAFT_SCALE_REPS", "1,10,100").split(",")
-    ]
-    cpus = int(os.environ.get("SPARK_GRAFT_SCALE_CPUS", "32"))
-    work = os.environ.get("SPARK_GRAFT_SCALE_WORK", "/tmp/spark_graft_scale")
-
-    # optional subset (comma-separated names): bench additions without
-    # re-timing the whole family; merge the JSON into BENCH_SCALE.json
-    only = os.environ.get("SPARK_GRAFT_SCALE_QUERIES")
-    queries = {
-        n: e for n, e in QUERIES.items() if not only or n in only.split(",")
-    }
-
-    spark = build_session(
-        app_name="bench_scale", cpus=cpus, shuffle_partitions=cpus
+        "events",
     )
 
-    times: dict[str, dict[int, float]] = {name: {} for name in queries}
-    for r in reps:
-        rd = f"{work}/x{r}"
-        shutil.rmtree(rd, ignore_errors=True)
-        t0 = time.perf_counter()
-        _replicate(spark, base, rd, r)
-        print(
-            f"# built {rd} in {time.perf_counter() - t0:.1f}s", file=sys.stderr
-        )
-        # warm: touch every table (footer + page reads → OS cache) and the
-        # Arrow worker pool, so the first measured query isn't charged it.
-        for t in (
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        ):
-            _noop(spark.read.parquet(f"{rd}/{t}.parquet"))
-        spark.range(0, cpus * 10, 1, cpus).mapInPandas(
-            lambda it: it, "id long"
-        ).write.format("noop").mode("overwrite").save()
-
-        skip_second: set[str] = set()
-        for pass_i in range(2):
-            for name in queries:
-                if pass_i == 1 and name in skip_second:
-                    continue
-                t0 = time.perf_counter()
-                _noop(REGISTRY[name].builder(spark, rd))
-                dt = time.perf_counter() - t0
-                cur = times[name].get(r)
-                times[name][r] = round(min(dt, cur) if cur else dt, 3)
-                if pass_i == 0 and dt > SECOND_PASS_CAP_S:
-                    skip_second.add(name)
-                print(
-                    f"# x{r} pass{pass_i + 1} {name}: {dt:.2f}s",
-                    file=sys.stderr,
-                )
-        shutil.rmtree(rd, ignore_errors=True)
-
-    out: dict[str, object] = {
-        "metric": "scale_exponent_max_linear_family",
-        "unit": "exponent",
-        "base": base,
-        "reps": reps,
-        "queries": {},
-    }
-    worst_linear = 0.0
-    for name, by_r in times.items():
-        xs = [math.log(r) for r in sorted(by_r)]
-        ys = [math.log(max(by_r[r], 1e-3)) for r in sorted(by_r)]
-        n = len(xs)
-        mx, my = sum(xs) / n, sum(ys) / n
-        denom = sum((x - mx) ** 2 for x in xs)
-        slope = (
-            sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / denom
-            if denom
-            else 0.0
-        )
-        out["queries"][name] = {  # type: ignore[index]
-            "t_by_replication": {str(r): by_r[r] for r in sorted(by_r)},
-            "exponent": round(slope, 3),
-            "expected": QUERIES[name],
-        }
-        if QUERIES[name] == "linear":
-            worst_linear = max(worst_linear, slope)
-    out["value"] = round(worst_linear, 3)
-    print(json.dumps(out))
-
-
-if __name__ == "__main__":
-    main()
+    for t in ("region", "nation", "customer", "supplier", "part"):
+        put(spark.read.parquet(f"{base}/{t}.parquet"), t)

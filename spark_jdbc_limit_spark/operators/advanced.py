@@ -828,7 +828,10 @@ ZORDER_BLOCKS = 64
 #: on a roughly uniform lead only ~63/4096 of rows ever see a rank
 #: window; every other bucket's block stats aggregate wholesale. Skewed
 #: leads only grow the survivor set (correctness never depends on
-#: bucket balance).
+#: bucket balance). Bound on the rows that go through the ranked path:
+#: at most the rows of the <= ZORDER_BLOCKS-1 buckets that span a block
+#: boundary — about 63/4096 ~ 1.5% of rows on a uniform lead, and all
+#: rows when the lead sits in one bucket.
 _ZB_BUCKET_BITS = 12
 
 

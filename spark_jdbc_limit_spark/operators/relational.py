@@ -207,11 +207,11 @@ def scan_metadata_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame
     ):
         # The oracle pins LITERAL '<table>.parquet' file names, which only
         # holds for the shipped single-file-per-table layout; a multi-part
-        # directory layout (e.g. bench_scale's replicated part-* outputs)
-        # would surface part-file names and hash-fail confusingly. Assert
-        # the precondition here so a layout change fails with a clear
-        # message instead (round-10 ADVICE; the entry is likewise excluded
-        # from the scale sweep).
+        # directory layout (e.g. the replicated part-* outputs of
+        # `bench.py --scale`) would surface part-file names and hash-fail
+        # confusingly. Assert the precondition here so a layout change
+        # fails with a clear message instead (round-10 ADVICE; the entry
+        # is likewise excluded from the scale sweep).
         p = table_path(sf_dir, table)
         if not os.path.isfile(p):
             raise ValueError(

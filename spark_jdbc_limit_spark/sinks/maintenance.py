@@ -54,25 +54,3 @@ def compact_parquet(
     out = spark.read.parquet(path)
     return len({f for f in out.inputFiles()})
 
-
-def overwrite_partitions_dynamic(df, path: str, partition_cols: list[str]) -> None:
-    """Partition-scoped overwrite: replace ONLY the hive partitions present
-    in ``df``, leaving every other partition of the table untouched.
-
-    This is the idempotent-backfill primitive for partitioned 100 TB
-    tables: re-running one day's job must replace that day, not truncate
-    the table — which is exactly what a naive ``mode("overwrite")`` on the
-    table root does under Spark's default ``partitionOverwriteMode=STATIC``.
-    The mode is passed as a WRITER OPTION, scoped to exactly this write:
-    mutating the session conf instead would race any concurrent write in
-    the same session (their intended STATIC full-table overwrite would
-    silently stop truncating stale partitions). The write itself is
-    Spark's normal per-partition commit protocol, so concurrent readers
-    of OTHER partitions are never disturbed.
-    """
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )

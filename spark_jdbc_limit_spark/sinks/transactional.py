@@ -13,10 +13,16 @@ This engine replaces that with the portable staging+publish protocol:
 
 1. every task writes to a STAGING location nobody reads;
 2. a failure anywhere → delete staging; the target was never touched
-   (strictly stronger than the reference: no dirty-read window before
-   compensation, no dialect dependence);
+   (no compensating delete, no dialect dependence);
 3. success → publish staging to the target via rename (files) or a
    single target-side transaction (JDBC).
+
+What a reader sees: after a commit or a recovery, exactly the old or
+exactly the new table. A parquet publish is a sequence of renames, so a
+reader running DURING it sees, for an overwrite, the old table, a
+not-found error or the new table; for an append, the old files plus a
+prefix of the new ones; for a partition swap, each replaced partition
+old, absent or new, and every other partition untouched.
 
 Every parquet publish (overwrite swap, append, per-partition swap) is one
 JOURNAL: an ordered list of ``(src, dst)`` renames, written to the sibling
@@ -117,7 +123,9 @@ def write_parquet_atomic(
     """Write ``df`` to ``target`` as parquet with SaveMode semantics
     (mirroring the reference's provider, ExtJdbcRelationProvider.scala:21-56:
     Overwrite → replace, Append → add, ErrorIfExists → raise, Ignore →
-    no-op) and all-or-nothing visibility via staging+publish.
+    no-op) via staging+publish: once it returns or the publish is
+    recovered, readers see exactly the old or exactly the new table
+    (what a reader sees mid-publish: module docstring).
 
     Overwrite (or any write to an absent target) swaps whole dirs:
     ``target→trash``, then ``staging→target``. Append moves each staged
@@ -179,9 +187,9 @@ def write_parquet_overwrite_partitions(
     (or even listing) the other 3000 partitions. Spark's built-in
     ``partitionOverwriteMode=dynamic`` has no cross-partition atomicity —
     a mid-job failure leaves some partitions new and some old; here each
-    partition directory is swapped by rename (``target/p→trash_p``, then
-    ``staging/p→target/p``) AFTER the full staging write succeeded, and a
-    mid-publish failure restores every already-swapped partition from its
+    partition directory is swapped by rename (``target/p`` to the sibling
+    ``target__trash_<token>/p``, then ``staging/p→target/p``) AFTER the
+    full staging write succeeded, and a mid-publish failure restores every already-swapped partition from its
     trash (same compensation posture as the reference's xmin delete,
     ExtJdbcUtils.scala:324-337, but restoring instead of destroying).
 
@@ -196,12 +204,18 @@ def write_parquet_overwrite_partitions(
     if not fs.exists(target_path):
         moves = [(staging, base)]
     else:
+        # replaced partitions are parked in a sibling of the target, never
+        # inside it: a reader's partition discovery skips `_`-prefixed
+        # names only when they hold no `=`, so an in-target trash dir
+        # would make the table unreadable mid-swap
+        trash = f"{base}__trash_{token}"
+        fs.mkdirs(Path(trash))
         moves = []
         for st in fs.listStatus(Path(staging)):
             part = st.getPath().getName()
             if st.isDirectory() and part.startswith(f"{partition_col}="):
                 if fs.exists(Path(f"{base}/{part}")):
-                    moves.append((f"{base}/{part}", f"{base}/__trash_{token}_{part}"))
+                    moves.append((f"{base}/{part}", f"{trash}/{part}"))
                 moves.append((f"{staging}/{part}", f"{base}/{part}"))
     _publish(jvm, fs, base, token, staging, moves)
 
@@ -213,12 +227,14 @@ def _from_staging(src: str, staging: str) -> bool:
 def _publish(jvm, fs, base: str, token: str, staging: str, moves) -> None:
     """Apply ``moves`` in order under the journal manifest. Deleting the
     manifest is the commit point; trash (every ``dst`` not fed from
-    staging) and staging are cleaned up after it. On a failed rename the
-    moves already done are undone and the manifest dropped — unless an
-    undo failed, in which case ``_undo`` raises and the manifest stays for
+    staging lies at or under ``<base>__trash_<token>``) and staging are
+    cleaned up after it. On a failed rename the moves already done are
+    undone and the manifest dropped — unless an undo failed, in which case
+    ``_undo`` raises and the manifest stays for
     :func:`recover_atomic_publish`."""
     Path = jvm.org.apache.hadoop.fs.Path
     manifest = Path(f"{base}__publish_manifest_{token}.json")
+    trash = Path(f"{base}__trash_{token}")
     _fs_write_text(
         fs, manifest, json.dumps({"token": token, "staging": staging, "moves": moves})
     )
@@ -231,14 +247,13 @@ def _publish(jvm, fs, base: str, token: str, staging: str, moves) -> None:
     except Exception as exc:
         _undo(fs, Path, staging, moves[:done])
         fs.delete(Path(staging), True)
+        fs.delete(trash, True)
         fs.delete(manifest, False)
         raise AtomicWriteError(
             f"publish to {base} failed; its {done} completed moves were undone"
         ) from exc
     fs.delete(manifest, False)  # COMMIT POINT — before trash/staging cleanup
-    for src, dst in moves:
-        if not _from_staging(src, staging):
-            fs.delete(Path(dst), True)
+    fs.delete(trash, True)
     fs.delete(Path(staging), True)
 
 
@@ -274,10 +289,10 @@ def recover_atomic_publish(spark, target: str) -> list[str]:
     parsed or has no ``moves`` raises :class:`AtomicWriteError` before
     anything is touched.
 
-    Then sibling ``<target>__staging_*`` / ``<target>__trash_*`` dirs and
-    in-target ``__trash_*`` dirs are swept: with every manifest resolved,
-    they belong to committed publishes whose cleanup crashed, or to a
-    crash before the manifest was written, and are never restored.
+    Then sibling ``<target>__staging_*`` / ``<target>__trash_*`` dirs are
+    swept: with every manifest resolved, they belong to committed
+    publishes whose cleanup crashed, or to a crash before the manifest was
+    written, and are never restored.
 
     SINGLE-WRITER ASSUMPTION: never run concurrently with a live writer on
     the same target — a writer that has staged data but not yet written
@@ -317,12 +332,6 @@ def recover_atomic_publish(spark, target: str) -> list[str]:
         for st in fs.listStatus(parent)
         if st.getPath().getName().startswith((f"{base}__staging_", f"{base}__trash_"))
     ]
-    if fs.exists(target_path):
-        orphans += [
-            st.getPath()
-            for st in fs.listStatus(target_path)
-            if st.getPath().getName().startswith("__trash_")
-        ]
     for orphan in orphans:
         fs.delete(orphan, True)
     return recovered

@@ -82,8 +82,8 @@ def materialize_corpus_index(spark: SparkSession, sf_dir: str, out_dir: str) -> 
     re-resolve per trigger as a cheap parquet scan instead of recomputing
     digest + minhash over the WHOLE corpus every micro-batch, which is
     the part of the derived-relation formulation whose cost grows with
-    corpus size (measured by bench_levers.py's
-    ``stream_ingest_static_index`` lever)."""
+    corpus size (measured by the ``stream_ingest_static_index`` lever,
+    ``bench.py --levers``)."""
     corpus = load_table(spark, sf_dir, "documents").filter(
         F.pmod(F.col("doc_id"), F.lit(INCR_BATCH_MOD)) != 0
     )

@@ -656,7 +656,7 @@ def test_bench_baseline_constants_frozen():
     sys.path.insert(
         0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
-    from bench import ANCHOR_QUERIES, ANCHOR_REF_SEC, BASELINE_QUERY_SEC
+    from bench import ANCHOR_PASSES, ANCHOR_QUERIES, ANCHOR_REF_SEC, BASELINE_QUERY_SEC
 
     import spark_jdbc_limit_spark.operators as ops
 
@@ -669,19 +669,15 @@ def test_bench_baseline_constants_frozen():
     # this anchor set at sf0.1/32cpus (re-records adjust the value, not
     # the order of magnitude)
     assert 2.0 < ANCHOR_REF_SEC < 3.5
+    # the reference is the median of this many passes
+    assert ANCHOR_PASSES == 5
 
 
 def test_bench_cores_result_line_and_ratio():
-    """bench_cores.py finds the worker's result by its prefix, not as the
-    last stdout line, and a query timed on only one side has no ratio
+    """``bench.py --cores`` finds its child's result by its prefix, not as
+    the last stdout line, and a query timed on only one side has no ratio
     (a missing time is None, never a crash)."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    from bench_cores import RESULT_PREFIX, _ratio, _worker_result
+    from bench import RESULT_PREFIX, _ratio, _worker_result
 
     out = f'noise\n{RESULT_PREFIX}{{"cpus": 8, "times": {{"q": 1.5}}}}\ntrailing line\n'
     assert _worker_result(out) == {"cpus": 8, "times": {"q": 1.5}}
@@ -689,6 +685,186 @@ def test_bench_cores_result_line_and_ratio():
         _worker_result("no result here\n")
     assert _ratio(3.0, 1.5) == 2.0
     assert _ratio(None, 1.5) is None and _ratio(3.0, None) is None
+
+
+class _TimedPlan:
+    """Stands in for a DataFrame: its noop-sink write logs the arm and
+    advances a fake clock by the arm's run time."""
+
+    def __init__(self, name, sec, clock, log):
+        self.name, self.sec, self.clock, self.log = name, sec, clock, log
+        self.write = self
+
+    def format(self, fmt):
+        assert fmt == "noop"
+        return self
+
+    def mode(self, _mode):
+        return self
+
+    def save(self):
+        self.log.append(self.name)
+        self.clock[0] += self.sec
+
+
+def test_bench_passes_round_robin_and_cap(monkeypatch):
+    """``bench._passes``, the one timing core: arms run as round-robin
+    passes (two arms alternate), each sample is the arm's builder plus
+    noop write, ``after`` sees every sample's ordinal, and an arm with a
+    sample above ``cap_s`` is not re-run."""
+    import types
+
+    import bench
+
+    clock, log, seen = [0.0], [], []
+    monkeypatch.setattr(bench, "time", types.SimpleNamespace(perf_counter=lambda: clock[0]))
+
+    def arms(**secs):
+        return {
+            n: (lambda n=n, s=s: _TimedPlan(n, s, clock, log)) for n, s in secs.items()
+        }
+
+    assert bench._passes(arms(x=1.0, y=2.0), 3) == {"x": [1.0] * 3, "y": [2.0] * 3}
+    assert log == ["x", "y"] * 3
+    log.clear()
+    got = bench._passes(arms(a=1.0, b=5.0, c=2.0), 3, cap_s=4.0, after=seen.append)
+    assert got == {"a": [1.0] * 3, "b": [5.0], "c": [2.0] * 3}
+    assert log == ["a", "b", "c", "a", "c", "a", "c"]
+    assert seen == list(range(1, 8))
+
+
+def test_bench_record_anchor_ref_reports_anchor_passes(monkeypatch, capsys):
+    """``bench.py --record-anchor-ref`` times ANCHOR_PASSES round-robin
+    passes over the anchor set through ``_passes`` and prints their
+    totals and median (session and warm-up stubbed, fake clock)."""
+    import json
+    import types
+
+    import bench
+
+    clock, log = [0.0], []
+    monkeypatch.setattr(bench, "time", types.SimpleNamespace(perf_counter=lambda: clock[0]))
+    monkeypatch.setattr(bench, "_session", lambda *a, **k: None)
+    monkeypatch.setattr(bench, "_warm_session", lambda *a: None)
+    monkeypatch.setattr(
+        bench, "_entry_arms",
+        lambda spark, sf, names: {
+            n: (lambda n=n: _TimedPlan(n, 0.5, clock, log)) for n in names
+        },
+    )
+    bench.record_anchor_ref()
+    out = json.loads(capsys.readouterr().out)
+    total = 0.5 * len(bench.ANCHOR_QUERIES)
+    assert out["passes"] == [total] * bench.ANCHOR_PASSES
+    assert out["median"] == total
+    assert log == list(bench.ANCHOR_QUERIES) * bench.ANCHOR_PASSES
+
+
+def test_bench_subset_names_and_merge_rules():
+    """A subset names only entries of its scenario (a typo raises), and a
+    subset run's rows merge into a block only under the block's own
+    recorded setting; a whole-set run replaces the rows."""
+    import bench
+
+    assert bench._subset(["a", "b", "c"], None) == ["a", "b", "c"]
+    assert bench._subset(["a", "b", "c"], ["c", "a"]) == ["a", "c"]
+    with pytest.raises(ValueError, match="unknown entries"):
+        bench._subset(["a", "b"], ["a", "typo"])
+    block = {"base": "sf1", "cpus": [2, 4], "queries": {"a": 1}}
+    assert bench._prior_rows(block, {"base": "sf1", "cpus": [2, 4]}, False) == {"a": 1}
+    assert bench._prior_rows(block, {"base": "sf2", "cpus": [2, 4]}, True) == {}
+    assert bench._prior_rows({}, {"base": "sf2"}, False) == {}
+    with pytest.raises(ValueError, match="run the whole set"):
+        bench._prior_rows(block, {"base": "sf1", "cpus": [1, 2]}, False)
+
+
+def test_bench_subcommands_smoke(spark, sf_dir, tmp_path, monkeypatch):
+    """Each ``bench.py`` subcommand runs end to end at sf0.001 with one
+    entry and one pass (R in {1, 2} for the replication sweep), writing
+    only its own block of a tmp copy of its artifact, in the committed
+    schema; every other key of the artifact stays as committed."""
+    import json
+    import os
+
+    import bench
+    import bench_levers
+
+    # a 10% licence injection instead of 30%: the exhaustive arm's hot
+    # buckets shrink ~3x (pairs ~9x), which keeps the lever within budget
+    monkeypatch.setattr(bench_levers, "INJECT_DECILES", 1)
+
+    def committed(name):
+        with open(os.path.join(bench.HERE, name)) as f:
+            return json.load(f)
+
+    scale0, base0 = committed("BENCH_SCALE.json"), committed("BASELINE_TOP20.json")
+    scale_art, base_art = tmp_path / "BENCH_SCALE.json", tmp_path / "BASELINE_TOP20.json"
+    q_scale, q_cores = "customer_gini_revenue", "q1_pricing_summary"
+    lever, q_base = "suffix_adjacency_hot_boilerplate", "q16_supplier_part_variety"
+    # the copies are stamped with this run's settings, so the one-entry
+    # runs merge into the committed rows; a --cores row recorded under
+    # the same settings stands in for an earlier subset run
+    q_cores_prior = "q18_large_volume_customers"
+    cores_prior = {"t_1cpus": 2.0, "ratio": 1.0}
+    bench._write_json(str(scale_art), {
+        **scale0, "base": sf_dir, "reps": [1, 2],
+        "core_scaling": {
+            "base": sf_dir, "replication": 2, "cpus": [1], "passes": 1,
+            "queries": {q_cores_prior: cores_prior},
+        },
+    })
+    bench._write_json(str(base_art), {**base0, "sf_dir": sf_dir})
+    # refused before any timing: a typo'd name, and a subset at another R
+    with pytest.raises(ValueError, match="unknown entries"):
+        bench.run_levers(sf_dir, 2, 1, ["no_such_lever"], spark=spark, artifact=str(scale_art))
+    with pytest.raises(ValueError, match="run the whole set"):
+        bench.run_scale(
+            sf_dir, 2, 1, [q_scale], spark=spark, replications=(1, 3),
+            artifact=str(scale_art),
+        )
+    bench.run_scale(
+        sf_dir, 2, 1, [q_scale], spark=spark, replications=(1, 2),
+        work=str(tmp_path / "scale"), artifact=str(scale_art),
+    )
+    # one cpu → one child process (a second core count costs ~20 s of
+    # child JVM start and warm-up; the N, N/2 pairing is a set literal)
+    bench.run_cores(
+        sf_dir, 1, 1, [q_cores], spark=spark, r=2, files=2,
+        work=str(tmp_path / "cores"), artifact=str(scale_art),
+    )
+    bench.run_levers(
+        sf_dir, 2, 1, [lever], spark=spark, work=str(tmp_path / "levers"),
+        artifact=str(scale_art),
+    )
+    bench.run_baseline(sf_dir, 2, 1, [q_base], spark=spark, artifact=str(base_art))
+
+    with open(scale_art) as f:
+        scale = json.load(f)
+    assert set(scale) == set(scale0) | {"core_scaling"}
+    assert scale["forensics"] == scale0["forensics"]
+    row = scale["queries"][q_scale]
+    assert set(row) == set(scale0["queries"][q_scale])
+    assert set(row["t_by_replication"]) == {"1", "2"}
+    assert {n: r for n, r in scale["queries"].items() if n != q_scale} == {
+        n: r for n, r in scale0["queries"].items() if n != q_scale
+    }
+    cores = scale["core_scaling"]
+    assert set(cores) == {
+        "metric", "base", "replication", "cpus", "passes", "queries", "total_ratio"
+    }
+    assert cores["cpus"] == [1] and cores["replication"] == 2
+    assert set(cores["queries"][q_cores]) == {"t_1cpus", "ratio"}
+    assert cores["queries"][q_cores_prior] == cores_prior
+    assert set(scale["levers"][lever]) == set(scale0["levers"][lever])
+    assert {n: r for n, r in scale["levers"].items() if n != lever} == {
+        n: r for n, r in scale0["levers"].items() if n != lever
+    }
+
+    with open(base_art) as f:
+        base = json.load(f)
+    assert set(base0) <= set(base) <= set(base0) | {"reprobe"}
+    assert set(base["queries"][q_base]) == set(base0["queries"][q_base])
+    assert base["full_refresh_r14"] == base0["full_refresh_r14"]
 
 
 def test_codegen_class_cache_sized_for_registry(spark):

@@ -129,7 +129,7 @@ def big_dir(spark, sf_dir, tmp_path_factory) -> str:
         # round-10 additions: the convergence loops under 10x volume —
         # lineitem rides through unreplicated here, so these smoke the
         # loop mechanics (rounds bounded, lineage cut per round), while
-        # bench_scale.py measures them on the replicated graph.
+        # `bench.py --scale` measures them on the replicated graph.
         # (graph_kcore_until_settled is NOT here: at this fixture's
         # sf0.001 the thresholded graph's 3-core is legitimately EMPTY —
         # the settled entry emits surviving nodes, zero of them — the
@@ -236,7 +236,7 @@ def test_stream_ingest_gate_survives_10x(spark, big_dir):
     verdict #4: the gate was stream==batch pinned at test scale only).
     The replicated documents.parquet is a DIRECTORY of part files, so
     maxFilesPerTrigger=1 yields several micro-batches — static-index
-    re-resolution runs per trigger, the exact cost path bench_levers.py
+    re-resolution runs per trigger, the exact cost path `bench.py --levers`
     measures. Pins: stream rows == the oracle-checked batch twin's at
     10x, replicas make the near-dup probe non-vacuous, and the
     materialized-index variant (the production posture) emits the SAME

@@ -156,7 +156,9 @@ def test_partition_publish_crash_recovery(spark, tmp_path):
     staging = tmp_path / "t__staging_deadbeef0000"
     patch = spark.createDataFrame([(10, "a"), (20, "b"), (30, "c")], "v int, p string")
     patch.write.partitionBy("p").parquet(str(staging))
-    trash_a = target / "__trash_deadbeef0000_p=a"
+    trash = tmp_path / "t__trash_deadbeef0000"
+    trash.mkdir()
+    trash_a = trash / "p=a"
     shutil.move(str(target / "p=a"), str(trash_a))
     shutil.move(str(staging / "p=a"), str(target / "p=a"))
     shutil.move(str(staging / "p=c"), str(target / "p=c"))
@@ -168,7 +170,7 @@ def test_partition_publish_crash_recovery(spark, tmp_path):
             (target / "p=a", trash_a),
             (staging / "p=a", target / "p=a"),
             (staging / "p=c", target / "p=c"),
-            (target / "p=b", target / "__trash_deadbeef0000_p=b"),
+            (target / "p=b", trash / "p=b"),
             (staging / "p=b", target / "p=b"),
         ],
     )
@@ -177,7 +179,7 @@ def test_partition_publish_crash_recovery(spark, tmp_path):
     assert recovered == ["deadbeef0000"]
     got = {(r.v, r.p) for r in spark.read.parquet(str(target)).collect()}
     assert got == {(1, "a"), (2, "b")}  # pre-publish state, p=c gone
-    assert not staging.exists()
+    assert not staging.exists() and not trash.exists()
     assert not manifest.exists()
     # idempotent no-op on a clean target
     assert recover_atomic_publish(spark, str(target)) == []
@@ -224,13 +226,15 @@ def test_partition_publish_committed_crash_keeps_new_data(spark, tmp_path):
     newdata = spark.createDataFrame([(10, "a")], "v int, p string")
     staging = tmp_path / "stage_once"
     newdata.write.partitionBy("p").parquet(str(staging))
-    shutil.move(str(target / "p=a"), str(target / "__trash_cafecafe0000_p=a"))
+    trash = tmp_path / "t__trash_cafecafe0000"
+    trash.mkdir()
+    shutil.move(str(target / "p=a"), str(trash / "p=a"))
     shutil.move(str(staging / "p=a"), str(target / "p=a"))
 
     assert recover_atomic_publish(spark, str(target)) == []  # no manifest
     got = {(r.v, r.p) for r in spark.read.parquet(str(target)).collect()}
     assert got == {(10, "a"), (2, "b")}  # published state stands
-    assert not (target / "__trash_cafecafe0000_p=a").exists()  # orphan swept
+    assert not trash.exists()  # orphan swept
 
 
 def _journal(manifest, token, staging, moves):
@@ -402,6 +406,60 @@ def test_partition_swap_failed_restore_keeps_manifest(spark, tmp_path, monkeypat
     assert not [p.name for p in tmp_path.rglob("*") if "__trash_" in p.name]
 
 
+class _ReadingFS:
+    """Proxy over the Hadoop FileSystem that calls ``after`` once each
+    ``rename`` has run: a reader interleaved with every publish step."""
+
+    def __init__(self, real, after):
+        self._real = real
+        self._after = after
+
+    def rename(self, src, dst):
+        ok = self._real.rename(src, dst)
+        self._after()
+        return ok
+
+    def __getattr__(self, name):
+        return getattr(self._real, name)
+
+
+def test_partition_swap_readable_after_every_rename(spark, tmp_path, monkeypatch):
+    """A reader of the table between any two renames of a two-partition
+    swap never fails partition discovery (replaced partitions are parked
+    outside the table) and sees each partition old, absent or new."""
+    import spark_jdbc_limit_spark.sinks.transactional as tx
+    from spark_jdbc_limit_spark.sinks.transactional import write_parquet_overwrite_partitions
+
+    t = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a"), (2, "b")], "v int, p string").write.partitionBy(
+        "p"
+    ).parquet(t)
+    seen, errors = [], []
+
+    def read():
+        try:
+            seen.append({r.p: r.v for r in spark.read.parquet(t).collect()})
+        except Exception as exc:  # recorded, so the failure names the read
+            errors.append(str(exc)[:200])
+
+    real_hfs = tx._hadoop_fs
+    monkeypatch.setattr(
+        tx,
+        "_hadoop_fs",
+        lambda s, p: (lambda j, f, h: (j, _ReadingFS(f, read), h))(*real_hfs(s, p)),
+    )
+    write_parquet_overwrite_partitions(
+        spark.createDataFrame([(10, "a"), (20, "b")], "v int, p string"), t, "p"
+    )
+    monkeypatch.undo()
+    assert not errors, errors
+    assert len(seen) == 4  # two partitions x (park old, publish new)
+    for rows in seen:
+        assert rows.get("a") in (None, 1, 10) and rows.get("b") in (None, 2, 20)
+    assert seen[-1] == {"a": 10, "b": 20}
+    assert not [p for p in os.listdir(tmp_path) if "__trash_" in p or "__staging_" in p]
+
+
 def test_recovery_refuses_a_manifest_that_is_not_a_journal(spark, tmp_path):
     """A manifest with no ``moves`` (or no JSON at all) raises before any
     sweep: its staging and trash dirs may be the only copy of the data."""
@@ -455,7 +513,7 @@ def test_cross_protocol_recovery_preserves_live_target(spark, tmp_path, order):
     manifest = tmp_path / "b__publish_manifest_x2.json"
     _journal(
         manifest, "x2", staging,
-        [(tb / "p=a", tb / "__trash_x2_p=a"), (staging / "p=a", tb / "p=a")],
+        [(tb / "p=a", tmp_path / "b__trash_x2" / "p=a"), (staging / "p=a", tb / "p=a")],
     )
 
     targets = [str(ta), str(tb)]
@@ -743,37 +801,6 @@ def test_negotiate_isolation_none_requested_is_none():
             raise AssertionError("metadata must not be probed for NONE")
 
     assert negotiate_isolation(_Untouchable(), "NONE") == ISOLATION_LEVELS["NONE"]
-
-
-def test_dynamic_partition_overwrite_replaces_only_touched_partitions(spark, tmp_path):
-    """Backfilling one partition under dynamic overwrite must leave the
-    other partitions' rows intact; under the STATIC default the same write
-    would truncate them (pinned by the control case)."""
-    import pyspark.sql.functions as F
-
-    from spark_jdbc_limit_spark.sinks.maintenance import overwrite_partitions_dynamic
-
-    path = str(tmp_path / "dyn_table")
-    base = spark.range(100).select(
-        F.col("id"), (F.col("id") % 4).alias("p")
-    )
-    base.write.mode("overwrite").partitionBy("p").parquet(path)
-
-    # backfill partition p=1 with halved ids (25 replacement rows)
-    fix = spark.range(25).select((F.col("id") + 1000).alias("id"), F.lit(1).alias("p"))
-    overwrite_partitions_dynamic(fix, path, ["p"])
-
-    out = spark.read.parquet(path)
-    assert out.count() == 75 + 25
-    assert out.filter("p = 1 AND id >= 1000").count() == 25
-    assert out.filter("p = 1 AND id < 1000").count() == 0
-    # untouched partitions keep their original 25 rows each
-    for p in (0, 2, 3):
-        assert out.filter(f"p = {p}").count() == 25
-
-    # control: STATIC overwrite of the same frame wipes the other partitions
-    fix.write.mode("overwrite").partitionBy("p").parquet(path)
-    assert spark.read.parquet(path).count() == 25
 
 
 def test_observation_metrics_ride_the_write_pass(spark, tmp_path):
