@@ -42,7 +42,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from spark_jdbc_limit_spark import build_session  # noqa: E402
+from spark_jdbc_limit_spark.session import build_session, ship_package  # noqa: E402
 from spark_jdbc_limit_spark.operators import REGISTRY  # noqa: E402
 from spark_jdbc_limit_spark.sources.catalog import (  # noqa: E402
     DEFAULT_SF_DIR,
@@ -306,9 +306,13 @@ def _knobs(default_sf: str, default_reps: int):
 
 
 def _session(name: str, cpus: int, **conf):
-    return build_session(
+    """The one session constructor, with the package shipped to the Python
+    workers so UDF/Arrow entries import it from any working directory."""
+    spark = build_session(
         app_name=f"bench_{name}", cpus=cpus, shuffle_partitions=cpus, **conf
     )
+    ship_package(spark)
+    return spark
 
 
 def _warm(spark, sf_dir: str, cpus: int) -> None:

@@ -553,31 +553,30 @@ def _star_contract_components(pairs: DataFrame) -> DataFrame:
     component DIAMETER — the property plain label propagation lacks, and
     why this is the fallback when propagation blows its round budget on a
     long-chain component. Each round is two groupBy+join pairs keyed on
-    node id; ``localCheckpoint`` truncates lineage per round.
+    node id, looped on the graph family's ``run_until_settled`` (lineage
+    cut + one settlement count per round) until the canonical edge set
+    stops changing.
 
     ``pairs``: undirected edges as columns (d1, d2). Returns
     (doc_id, component) where component is the min node id, exactly like
     the propagation path."""
-    cur = (
+    from spark_jdbc_limit_spark.operators.graph import run_until_settled
+
+    edges = (
         pairs.select(F.least("d1", "d2").alias("a"), F.greatest("d1", "d2").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
     )
-    for _ in range(STAR_MAX_ROUNDS):
-        new = (
-            _small_star(_large_star(cur))
-            .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # exact fixpoint check on canonicalized distinct edge sets: same
-        # cardinality + empty one-sided difference ⇒ equal sets
-        if new.count() == cur.count() and new.exceptAll(cur).isEmpty():
-            cur = new
-            break
-        cur = new
-    else:
+    cur, _, settled = run_until_settled(
+        edges,
+        lambda e: _small_star(_large_star(e))
+        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+        .distinct(),
+        key_cols=["a", "b"],
+        value_cols=[],
+        max_rounds=STAR_MAX_ROUNDS,
+    )
+    if not settled:
         raise RuntimeError(
             f"star contraction did not converge within {STAR_MAX_ROUNDS} rounds"
         )

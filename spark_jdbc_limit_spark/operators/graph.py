@@ -207,8 +207,73 @@ _EDGES_CTE = _edges_cte()
 #: ``_supplier_edges(keep_weight=True)``).
 _EDGES_W_CTE = _edges_cte("s1, s2, w")
 
+
+def _bi_edges(edges: DataFrame) -> DataFrame:
+    """Both orientations (u, v) of the canonical (s1 < s2) edge list."""
+    return edges.select(
+        F.col("s1").alias("u"), F.col("s2").alias("v")
+    ).unionAll(edges.select(F.col("s2").alias("u"), F.col("s1").alias("v")))
+
+
+def _unroll(
+    state: DataFrame, step: Callable[[DataFrame], DataFrame], k: int
+) -> tuple[DataFrame, DataFrame]:
+    """Apply ``step`` ``k`` times; return (state k-1, state k), the pair a
+    fixed entry's settlement audit compares. State k-1 feeds BOTH the last
+    step and the audit, so it is checkpointed lazily: there is no CSE
+    across DataFrame branches, and without the cut the k-1-step chain runs
+    twice (measured ~1.4x on the full CC query)."""
+    for _ in range(k - 1):
+        state = step(state)
+    prev = state.localCheckpoint(eager=False)
+    return prev, step(prev)
+
+
 PAGERANK_DAMPING = 0.85
 PAGERANK_ITERS = 5
+
+
+def _pagerank_graph(
+    edges: DataFrame, part_key: str
+) -> tuple[DataFrame, float, DataFrame, DataFrame]:
+    """(deg, n, cdf, pr0) for the PageRank family: out-degrees, the node
+    count N (a graph-cardinality scalar: bounded driver traffic), the
+    contribution frame and uniform initial ranks.
+
+    The iteration-invariant contribution frame (edge ⋈ degree) is
+    computed once and PRE-PARTITIONED on ``part_key``: the destination
+    ``v`` when ranks are broadcast (every iteration's per-destination sum
+    reuses this exchange), the SOURCE ``u`` in shuffle mode (every
+    iteration's rank join reuses it instead, and the exchange moves to the
+    per-destination sum). 8 partitions, not the session default: the
+    frame is graph-cardinality (micro), and every iteration schedules one
+    task per partition — at real scale raise this with graph size."""
+    bi = _bi_edges(edges)
+    deg = bi.groupBy("u").agg(F.count(F.lit(1)).alias("dg"))
+    n = float(deg.count())
+    cdf = bi.join(deg, "u").repartition(8, part_key).localCheckpoint(eager=False)
+    pr = deg.select(F.col("u").alias("node"), F.lit(1.0 / n).alias("r"))
+    return deg, n, cdf, pr
+
+
+def _pagerank_step(cdf: DataFrame, n: float, rank_side: DataFrame) -> DataFrame:
+    """One power iteration: ranks (already broadcast or repartitioned by
+    the caller) join the contribution frame, and each destination sums
+    its inbound mass."""
+    contrib = cdf.join(rank_side, F.col("u") == F.col("node")).select(
+        F.col("v"), (F.col("r") / F.col("dg")).alias("c")
+    )
+    return (
+        contrib.groupBy(F.col("v").alias("node"))
+        .agg(F.sum("c").alias("mass"))
+        .select(
+            "node",
+            (
+                F.lit((1.0 - PAGERANK_DAMPING) / n)
+                + F.lit(PAGERANK_DAMPING) * F.col("mass")
+            ).alias("r"),
+        )
+    )
 
 
 def _pagerank_oracle() -> str:
@@ -326,38 +391,10 @@ def pagerank_frame(
     end-to-end."""
     if edges is None:
         edges = supplier_edges_ckpt(spark, sf_dir)
-    bi = edges.select(
-        F.col("s1").alias("u"), F.col("s2").alias("v")
-    ).unionAll(edges.select(F.col("s2").alias("u"), F.col("s1").alias("v")))
-    deg = bi.groupBy("u").agg(F.count(F.lit(1)).alias("dg"))
-    n = float(deg.count())  # graph-cardinality scalar: bounded driver traffic
-    # Iteration-invariant contribution frame, computed once and
-    # PRE-PARTITIONED: on the destination key in broadcast mode (every
-    # iteration's per-destination sum reuses this exchange), on the
-    # SOURCE key in shuffle mode (every iteration's rank join reuses it
-    # instead, and the exchange moves to the per-destination sum).
-    # 8 partitions, not the session default: the frame is
-    # graph-cardinality (micro), and every iteration schedules one task
-    # per partition — at real scale raise this with graph size.
-    part_key = "v" if broadcast_ranks else "u"
-    cdf = bi.join(deg, "u").repartition(8, part_key).localCheckpoint(eager=False)
-    pr = deg.select(F.col("u").alias("node"), F.lit(1.0 / n).alias("r"))
+    deg, n, cdf, pr = _pagerank_graph(edges, "v" if broadcast_ranks else "u")
     for _ in range(PAGERANK_ITERS):
         rank_side = F.broadcast(pr) if broadcast_ranks else pr.repartition(8, "node")
-        contrib = cdf.join(rank_side, F.col("u") == F.col("node")).select(
-            F.col("v"), (F.col("r") / F.col("dg")).alias("c")
-        )
-        pr = (
-            contrib.groupBy(F.col("v").alias("node"))
-            .agg(F.sum("c").alias("mass"))
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - PAGERANK_DAMPING) / n)
-                    + F.lit(PAGERANK_DAMPING) * F.col("mass")
-                ).alias("r"),
-            )
-        )
+        pr = _pagerank_step(cdf, n, rank_side)
     report_deg = F.broadcast(deg) if broadcast_ranks else deg
     return pr.join(report_deg, pr.node == deg.u).select(
         "node", F.col("dg").cast("long").alias("degree"), round_dbl(F.col("r"), 6).alias("pagerank")
@@ -469,6 +506,47 @@ def graph_triangle_stats(
     )
 
 
+def _self_loop_graph(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(bis, labels0) for the label families (CC, LPA): the bidirectional
+    edges plus one SELF-LOOP per node, and identity labels. The self-loop
+    carries a node's own label (CC's "and itself", LPA's self-vote), so
+    the label relation appears exactly once per step and lineage stays
+    linear."""
+    bi = _bi_edges(edges)
+    nodes = bi.select(F.col("u").alias("node")).distinct()
+    bis = bi.unionAll(
+        nodes.select(F.col("node").alias("u"), F.col("node").alias("v"))
+    )
+    return bis, nodes.select("node", F.col("node").alias("lbl"))
+
+
+def _label_votes(bis: DataFrame, lbl: DataFrame) -> DataFrame:
+    """(v, lbl): every node's label sent along its edges, self-loop
+    included, with the node-cardinality labels broadcast."""
+    return bis.join(F.broadcast(lbl), F.col("u") == F.col("node")).select("v", "lbl")
+
+
+def _min_label_step(bis: DataFrame, lbl: DataFrame) -> DataFrame:
+    """One CC step: each node takes the min label over itself and its
+    neighbors (one map-side-combined MIN)."""
+    return _label_votes(bis, lbl).groupBy("v").agg(F.min("lbl").alias("lbl")).select(
+        F.col("v").alias("node"), "lbl"
+    )
+
+
+def _lpa_step(bis: DataFrame, lbl: DataFrame) -> DataFrame:
+    """One LPA step: each node adopts the most frequent label among its
+    neighbors and itself, ties to the smallest label. The argmax is the
+    max(struct(cnt, -lbl)) AGGREGATE, not a ranked window."""
+    counted = _label_votes(bis, lbl).groupBy("v", "lbl").agg(
+        F.count(F.lit(1)).alias("c")
+    )
+    best = F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("neg"))).alias("b")
+    return counted.groupBy("v").agg(best).select(
+        F.col("v").alias("node"), (-F.col("b.neg")).alias("lbl")
+    )
+
+
 LPA_ITERS = 3
 
 
@@ -563,24 +641,9 @@ def graph_label_propagation(
     tests/test_graph_convergence.py."""
     if edges is None:
         edges = supplier_edges_ckpt(spark, sf_dir)
-    bi = edges.select(
-        F.col("s1").alias("u"), F.col("s2").alias("v")
-    ).unionAll(edges.select(F.col("s2").alias("u"), F.col("s1").alias("v")))
-    nodes = bi.select(F.col("u").alias("node")).distinct()
-    # self-loop per node = the self-vote, added to the edge relation ONCE
-    bis = bi.unionAll(
-        nodes.select(F.col("node").alias("u"), F.col("node").alias("v"))
-    )
-    labels = nodes.select("node", F.col("node").alias("lbl"))
+    bis, labels = _self_loop_graph(edges)
     for _ in range(LPA_ITERS):
-        votes = bis.join(
-            F.broadcast(labels), F.col("u") == F.col("node")
-        ).select("v", "lbl")
-        counted = votes.groupBy("v", "lbl").agg(F.count(F.lit(1)).alias("c"))
-        best = F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("neg"))).alias("b")
-        labels = counted.groupBy("v").agg(best).select(
-            F.col("v").alias("node"), (-F.col("b.neg")).alias("lbl")
-        )
+        labels = _lpa_step(bis, labels)
     from pyspark.sql.window import Window as W
 
     return labels.select(
@@ -682,29 +745,8 @@ def graph_connected_components(
     this entry in tests/test_graph_convergence.py."""
     if edges is None:
         edges = supplier_edges_ckpt(spark, sf_dir)
-    bi = edges.select(
-        F.col("s1").alias("u"), F.col("s2").alias("v")
-    ).unionAll(edges.select(F.col("s2").alias("u"), F.col("s1").alias("v")))
-    nodes = bi.select(F.col("u").alias("node")).distinct()
-    bis = bi.unionAll(
-        nodes.select(F.col("node").alias("u"), F.col("node").alias("v"))
-    )
-    labels = nodes.select("node", F.col("node").alias("lbl"))
-    prev = labels
-    for i in range(CC_ITERS):
-        if i == CC_ITERS - 1:
-            # the penultimate label relation feeds BOTH the last step and
-            # the settlement-audit join — checkpoint it so the 5-step
-            # chain above executes once, not twice (no CSE across
-            # DataFrame branches; measured ~1.4× on the full query)
-            labels = labels.localCheckpoint(eager=False)
-        prev = labels
-        votes = bis.join(
-            F.broadcast(labels), F.col("u") == F.col("node")
-        ).select("v", "lbl")
-        labels = votes.groupBy("v").agg(F.min("lbl").alias("lbl")).select(
-            F.col("v").alias("node"), "lbl"
-        )
+    bis, labels = _self_loop_graph(edges)
+    prev, labels = _unroll(labels, lambda lbl: _min_label_step(bis, lbl), CC_ITERS)
     return (
         prev.alias("p")
         .join(labels.alias("l"), "node")
@@ -718,6 +760,20 @@ def graph_connected_components(
         )
         .orderBy("component")
     )
+
+
+def _hop_graph(edges: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(nodes, bw, dist0) for the hop-count min-plus family (BFS,
+    closeness): bidirectional edges of weight 1 plus a 0-weight self-loop
+    per node (it carries a node's own distance, so the distance relation
+    appears once per step), and the min-node source at distance 0."""
+    bi = _bi_edges(edges)
+    nodes = bi.select(F.col("u").alias("node")).distinct()
+    bw = bi.withColumn("w", F.lit(1)).unionAll(
+        nodes.select(F.col("node").alias("u"), F.col("node").alias("v"), F.lit(0).alias("w"))
+    )
+    dist = nodes.agg(F.min("node").alias("node")).select("node", F.lit(0).alias("d"))
+    return nodes, bw, dist
 
 
 BFS_ITERS = 6
@@ -797,32 +853,13 @@ def graph_bfs_hops(
     fixed unroll is cheaper than the bookkeeping.
 
     Production posture: ``bfs_hops_until_settled`` loops the same step
-    under ``run_until_settled`` (whose full-outer settlement check is
-    what makes a GROWING frontier safe to convergence-test); pinned
-    equal to this entry in tests/test_graph_convergence.py."""
+    under ``run_until_settled``, whose settlement check counts a newly
+    reached node as a change (the GROWING frontier); pinned equal to
+    this entry in tests/test_graph_convergence.py."""
     if edges is None:
         edges = supplier_edges_ckpt(spark, sf_dir)
-    bi = edges.select(
-        F.col("s1").alias("u"), F.col("s2").alias("v")
-    ).unionAll(edges.select(F.col("s2").alias("u"), F.col("s1").alias("v")))
-    nodes = bi.select(F.col("u").alias("node")).distinct()
-    bw = bi.withColumn("w", F.lit(1)).unionAll(
-        nodes.select(F.col("node").alias("u"), F.col("node").alias("v"), F.lit(0).alias("w"))
-    )
-    dist = nodes.agg(F.min("node").alias("node")).select("node", F.lit(0).alias("d"))
-    prev = dist
-    for i in range(BFS_ITERS):
-        if i == BFS_ITERS - 1:
-            # penultimate relation feeds both the last step and the
-            # settlement audit (no CSE across DataFrame branches)
-            dist = dist.localCheckpoint(eager=False)
-        prev = dist
-        votes = bw.join(F.broadcast(dist), F.col("u") == F.col("node")).select(
-            "v", (F.col("d") + F.col("w")).alias("d")
-        )
-        dist = votes.groupBy("v").agg(F.min("d").alias("d")).select(
-            F.col("v").alias("node"), "d"
-        )
+    nodes, bw, dist = _hop_graph(edges)
+    prev, dist = _unroll(dist, lambda dd: _relax_step(bw, dd, "w"), BFS_ITERS)
     final = nodes.join(dist, "node", "left").select(
         "node", F.coalesce(F.col("d"), F.lit(-1)).alias("d")
     )
@@ -846,14 +883,16 @@ def graph_bfs_hops(
 # Convergence-capped production variants of the iterative family
 # ---------------------------------------------------------------------------
 #
-# The four REGISTRY entries above unroll a FIXED number of steps — the
+# The fixed-K REGISTRY entries unroll a FIXED number of steps — the
 # differential-testability trade (both engines run the identical plan, so
 # results are value-comparable even mid-convergence) — and each AUDITS its
 # own settlement in-query. That trade leans on short graph diameters: at
-# 100× on a long-diameter graph a fixed unroll would NOT converge. These
-# variants are the production posture: the SAME per-round plan shape, but
-# looped until the state relation stops changing (or max_rounds), with a
-# lineage cut per round so the plan never grows with the iteration count.
+# 100× on a long-diameter graph a fixed unroll would NOT converge. The six
+# loops below (CC, BFS, LPA, PageRank, k-core, SSSP) are the production
+# posture: each calls its family's graph builder and step function — the
+# same ones its fixed entry unrolls — until the state relation stops
+# changing (or max_rounds), with a lineage cut per round so the plan never
+# grows with the iteration count.
 # They are library functions, not registry entries — an until-convergence
 # loop is not expressible as one deterministic cross-engine SQL unroll,
 # which is exactly why the oracle entries fix their step counts.
@@ -900,17 +939,17 @@ def run_until_settled(
     the long-diameter lever, where rounds >> K makes the non-final
     batches dominate (the 200-node-chain BENCH_SCALE row).
 
-    Settlement: after each round the new state is full-outer-joined to the
-    previous one on ``key_cols`` and the changed rows are counted — a key
-    that appears or disappears counts as changed via explicit per-side
-    presence markers (BFS frontiers GROW and k-core states SHRINK; an
-    inner join would silently under-count, and inferring presence from a
-    value column would misread a legitimately-NULL value as absence), as
-    does any ``value_cols`` difference (null-safe; with ``tolerance``
-    set, numeric values within the tolerance count as unchanged — the
-    PageRank posture, where exact equality of doubles never arrives).
-    ``value_cols`` may be EMPTY for key-set-only states (k-core's
-    surviving-node set): settlement is then pure key-set equality.
+    Settlement: after each round the new and previous states are
+    unioned and grouped by ``key_cols`` + ``value_cols``; every group of
+    one row is a change. That counts a key that appears or disappears
+    (BFS frontiers GROW, k-core states SHRINK) and any value difference,
+    null-safely, with ONE exchange. Only with ``tolerance`` set (the
+    PageRank posture, where exact equality of doubles never arrives)
+    are the states full-outer-joined on ``key_cols`` instead, with
+    explicit per-side presence markers, so values within the tolerance
+    count as unchanged. ``value_cols`` may be EMPTY for key-set-only
+    states (k-core's surviving-node set): settlement is then pure
+    key-set equality.
     ``settled=False`` means the loop hit ``max_rounds`` first; callers
     treat that as the convergence audit failing, the same discipline as
     the fixed entries' ``n_unsettled``.
@@ -1021,12 +1060,6 @@ def run_until_settled(
     return cur, max_rounds, False
 
 
-def _bi_edges(edges: DataFrame) -> DataFrame:
-    return edges.select(
-        F.col("s1").alias("u"), F.col("s2").alias("v")
-    ).unionAll(edges.select(F.col("s2").alias("u"), F.col("s1").alias("v")))
-
-
 def connected_components_until_settled(
     spark: SparkSession,
     sf_dir: str,
@@ -1036,12 +1069,12 @@ def connected_components_until_settled(
     rounds_per_check: int = 1,
 ) -> tuple[DataFrame, int, bool]:
     """``graph_connected_components``'s min-label propagation, looped to
-    convergence instead of the fixed {CC_ITERS}-step unroll — identical
-    per-round plan (self-loop edge relation, broadcast labels, map-side-
-    combined MIN). Returns ``((node, lbl), rounds, settled)``; the fixed
-    entry's output is the per-component aggregate of this state.
-    ``rounds_per_check`` > 1 is exact for any deterministic step since
-    round 14 (see ``run_until_settled``); on a long-diameter graph it
+    convergence instead of the fixed {CC_ITERS}-step unroll (the same
+    ``_self_loop_graph`` and ``_min_label_step``). Returns
+    ``((node, lbl), rounds, settled)``; the fixed entry's output is the
+    per-component aggregate of this state. ``rounds_per_check`` > 1 is
+    exact for any deterministic step since round 14 (see
+    ``run_until_settled``); on a long-diameter graph it
     divides the scheduling + settlement-count overhead by K (measured:
     BENCH_SCALE.json's ``chain_cc_rounds_per_check`` row; end-to-end pin
     in tests/test_graph_convergence.py). On a long-diameter production
@@ -1049,24 +1082,11 @@ def connected_components_until_settled(
     (Kiveris et al.) — O(log² n) rounds, same convergence harness."""
     if edges is None:
         edges = supplier_edges_ckpt(spark, sf_dir)
-    bi = _bi_edges(edges)
-    nodes = bi.select(F.col("u").alias("node")).distinct()
-    bis = bi.unionAll(
-        nodes.select(F.col("node").alias("u"), F.col("node").alias("v"))
-    ).localCheckpoint(eager=False)
-    labels = nodes.select("node", F.col("node").alias("lbl"))
-
-    def step(lbl: DataFrame) -> DataFrame:
-        votes = bis.join(
-            F.broadcast(lbl), F.col("u") == F.col("node")
-        ).select("v", "lbl")
-        return votes.groupBy("v").agg(F.min("lbl").alias("lbl")).select(
-            F.col("v").alias("node"), "lbl"
-        )
-
+    bis, labels = _self_loop_graph(edges)
+    bis = bis.localCheckpoint(eager=False)
     return run_until_settled(
         labels,
-        step,
+        lambda lbl: _min_label_step(bis, lbl),
         key_cols=["node"],
         value_cols=["lbl"],
         max_rounds=max_rounds,
@@ -1086,38 +1106,18 @@ def bfs_hops_until_settled(
     looped to convergence instead of the fixed {BFS_ITERS}-step unroll.
     Returns ``((node, d), rounds, settled)`` over REACHED nodes only (the
     fixed entry's hops = -1 bucket is the anti-join against the node
-    relation, unchanged by when the loop stops). The growing frontier is
-    why the settlement check full-outer-joins: a newly reached node has no
-    previous-round row. ``rounds_per_check`` > 1 is exact for any
-    deterministic step since round 14 (see ``run_until_settled``)."""
+    relation, unchanged by when the loop stops). The frontier grows: the
+    settlement check counts a newly reached node, which has no
+    previous-round row, as a change. ``rounds_per_check`` > 1 is exact
+    for any deterministic step since round 14 (see
+    ``run_until_settled``)."""
     if edges is None:
         edges = supplier_edges_ckpt(spark, sf_dir)
-    bi = _bi_edges(edges)
-    nodes = bi.select(F.col("u").alias("node")).distinct()
-    bw = (
-        bi.withColumn("w", F.lit(1))
-        .unionAll(
-            nodes.select(
-                F.col("node").alias("u"), F.col("node").alias("v"), F.lit(0).alias("w")
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
-    dist = nodes.agg(F.min("node").alias("node")).select(
-        "node", F.lit(0).alias("d")
-    )
-
-    def step(dd: DataFrame) -> DataFrame:
-        votes = bw.join(F.broadcast(dd), F.col("u") == F.col("node")).select(
-            "v", (F.col("d") + F.col("w")).alias("d")
-        )
-        return votes.groupBy("v").agg(F.min("d").alias("d")).select(
-            F.col("v").alias("node"), "d"
-        )
-
+    _, bw, dist = _hop_graph(edges)
+    bw = bw.localCheckpoint(eager=False)
     return run_until_settled(
         dist,
-        step,
+        lambda dd: _relax_step(bw, dd, "w"),
         key_cols=["node"],
         value_cols=["d"],
         max_rounds=max_rounds,
@@ -1134,33 +1134,18 @@ def label_propagation_until_settled(
     rounds_per_check: int = 1,
 ) -> tuple[DataFrame, int, bool]:
     """``graph_label_propagation``'s synchronous self-vote LPA, looped to
-    convergence instead of the fixed {LPA_ITERS}-step unroll — identical
-    per-round argmax-as-aggregate step (no window). The self-vote kills
-    the bipartite oscillation that would make "until settled" a livelock
-    on pure synchronous LPA (see the fixed entry's docstring). Returns
+    convergence instead of the fixed {LPA_ITERS}-step unroll (the same
+    ``_self_loop_graph`` and ``_lpa_step``). The self-vote kills the
+    bipartite oscillation that would make "until settled" a livelock on
+    pure synchronous LPA (see the fixed entry's docstring). Returns
     ``((node, lbl), rounds, settled)``."""
     if edges is None:
         edges = supplier_edges_ckpt(spark, sf_dir)
-    bi = _bi_edges(edges)
-    nodes = bi.select(F.col("u").alias("node")).distinct()
-    bis = bi.unionAll(
-        nodes.select(F.col("node").alias("u"), F.col("node").alias("v"))
-    ).localCheckpoint(eager=False)
-    labels = nodes.select("node", F.col("node").alias("lbl"))
-
-    def step(lbl: DataFrame) -> DataFrame:
-        votes = bis.join(
-            F.broadcast(lbl), F.col("u") == F.col("node")
-        ).select("v", "lbl")
-        counted = votes.groupBy("v", "lbl").agg(F.count(F.lit(1)).alias("c"))
-        best = F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("neg"))).alias("b")
-        return counted.groupBy("v").agg(best).select(
-            F.col("v").alias("node"), (-F.col("b.neg")).alias("lbl")
-        )
-
+    bis, labels = _self_loop_graph(edges)
+    bis = bis.localCheckpoint(eager=False)
     return run_until_settled(
         labels,
-        step,
+        lambda lbl: _lpa_step(bis, lbl),
         key_cols=["node"],
         value_cols=["lbl"],
         max_rounds=max_rounds,
@@ -1180,37 +1165,16 @@ def pagerank_until_settled(
     node's rank moves by more than ``tolerance`` between rounds (the
     family's float member — exact settlement never arrives, so the stop
     is a tolerance band; with damping d the true-fixpoint error at stop
-    is bounded by tolerance·d/(1-d)). Same per-round plan as
-    ``pagerank_frame``: broadcast ranks onto the once-partitioned
-    contribution frame, one map-side-combined SUM. Returns
-    ``((node, r), rounds, settled)`` with r unrounded."""
+    is bounded by tolerance·d/(1-d)). It runs ``pagerank_frame``'s
+    broadcast posture: the same ``_pagerank_graph`` and
+    ``_pagerank_step``. Returns ``((node, r), rounds, settled)`` with r
+    unrounded."""
     if edges is None:
         edges = supplier_edges_ckpt(spark, sf_dir)
-    bi = _bi_edges(edges)
-    deg = bi.groupBy("u").agg(F.count(F.lit(1)).alias("dg"))
-    n = float(deg.count())
-    cdf = bi.join(deg, "u").repartition(8, "v").localCheckpoint(eager=False)
-    pr = deg.select(F.col("u").alias("node"), F.lit(1.0 / n).alias("r"))
-
-    def step(rank: DataFrame) -> DataFrame:
-        contrib = cdf.join(F.broadcast(rank), F.col("u") == F.col("node")).select(
-            F.col("v"), (F.col("r") / F.col("dg")).alias("c")
-        )
-        return (
-            contrib.groupBy(F.col("v").alias("node"))
-            .agg(F.sum("c").alias("mass"))
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - PAGERANK_DAMPING) / n)
-                    + F.lit(PAGERANK_DAMPING) * F.col("mass")
-                ).alias("r"),
-            )
-        )
-
+    _, n, cdf, pr = _pagerank_graph(edges, "v")
     return run_until_settled(
         pr,
-        step,
+        lambda rank: _pagerank_step(cdf, n, F.broadcast(rank)),
         key_cols=["node"],
         value_cols=["r"],
         max_rounds=max_rounds,
@@ -1220,6 +1184,32 @@ def pagerank_until_settled(
 
 KCORE_K = 3
 KCORE_ITERS = 6
+
+
+def _kcore_graph(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(bi, nodes0): the bidirectional edges, checkpointed lazily because
+    every peel step reads them, and the full node set."""
+    bi = _bi_edges(edges).localCheckpoint(eager=False)
+    return bi, bi.select(F.col("u").alias("node")).distinct()
+
+
+def _kcore_step(bi: DataFrame, cur: DataFrame, k: int) -> DataFrame:
+    """One peel: keep the nodes with at least ``k`` neighbors inside
+    ``cur``. The surviving-node relation semi-restricts BOTH edge
+    endpoints (two broadcast semi joins), then one map-side-combined
+    COUNT per node with the HAVING filter."""
+    return (
+        bi.join(F.broadcast(cur), F.col("u") == F.col("node"), "left_semi")
+        .join(
+            F.broadcast(cur.select(F.col("node").alias("nv"))),
+            F.col("v") == F.col("nv"),
+            "left_semi",
+        )
+        .groupBy("u")
+        .agg(F.count(F.lit(1)).alias("dg"))
+        .filter(F.col("dg") >= k)
+        .select(F.col("u").alias("node"))
+    )
 
 
 def _kcore_oracle() -> str:
@@ -1283,10 +1273,9 @@ def graph_kcore_peeling(
     every shipped SF proves the fixpoint arrived in-window; pinned
     against an independent Python peel in pytest).
 
-    Plan shape per step: the surviving-node relation semi-restricts
-    BOTH edge endpoints (two joins — node-cardinality, broadcast here,
-    shuffle at web scale), then one map-side-combined COUNT per node
-    with the HAVING filter. Unlike CC/BFS there is no self-loop trick
+    Plan shape per step: ``_kcore_step``, whose two semi joins against
+    the node-cardinality survivor relation are broadcast here and a
+    shuffle at web scale. Unlike CC/BFS there is no self-loop trick
     (the state relation legitimately gates both endpoints), so each
     step's result is localCheckpointed to keep lineage LINEAR — the
     two-reference subtree doubling this family already measured
@@ -1297,24 +1286,11 @@ def graph_kcore_peeling(
     harness."""
     if edges is None:
         edges = supplier_edges_ckpt(spark, sf_dir)
-    bi = _bi_edges(edges).localCheckpoint(eager=False)
-    nodes = bi.select(F.col("u").alias("node")).distinct()
+    bi, nodes = _kcore_graph(edges)
     summaries = []
     prev_cnt = nodes.agg(F.count(F.lit(1)).alias("n_prev"))
     for k in range(1, KCORE_ITERS + 1):
-        nodes = (
-            bi.join(F.broadcast(nodes), F.col("u") == F.col("node"), "left_semi")
-            .join(
-                F.broadcast(nodes.select(F.col("node").alias("nv"))),
-                F.col("v") == F.col("nv"),
-                "left_semi",
-            )
-            .groupBy("u")
-            .agg(F.count(F.lit(1)).alias("dg"))
-            .filter(F.col("dg") >= KCORE_K)
-            .select(F.col("u").alias("node"))
-            .localCheckpoint(eager=False)
-        )
+        nodes = _kcore_step(bi, nodes, KCORE_K).localCheckpoint(eager=False)
         cnt = nodes.agg(F.count(F.lit(1)).alias("n_remaining"))
         summaries.append(
             cnt.crossJoin(F.broadcast(prev_cnt)).select(
@@ -1324,10 +1300,7 @@ def graph_kcore_peeling(
             )
         )
         prev_cnt = cnt.select(F.col("n_remaining").alias("n_prev"))
-    out = summaries[0]
-    for sdf in summaries[1:]:
-        out = out.unionAll(sdf)
-    return out.orderBy("step")
+    return reduce(DataFrame.unionAll, summaries).orderBy("step")
 
 
 def kcore_until_settled(
@@ -1344,31 +1317,15 @@ def kcore_until_settled(
     posture (a K one notch higher already needs 10 rounds at sf0.01
     where the oracle entry's fixed window holds only for {KCORE_K}).
     State = surviving nodes; a disappearing key IS the change signal,
-    which the harness's full-outer settlement check counts natively.
+    which the harness's settlement check counts as a one-sided group.
     Returns ``((node,), rounds, settled)``."""
     if edges is None:
         edges = supplier_edges_ckpt(spark, sf_dir)
-    bi = _bi_edges(edges).localCheckpoint(eager=False)
-    nodes = bi.select(F.col("u").alias("node")).distinct()
-
-    def step(cur: DataFrame) -> DataFrame:
-        return (
-            bi.join(F.broadcast(cur), F.col("u") == F.col("node"), "left_semi")
-            .join(
-                F.broadcast(cur.select(F.col("node").alias("nv"))),
-                F.col("v") == F.col("nv"),
-                "left_semi",
-            )
-            .groupBy("u")
-            .agg(F.count(F.lit(1)).alias("dg"))
-            .filter(F.col("dg") >= k)
-            .select(F.col("u").alias("node"))
-        )
-
+    bi, nodes = _kcore_graph(edges)
     # key-set-only state: settlement is the node set itself
     return run_until_settled(
         nodes,
-        step,
+        lambda cur: _kcore_step(bi, cur, k),
         key_cols=["node"],
         value_cols=[],
         max_rounds=max_rounds,
@@ -1521,7 +1478,7 @@ def graph_jaccard_link_prediction(
 # - ``rounds_run``: the oracle's MIN(step WHERE state(step) ≡
 #   state(step−1)) — value-equality per node via FULL JOIN + IS DISTINCT
 #   FROM, so appearing keys (BFS's growing frontier) count as change,
-#   exactly like run_until_settled's presence markers. The Spark side
+#   exactly like run_until_settled's one-sided groups. The Spark side
 #   COUNTS the same quantity by looping; the two agreeing is a genuine
 #   cross-engine audit of the loop mechanics, not a copied constant.
 # - ``settled``: Spark emits the loop's own flag; every capped oracle
@@ -1602,9 +1559,8 @@ def graph_cc_until_settled(spark: SparkSession, sf_dir: str) -> DataFrame:
     family's capped-unroll pattern — verified green at all three
     shipped SFs.)
 
-    Scale posture: identical per-round plan to the fixed entry (edge
-    join + map-side-combined MIN, lineage cut per round); the loop adds
-    one node-cardinality count per round."""
+    Scale posture: the loop adds one node-cardinality count and one
+    lineage cut per round to the fixed entry's step."""
     state, rounds, settled = connected_components_until_settled(spark, sf_dir)
     return (
         state.groupBy(F.col("lbl").cast("long").alias("component"))
@@ -1719,12 +1675,12 @@ def _kcore_settled_oracle() -> str:
 def graph_kcore_until_settled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``kcore_until_settled`` as a registry entry: the SHRINKING-state
     member of the settled family (a disappearing node IS the change
-    signal — the full-outer presence markers, not value diffs). The
-    oracle unrolls {SETTLED_ORACLE_CAP} materialized peel steps and
-    takes rounds_run = the first step whose survivor COUNT equals its
-    predecessor's — valid as set equality because peeling is monotone
-    (each step selects only nodes already in the previous set), exactly
-    matching the loop's first-no-change round."""
+    signal — a one-sided group in the settlement check, not a value
+    diff). The oracle unrolls {SETTLED_ORACLE_CAP} materialized peel
+    steps and takes rounds_run = the first step whose survivor COUNT
+    equals its predecessor's — valid as set equality because peeling is
+    monotone (each step selects only nodes already in the previous set),
+    exactly matching the loop's first-no-change round."""
     state, rounds, settled = kcore_until_settled(spark, sf_dir)
     return (
         state.select(F.col("node").cast("long").alias("node"))
@@ -1969,10 +1925,12 @@ def _weighted_min_plus_graph(edges: DataFrame) -> tuple[DataFrame, DataFrame, Da
     return nodes, bw, dist
 
 
-def _relax_step(bw: DataFrame, dist: DataFrame) -> DataFrame:
-    """One Bellman-Ford relaxation: d(v) = min over edges of d(u)+c."""
+def _relax_step(bw: DataFrame, dist: DataFrame, cost: str = "c") -> DataFrame:
+    """One min-plus relaxation: d(v) = min over edges of d(u) + cost,
+    with the node-bounded distance relation broadcast. ``cost`` names the
+    edge-cost column: "c" for weighted SSSP, the unit "w" for BFS."""
     relax = bw.join(F.broadcast(dist), F.col("u") == F.col("node")).select(
-        "v", (F.col("d") + F.col("c")).alias("d")
+        "v", (F.col("d") + F.col(cost)).alias("d")
     )
     return relax.groupBy("v").agg(F.min("d").alias("d")).select(
         F.col("v").alias("node"), "d"
@@ -2064,12 +2022,7 @@ def graph_sssp_bellman_ford(
     if edges is None:
         edges = supplier_edges_ckpt(spark, sf_dir, keep_weight=True)
     nodes, bw, dist = _weighted_min_plus_graph(edges)
-    prev = dist
-    for i in range(BF_ITERS):
-        if i == BF_ITERS - 1:
-            dist = dist.localCheckpoint(eager=False)
-        prev = dist
-        dist = _relax_step(bw, dist)
+    prev, dist = _unroll(dist, lambda dd: _relax_step(bw, dd), BF_ITERS)
     dist = dist.localCheckpoint(eager=False)  # feeds audit + shortlist
     audit = (
         nodes.join(dist.withColumnRenamed("d", "da"), "node", "left")
@@ -2115,15 +2068,15 @@ def sssp_until_settled(
     """``graph_sssp_bellman_ford``'s weighted min-plus relaxation looped
     to convergence (the production posture for long/cheap detour paths a
     fixed unroll would miss). Returns ``((node, d), rounds, settled)``
-    over reached nodes; the frontier GROWS, so settlement full-outer-
-    joins with presence markers (the BFS posture). ``rounds_per_check``
+    over reached nodes; the frontier GROWS, and the settlement check
+    counts a newly reached node as a change (the BFS posture).
+    ``rounds_per_check``
     > 1 is exact for any deterministic step since round 14 (see
     ``run_until_settled``)."""
     if edges is None:
         edges = supplier_edges_ckpt(spark, sf_dir, keep_weight=True)
     _, bw, dist = _weighted_min_plus_graph(edges)
     bw = bw.localCheckpoint(eager=False)  # reused every round
-
     return run_until_settled(
         dist,
         lambda dd: _relax_step(bw, dd),
@@ -2326,15 +2279,7 @@ def closeness_frame(
     (README.md:1-9)."""
     if edges is None:
         edges = supplier_edges_ckpt(spark, sf_dir)
-    bi = edges.select(F.col("s1").alias("u"), F.col("s2").alias("v")).unionAll(
-        edges.select(F.col("s2").alias("u"), F.col("s1").alias("v"))
-    )
-    nodes = bi.select(F.col("u").alias("node")).distinct()
-    bw = bi.withColumn("w", F.lit(1)).unionAll(
-        nodes.select(
-            F.col("node").alias("u"), F.col("node").alias("v"), F.lit(0).alias("w")
-        )
-    )
+    nodes, bw, _ = _hop_graph(edges)
     if not broadcast_dist:
         # iteration-invariant edge frame, partitioned once on the join
         # key every step reuses (the pagerank_frame cdf pattern)
@@ -2343,12 +2288,9 @@ def closeness_frame(
     dist = seeds.select(
         F.col("node").alias("src"), "node", F.lit(0).alias("d")
     )
-    prev = dist
-    for i in range(BFS_ITERS):
-        if i == BFS_ITERS - 1:
-            dist = dist.localCheckpoint(eager=False)
-        prev = dist
-        dist = _closeness_step(bw, dist, broadcast_dist)
+    prev, dist = _unroll(
+        dist, lambda dd: _closeness_step(bw, dd, broadcast_dist), BFS_ITERS
+    )
     dist = dist.localCheckpoint(eager=False)  # feeds audit + rollup
     audit = (
         dist.withColumnRenamed("d", "da")

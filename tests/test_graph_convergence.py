@@ -1,15 +1,17 @@
 """Convergence-capped production variants of the iterative graph family.
 
-The REGISTRY entries (graph_connected_components / graph_bfs_hops /
-graph_label_propagation / graph_pagerank_supplier) unroll a FIXED step
-count so both engines run the identical plan — and each audits its own
-settlement in-query. These tests pin the production posture
-(``run_until_settled``: loop the same step until the state stops
-changing) EQUAL to the fixed unroll at the shipped SFs, proving the two
-postures are the same algorithm and the fixed entries' step counts are
-sufficient on this data. The until-settled loop is what a long-diameter
-100× graph needs; the fixed unroll is what cross-engine differential
-testing needs.
+Six loops run on ``run_until_settled``: CC, BFS, LPA, PageRank, k-core
+and SSSP. Their fixed-K REGISTRY entries (graph_connected_components,
+graph_bfs_hops, graph_label_propagation, graph_pagerank_supplier,
+graph_kcore_peeling, graph_sssp_bellman_ford) unroll a FIXED step count
+so both engines run the identical plan, and each audits its own
+settlement in-query. Each loop calls the same step function as its
+fixed entry (``_min_label_step``, ``_relax_step``, ``_lpa_step``,
+``_pagerank_step``, ``_kcore_step``). These tests pin each loop against
+its fixed unroll at the shipped SFs, proving the fixed entries' step
+counts are sufficient on this data. The until-settled loop is what a
+long-diameter 100× graph needs; the fixed unroll is what cross-engine
+differential testing needs.
 """
 
 from __future__ import annotations

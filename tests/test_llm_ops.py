@@ -258,6 +258,20 @@ def test_star_contraction_labels_long_chain(spark):
     assert got == want
 
 
+def test_star_contraction_round_cap_raises(spark, monkeypatch):
+    """Star contraction raises rather than return unconverged labels when
+    its round cap is hit: the 30-edge chain above needs more than one
+    round, so a cap of 1 must raise. The cap is read at call time."""
+    from spark_jdbc_limit_spark.operators import dedup
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "d1 long, d2 long"
+    )
+    monkeypatch.setattr(dedup, "STAR_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge within 1 rounds"):
+        dedup._star_contract_components(chain)
+
+
 def test_connected_components_fallback_matches_propagation(spark, sf_correct, monkeypatch):
     """With the propagation budget forced to zero rounds, the query must
     take the star-contraction fallback and return the SAME labels the

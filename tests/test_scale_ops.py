@@ -733,6 +733,19 @@ def test_bench_passes_round_robin_and_cap(monkeypatch):
     assert seen == list(range(1, 8))
 
 
+def test_bench_session_ships_package(monkeypatch):
+    """``bench._session`` ships the package to the Python workers, so
+    UDF/Arrow entries import it when bench.py runs outside the repo root
+    (session construction stubbed: no JVM starts)."""
+    import bench
+
+    session, shipped = object(), []
+    monkeypatch.setattr(bench, "build_session", lambda **kw: session)
+    monkeypatch.setattr(bench, "ship_package", shipped.append)
+    assert bench._session("probe", 2) is session
+    assert shipped == [session]
+
+
 def test_bench_record_anchor_ref_reports_anchor_passes(monkeypatch, capsys):
     """``bench.py --record-anchor-ref`` times ANCHOR_PASSES round-robin
     passes over the anchor set through ``_passes`` and prints their
