@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 
 from spark_jdbc_limit_spark.operators.registry import query
 from spark_jdbc_limit_spark.operators.relational import dec_sum, round_dbl, sql_dec_sum, sql_round_dbl
+from spark_jdbc_limit_spark.operators.reuse import memo
 from spark_jdbc_limit_spark.sources.catalog import load_table
 
 
@@ -1018,10 +1019,14 @@ def _zorder_block_summary(
     # those maxima need. The oracle's fixed ZORDER_MAX_BITS expression
     # produces the identical z (higher terms are zero), so the audit now
     # follows the data instead of aborting past a tuned constant. The
-    # maxima also feed the probe-box extents as literals below.
-    mrow = li.agg(
-        F.max("l_partkey").alias("mp"), F.max("l_suppkey").alias("ms")
-    ).head()
+    # maxima also feed the probe-box extents as literals below; memoized
+    # per (session, lineitem files), so a rebuild runs no fetch.
+    mrow = memo(
+        spark,
+        "zorder_key_max",
+        li,
+        lambda: li.agg(F.max("l_partkey").alias("mp"), F.max("l_suppkey").alias("ms")).head(),
+    )
     if mrow.mp is None or mrow.ms is None:
         raise ValueError(
             "z-order audit: lineitem is empty — no keys to lay out"

@@ -296,6 +296,40 @@ def dedup_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _band_pairs(minhash_band_buckets(d))
 
 
+def _near_dup_candidates(spark: SparkSession, d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The LSH candidate pairs ``cand`` (d1 < d2) and the shingle hashes
+    ``sh`` of the documents in some pair, both eagerly localCheckpointed
+    and memoized per (session, documents files): a rebuild of the verify
+    pipeline, and ``dedup_connected_components`` building on it, read the
+    checkpoints instead of re-running the band and shingle jobs."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        # one-shuffle bucket expansion (see _band_pairs); cand feeds both
+        # the candidate-doc semi-join and the common-shingle join, so it
+        # is checkpointed and the band pipeline runs once.
+        cand = _band_pairs(minhash_band_buckets(d)).localCheckpoint()
+        # Verification needs shingle sets ONLY for docs in some candidate
+        # pair — a small fraction of the corpus. Re-shingling just those
+        # (broadcast semi-join on the candidate ids) instead of everything
+        # removes the pipeline's second full-corpus scan + hash pass: at
+        # 100 TB the corpus is read once for signatures, and verification
+        # I/O scales with the near-dup rate, not the corpus size.
+        cand_docs = (
+            cand.select(F.col("d1").alias("doc_id"))
+            .unionByName(cand.select(F.col("d2").alias("doc_id")))
+            .distinct()
+        )
+        # sh fans out to sizes (twice, via z1/z2) and both sides of the
+        # common-shingle join — four scans of the plan absent CSE, so the
+        # small candidate-shingle set is checkpointed too.
+        sh = shingle_hashes(
+            d.join(F.broadcast(cand_docs), "doc_id", "left_semi")
+        ).localCheckpoint()
+        return cand, sh
+
+    return memo(spark, "near_dup_candidates", d, build)
+
+
 @query(
     "dedup_minhash_verified",
     category="llm_dedup",
@@ -329,29 +363,7 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full near-dup pipeline: LSH candidates → exact Jaccard on the
     candidate pairs only. Verification touches |candidates| × shingles,
     not n² — the shape that survives 100 TB."""
-    d = load_table(spark, sf_dir, "documents")
-    # one-shuffle bucket expansion (see _band_pairs); cand still feeds
-    # both the candidate-doc semi-join and the common-shingle join below,
-    # so the checkpoint bounding the band pipeline to one run stays.
-    cand = _band_pairs(minhash_band_buckets(d)).localCheckpoint(eager=False)
-    # Verification needs shingle sets ONLY for docs in some candidate pair —
-    # a small fraction of the corpus. Re-shingling just those (broadcast
-    # semi-join on the candidate ids) instead of everything removes the
-    # pipeline's second full-corpus scan + hash pass: at 100 TB the corpus
-    # is read once for signatures, and verification I/O scales with the
-    # near-dup rate, not the corpus size.
-    cand_docs = (
-        cand.select(F.col("d1").alias("doc_id"))
-        .unionByName(cand.select(F.col("d2").alias("doc_id")))
-        .distinct()
-    )
-    # sh fans out to sizes (twice, via z1/z2) and both sides of the
-    # common-shingle join — four scans of the plan absent CSE. Checkpoint
-    # the small candidate-shingle set so the corpus semi-join + shingling
-    # runs once.
-    sh = shingle_hashes(
-        d.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-    ).localCheckpoint(eager=False)
+    cand, sh = _near_dup_candidates(spark, load_table(spark, sf_dir, "documents"))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     s1 = sh.select(F.col("doc_id").alias("d1"), F.col("h").alias("h1"))
     s2 = sh.select(F.col("doc_id").alias("d2b"), F.col("h").alias("h2"))
@@ -1150,7 +1162,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
 def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-accuracy AUDITING — the op you run before trusting a sketch
     at 100 TB: per LSH candidate pair, the minhash Jaccard estimate
-    (signature agreement / {NUM_HASHES}), the exact Jaccard recomputed
+    (signature agreement / 16), the exact Jaccard recomputed
     from shingle sets, and the absolute error. In production this runs
     on a small sample to choose the signature length; here the full
     candidate set is audited and the oracle reproduces estimate AND
@@ -1409,7 +1421,7 @@ INCR_BATCH_MOD = 5  #: doc_id % MOD == 0 plays the "newly ingested batch"
 def dedup_incremental_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL ingest dedup — the shape that makes dedup affordable
     at 100 TB: a newly arrived batch (here the deterministic
-    doc_id % {INCR_BATCH_MOD} == 0 slice) is screened against the
+    doc_id % 5 == 0 slice) is screened against the
     STANDING corpus without ever re-deduplicating the corpus against
     itself. Two asymmetric probes per new document:
 
@@ -1560,8 +1572,8 @@ def _sql_winnow_fps(k: int = SHINGLE_K, w: int = WINNOW_W) -> str:
 )
 def dedup_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing (the MOSS fingerprinting algorithm): select the minimum
-    k-gram hash of every {WINNOW_W}-wide window, so a shared word run of
-    at least {WINNOW_W}+{SHINGLE_K}-1 words between two documents is
+    k-gram hash of every 4-wide window, so a shared word run of
+    at least 4+3-1 = 6 words between two documents is
     GUARANTEED to surface as a shared stored fingerprint — the
     containment-detection floor MinHash cannot promise (minhash bounds
     expected Jaccard error; winnowing bounds the shortest detectable
@@ -1801,7 +1813,7 @@ _LCP_EXPR = """
 
 
 def _dup_anchors(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(toks, anchors): per-doc token arrays (docs with >= {DUP_ANCHOR_L}
+    """(toks, anchors): per-doc token arrays (docs with >= 8
     tokens) and one (doc_id, i, ah) row per suffix position — the
     anchor digest is all that crosses the wire in phase 1.
 
@@ -1833,8 +1845,8 @@ def _dup_anchors(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 def _dup_survivors(docs: DataFrame) -> DataFrame:
     """Surviving suffix positions (doc_id, i, ah, s): every position
-    whose {DUP_ANCHOR_L}-token anchor digest appears in >= 2 distinct
-    documents, carrying its {DUP_LCP_CAP}-token truncated suffix string.
+    whose 8-token anchor digest appears in >= 2 distinct
+    documents, carrying its 48-token truncated suffix string.
     Phase 1 shuffles only (digest, doc_id, pos); only survivors rebuild
     ``s`` via the doc_id-keyed join back to the text."""
     CAP = DUP_LCP_CAP
@@ -1893,8 +1905,8 @@ def _dup_cross_adjacent(sv: DataFrame) -> DataFrame:
 
 def longest_dup_substring_frame(docs: DataFrame) -> DataFrame:
     """Per document: the length of the longest token run (capped at
-    {DUP_LCP_CAP}) it shares with at least one OTHER document, plus how
-    many of its suffix positions start a shared >= {DUP_ANCHOR_L}-gram.
+    48) it shares with at least one OTHER document, plus how
+    many of its suffix positions start a shared >= 8-gram.
 
     This is the unbounded-length exact-substring dedup modality (the
     suffix-array LCP family): classic generalized-SA theory says the
@@ -1909,9 +1921,9 @@ def longest_dup_substring_frame(docs: DataFrame) -> DataFrame:
 
     Distributed shape (why this scales where a monolithic suffix array
     cannot):
-    - suffixes are BUCKETED by their first-{DUP_ANCHOR_L}-token anchor
+    - suffixes are BUCKETED by their first-8-token anchor
       gram (md5 digest, 16 bytes on the wire — never the text): any
-      cross-doc run >= {DUP_ANCHOR_L} lands both its suffixes in one
+      cross-doc run >= 8 lands both its suffixes in one
       bucket, so global suffix sorting shrinks to independent per-bucket
       sorts — a window over the anchor key, skew bounded by the hottest
       boilerplate anchor;
@@ -1919,7 +1931,7 @@ def longest_dup_substring_frame(docs: DataFrame) -> DataFrame:
       token position — to find anchors spanning >= 2 distinct docs
       (partial-aggregated groupBy, no window over the corpus);
     - only SURVIVING positions (actually-duplicated regions) rebuild
-      their {DUP_LCP_CAP}-token truncated suffix via a doc_id-keyed join
+      their 48-token truncated suffix via a doc_id-keyed join
       back to the text, so the CAP-times-text blowup applies to the
       duplicated subset, not the corpus;
     - adjacent-pair LCP is one lag() + a codegen fold per surviving row;
@@ -2105,8 +2117,8 @@ def dedup_dup_span_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The EXTRACTION twin of ``dedup_longest_dup_substring``: a cut/keep
     decision needs the duplicated span itself (is it a licence block? a
     syndicated header?), not just its length. Per document with a
-    cross-document run >= {DUP_ANCHOR_L}: the longest shared token run's
-    TEXT (capped at {DUP_LCP_CAP} tokens), ties on length broken by the
+    cross-document run >= 8: the longest shared token run's
+    TEXT (capped at 48 tokens), ties on length broken by the
     lexicographically smallest span.
 
     Determinism across the two engines' different pair sets: the engine
@@ -2175,7 +2187,7 @@ def _sql_remove_spans(l_: int = DUP_ANCHOR_L) -> str:
 def dedup_remove_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The APPLY step closing the suffix-dedup trio (detect → extract →
     CUT): per document, remove every token covered by some shared
-    {DUP_ANCHOR_L}-gram occurrence for which this document is not the
+    8-gram occurrence for which this document is not the
     anchor bucket's canonical owner (min doc_id across the bucket's
     documents — first-occurrence-wins, the passage-dedup survivor rule).
     Exactly one copy of every duplicated region survives corpus-wide;

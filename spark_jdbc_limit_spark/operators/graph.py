@@ -320,14 +320,14 @@ def _pagerank_oracle() -> str:
 def graph_pagerank_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the thresholded supplier co-order graph (edges from
     ``_supplier_edges``, made bidirectional) — the canonical ITERATIVE
-    graph algorithm, run as {PAGERANK_ITERS} fixed synchronous power
-    iterations with damping {PAGERANK_DAMPING}. Each iteration is one
+    graph algorithm, run as 5 fixed synchronous power
+    iterations with damping 0.85. Each iteration is one
     join (rank onto out-edges, pre-divided by out-degree) + one
     aggregation (sum of inbound mass per destination) — exactly the
     Pregel step expressed relationally, so Catalyst handles partial
     aggregation and AQE handles any celebrity-node skew. Plan shape:
     the rank relation feeds each next iteration exactly ONCE, so the
-    DAG is LINEAR and the whole {PAGERANK_ITERS}-step fixpoint compiles
+    DAG is LINEAR and the whole 5-step fixpoint compiles
     into a single job — no per-iteration checkpoint is needed (that
     discipline is for loops that reference their result twice, like
     CC's star contraction; here a per-iteration cut measured ~1.6×
@@ -343,7 +343,7 @@ def graph_pagerank_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale). At 100 TB the rank and edge relations shuffle-join on node
     id per iteration — the standard distributed PageRank shape; the
     fact-table pass happens exactly once inside the edge derivation.
-    The oracle unrolls the same {PAGERANK_ITERS} iterations as chained
+    The oracle unrolls the same 5 iterations as chained
     CTEs — recursion-free and ANSI, so the fixpoint trajectory itself
     is verified value-by-value (round 1e-6; reorder error
     ~1e-15/iteration on ~1e-2 ranks).
@@ -596,7 +596,7 @@ def graph_label_propagation(
     spark: SparkSession, sf_dir: str, edges: DataFrame | None = None
 ) -> DataFrame:
     """TRAJECTORY SNAPSHOT, not a fixpoint: this entry compares both
-    engines' state after exactly {LPA_ITERS} iterations (convergence on
+    engines' state after exactly 3 iterations (convergence on
     this data arrives at round 10 — ``graph_lpa_until_settled`` is the
     registry entry for the settled communities).
 
@@ -630,13 +630,13 @@ def graph_label_propagation(
     DOUBLES the plan subtree each iteration: 2^k copies by step k,
     measured 4 s for 6 iterations on a few-hundred-node graph before
     ``graph_connected_components`` exposed it.) The oracle unrolls the
-    same {LPA_ITERS} iterations as chained CTEs with a ranked window —
+    same 3 iterations as chained CTEs with a ranked window —
     an independent argmax formulation, so tie-breaks are cross-checked
     value-by-value.
 
     Production posture: ``label_propagation_until_settled`` loops the
     same step to a genuine fixpoint (needs ~10 rounds at sf0.01 — this
-    entry's fixed {LPA_ITERS} iterations are a snapshot of the
+    entry's fixed 3 iterations are a snapshot of the
     trajectory, not a settlement claim); pinned in
     tests/test_graph_convergence.py."""
     if edges is None:
@@ -710,7 +710,7 @@ def graph_connected_components(
     A FIXED step count is what makes an iterative fixpoint
     differentially testable (the trade ``graph_pagerank_supplier`` and
     ``graph_label_propagation`` already make): both engines unroll the
-    same {CC_ITERS} steps, so results are value-identical even on a
+    same 6 steps, so results are value-identical even on a
     pathological input where propagation hasn't settled. The query
     AUDITS its own convergence instead of assuming it: ``n_unsettled``
     counts the nodes per component whose label still changed on the
@@ -736,7 +736,7 @@ def graph_connected_components(
     "Connected Components in MapReduce"), which converges in
     O(log² n) rounds with the SAME per-round plan shape, so the swap is
     the loop body, not the architecture. The final step joins labels at
-    step {CC_ITERS}-1 and {CC_ITERS} to emit the settlement audit; the
+    steps 5 and 6 to emit the settlement audit; the
     extra join is against the micro label relation, not the corpus.
 
     Production posture: ``connected_components_until_settled`` loops the
@@ -1069,7 +1069,7 @@ def connected_components_until_settled(
     rounds_per_check: int = 1,
 ) -> tuple[DataFrame, int, bool]:
     """``graph_connected_components``'s min-label propagation, looped to
-    convergence instead of the fixed {CC_ITERS}-step unroll (the same
+    convergence instead of the fixed 6-step unroll (the same
     ``_self_loop_graph`` and ``_min_label_step``). Returns
     ``((node, lbl), rounds, settled)``; the fixed entry's output is the
     per-component aggregate of this state. ``rounds_per_check`` > 1 is
@@ -1103,7 +1103,7 @@ def bfs_hops_until_settled(
     rounds_per_check: int = 1,
 ) -> tuple[DataFrame, int, bool]:
     """``graph_bfs_hops``'s min-plus propagation from the smallest node id,
-    looped to convergence instead of the fixed {BFS_ITERS}-step unroll.
+    looped to convergence instead of the fixed 6-step unroll.
     Returns ``((node, d), rounds, settled)`` over REACHED nodes only (the
     fixed entry's hops = -1 bucket is the anti-join against the node
     relation, unchanged by when the loop stops). The frontier grows: the
@@ -1134,7 +1134,7 @@ def label_propagation_until_settled(
     rounds_per_check: int = 1,
 ) -> tuple[DataFrame, int, bool]:
     """``graph_label_propagation``'s synchronous self-vote LPA, looped to
-    convergence instead of the fixed {LPA_ITERS}-step unroll (the same
+    convergence instead of the fixed 3-step unroll (the same
     ``_self_loop_graph`` and ``_lpa_step``). The self-vote kills the
     bipartite oscillation that would make "until settled" a livelock on
     pure synchronous LPA (see the fixed entry's docstring). Returns
@@ -1263,11 +1263,11 @@ def graph_kcore_peeling(
 ) -> DataFrame:
     """K-core decomposition — the density-peeling member of the iterative
     family (CC = min-label, BFS = min-plus, LPA = argmax; this is
-    REMOVAL): repeatedly delete nodes with degree < {KCORE_K} in the
+    REMOVAL): repeatedly delete nodes with degree < 3 in the
     remaining subgraph until no deletion fires; what survives is the
-    {KCORE_K}-core, the standard coreness screen for 'is this node in a
+    3-core, the standard coreness screen for 'is this node in a
     dense community or hanging off one'. Same differential trade as the
-    siblings: both engines unroll the identical {KCORE_ITERS} steps and
+    siblings: both engines unroll the identical 6 steps and
     the output is the per-step (n_remaining, n_dropped) histogram —
     n_dropped at the final step doubling as the settlement audit (0 at
     every shipped SF proves the fixpoint arrived in-window; pinned
@@ -1315,7 +1315,7 @@ def kcore_until_settled(
     """``graph_kcore_peeling``'s peel loop run to convergence on the
     ``run_until_settled`` harness — the long-diameter production
     posture (a K one notch higher already needs 10 rounds at sf0.01
-    where the oracle entry's fixed window holds only for {KCORE_K}).
+    where the oracle entry's fixed window holds only for 3).
     State = surviving nodes; a disappearing key IS the change signal,
     which the harness's settlement check counts as a one-sided group.
     Returns ``((node,), rounds, settled)``."""
@@ -1676,7 +1676,7 @@ def graph_kcore_until_settled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``kcore_until_settled`` as a registry entry: the SHRINKING-state
     member of the settled family (a disappearing node IS the change
     signal — a one-sided group in the settlement check, not a value
-    diff). The oracle unrolls {SETTLED_ORACLE_CAP} materialized peel
+    diff). The oracle unrolls 24 materialized peel
     steps and takes rounds_run = the first step whose survivor COUNT
     equals its predecessor's — valid as set equality because peeling is
     monotone (each step selects only nodes already in the previous set),
@@ -1737,10 +1737,10 @@ def _lpa_settled_oracle() -> str:
 def graph_lpa_until_settled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``label_propagation_until_settled`` as a registry entry — the
     FIXPOINT communities, where ``graph_label_propagation`` is the
-    {LPA_ITERS}-iteration TRAJECTORY SNAPSHOT (it settles at round 10
+    3-iteration TRAJECTORY SNAPSHOT (it settles at round 10
     on sf0.01; the fixed entry deliberately stops earlier so both
     engines compare mid-flight state). The oracle unrolls
-    {SETTLED_ORACLE_CAP} materialized argmax steps with the identical
+    24 materialized argmax steps with the identical
     (count DESC, label ASC) tie-break and takes rounds_run = the first
     step with zero per-node label diffs — the node set is constant
     (every node self-votes), so an inner join sees every change."""
@@ -2000,7 +2000,7 @@ def graph_sssp_bellman_ford(
     pairs are cheap to traverse and the nearest nodes are the ones
     reachable through strong relationships. Bellman-Ford relaxation
     d(v) = min(d(v), min_u d(u) + c(u,v)) unrolled to a FIXED
-    {BF_ITERS} rounds in both engines (the family's differential-
+    6 rounds in both engines (the family's differential-
     testability trade; ``run_until_settled`` is the production loop,
     same step function), with the family's two audits: ``n_unsettled``
     counts nodes whose distance changed on the final round (0 proves
@@ -2015,7 +2015,7 @@ def graph_sssp_bellman_ford(
     map-side-combined MIN; the edge weights ride the SAME
     ``_supplier_edges`` derivation (keep_weight=True), so the weighted
     and unweighted entries can never disagree on the graph. Shortlist
-    = top-{BF_TOP_K} nearest under (distance, node) — deterministic
+    = top-20 nearest under (distance, node) — deterministic
     total order. Reference scope: no graph surface (README.md:1-9)."""
     from pyspark.sql.window import Window as W
 
@@ -2139,8 +2139,8 @@ def _sssp_settled_oracle() -> str:
 def graph_sssp_until_settled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``sssp_until_settled`` as a registry entry: the weighted min-plus
     relaxation looped until no distance changes, shortlisting the
-    top-{BF_TOP_K} nearest nodes. The oracle unrolls
-    {SETTLED_ORACLE_CAP} materialized relaxation steps and detects the
+    top-20 nearest nodes. The oracle unrolls
+    24 materialized relaxation steps and detects the
     first VALUE-unchanged step (the k-core oracle's count equality is
     insufficient here: the reached set can freeze while distances still
     improve through longer-but-cheaper paths), so rounds_run is
@@ -2253,9 +2253,9 @@ def closeness_frame(
     edges: DataFrame | None = None,
 ) -> DataFrame:
     """Closeness centrality — (reachable count) / (sum of hop distances)
-    — for {CLOSE_SOURCES} seed nodes, computed as ONE multi-source BFS:
+    — for 5 seed nodes, computed as ONE multi-source BFS:
     the distance relation is keyed (src, node), so all seeds propagate
-    through the SAME {BFS_ITERS}-step min-plus unroll and the same
+    through the SAME 6-step min-plus unroll and the same
     per-step join against the weighted edge list — k sources cost one
     extra key column, not k traversals (the batched-probe pattern every
     landmark/centrality sketch at scale uses). Settlement is audited
@@ -2369,7 +2369,7 @@ def graph_local_clustering_topk(
     """PER-NODE local clustering coefficient — 'how clique-like is each
     supplier's neighborhood' — where graph_triangle_stats reports only
     the global ratio: lcc(v) = 2·T(v) / (d(v)·(d(v)−1)) over nodes with
-    d ≥ 2, shortlisting the top-{LCC_TOP_K}. Reuses the module's
+    d ≥ 2, shortlisting the top-10. Reuses the module's
     degree-ordered triangle enumeration VERBATIM but keeps the closing
     join INNER instead of semi, so each triangle emits its (u, v, w)
     triple exactly once; exploding the three vertices and counting

@@ -72,6 +72,18 @@ def cosine_topk(embeddings: DataFrame, query_vec: list[float], k: int) -> DataFr
     )
 
 
+def _query_vec(e: DataFrame) -> list[float]:
+    """The query vector (row ``QUERY_VEC_ID`` of the embeddings ``e``) as
+    doubles: a query PARAMETER fetched once on the driver, memoized per
+    (session, embeddings files)."""
+    return memo(
+        e.sparkSession,
+        "query_vec",
+        e,
+        lambda: [float(x) for x in e.filter(F.col("vec_id") == QUERY_VEC_ID).head()["embedding"]],
+    )
+
+
 def _bruteforce_topk_sql(extra_cols: str = "") -> str:
     """Exact cosine top-k oracle fragment, shared by the brute-force query
     and the IVF/PQ recall audits (single definition so the oracles cannot
@@ -105,8 +117,7 @@ def ann_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     task; the scan + dot product stay in whole-stage codegen and the
     top-k is TakeOrderedAndProject (no global sort)."""
     e = load_table(spark, sf_dir, "embeddings")
-    qv = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("embedding").head()[0]
-    return cosine_topk(e.filter(F.col("vec_id") != QUERY_VEC_ID), [float(x) for x in qv], TOP_K)
+    return cosine_topk(e.filter(F.col("vec_id") != QUERY_VEC_ID), _query_vec(e), TOP_K)
 
 
 def _sql_plane_dot(j: int) -> str:
@@ -212,7 +223,7 @@ def ann_lsh_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~17/65536 of the corpus. Deterministic hyperplanes → the oracle
     reproduces bucket assignment and the probe set exactly."""
     e = load_table(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in e.filter(F.col("vec_id") == QUERY_VEC_ID).head()["embedding"]]
+    qv = _query_vec(e)
     signs = (np.asarray(qv, dtype=np.float64) @ _PLANES.T) > 0
     q_bucket = int(signs @ _PLANE_WEIGHTS)
     bucketed = e.select("vec_id", "embedding", hyperplane_bucket_udf()("embedding").alias("bucket"))
@@ -297,38 +308,55 @@ def ivf_assignments(embeddings: DataFrame) -> tuple[DataFrame, list[tuple[int, l
 IVF_RECALL_MIN_HITS = 3
 
 
-def ivf_topk_frame(
-    spark: SparkSession, sf_dir: str, qv: list[float] | None = None
-) -> DataFrame:
+def ivf_topk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF ANN search itself: assign vectors to nearest coarse
-    centroid, probe the query's IVF_NPROBE nearest centroids,
-    exact-rerank inside them. At scale the assignment is a parquet
-    partition key and probing = partition pruning. ``qv`` lets a caller
-    that already fetched the query vector skip the duplicate 1-row
-    parameter scan (optimization round 15: the recall audit fetched the
-    same vector twice — one of its four warm build jobs)."""
+    centroid, probe the query's nearest centroids (``_ivf_nprobe`` of
+    them), exact-rerank inside them. At scale the assignment is a parquet
+    partition key and probing = partition pruning."""
     e = load_table(spark, sf_dir, "embeddings")
     assigned, cents = ivf_assignments(e)
-    if qv is None:
-        qv = [float(x) for x in e.filter(F.col("vec_id") == QUERY_VEC_ID).head()["embedding"]]
+    qv = _query_vec(e)
 
     def cos_py(a: list[float], b: list[float]) -> float:
         num = sum(x * y for x, y in zip(a, b))
         den = (sum(x * x for x in a) ** 0.5) * (sum(y * y for y in b) ** 0.5)
         return num / den
 
-    probe = sorted(cents, key=lambda c: (-cos_py(qv, c[1]), c[0]))[:IVF_NPROBE]
-    probe_ids = [cid for cid, _ in probe]
+    order = [cid for cid, _ in sorted(cents, key=lambda c: (-cos_py(qv, c[1]), c[0]))]
+    probe_ids = order[: _ivf_nprobe(e, assigned, order, qv)]
     cand = assigned.filter(
         F.col("centroid_id").isin(probe_ids) & (F.col("vec_id") != QUERY_VEC_ID)
     )
     return cosine_topk(cand, qv, TOP_K)
 
 
+def _ivf_nprobe(e: DataFrame, assigned: DataFrame, order: list[int], qv: list[float]) -> int:
+    """How many of the query's nearest lists (``order``) the IVF search
+    probes on this corpus: IVF_NPROBE, doubled until at least
+    IVF_RECALL_MIN_HITS of the exact top-k sit in a probed list, and at
+    most IVF_CENTROIDS, where IVF is brute force. An exact neighbour in a
+    probed list is also in the IVF top-k (it outranks every candidate, as
+    it outranks every vector), so this is ``ann_ivf_topk``'s in-query
+    recall check, met by construction. Two small jobs, memoized per
+    (session, embeddings files) like the centroids."""
+
+    def choose() -> int:
+        exact = cosine_topk(e.filter(F.col("vec_id") != QUERY_VEC_ID), qv, TOP_K)
+        ids = [r.vec_id for r in exact.collect()]
+        probed = assigned.filter(F.col("vec_id").isin(ids)).select("centroid_id")
+        lists = [r.centroid_id for r in probed.collect()]
+        nprobe = IVF_NPROBE
+        while nprobe < IVF_CENTROIDS and sum(c in order[:nprobe] for c in lists) < IVF_RECALL_MIN_HITS:
+            nprobe *= 2
+        return min(nprobe, IVF_CENTROIDS)
+
+    return memo(e.sparkSession, "ivf_nprobe", e, choose)
+
+
 @query(
     "ann_ivf_topk",
     category="llm_similarity",
-    description=f"IVF ANN recall audit: probe {IVF_NPROBE}/{IVF_CENTROIDS} partitions, exact rerank, in-query recall vs brute force",
+    description=f"IVF ANN recall audit: probe {IVF_NPROBE}/{IVF_CENTROIDS} partitions (doubled until recall holds), exact rerank, in-query recall vs brute force",
     oracle=_bruteforce_topk_sql(",\n               TRUE AS ivf_recall_ok"),
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,16 +368,17 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k, then emits the exact rows plus one boolean:
     |IVF ∩ exact| >= IVF_RECALL_MIN_HITS. The oracle recomputes the
     exact top-k and asserts TRUE, so a hash match proves in-engine that
-    the probe path surfaced the exact neighbors it claims to.
+    the probe path surfaced the exact neighbors it claims to; the probe
+    count is chosen per corpus (``_ivf_nprobe``) so that it does.
 
     Physical plan: both arms are TakeOrderedAndProject over one scan
-    each; the overlap is a {TOP_K}-row semi join counted into a 1-row
+    each; the overlap is a 10-row semi join counted into a 1-row
     relation broadcast onto the output — driver traffic is the top-k
     only."""
     e = load_table(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in e.filter(F.col("vec_id") == QUERY_VEC_ID).head()["embedding"]]
+    qv = _query_vec(e)
     exact = cosine_topk(e.filter(F.col("vec_id") != QUERY_VEC_ID), qv, TOP_K)
-    ivf_ids = ivf_topk_frame(spark, sf_dir, qv=qv).select("vec_id")
+    ivf_ids = ivf_topk_frame(spark, sf_dir).select("vec_id")
     hits = exact.join(ivf_ids, "vec_id", "left_semi").agg(
         F.count(F.lit(1)).alias("n_hits")
     )
@@ -532,7 +561,7 @@ def pq_topk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     books = fit_pq_codebooks(e)
     sub_dim = EMB_DIM // PQ_M
-    qv = [float(x) for x in e.filter(F.col("vec_id") == QUERY_VEC_ID).head()["embedding"]]
+    qv = _query_vec(e)
     q = np.asarray(qv, dtype=np.float64)
     q = q / np.linalg.norm(q)
     # ADC lookup table: LUT[m, k] = <q_sub[m], codebook[m][k]>
@@ -579,7 +608,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes the exact top-k with TRUE, so the driver's
     hash verifies the quantizer's recall in-engine every round."""
     e = load_table(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in e.filter(F.col("vec_id") == QUERY_VEC_ID).head()["embedding"]]
+    qv = _query_vec(e)
     exact = cosine_topk(e.filter(F.col("vec_id") != QUERY_VEC_ID), qv, TOP_K)
     pq_ids = pq_topk_frame(spark, sf_dir).select("vec_id")
     hits = exact.join(pq_ids, "vec_id", "left_semi").agg(
@@ -676,11 +705,11 @@ def ann_pq_rerank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of ``dedup_minhash_estimate_audit``): the full
     encode → ADC-LUT → shortlist → exact-rerank pipeline of
     ``ann_pq_topk``, emitted per SHORTLIST member as (ADC estimate,
-    exact cosine, rerank rank, promoted-to-top-{TOP_K} flag) so the
+    exact cosine, rerank rank, promoted-to-top-10 flag) so the
     rerank stage's behavior — which candidates the sketch surfaced and
     which the exact pass kept — is value-verified end to end. The one
     substitution that makes the DECISION chain ANSI-SQL-reproducible:
-    codebooks are a deterministic hash-ordered SAMPLE ({PQ_K} anchor
+    codebooks are a deterministic hash-ordered SAMPLE (16 anchor
     vectors by affine key (A·vec_id + C) mod 2³¹, each subspace using
     the anchors' m-th subvector) instead of Lloyd's k-means — sampled
     init IS the first step of k-means, quantization quality is the only
@@ -695,11 +724,11 @@ def ann_pq_rerank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Physical plan: anchors + the query vector are driver-side bounded
     collects (16 + 1 rows — query PARAMETERS, same posture as the PQ
     codebook sample); encode + ADC is ONE Arrow-batched pandas UDF per
-    scan task (numpy distance GEMM against the 16×{EMB_DIM} anchor
+    scan task (numpy distance GEMM against the 16×64 anchor
     matrix in closure); the shortlist is TakeOrderedAndProject; the
-    rerank window runs over {PQ_ADC_CANDIDATES} rows. At 100 TB the
+    rerank window runs over 50 rows. At 100 TB the
     scan+UDF is embarrassingly parallel and the only driver traffic is
-    the {PQ_ADC_CANDIDATES}-row shortlist."""
+    the 50-row shortlist."""
     e = load_table(spark, sf_dir, "embeddings")
     key = (F.lit(_LCG_A) * F.col("vec_id") + F.lit(_LCG_C)) % F.lit(_LCG_M)
     anchor_rows = (
@@ -714,10 +743,7 @@ def ann_pq_rerank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # zero-norm clamp (semdedup lesson, ADVICE r5): a degenerate vector
     # must not inject NaNs that silently poison later comparisons
     A /= np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-300)
-    qv = np.asarray(
-        e.filter(F.col("vec_id") == QUERY_VEC_ID).head()["embedding"],
-        dtype=np.float64,
-    )
+    qv = np.asarray(_query_vec(e), dtype=np.float64)
     q = qv / np.linalg.norm(qv)
     sub = _PQ_SUB
     # ADC LUT: lut[m, k] = <q_sub[m], anchor_k_sub[m]>
@@ -842,13 +868,13 @@ def cluster_kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative-ML primitive with a correctness gate, not a spot check.
 
     Physical plan — the canonical distributed-k-means shape: centroids
-    broadcast by closure (K×{EMB_DIM} floats); ONE ``mapInPandas`` pass
+    broadcast by closure (K×64 floats); ONE ``mapInPandas`` pass
     computes each partition's assignments via a numpy distance GEMM and
     emits PRE-AGGREGATED partials (count, Σdist, Σvec per cluster — ≤
-    {KMEANS_STEP_K} rows per task, the manual map-side combine), so the
+    8 rows per task, the manual map-side combine), so the
     shuffle is K rows per scan task regardless of corpus size; the
     update (element-wise mean) and shift finish on the exploded
-    K×{EMB_DIM}-row micro relation. Iterating = re-invoking with the
+    K×64-row micro relation. Iterating = re-invoking with the
     updated centroids; at 100 TB each iteration costs one scan + a
     kilobyte-scale shuffle, and the assignment GEMM is the same kernel
     the IVF quantizer (``ivf_assignments``) fits with Spark ML. Ties
@@ -1011,17 +1037,17 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
 
     1. COVARIANCE in one corpus pass: each task's mapInPandas partial
        emits (count, Σx, ΣxxT) — the classic one-pass moment
-       accumulation, a single {EMB_DIM}×{EMB_DIM} GEMM per Arrow batch,
+       accumulation, a single 64×64 GEMM per Arrow batch,
        ONE partial row per task (~32 KB) regardless of corpus size.
        Partials combine into the (i, j, c) covariance micro relation
        via a positional explode + hash agg; C = Σxxᵀ/n − μμᵀ.
-    2. POWER ITERATION on the micro relation: {PCA_POWER_ITERS} fixed
+    2. POWER ITERATION on the micro relation: 6 fixed
        steps of w = C·v (join + partial-agg) with the normalization
-       computed as a WINDOW over the {EMB_DIM}-row vector relation —
+       computed as a WINDOW over the 64-row vector relation —
        not a separate norm relation, which would make each iteration
        reference its predecessor twice and double the plan per step;
        the window keeps the DAG linear, so the whole fixpoint is one
-       job (the PageRank lesson applied). Start vector 1/√{EMB_DIM} =
+       job (the PageRank lesson applied). Start vector 1/√64 =
        0.125 exactly (a power of two — both engines iterate from
        bit-identical state); the returned eigenvalue is ‖C·v‖ at the
        final step (the Rayleigh estimate at convergence).
@@ -1029,7 +1055,7 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     At 100 TB phase 1 is scan-bound and embarrassingly parallel; phase
     2's cost is independent of corpus size entirely. What is verified
     is the fixed-budget power TRAJECTORY, not a convergence claim: both
-    engines iterate the same {PCA_POWER_ITERS} steps from bit-identical
+    engines iterate the same 6 steps from bit-identical
     state, so the comparison is well-defined whatever the spectrum —
     and on THIS synthetic corpus the spectrum is nearly isotropic
     (λ2/λ1 ≈ 0.98, pinned by tests), so the iterate is still rotating
@@ -1243,7 +1269,7 @@ def knn_join_frame(
     """The kNN join's two physical paths behind one cost-based switch.
 
     ``brute`` (exact; the oracle's semantics): candidates are sharded
-    into {KNN_BLOCKS} hash blocks, queries are replicated once per block
+    into 8 hash blocks, queries are replicated once per block
     (shuffle volume is blocks × |Q| rows, NEVER the |Q| × |C| pair
     space), each (query, candidate-block) cogroup runs the shared GEMM
     kernel, and a final window keeps the global top-k. Every global
@@ -1401,17 +1427,17 @@ def ann_knn_join_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-11 cost-based switch): k-means cells are not
     ANSI-SQL-reproducible, so the query runs BOTH the exact blocked-GEMM
     join and the IVF path under a FORCED partial probe
-    (cell target {KNN_AUDIT_CELL_TARGET} → every shipped SF splits into
+    (cell target 64 → every shipped SF splits into
     multiple cells; nprobe = half of them) and emits the exact rows plus
     one integer-exact boolean: recalled pairs × 100 >=
-    {KNN_AUDIT_RECALL_PCT} × exact pairs. The oracle recomputes the
+    60 × exact pairs. The oracle recomputes the
     exact join and asserts TRUE, so a hash match proves IN-ENGINE that
     the approximate path recovered the claimed fraction of true
     neighbors — on this corpus the honest-hard case (clusterless
     synthetic vectors; measured 0.77-0.86).
 
     Plan: two cogroup GEMM fan-outs (exact + probed) over one scan
-    each; the recall fold is a {KNN_K}·|Q|-row semi join counted into a
+    each; the recall fold is a 5·|Q|-row semi join counted into a
     one-row relation broadcast onto the output. At 100 TB the audit
     runs on a sampled query subset — the structure is unchanged."""
     exact = knn_join_frame(spark, sf_dir, path="brute").localCheckpoint(
@@ -1551,11 +1577,11 @@ def ann_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding boundaries. A doc missing from one arm contributes 0 from
     it (rank reported as 0 = "not retrieved by this arm").
 
-    Scale shape: each arm ends in its own top-``{RRF_ARM_DEPTH}``
+    Scale shape: each arm ends in its own top-50
     (TakeOrdered / per-partition heaps); ranking then runs on
     arm-depth-sized MICRO relations (the only unpartitioned windows,
-    {RRF_ARM_DEPTH} rows by construction), and the fusion join touches
-    ≤ 2×{RRF_ARM_DEPTH} rows. The corpus-sized work is exactly the two
+    50 rows by construction), and the fusion join touches
+    ≤ 2×50 rows. The corpus-sized work is exactly the two
     arms' scans — fusion itself is free. The two arms answer one hybrid
     query (keywords + query vector), the standard two-tower serving
     pattern."""
@@ -1565,8 +1591,7 @@ def ann_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lex_scores = bm25_doc_scores(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings")
-    qv = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("embedding").head()[0]
-    q = F.array(*[F.lit(float(x)) for x in qv])
+    q = F.array(*[F.lit(x) for x in _query_vec(e)])
     v = _as_double(F.col("embedding"))
     # rank and cut on the ROUNDED score in both arms (the oracle does),
     # never on the raw double — raw-order top-k could admit a different
@@ -1758,26 +1783,26 @@ def embedding_matryoshka_truncation_audit(spark: SparkSession, sf_dir: str) -> D
     """Matryoshka-representation audit — the measurement behind serving
     truncated embeddings (MRL-trained models promise the first d' dims
     approximate the full vector): for each anchor vector, how much of
-    the full-{EMB_DIM}-dim cosine top-{MATRYOSHKA_K} survives when both
-    sides are truncated to the first {MATRYOSHKA_DIMS} dims. recall@k
+    the full-64-dim cosine top-10 survives when both
+    sides are truncated to the first 16 dims. recall@k
     is an EXACT rational count/k (the float cosines only RANK, ties
     break by neighbor id in both engines; the driver-hashed outputs are
     the integer overlap and its exact ratio — synthetic embeddings are
     not MRL-trained, so observed recall is the honest unstructured
     baseline a real model's audit would beat).
 
-    Plan shape: anchors are a {MATRYOSHKA_ANCHORS}-row broadcast
+    Plan shape: anchors are an 8-row broadcast
     (smallest vec_ids — deterministic, no sampling); BOTH cosines
     compute in one pass over the anchor×corpus join (zip_with/aggregate
     inside codegen — slice() reuses the same array, so the corpus is
     scanned once, no UDF); BOTH per-anchor ranks then come from ONE
     a_id exchange (two Window sorts over the same partitioning), so
-    the top-{MATRYOSHKA_K} overlap is a conditional count on rows that
+    the top-10 overlap is a conditional count on rows that
     already carry both ranks — no second shuffle of the pair relation
     and no rank-vs-rank join (round-14: 2 exchanges + 1 join → 1
     exchange; the checkpoint the two-consumer shape needed is gone
     because the plan is single-consumer now). At 100 TB this is
-    {MATRYOSHKA_ANCHORS} broadcast probes over one scan — the kNN-join
+    8 broadcast probes over one scan — the kNN-join
     entry covers the all-pairs posture."""
     from pyspark.sql import Window as W
 
@@ -1885,7 +1910,7 @@ def embedding_binary_quantization_recall_audit(
     """Binary quantization audit — the 32× compression used for
     first-stage retrieval in modern vector stores (sign bit per
     dimension, XOR+popcount distance): for each anchor vector, how
-    much of the exact-cosine top-{BINQ_K} survives when candidates are
+    much of the exact-cosine top-10 survives when candidates are
     ranked by HAMMING distance between sign patterns instead. The
     Hamming distance is exact INTEGER arithmetic in both engines (sign
     bits packed once per vector into two 32-bit words, per-pair
@@ -1896,10 +1921,10 @@ def embedding_binary_quantization_recall_audit(
     margins pinned on the oracle data by the llm-ops margin test).
     recall@k and the max-Hamming radius are exact integers.
 
-    Plan shape at 100 TB: anchors are a {BINQ_ANCHORS}-row broadcast;
+    Plan shape at 100 TB: anchors are an 8-row broadcast;
     one pass over the anchor×corpus join computes BOTH metrics
     in-codegen (no UDF); per-anchor top-k windows run over
-    {BINQ_ANCHORS} bounded partitions. The sign-packing runs inline
+    8 bounded partitions. The sign-packing runs inline
     here (one fold per vector); at write time the packed words would
     persist as columns and the scan reads 16 bytes/vector for the
     binary arm instead of the float array — a storage change, same

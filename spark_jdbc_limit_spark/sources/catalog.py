@@ -42,8 +42,26 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+#: The session settings parquet schema inference reads; a schema is
+#: memoized per value of each.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one catalog table as a DataFrame (parquet scan, pushdown-capable).
+
+    The schema is resolved once per session and table files, like the
+    reference's eager schema resolution: inference runs a Spark job, so
+    the schema is memoized (``operators.reuse.memo``, keyed by the files'
+    fingerprint and the settings inference reads) and each call reads with
+    it. Only the schema is memoized: every call returns a new relation
+    with new attribute ids, so a table can still be joined with itself.
 
     ``events.ts`` normalization (the generated data's physical type has
     changed across harness generations, so detect rather than assume):
@@ -56,19 +74,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       TimestampType — wall-clock preserving under the pinned UTC session
       timezone, and identical to the oracle's naive-µs view.
     """
+    # imported here: the operators package imports this module
+    from spark_jdbc_limit_spark.operators.reuse import memo
+
+    path = table_path(sf_dir, name)
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    kind = ("parquet_schema", *(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    schema = memo(spark, kind, path, lambda: spark.read.parquet(path).schema)
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
-        ts_type = df.schema["ts"].dataType
+        ts_type = schema["ts"].dataType
         if isinstance(ts_type, T.LongType):  # nanos-as-long generation
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         if isinstance(ts_type, T.TimestampNTZType):
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
