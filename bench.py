@@ -493,8 +493,9 @@ def main() -> None:
     )
 
     cc = dedup_connected_components(spark, sf_dir).localCheckpoint()
-    edges = G._supplier_edges(spark, sf_dir).localCheckpoint()
-    w_edges = G._supplier_edges(spark, sf_dir, keep_weight=True).localCheckpoint()
+    # the supplier_edges_ckpt_sec row above already materialized the memo
+    edges = G.supplier_edges_ckpt(spark, sf_dir)
+    w_edges = G.supplier_edges_ckpt(spark, sf_dir, keep_weight=True)
     docs = load_table(spark, sf_dir, "documents")
     # the suffix-dedup pair shares one surviving-suffix relation in a
     # pipeline; each standalone entry re-derives it for its oracle
@@ -521,8 +522,8 @@ def main() -> None:
     }
     # the graph analytics share one materialized edge relation in a
     # pipeline; their standalone entries re-derive it for the oracle. The
-    # weighted family shares its OWN relation (the same derivation with
-    # the co-order count retained).
+    # weighted family reads the same checkpoint with the co-order count
+    # retained.
     for name, fn, e in (
         ("graph_pagerank_supplier", G.pagerank_frame, edges),
         ("graph_label_propagation", G.graph_label_propagation, edges),

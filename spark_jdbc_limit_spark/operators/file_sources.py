@@ -250,13 +250,14 @@ def source_csv_corrupt_permissive(spark: SparkSession, sf_dir: str) -> DataFrame
     ).option("mode", "PERMISSIVE").option(
         "columnNameOfCorruptRecord", "_corrupt_record"
     ).csv(path)
-    # cache (lazily) before referencing _corrupt_record alone: Spark
+    # materialize before referencing _corrupt_record alone: Spark
     # disallows queries whose only referenced column is the internal
-    # corrupt-record column on an un-materialized parse. The cached
-    # relation is this query's 28-row fixture, not user data — bounded,
-    # and evicted with the session (column pruning would defeat the
-    # add-a-dummy-column alternative).
-    back = back.cache()
+    # corrupt-record column on an un-materialized parse (column pruning
+    # would defeat the add-a-dummy-column alternative). A local
+    # checkpoint, not a cache: the cache would register the parse under
+    # the path the next build rewrites. The checkpoint is this query's
+    # 28-row fixture, not user data — bounded, and gone with the session.
+    back = back.localCheckpoint()
     # coalesce: SUM over zero rows is NULL; an empty/unreadable input
     # must report (0, 0), not (NULL, NULL)
     return back.agg(

@@ -59,7 +59,7 @@ TRIANGLE_MIN_W = 2
 #: scheduling floor 65 times per stage across ~20 stages of micro joins
 #: (measured: right-sizing alone took the fixed CC unroll from ~7 s to
 #: ~2 s at sf0.1). Sizing by COUNT (cheap: the pair relation is already
-#: cached) instead of an AQE rebalance hint keeps the partition count
+#: checkpointed) instead of an AQE rebalance hint keeps the partition count
 #: GROWING with the edge set — a 64 MB-advisory rebalance would coalesce
 #: even a 100x edge set to 1-2 partitions and serialize every downstream
 #: join; 64k edge rows/partition keeps tasks meaningful at 1x and spreads
@@ -79,7 +79,7 @@ def supplier_edges_ckpt(
         spark,
         "supplier_edges_ckpt",
         load_table(spark, sf_dir, "lineitem"),
-        lambda: _supplier_edges(spark, sf_dir, keep_weight=True).localCheckpoint(),
+        lambda: _supplier_edges(spark, sf_dir).localCheckpoint(),
     )
     return df if keep_weight else df.drop("w")
 
@@ -99,14 +99,10 @@ def _size_partitions(df: DataFrame, n_rows: int) -> DataFrame:
     return df
 
 
-def _supplier_edges(
-    spark: SparkSession, sf_dir: str, keep_weight: bool = False
-) -> DataFrame:
-    """Canonical (s1 < s2) supplier edge list: pairs whose co-order count
-    clears the adaptive weight threshold. ``keep_weight`` additionally
-    emits the co-order count ``w`` (the weighted-SSSP entry's cost input)
-    from the SAME derivation, so weighted and unweighted consumers can
-    never disagree on the edge set.
+def _supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Canonical (s1 < s2) supplier edge list with its co-order count
+    ``w`` (the weighted-SSSP entry's cost input): pairs whose co-order
+    count clears the adaptive weight threshold.
 
     Pair generation: ONE shuffle groups each order's distinct suppliers
     into a sorted set (collect_set absorbs the distinct), then a codegen
@@ -129,15 +125,15 @@ def _supplier_edges(
             ),
         )
     )
-    # The fact-sized work happens exactly once: everything downstream
-    # (threshold quantile, edge filter, degrees, orientation, wedges)
-    # re-reads this cached pair-cardinality relation.
+    # The fact-sized work happens exactly once: the threshold quantile,
+    # the edge filter and the edge count re-read this eagerly checkpointed
+    # pair-cardinality relation.
     pairs = (
         sets.select(F.explode(pair_structs).alias("p"))
         .select("p.s1", "p.s2")
         .groupBy("s1", "s2")
         .agg(F.count(F.lit(1)).alias("w"))
-        .cache()
+        .localCheckpoint()
     )
     thr = pairs.agg(
         F.greatest(
@@ -145,31 +141,16 @@ def _supplier_edges(
             F.expr(f"percentile(w, {TRIANGLE_PCTL})"),
         ).alias("thr")
     )
-    filtered = pairs.crossJoin(F.broadcast(thr)).filter(
-        F.col("w").cast("double") >= F.col("thr")
-    )  # one-row threshold relation
-    out = filtered.select("s1", "s2", "w") if keep_weight else filtered.select(
-        "s1", "s2"
+    out = (
+        pairs.crossJoin(F.broadcast(thr))  # one-row threshold relation
+        .filter(F.col("w").cast("double") >= F.col("thr"))
+        .select("s1", "s2", "w")
     )
-    # Count the FILTERED edge set (one cached-backed job — the fact-sized
-    # work above is already materialized in the pairs cache; memoized per
-    # (session, corpus) so repeated builds don't re-pay it) and right-size
-    # the output partitioning to it; see EDGE_ROWS_PER_PARTITION for why
-    # this beats both inherited shuffle partitioning and an AQE rebalance
-    # hint here.
-    #
-    # Coalesce-safety: _size_partitions shrinks via coalesce(), which
-    # merges the REDUCE side of the upstream groupBy shuffle without a
-    # stage boundary — executed cold, the fact-sized aggregation's merge
-    # would run in as few as one task. That is safe here ONLY because the
-    # count job below has already materialized the pairs cache in this
-    # same session (reuse.memo is keyed by session for exactly that
-    # reason), so the coalesced stage reads warm cached blocks. Should the
-    # cache ever be evicted under memory pressure, the recompute cost is
-    # bounded: the map side still shuffles at full parallelism, and
-    # n_parts itself grows with the edge set, so the merge serializes only
-    # at scales where the relation is micro anyway.
-    return _size_partitions(out, memo(spark, "supplier_edge_count", li, out.count))
+    # Right-size the output partitioning to the filtered edge count (one
+    # job over the checkpointed pairs); see EDGE_ROWS_PER_PARTITION for
+    # why this beats both inherited shuffle partitioning and an AQE
+    # rebalance hint here.
+    return _size_partitions(out, out.count())
 
 
 #: Shared oracle fragment: the supplier co-order edge list (os -> pairs
@@ -204,7 +185,7 @@ def _edges_cte(select_cols: str = "s1, s2") -> str:
 
 _EDGES_CTE = _edges_cte()
 #: weighted twin — same derivation, co-order count retained (mirror of
-#: ``_supplier_edges(keep_weight=True)``).
+#: ``_supplier_edges``).
 _EDGES_W_CTE = _edges_cte("s1, s2, w")
 
 
@@ -2013,7 +1994,7 @@ def graph_sssp_bellman_ford(
     node-bounded distance relation onto the weighted bidirectional
     edge list (+0 self-loops keep lineage linear) + one
     map-side-combined MIN; the edge weights ride the SAME
-    ``_supplier_edges`` derivation (keep_weight=True), so the weighted
+    ``supplier_edges_ckpt`` checkpoint (keep_weight=True), so the weighted
     and unweighted entries can never disagree on the graph. Shortlist
     = top-20 nearest under (distance, node) — deterministic
     total order. Reference scope: no graph surface (README.md:1-9)."""

@@ -513,11 +513,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 .saveAsTable(tbl)
             )
 
-    # A binaryFile frame names both input files without the schema-
-    # inference job a parquet read launches on every call.
-    inputs = spark.read.format("binaryFile").load(
-        [table_path(sf_dir, name) for name, _, _ in layout]
-    )
+    inputs = [table_path(sf_dir, name) for name, _, _ in layout]
     memo(spark, "bucketed_tables", inputs, write)
     if not (spark.catalog.tableExists(cust_tbl) and spark.catalog.tableExists(ord_tbl)):
         write()

@@ -4,6 +4,6 @@ the JDBC reader-option mapping that mirrors the reference's config surface
 
 from __future__ import annotations
 
-from spark_jdbc_limit_spark.sources.catalog import TABLES, load_table, register_views, table_path
+from spark_jdbc_limit_spark.sources.catalog import TABLES, load_table, table_path
 
-__all__ = ["TABLES", "load_table", "register_views", "table_path"]
+__all__ = ["TABLES", "load_table", "table_path"]

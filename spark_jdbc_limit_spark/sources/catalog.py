@@ -13,6 +13,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, LongType, StructType, TimestampNTZType
 
 #: Every table the harness generates (TESTDATA.md).
 TABLES: tuple[str, ...] = (
@@ -42,10 +44,14 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+#: Spark's vectorized reader rejects TIMESTAMP(NANOS) unless this is on.
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
 #: The session settings parquet schema inference reads; a schema is
-#: memoized per value of each.
+#: memoized per value of each. ``NANOS_AS_LONG`` is not among them:
+#: ``table_schema`` turns it on before every load, so loading ``events``
+#: cannot change the key of a table loaded before it.
 _SCHEMA_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -53,49 +59,46 @@ _SCHEMA_CONFS = (
 )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one catalog table as a DataFrame (parquet scan, pushdown-capable).
-
-    The schema is resolved once per session and table files, like the
-    reference's eager schema resolution: inference runs a Spark job, so
-    the schema is memoized (``operators.reuse.memo``, keyed by the files'
-    fingerprint and the settings inference reads) and each call reads with
-    it. Only the schema is memoized: every call returns a new relation
-    with new attribute ids, so a table can still be joined with itself.
-
-    ``events.ts`` normalization (the generated data's physical type has
-    changed across harness generations, so detect rather than assume):
-
-    - TIMESTAMP(NANOS): Spark's vectorized reader rejects it (DuckDB
-      silently truncates to µs) → read nanos as long, rebuild a µs
-      TimestampType column. Integer ``div`` keeps full precision (a double
-      cast would lose bits above 2^53).
-    - timestamp[us] (no tz → TIMESTAMP_NTZ in Spark): cast to
-      TimestampType — wall-clock preserving under the pinned UTC session
-      timezone, and identical to the oracle's naive-µs view.
-    """
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """A catalog table's file schema, resolved once per session and table
+    files, like the reference's eager schema resolution: inference runs a
+    Spark job, so the schema is memoized (``operators.reuse.memo``, keyed
+    by the files' fingerprint and the settings inference reads)."""
     # imported here: the operators package imports this module
     from spark_jdbc_limit_spark.operators.reuse import memo
 
     path = table_path(sf_dir, name)
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set(NANOS_AS_LONG, "true")
     kind = ("parquet_schema", *(spark.conf.get(k) for k in _SCHEMA_CONFS))
-    schema = memo(spark, kind, path, lambda: spark.read.parquet(path).schema)
-    df = spark.read.schema(schema).parquet(path)
-    if name == "events":
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
+    return memo(spark, kind, path, lambda: spark.read.parquet(path).schema)
 
-        ts_type = schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):  # nanos-as-long generation
-            return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        if isinstance(ts_type, T.TimestampNTZType):
-            return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+def normalize_ts(df: DataFrame, ts_type: DataType) -> DataFrame:
+    """``df`` with its ``ts`` column, read as the file's ``ts_type``, as a
+    µs TimestampType column. The generated data's physical type has
+    changed across harness generations, so detect rather than assume:
+
+    - TIMESTAMP(NANOS), read as long (``NANOS_AS_LONG``; DuckDB silently
+      truncates to µs) → rebuild a µs TimestampType column. Integer
+      ``div`` keeps full precision (a double cast would lose bits above
+      2^53).
+    - timestamp[us] (no tz → TIMESTAMP_NTZ in Spark): cast to
+      TimestampType — wall-clock preserving under the pinned UTC session
+      timezone, and identical to the oracle's naive-µs view.
+    """
+    if isinstance(ts_type, LongType):  # nanos-as-long generation
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register catalog tables as temp views so queries can use spark.sql."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one catalog table as a DataFrame (parquet scan, pushdown-capable)
+    with its memoized ``table_schema``; ``events.ts`` goes through
+    ``normalize_ts``. Only the schema is memoized: every call returns a
+    new relation with new attribute ids, so a table can still be joined
+    with itself."""
+    schema = table_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(table_path(sf_dir, name))
+    return normalize_ts(df, schema["ts"].dataType) if name == "events" else df

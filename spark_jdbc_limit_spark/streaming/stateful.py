@@ -21,16 +21,24 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from spark_jdbc_limit_spark.streaming.windows import _events_raw_schema
+from spark_jdbc_limit_spark.sources.catalog import NANOS_AS_LONG, normalize_ts
 
 #: The stateful-stream fixtures feed a LONG-nanos ``ts`` directory (the
 #: fixture normalizes whatever the catalog's events generation is back to
 #: raw nanos), so this source keeps the long schema unconditionally.
-EVENTS_RAW_SCHEMA = _events_raw_schema(T.LongType())
+EVENTS_RAW_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.LongType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
 
 RUNNING_OUTPUT_SCHEMA = T.StructType(
     [
@@ -63,13 +71,13 @@ def _fold_user_state(
 
 
 def events_file_stream(spark: SparkSession, src_dir: str, files_per_trigger: int = 1) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set(NANOS_AS_LONG, "true")
     raw = (
         spark.readStream.schema(EVENTS_RAW_SCHEMA)
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(src_dir)
     )
-    return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return normalize_ts(raw, T.LongType())
 
 
 def stream_user_running_totals(spark: SparkSession, src_dir: str) -> DataFrame:

@@ -13,46 +13,25 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet with a proper event-time
-    TimestampType column.
-
-    The generated data's physical ``ts`` type has changed across harness
-    generations (TIMESTAMP(NANOS) → timestamp[us]); a stream source needs
-    an explicit schema, so peek at the batch footer once and normalize the
-    same way sources/catalog.py does.
+    TimestampType column. A stream source needs an explicit schema: it
+    reads with the catalog's memoized events schema and normalizes ``ts``
+    as the batch load does (``sources.catalog.normalize_ts``).
     """
-    from spark_jdbc_limit_spark.sources.catalog import table_path
+    from spark_jdbc_limit_spark.sources.catalog import normalize_ts, table_schema
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_type = spark.read.parquet(table_path(sf_dir, "events")).schema["ts"].dataType
+    schema = table_schema(spark, sf_dir, "events")
     # File-stream sources need a DIRECTORY; select the events file by glob.
     raw = (
-        spark.readStream.schema(_events_raw_schema(ts_type))
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if isinstance(ts_type, T.LongType):  # nanos-as-long generation
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if isinstance(ts_type, T.TimestampNTZType):
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return normalize_ts(raw, schema["ts"].dataType)
 
 
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

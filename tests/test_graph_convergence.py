@@ -41,12 +41,12 @@ from spark_jdbc_limit_spark.operators.graph import (
     BFS_ITERS,
     CC_ITERS,
     LPA_ITERS,
-    _supplier_edges,
     bfs_hops_until_settled,
     connected_components_until_settled,
     label_propagation_until_settled,
     pagerank_until_settled,
     run_until_settled,
+    supplier_edges_ckpt,
 )
 from spark_jdbc_limit_spark.operators import get_query
 
@@ -234,7 +234,7 @@ def test_cc_until_settled_matches_fixed_unroll(spark, sf):
 def test_bfs_until_settled_matches_fixed_unroll(spark, sf):
     dist, rounds, settled = bfs_hops_until_settled(spark, sf)
     assert settled and rounds <= BFS_ITERS + 1
-    edges = _supplier_edges(spark, sf)
+    edges = supplier_edges_ckpt(spark, sf)
     nodes = (
         edges.select(F.col("s1").alias("node"))
         .unionAll(edges.select(F.col("s2").alias("node")))
@@ -333,7 +333,7 @@ def test_kcore_fixed_unroll_matches_python_peel(spark):
     from spark_jdbc_limit_spark.operators.graph import KCORE_ITERS, KCORE_K
 
     edges = [
-        (r["s1"], r["s2"]) for r in _supplier_edges(spark, sf).collect()
+        (r["s1"], r["s2"]) for r in supplier_edges_ckpt(spark, sf).collect()
     ]
     bi = edges + [(b, a) for a, b in edges]
     nodes = {u for u, _ in bi}

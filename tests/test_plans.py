@@ -905,7 +905,7 @@ def test_connected_components_settled_and_match_union_find(spark, sf_dir):
     settlement audit reads 0 everywhere (CC_ITERS covers the diameter)
     and component count/sizes match a driver-side union-find over the
     same edge list."""
-    from spark_jdbc_limit_spark.operators.graph import _supplier_edges
+    from spark_jdbc_limit_spark.operators.graph import supplier_edges_ckpt
 
     df = get_query("graph_connected_components").builder(spark, sf_dir)
     rows = df.collect()
@@ -920,7 +920,7 @@ def test_connected_components_settled_and_match_union_find(spark, sf_dir):
             x = parent[x]
         return x
 
-    for e in _supplier_edges(spark, sf_dir).collect():
+    for e in supplier_edges_ckpt(spark, sf_dir).collect():
         a, b = find(e["s1"]), find(e["s2"])
         if a != b:
             parent[max(a, b)] = min(a, b)

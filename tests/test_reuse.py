@@ -1,6 +1,7 @@
 """The reuse layer (``operators/reuse.py``) never serves a value for files
 that changed, and a warm build runs no job whose answer the corpus files
-already fix: table schemas, the near-dup checkpoints, the IVF probe count."""
+already fix: table schemas, the near-dup checkpoints, the IVF probe count.
+It is the operators' one reuse path: none of them uses Spark's cache."""
 
 from __future__ import annotations
 
@@ -10,12 +11,14 @@ import re
 import sys
 import uuid
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.session import _monkey_patch_RDD
 
 from spark_jdbc_limit_spark.operators import get_query, reuse
-from spark_jdbc_limit_spark.sources.catalog import load_table
+from spark_jdbc_limit_spark.sources.catalog import TABLES, load_table
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -60,6 +63,85 @@ def test_load_table_memoizes_schema_not_relation(spark, sf_dir):
 
     assert ids(a) != ids(b)
     assert a.join(b, a["n_regionkey"] == b["n_regionkey"]).count() == 125
+
+
+def test_second_round_of_table_loads_runs_no_job(spark, sf_dir):
+    """Loading ``events`` changes no other table's schema key: in a fresh
+    session that loaded every table once, loading them all again runs no
+    job."""
+    fresh = spark.newSession()
+    # PySpark binds RDD.toDF to the newest session: bind it back
+    _monkey_patch_RDD(spark)
+
+    def load_all() -> None:
+        for name in TABLES:
+            load_table(fresh, sf_dir, name)
+
+    load_all()
+    assert _jobs(spark, load_all) == 0
+
+
+def test_memo_fingerprints_escaped_input_names(spark, tmp_path):
+    """A DataFrame's input files are URIs: a table under a directory whose
+    name is escaped in them is still fingerprinted, so its value is reused
+    while the file is unchanged and recomputed after a rewrite."""
+    sf = tmp_path / "a b"
+    sf.mkdir()
+    path = str(sf / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+    kind = ("escaped_names", uuid.uuid4().hex)
+
+    def value(compute) -> int:
+        return reuse.memo(spark, kind, load_table(spark, str(sf), "region"), compute)
+
+    assert (value(lambda: 1), value(lambda: 2)) == (1, 1)
+    pq.write_table(pa.table({"r_regionkey": [0, 1, 2]}), path)
+    assert value(lambda: 3) == 3
+
+
+def _components(spark, sf: str) -> list:
+    return sorted(get_query("graph_connected_components").builder(spark, sf).collect())
+
+
+def test_connected_components_see_lineitem_rewrite(spark, sf_dir, tmp_path):
+    """Rewriting ``lineitem`` in place changes the supplier graph's
+    components, built again in the same session, to exactly what a
+    never-built copy of the new corpus gives: no Spark cache serves the
+    old supplier pairs."""
+    li = pq.read_table(os.path.join(sf_dir, "lineitem.parquet"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(li, str(sf / "lineitem.parquet"))
+    before = _components(spark, str(sf))
+    # every line takes the next line's supplier: other baskets, other pairs
+    col = li.schema.get_field_index("l_suppkey")
+    supp = li.column(col)
+    moved = li.set_column(col, "l_suppkey", pa.array(np.roll(supp.to_numpy(), 1), type=supp.type))
+    pq.write_table(moved, str(sf / "lineitem.parquet"))
+    fresh = tmp_path / "fresh"
+    fresh.mkdir()
+    pq.write_table(moved, str(fresh / "lineitem.parquet"))
+    after = _components(spark, str(sf))
+    assert after != before
+    assert after == _components(spark, str(fresh))
+
+
+def test_operators_use_no_spark_cache():
+    """No operator registers a frame with Spark's cache: its CacheManager
+    matches a plan by path, so a file rewritten in place would be served
+    from the old blocks. ``reuse.memo`` is the one reuse path."""
+    ops = os.path.join(ROOT, "spark_jdbc_limit_spark", "operators")
+    found = [
+        f"{os.path.relpath(os.path.join(d, name), ops)}:{node.lineno}"
+        for d, _, names in os.walk(ops)
+        for name in sorted(names)
+        if name.endswith(".py")
+        for node in ast.walk(ast.parse(open(os.path.join(d, name)).read()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("cache", "persist")
+    ]
+    assert not found, found
 
 
 def _pairs(spark, sf: str) -> set[tuple[int, int]]:

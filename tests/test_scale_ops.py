@@ -436,46 +436,45 @@ def test_size_partitions_grows_with_cardinality(spark):
     assert big.rdd.getNumPartitions() == shuf + 5
 
 
-def test_edge_count_memoized_per_corpus(spark, sf_dir, sf_correct):
-    """The right-sizing count is memoized per (session, input files):
+def test_edge_checkpoint_memoized_per_corpus(spark, sf_dir, sf_correct):
+    """The shared edge checkpoint is memoized per (session, input files):
     repeated builds (pytest's registry-wide schema scan, bench reps) must
-    not re-pay the count job, two SF dirs must not share an entry, and the
-    key must carry the session (the count job is what materializes the
-    per-session pairs cache that makes the downstream coalesce safe)."""
+    not re-run it, two SF dirs must not share an entry, and the key must
+    carry the session (a local checkpoint lives in its session)."""
     import gc
     import weakref
 
     from pyspark.sql.session import _monkey_patch_RDD
 
     from spark_jdbc_limit_spark.operators import reuse
-    from spark_jdbc_limit_spark.operators.graph import _supplier_edges
+    from spark_jdbc_limit_spark.operators.graph import supplier_edges_ckpt
     from spark_jdbc_limit_spark.sources.catalog import load_table
 
-    kind = "supplier_edge_count"
-    _supplier_edges(spark, sf_dir)
-    _supplier_edges(spark, sf_correct)
+    kind = "supplier_edges_ckpt"
+    supplier_edges_ckpt(spark, sf_dir)
+    supplier_edges_ckpt(spark, sf_correct)
 
-    def cached(sf: str) -> int:
+    def n_edges(sf: str) -> int:
         return reuse.memo(
             spark, kind, load_table(spark, sf, "lineitem"),
-            lambda: pytest.fail(f"no memoized edge count for {sf}"),
-        )
+            lambda: pytest.fail(f"no memoized edge checkpoint for {sf}"),
+        ).count()
 
-    # two corpora hold two entries, with their own counts
-    assert cached(sf_dir) != cached(sf_correct)
-    # a rebuild reuses the memoized count: a hit, no new miss
+    # two corpora hold two entries, with their own edges
+    assert n_edges(sf_dir) != n_edges(sf_correct)
+    # a rebuild reuses the memoized checkpoint: a hit, no new miss
     hits, misses = reuse.hits[kind], reuse.misses[kind]
-    _supplier_edges(spark, sf_dir)
+    supplier_edges_ckpt(spark, sf_dir)
     assert (reuse.hits[kind], reuse.misses[kind]) == (hits + 1, misses)
     # another session misses on the same corpus, and the memo must not
     # keep that session alive once it is dropped
     other = spark.newSession()
-    _supplier_edges(other, sf_dir)
+    supplier_edges_ckpt(other, sf_dir)
     assert reuse.misses[kind] == misses + 1
     gone = weakref.ref(other)
     del other
     # PySpark binds RDD.toDF to the newest session: bind it back to the
-    # fixture's, so only the memo's weak key could still hold `other`
+    # fixture's, so only the memo could still hold `other`
     _monkey_patch_RDD(spark)
     gc.collect()
     assert gone() is None
