@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spark_jdbc_limit_spark.operators.registry import query
-from spark_jdbc_limit_spark.operators.relational import dec_sum, round_dbl, sql_dec_sum, sql_round_dbl
+from spark_jdbc_limit_spark.operators.relational import dec_sum, round_dbl, set_pairs, sql_dec_sum, sql_round_dbl
 from spark_jdbc_limit_spark.operators.reuse import memo
 from spark_jdbc_limit_spark.sources.catalog import load_table
 
@@ -387,11 +387,10 @@ def basket_pair_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     step of association-rule mining (and of "related items" retrieval).
     The pair space is generated INSIDE each basket with ONE fact
     shuffle: each order's distinct parts are grouped into a sorted set
-    (``collect_set`` absorbs the quantity-split dedup), then a codegen
-    slice/transform expansion emits the C(|basket|, 2) ordered pairs
-    in-row — the supplier co-order edge builder's shape (graph.py). At
-    sf0.1 this times even with the distinct + self-equi-join
-    formulation (Catalyst reuses the distinct's exchange for the
+    (``collect_set`` absorbs the quantity-split dedup), then
+    ``set_pairs`` emits the C(|basket|, 2) ordered pairs in-row — the
+    supplier co-order edge builder's shape (graph.py). At sf0.1 this
+    times even with the distinct + self-equi-join formulation (Catalyst reuses the distinct's exchange for the
     self-join, so that plan is also effectively single-shuffle) — the
     set form is kept because its shuffle budget is guaranteed by
     construction, not by an optimizer exchange-reuse that a second
@@ -407,18 +406,8 @@ def basket_pair_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets = li.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("ps")
     )
-    pair_structs = F.flatten(
-        F.transform(
-            "ps",
-            lambda x, i: F.transform(
-                F.slice("ps", i + 2, F.size("ps")),
-                lambda y: F.struct(x.alias("part_a"), y.alias("part_b")),
-            ),
-        )
-    )
     return (
-        sets.select(F.explode(pair_structs).alias("p"))
-        .select("p.part_a", "p.part_b")
+        set_pairs(sets, "ps", "part_a", "part_b")
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("support"))
         .orderBy(F.col("support").desc(), "part_a", "part_b")
@@ -476,7 +465,7 @@ def basket_lift_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket relation feeds all three statistics (in-row pair expansion
     for pair supports, explode for item supports, a count for the
     basket total; the distinct + self-join formulation would shuffle
-    the fact relation twice more); the top-{LIFT_TOPK} cut is
+    the fact relation twice more); the top-50 cut is
     TakeOrderedAndProject; item supports are a part-cardinality
     relation (dimension-scale → broadcast); the basket total is a
     one-row relation cross-joined in. Every metric is an exact integer
@@ -491,18 +480,8 @@ def basket_lift_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     isup = sets.select(F.explode("ps").alias("l_partkey")).groupBy(
         "l_partkey"
     ).agg(F.count(F.lit(1)).alias("s"))
-    pair_structs = F.flatten(
-        F.transform(
-            "ps",
-            lambda x, i: F.transform(
-                F.slice("ps", i + 2, F.size("ps")),
-                lambda y: F.struct(x.alias("part_a"), y.alias("part_b")),
-            ),
-        )
-    )
     psup = (
-        sets.select(F.explode(pair_structs).alias("p"))
-        .select("p.part_a", "p.part_b")
+        set_pairs(sets, "ps", "part_a", "part_b")
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("supp_ab"))
         .orderBy(F.col("supp_ab").desc(), "part_a", "part_b")
@@ -669,7 +648,7 @@ def sort_range_equidepth_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary search needed at 8 buckets), and per-bucket (count, min, max)
     where ``monotone_ok`` PROVES bucket i's minimum clears bucket i-1's
     maximum — the disjointness a downstream merge-read depends on. The
-    final window runs over {RANGE_SORT_BUCKETS} rows, micro by
+    final window runs over 8 rows, micro by
     construction (the corpus-sized work is one partial-aggregated
     shuffle). Equi-depth (not equi-width) is what survives skew: every
     bucket holds ~N/B rows whatever the value distribution, so no

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_jdbc_limit_spark.operators.registry import query
-from spark_jdbc_limit_spark.operators.relational import round_dbl, sql_round_dbl
+from spark_jdbc_limit_spark.operators.relational import round_dbl, set_pairs, sql_round_dbl
 from spark_jdbc_limit_spark.operators.reuse import memo
 from spark_jdbc_limit_spark.operators.text import FP_BASE, FP_MOD
 from spark_jdbc_limit_spark.sources.catalog import load_table
@@ -245,32 +245,22 @@ def _band_pairs(bands: DataFrame) -> DataFrame:
     """Distinct candidate pairs (d1 < d2) from band buckets via ONE
     bucket-keyed shuffle (optimization round 14, guide §2.2): group each
     (band_id, band_hash) bucket into a sorted doc set, expand the
-    C(|bucket|, 2) ordered pairs in-row (the supplier-edge / basket
-    codegen slice/transform shape, graph.py:121), then distinct across
-    bands. The self-equi-join form this replaces shuffled the band
-    relation TWICE (aliasing defeats exchange reuse) and needed a
-    localCheckpoint to keep the signature pass from running per branch —
-    single-consumer bands need neither. Work is Σ C(|bucket|, 2) either
-    way (identical to the join's per-bucket pair count); a mega-bucket
-    would hit both forms alike, and LSH bucket occupancy is the designed
-    bound."""
+    C(|bucket|, 2) ordered pairs in-row (``relational.set_pairs``, the
+    supplier-edge / basket expansion), then distinct across bands. The
+    self-equi-join form this replaces shuffled the band relation TWICE
+    (aliasing defeats exchange reuse) and needed a localCheckpoint to
+    keep the signature pass from running per branch — single-consumer
+    bands need neither. The minhash LSH candidates (and through
+    ``_near_dup_candidates`` the verified pipeline, its connected
+    components and the sketch audit) come from here; the dHash blocking
+    (multimodal.py) keeps its self-join, measured faster on its small
+    band relation. Work is Σ C(|bucket|, 2) either way (identical to the
+    join's per-bucket pair count); a mega-bucket would hit both forms
+    alike, and LSH bucket occupancy is the designed bound."""
     sets = bands.groupBy("band_id", "band_hash").agg(
         F.array_sort(F.collect_set("doc_id")).alias("ds")
     )
-    pair_structs = F.flatten(
-        F.transform(
-            "ds",
-            lambda x, i: F.transform(
-                F.slice("ds", i + 2, F.size("ds")),
-                lambda y: F.struct(x.alias("d1"), y.alias("d2")),
-            ),
-        )
-    )
-    return (
-        sets.select(F.explode(pair_structs).alias("p"))
-        .select("p.d1", "p.d2")
-        .distinct()
-    )
+    return set_pairs(sets, "ds", "d1", "d2").select("d1", "d2").distinct()
 
 
 
@@ -300,8 +290,9 @@ def _near_dup_candidates(spark: SparkSession, d: DataFrame) -> tuple[DataFrame, 
     """The LSH candidate pairs ``cand`` (d1 < d2) and the shingle hashes
     ``sh`` of the documents in some pair, both eagerly localCheckpointed
     and memoized per (session, documents files): a rebuild of the verify
-    pipeline, and ``dedup_connected_components`` building on it, read the
-    checkpoints instead of re-running the band and shingle jobs."""
+    pipeline, the sketch audit and ``dedup_connected_components``
+    building on it read the checkpoints instead of re-running the band
+    and shingle jobs."""
 
     def build() -> tuple[DataFrame, DataFrame]:
         # one-shuffle bucket expansion (see _band_pairs); cand feeds both
@@ -320,8 +311,9 @@ def _near_dup_candidates(spark: SparkSession, d: DataFrame) -> tuple[DataFrame, 
             .distinct()
         )
         # sh fans out to sizes (twice, via z1/z2) and both sides of the
-        # common-shingle join — four scans of the plan absent CSE, so the
-        # small candidate-shingle set is checkpointed too.
+        # common-shingle join — four scans of the plan absent CSE (five in
+        # the sketch audit, which signs its docs from it), so the small
+        # candidate-shingle set is checkpointed too.
         sh = shingle_hashes(
             d.join(F.broadcast(cand_docs), "doc_id", "left_semi")
         ).localCheckpoint()
@@ -364,22 +356,43 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs only. Verification touches |candidates| × shingles,
     not n² — the shape that survives 100 TB."""
     cand, sh = _near_dup_candidates(spark, load_table(spark, sf_dir, "documents"))
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    return _jaccard_pairs(_common_shingles(cand, sh), sh, JACCARD_THRESHOLD)
+
+
+def _common_shingles(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """(d1, d2, n_common) for each candidate pair sharing a shingle: the
+    candidates join the shingle hashes on their own keys only, so the
+    work is |candidates| × shingles, never n² — shared by the verified
+    pipeline and the sketch audit."""
     s1 = sh.select(F.col("doc_id").alias("d1"), F.col("h").alias("h1"))
     s2 = sh.select(F.col("doc_id").alias("d2b"), F.col("h").alias("h2"))
-    common = (
+    return (
         cand.join(s1, "d1")
         .join(s2, (F.col("d2") == F.col("d2b")) & (F.col("h1") == F.col("h2")))
         .groupBy("d1", "d2")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
+
+
+def _with_sizes(pairs: DataFrame, sh: DataFrame) -> DataFrame:
+    """``pairs`` (d1, d2, ...) with each side's shingle-set size ``n1`` /
+    ``n2`` from ``sh`` — the one size tail of every shingle-overlap
+    entry (verified, exhaustive and prefix-filter Jaccard, containment,
+    the sketch audit)."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     z1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
     z2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    jac = F.col("n_common").cast("double") / (F.col("n1") + F.col("n2") - F.col("n_common"))
+    return pairs.join(z1, "d1").join(z2, "d2")
+
+
+def _jaccard_pairs(common: DataFrame, sh: DataFrame, tau: float) -> DataFrame:
+    """(d1, d2, jaccard ≥ tau) from the pairs' shared-shingle counts."""
+    jac = F.col("n_common").cast("double") / (
+        F.col("n1") + F.col("n2") - F.col("n_common")
+    )
     return (
-        common.join(z1, "d1")
-        .join(z2, "d2")
-        .filter(jac >= JACCARD_THRESHOLD)
+        _with_sizes(common, sh)
+        .filter(jac >= tau)
         .select("d1", "d2", round_dbl(jac, 4).alias("jaccard"))
     )
 
@@ -416,19 +429,7 @@ def _exhaustive_jaccard_pairs(sh: DataFrame, tau: float) -> DataFrame:
     ``dedup_ngram_jaccard_exhaustive`` and the prefix-filter entry's
     cost-chosen exhaustive arm, so the two can never drift. ``sh``
     should be checkpointed by the caller (it feeds four branches)."""
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    common = _posting_common_counts(sh)
-    z1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    z2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    jac = F.col("n_common").cast("double") / (
-        F.col("n1") + F.col("n2") - F.col("n_common")
-    )
-    return (
-        common.join(z1, "d1")
-        .join(z2, "d2")
-        .filter(jac >= tau)
-        .select("d1", "d2", round_dbl(jac, 4).alias("jaccard"))
-    )
+    return _jaccard_pairs(_posting_common_counts(sh), sh, tau)
 
 
 @query(
@@ -916,19 +917,14 @@ def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash bands, whose recall degrades as sizes diverge."""
     d = load_table(spark, sf_dir, "documents")
     sh = shingle_hashes(d).localCheckpoint(eager=False)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    # shared self-join counts (a one-exchange rewrite measured slower —
-    # see _posting_common_counts)
-    common = _posting_common_counts(sh)
-    z1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    z2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
     cont = F.greatest(
         F.col("n_common").cast("double") / F.col("n1"),
         F.col("n_common").cast("double") / F.col("n2"),
     )
+    # shared self-join counts (a one-exchange rewrite measured slower —
+    # see _posting_common_counts)
     return (
-        common.join(z1, "d1")
-        .join(z2, "d2")
+        _with_sizes(_posting_common_counts(sh), sh)
         .filter(cont >= CONTAINMENT_THRESHOLD)
         .select("d1", "d2", round_dbl(cont, 4).alias("containment"))
     )
@@ -1083,36 +1079,6 @@ def best_representative_frame(
     )
 
 
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, m0..m{NUM_HASHES-1}): the full minhash signature as
-    scalar columns — shuffle-free mapInPandas, same integer arithmetic
-    as minhash_band_buckets (and the oracle's sig CTE) bit-for-bit."""
-
-    cols = [f"m{j}" for j in range(NUM_HASHES)]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            sigs: list[np.ndarray] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                ss = _shingle_set(text)
-                if not ss:
-                    continue
-                hs = np.fromiter(ss, dtype=np.int64, count=len(ss))
-                sigs.append(((_MH_A * hs + _MH_B) % FP_MOD).min(axis=1))
-                ids.append(doc_id)
-            mat = (
-                np.stack(sigs) if sigs else np.empty((0, NUM_HASHES), dtype=np.int64)
-            )
-            out = {"doc_id": np.asarray(ids, dtype=np.int64)}
-            for j, c in enumerate(cols):
-                out[c] = mat[:, j]
-            yield pd.DataFrame(out)
-
-    schema = "doc_id long, " + ", ".join(f"{c} long" for c in cols)
-    return _spread(docs.select("doc_id", "text")).mapInPandas(gen, schema)
-
-
 @query(
     "dedup_minhash_estimate_audit",
     category="llm_dedup",
@@ -1167,63 +1133,34 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a small sample to choose the signature length; here the full
     candidate set is audited and the oracle reproduces estimate AND
     truth bit-for-bit (pure integer hashing; ratios are exact IEEE
-    divisions in both engines). Candidate generation is the banded
-    bucket join; exact verification touches candidate docs only — the
-    same scale shape as dedup_minhash_verified."""
-    d = load_table(spark, sf_dir, "documents")
-    sig = minhash_signatures(d).localCheckpoint(eager=False)
-    band_structs = F.array(
+    divisions in both engines). The candidate pairs and the candidate
+    docs' shingles are ``_near_dup_candidates``' memoized checkpoints —
+    the ones dedup_minhash_verified reads, so a session that built
+    either entry runs no band or shingle job for the other — and the
+    exact truth is the same ``_common_shingles`` / ``_with_sizes``
+    verification. Only the signature agreement ``n_agree`` is the
+    audit's own: the candidate docs' signatures are one aggregate over
+    those checkpointed shingles, so the documents are not read again."""
+    cand, sh = _near_dup_candidates(spark, load_table(spark, sf_dir, "documents"))
+    # each candidate doc's signature from its checkpointed shingles, with
+    # minhash_band_buckets' integer arithmetic (products stay < 2^62)
+    sig = sh.groupBy("doc_id").agg(
         *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                (
-                    (F.col(f"m{b * LSH_ROWS}") * FP_BASE + F.col(f"m{b * LSH_ROWS + 1}"))
-                    % FP_MOD
-                ).alias("band_hash"),
-            )
-            for b in range(LSH_BANDS)
+            F.min((F.col("h") * MINHASH_A[j] + MINHASH_B[j]) % FP_MOD).alias(f"m{j}")
+            for j in range(NUM_HASHES)
         ]
     )
-    bands = sig.select("doc_id", F.explode(band_structs).alias("b")).select(
-        "doc_id", F.col("b.band_id").alias("band_id"), F.col("b.band_hash").alias("band_hash")
-    )
-    # one-shuffle bucket expansion (see _band_pairs) instead of the
-    # aliased band self-join; cand still fans out to three consumers, so
-    # it keeps its checkpoint.
-    cand = _band_pairs(bands).localCheckpoint(eager=False)
     s1 = sig.select(F.col("doc_id").alias("d1"), *[F.col(f"m{j}").alias(f"a{j}") for j in range(NUM_HASHES)])
     s2 = sig.select(F.col("doc_id").alias("d2"), *[F.col(f"m{j}").alias(f"b{j}") for j in range(NUM_HASHES)])
     n_agree = sum(
         (F.col(f"a{j}") == F.col(f"b{j}")).cast("long") for j in range(NUM_HASHES)
     )
     agree = cand.join(s1, "d1").join(s2, "d2").select("d1", "d2", n_agree.alias("n_agree"))
-    # exact truth from shingle sets of candidate docs only
-    cand_docs = (
-        cand.select(F.col("d1").alias("doc_id"))
-        .unionByName(cand.select(F.col("d2").alias("doc_id")))
-        .distinct()
-    )
-    sh = shingle_hashes(
-        d.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-    ).localCheckpoint(eager=False)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    t1 = sh.select(F.col("doc_id").alias("d1"), F.col("h").alias("h1"))
-    t2 = sh.select(F.col("doc_id").alias("d2b"), F.col("h").alias("h2"))
-    common = (
-        cand.join(t1, "d1")
-        .join(t2, (F.col("d2") == F.col("d2b")) & (F.col("h1") == F.col("h2")))
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    z1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    z2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
     nc = F.coalesce(F.col("n_common"), F.lit(0))
     exact = nc.cast("double") / (F.col("n1") + F.col("n2") - nc)
     est = F.col("n_agree").cast("double") / NUM_HASHES
     return (
-        agree.join(common, ["d1", "d2"], "left")
-        .join(z1, "d1")
-        .join(z2, "d2")
+        _with_sizes(agree.join(_common_shingles(cand, sh), ["d1", "d2"], "left"), sh)
         .select(
             "d1",
             "d2",
@@ -1381,6 +1318,19 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 INCR_BATCH_MOD = 5  #: doc_id % MOD == 0 plays the "newly ingested batch"
 
 
+def corpus_probe_index(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The standing corpus's dedup probe index: its distinct content
+    digests ``h`` and its distinct minhash band buckets ``(band_id,
+    band_hash)``, the standing corpus being ``docs`` outside the new
+    batch (doc_id % INCR_BATCH_MOD != 0). The one derivation behind the
+    incremental entry, the streaming gate's derived sides and the index
+    ``streaming.ingest.materialize_corpus_index`` writes."""
+    corpus = docs.filter(F.pmod(F.col("doc_id"), F.lit(INCR_BATCH_MOD)) != 0)
+    digests = corpus.select(F.md5(F.col("text").cast("binary")).alias("h")).distinct()
+    bands = minhash_band_buckets(corpus).select("band_id", "band_hash").distinct()
+    return digests, bands
+
+
 @query(
     "dedup_incremental_new_batch",
     category="llm_dedup",
@@ -1443,18 +1393,11 @@ def dedup_incremental_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates at every SF; exact hits at sf0.1, the only SF shipping
     exact duplicate documents — FIXTURES.md)."""
     d = load_table(spark, sf_dir, "documents")
-    is_batch = F.pmod(F.col("doc_id"), F.lit(INCR_BATCH_MOD)) == 0
-    batch = d.filter(is_batch)
-    corpus = d.filter(~is_batch)
+    batch = d.filter(F.pmod(F.col("doc_id"), F.lit(INCR_BATCH_MOD)) == 0)
+    cmd5, cbands = corpus_probe_index(d)
     bmd5 = batch.select("doc_id", F.md5(F.col("text").cast("binary")).alias("h"))
-    cmd5 = corpus.select(F.md5(F.col("text").cast("binary")).alias("h")).distinct()
     exact_ids = bmd5.join(cmd5, "h", "left_semi").select("doc_id")
-    bands_b = minhash_band_buckets(batch.select("doc_id", "text"))
-    cbands = (
-        minhash_band_buckets(corpus.select("doc_id", "text"))
-        .select("band_id", "band_hash")
-        .distinct()
-    )
+    bands_b = minhash_band_buckets(batch)
     near_ids = (
         bands_b.join(cbands, ["band_id", "band_hash"], "left_semi")
         .select("doc_id")

@@ -224,7 +224,7 @@ N_CORRUPT_LINES = 3
     """,
 )
 def source_csv_corrupt_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dirty-data posture: a CSV with {N_CORRUPT_LINES} malformed lines
+    """Dirty-data posture: a CSV with 3 malformed lines
     (wrong arity / non-numeric keys) parsed in PERMISSIVE mode with a
     corrupt-record column. Every malformed line lands in quarantine with
     its raw text; every well-formed row parses — the job never dies. At

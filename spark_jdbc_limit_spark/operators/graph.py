@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_jdbc_limit_spark.operators.registry import query
-from spark_jdbc_limit_spark.operators.relational import round_dbl, sql_round_dbl
+from spark_jdbc_limit_spark.operators.relational import round_dbl, set_pairs, sql_round_dbl
 from spark_jdbc_limit_spark.operators.reuse import memo
 from spark_jdbc_limit_spark.sources.catalog import load_table
 
@@ -105,32 +105,22 @@ def _supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     count clears the adaptive weight threshold.
 
     Pair generation: ONE shuffle groups each order's distinct suppliers
-    into a sorted set (collect_set absorbs the distinct), then a codegen
-    slice/transform expansion emits the C(|basket|, 2) ordered pairs
-    in-row — bounded by basket size, never a catalog cross join, and one
-    full shuffle cheaper than the distinct + self-equi-join formulation
-    (which shuffles the fact relation for the distinct AND for the join;
+    into a sorted set (collect_set absorbs the distinct), then
+    ``set_pairs`` emits the C(|basket|, 2) ordered pairs in-row — bounded
+    by basket size, never a catalog cross join, and one full shuffle
+    cheaper than the distinct + self-equi-join formulation (which
+    shuffles the fact relation for the distinct AND for the join;
     measured ~40% slower at sf0.1). The per-order set is basket-bounded,
     so no collect_set list can blow an executor at any corpus scale."""
     li = load_table(spark, sf_dir, "lineitem")
     sets = li.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_suppkey")).alias("ss")
     )
-    pair_structs = F.flatten(
-        F.transform(
-            "ss",
-            lambda x, i: F.transform(
-                F.slice("ss", i + 2, F.size("ss")),
-                lambda y: F.struct(x.alias("s1"), y.alias("s2")),
-            ),
-        )
-    )
     # The fact-sized work happens exactly once: the threshold quantile,
     # the edge filter and the edge count re-read this eagerly checkpointed
     # pair-cardinality relation.
     pairs = (
-        sets.select(F.explode(pair_structs).alias("p"))
-        .select("p.s1", "p.s2")
+        set_pairs(sets, "ss", "s1", "s2")
         .groupBy("s1", "s2")
         .agg(F.count(F.lit(1)).alias("w"))
         .localCheckpoint()
@@ -1388,18 +1378,8 @@ def graph_jaccard_link_prediction(
     )
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
     sets = adj.groupBy("node").agg(F.array_sort(F.collect_set("nbr")).alias("ns"))
-    pair_structs = F.flatten(
-        F.transform(
-            "ns",
-            lambda x, i: F.transform(
-                F.slice("ns", i + 2, F.size("ns")),
-                lambda y: F.struct(x.alias("u"), y.alias("v")),
-            ),
-        )
-    )
     cn = (
-        sets.select(F.explode(pair_structs).alias("p"))
-        .select("p.u", "p.v")
+        set_pairs(sets, "ns", "u", "v")
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("cn"))
     )
@@ -1824,19 +1804,9 @@ def graph_resource_allocation_links(
     sets = adj.groupBy("node").agg(
         F.array_sort(F.collect_set("nbr")).alias("ns")
     )
-    pair_structs = F.flatten(
-        F.transform(
-            "ns",
-            lambda x, i: F.transform(
-                F.slice("ns", i + 2, F.size("ns")),
-                lambda y: F.struct(x.alias("u"), y.alias("v")),
-            ),
-        )
+    wedges = set_pairs(
+        sets.withColumn("t", F.expr(f"{RA_SCALE}L div size(ns)")), "ns", "u", "v"
     )
-    wedges = sets.select(
-        F.explode(pair_structs).alias("p"),
-        F.expr(f"{RA_SCALE}L div size(ns)").alias("t"),
-    ).select("p.u", "p.v", "t")
     cn = wedges.groupBy("u", "v").agg(
         F.count(F.lit(1)).cast("long").alias("cn"),
         F.sum("t").cast("long").alias("ra_scaled"),

@@ -642,9 +642,9 @@ def pipeline_decontaminate_eval_overlap(
     pipeline runs before training: a training document that shares long
     n-grams with the held-out evaluation set leaks the benchmark into
     the weights, so such docs are flagged (and typically dropped or
-    span-cut). Here the deterministic doc_id % {DECON_EVAL_MOD} == 0 slice
-    plays the eval set; per TRAINING doc (≥ {DUP_ANCHOR_L} tokens) the
-    screen reports its {DUP_ANCHOR_L}-gram position count, how many of
+    span-cut). Here the deterministic doc_id % 11 == 0 slice
+    plays the eval set; per TRAINING doc (≥ 8 tokens) the
+    screen reports its 8-gram position count, how many of
     those positions collide with ANY eval-set gram, and the flag.
 
     Plan (the reason this is affordable at 100 TB): the eval side
@@ -717,7 +717,7 @@ def pipeline_decontaminate_eval_overlap(
 def pipeline_decontaminate_span_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ACTIONABLE half of the decontamination screen: instead of
     dropping a flagged training document whole, remove exactly the
-    tokens covered by some eval-set {DUP_ANCHOR_L}-gram — the span-level
+    tokens covered by some eval-set 8-gram — the span-level
     remedy used when a long doc contains one leaked benchmark passage
     (dropping it entirely wastes the clean 99%). Training docs only in
     the output (the eval slice is held out, not rewritten); short docs
@@ -863,11 +863,11 @@ def curate_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Stage semantics: the gate (trigram-repetition + length) screens every
     document; gated docs in the deterministic eval slice
-    (doc_id % {DECON_EVAL_MOD} == 0) are HELD OUT (never rewritten);
+    (doc_id % 11 == 0) are HELD OUT (never rewritten);
     the remaining training docs lose (a) every token covered by a
-    duplicated >= {DUP_ANCHOR_L}-gram whose anchor bucket a lower doc_id
+    duplicated >= 8-gram whose anchor bucket a lower doc_id
     owns (same owner rule as ``curate_span_cut_pipeline``) and (b) every
-    token covered by an {DUP_ANCHOR_L}-gram occurring anywhere in the
+    token covered by an 8-gram occurring anywhere in the
     UNGATED eval slice (benchmarks leak regardless of their quality
     score). A position covered by both families is counted in both
     per-family columns but removed once — n_tokens_removed is the union,
@@ -1213,7 +1213,7 @@ def mix_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-source rebalancing (weight ∝ n^alpha, alpha < 1 upsamples the
     tail, alpha=1 is proportional, alpha=0 uniform): per (lang, source)
     stratum, its sampling weight and the document quota out of a
-    {MIX_TARGET_DOCS}-doc budget. The corpus collapses to stratum
+    100000-doc budget. The corpus collapses to stratum
     cardinality in ONE map-side-combined aggregate (the only data-sized
     work); the normalizing window then runs over that micro relation.
     Downstream, the quota feeds the deterministic hash sampler
@@ -2093,7 +2093,7 @@ def pipeline_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFr
     distribution — the principled replacement for 'filter by classifier
     score' when you want web data that LOOKS like your target domain.
     log w(x) = Σ_tokens [ln p_tgt(w) − ln p_raw(w)] with add-half
-    smoothing over the shared vocabulary; the top-{DSIR_TOP_K} docs by
+    smoothing over the shared vocabulary; the top-25 docs by
     weight are the ones importance resampling would draw first.
 
     Float discipline: the per-token terms are fixed log expressions
@@ -2613,8 +2613,8 @@ TBS_SCORE_SCALE = 10_000
 )
 def pipeline_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The selection every budgeted pretraining run performs after
-    allocation: given a global token budget ({TBS_BUDGET_NUM}/
-    {TBS_BUDGET_DEN} of corpus tokens here), keep the highest-quality
+    allocation: given a global token budget (1/4 of corpus tokens
+    here), keep the highest-quality
     documents — quality proxied by the distinct-token ratio, the
     cheapest scan-local repetition signal — until the budget is
     exhausted. Selection is the largest PREFIX of the
@@ -2627,7 +2627,7 @@ def pipeline_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the obvious corpus-wide window cumsum; the ENGINE
     never runs one. Two-phase shape (the ``global_rownum_two_phase`` /
     ``sample_stratified_exact`` discipline): scores quantize to
-    <= {TBS_SCORE_SCALE}+1 integer buckets, one partial-aggregated
+    <= 10000+1 integer buckets, one partial-aggregated
     groupBy yields per-bucket token sums, a window over THAT micro
     relation computes bucket-prefix totals, and each doc's verdict is a
     broadcast-join lookup — full buckets are decided with zero sorting,

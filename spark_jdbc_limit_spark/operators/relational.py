@@ -54,6 +54,27 @@ def round_dbl(col, scale=4):
     return F.floor(col * F.lit(s) + F.lit(0.5)) / F.lit(s)
 
 
+def set_pairs(df: DataFrame, s: str, a: str, b: str) -> DataFrame:
+    """Every pair ``(a, b)`` with ``a < b`` drawn from the array-sorted,
+    duplicate-free set column ``s`` (a ``array_sort(collect_set(...))``):
+    C(|s|, 2) rows per input row, expanded in-row by a codegen
+    slice/transform — no join, no shuffle — with ``df``'s other columns
+    riding along. The one pair expansion behind the supplier edges, the
+    graph wedges, basket co-occurrence and LSH band buckets; each caller
+    keeps its own grouping, distinct or count."""
+    keep = [c for c in df.columns if c != s]
+    pairs = F.flatten(
+        F.transform(
+            s,
+            lambda x, i: F.transform(
+                F.slice(s, i + 2, F.size(s)),
+                lambda y: F.struct(x.alias(a), y.alias(b)),
+            ),
+        )
+    )
+    return df.select(*keep, F.explode(pairs).alias("p")).select(*keep, f"p.{a}", f"p.{b}")
+
+
 def sql_round_dbl(expr: str, scale: int = 4) -> str:
     s = float(10**scale)
     return f"FLOOR(({expr}) * {s} + 0.5) / {s}"
@@ -923,7 +944,7 @@ Q22_DORMANT_SINCE = "2000-01-01"
 )
 def q22_dormant_high_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 (phone-prefix cohorts become nations — no phone column;
-    'never ordered' becomes 'no order since {Q22_DORMANT_SINCE}', which
+    'never ordered' becomes 'no order since 2000-01-01', which
     is non-vacuous on this corpus): wealthy-but-dormant accounts, the
     sales-outreach classic. Three canonical shapes in one query: a
     scalar aggregate subquery (exact decimal sum / count, so the
@@ -1206,7 +1227,7 @@ Q21_TOPK = 20
     """,
 )
 def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 (lateness adapted: shipped >{Q21_LATE_DAYS} days after
+    """TPC-H Q21 (lateness adapted: shipped >90 days after
     the order date replaces receipt-after-commit — columns absent):
     suppliers who were the ONLY late supplier on a multi-supplier order,
     the classic semi-PLUS-anti double correlation, here collapsed to
@@ -1221,7 +1242,7 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_late = sum(is_late) over the same — a supplier qualifies iff
     is_late ∧ n_supp > 1 ∧ n_late = 1. The window's order-key exchange
     is reusable from the pairs⋈orders sort-merge join; supplier is
-    broadcast; top-{Q21_TOPK} is TakeOrderedAndProject. Versus the
+    broadcast; top-20 is TakeOrderedAndProject. Versus the
     textbook plan (distinct + HAVING semi + anti self-join) this drops a
     full lineitem scan, two distincts and two joins — at 100 TB the
     removed second fact-table pass is the dominant saving."""

@@ -9,8 +9,10 @@ Its users:
   query vector, the z-order key maxima, the jaccard posting-length probe,
   the IVF probe count;
 - fitted models: the IVF centroids and the PQ codebooks;
-- checkpoints: the supplier edge relation and the near-dup candidate
-  pairs with their shingles, and the bucketed-table write.
+- checkpoints: the supplier edge relation, the near-dup candidate pairs
+  with their shingles (read by the verified pipeline, its connected
+  components and the minhash estimate audit), and the bucketed-table
+  write.
 
 Nothing else in the operators keeps data across builds: no operator
 registers a frame with Spark's cache (``.cache()`` / ``.persist()``),

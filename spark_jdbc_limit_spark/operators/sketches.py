@@ -150,11 +150,11 @@ TOPK_TRACKED = 10_000
 )
 def agg_approx_topk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy hitters via Spark 4's approx_top_k sketch, audited: the
-    sketch tracks up to {TOPK_TRACKED} items and is EXACT whenever the
+    sketch tracks up to 10000 items and is EXACT whenever the
     true distinct count fits (the monitoring sweet spot — bounded state
     per partition, mergeable, no second pass). The query computes the
-    exact top-{TOPK_K} (two-level count + TakeOrdered, no global sort)
-    AND the sketch's top-{TOPK_K}, and emits the exact rows plus a
+    exact top-3 (two-level count + TakeOrdered, no global sort)
+    AND the sketch's top-3, and emits the exact rows plus a
     boolean asserting the sketch reproduced every (item, count) pair as
     a SET (set comparison — within-top-k count ties order arbitrarily
     in the sketch output; the top-k/rest BOUNDARY is unambiguous on
@@ -295,7 +295,7 @@ def agg_count_min_frequency_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     ×CMS_D explode touches only that micro relation, never fact rows.
     Folding per-key totals into cells afterwards is exact because CMS
     cells are sums: Σ_x n_x·[h_i(x)=cell] == streaming inserts. The cell
-    table (≤ d·w = {CMS_D}×{CMS_W} rows regardless of data volume — the whole point
+    table (≤ d·w = 4×256 rows regardless of data volume — the whole point
     of a CMS) broadcasts back for the min-over-rows estimate. At 100 TB
     the only full-data pass is the per-key count; everything downstream
     is O(dimension) and O(d·w).

@@ -368,11 +368,11 @@ def sql_listagg_within_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     sep ORDER BY ...) — the oracle demonstrates the dialect mapping.
     The doubles being ordered are bit-identical parquet values, so
     raw-float ORDER BY is exact, and the name tiebreak covers equal
-    balances. Inputs are capped to the top-{LISTAGG_TOP} rows per
+    balances. Inputs are capped to the top-5 rows per
     segment first (a ranked filter), so the aggregated string is
     shortlist-sized — the unbounded-listagg anti-pattern (concat the
     whole corpus into one value) never appears. Plan: one shuffle for
-    the per-segment rank, one micro agg over {LISTAGG_TOP}·segments
+    the per-segment rank, one micro agg over 5·segments
     rows."""
     load_table(spark, sf_dir, "customer").createOrReplaceTempView(
         "customer_listagg"

@@ -2619,7 +2619,7 @@ def _wilson_oracle() -> str:
 def mix_source_rate_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wilson score intervals — the interval the EB-shrinkage entry's
     point estimates deserve: for each source's quality-pass rate
-    (the same n_chars >= {EB_CHAR_GATE} gate), the 95% score interval
+    (the same n_chars >= 200 gate), the 95% score interval
     center ± halfwidth, and a verdict flag when the interval excludes
     the pooled corpus rate (the correctly-calibrated version of
     'this source is significantly off-mix' — Wilson, unlike the Wald

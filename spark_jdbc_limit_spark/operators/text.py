@@ -682,8 +682,8 @@ SENT_RE = "[.!?]+"
 )
 def text_readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flesch reading-ease — the classic document-quality/complexity
-    gate (curricula filters bucket training text by it): {FLESCH_BASE}
-    − {FLESCH_SENT_W}·(words/sentence) − {FLESCH_SYL_W}·(syllables/word),
+    gate (curricula filters bucket training text by it): 206.835
+    − 1.015·(words/sentence) − 84.6·(syllables/word),
     with syllables approximated by vowel GROUPS (the standard cheap
     estimator — exact syllabification needs a dictionary) and sentence
     count floored at 1 so fragments don't divide by zero. Pure codegen:
@@ -747,14 +747,14 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate, template spam, and over-deduplicated corpora bend the
     log-log line, so the fitted slope + correlation is a one-row
     distribution fingerprint worth tracking per ingest batch. Computed
-    as closed-form OLS on (ln rank, ln freq) over the top-{ZIPF_TOP}
+    as closed-form OLS on (ln rank, ln freq) over the top-1000
     vocabulary head: slope = covar_pop/var_pop, intercept from the
     means, fit quality as Pearson r — all built-in JVM aggregates, no
     UDF. Scale shape: the fact-sized work is ONE partial-aggregated
     token count (explode → hash agg); the head cut is
     TakeOrderedAndProject over the vocabulary relation ((count, token)
     tie-break makes the cut deterministic in both engines), and the
-    regression runs over {ZIPF_TOP} rows. At 100 TB the vocabulary
+    regression runs over 1000 rows. At 100 TB the vocabulary
     relation is heavy-tailed but the aggregate is map-side combined and
     the head cut never materializes a global sort."""
     d = load_table(spark, sf_dir, "documents")
@@ -835,7 +835,7 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the fact-sized work is one explode + TWO map-side-
     combined aggregates (per-doc counts, per-token min); the running
     sums use the module's two-phase bucket pattern
-    ({HEAPS_BUCKET_DOCS}-doc id ranges → no window partition ever holds
+    (1024-doc id ranges → no window partition ever holds
     more than a bucket of docs, valid because doc ids are
     dense-sequential), and the regression is one aggregate over the
     doc-cardinality curve."""
@@ -928,8 +928,8 @@ CHUNK_STRIDE = 24
 )
 def doc_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retrieval-corpus chunking — the indexing-side twin of RAG: every
-    document becomes overlapping {CHUNK_WORDS}-word windows every
-    {CHUNK_STRIDE} words (the overlap keeps answers that straddle a
+    document becomes overlapping 32-word windows every
+    24 words (the overlap keeps answers that straddle a
     boundary findable), each chunk addressed by (doc_id, chunk_idx) and
     content-keyed by md5 for downstream chunk-level dedup / embedding
     joins. Pure codegen: split → sequence → explode → slice —
@@ -1133,7 +1133,7 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram perplexity explodes).
 
     Model: P(w2|w1) = (c(w1,w2) + k) / (c(w1→·) + k·V) with
-    k={BIGRAM_SMOOTH_K} and V the corpus vocabulary size; context mass
+    k=0.5 and V the corpus vocabulary size; context mass
     c(w1→·) is the sum of bigram counts from w1, so every conditional
     distribution is properly normalized over the smoothed vocabulary.
 
@@ -1332,7 +1332,7 @@ def text_bpe_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair list is built IN-ROW by transform over a sequence — no join,
     no per-character explode of the corpus); one partial-aggregated
     count per pair (vocabulary of pairs is alphabet², bounded), then a
-    top-{BPE_TOP_PAIRS} over the tiny pair relation. At 100 TB the only
+    top-20 over the tiny pair relation. At 100 TB the only
     fact-sized stage is the scan+expand, embarrassingly parallel; a
     full BPE trainer iterates this exact plan with a broadcast merge
     table."""

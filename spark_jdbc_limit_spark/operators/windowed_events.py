@@ -406,8 +406,8 @@ def events_bot_rate_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Abuse/bot screening — the first data-quality pass on any
     behavioral corpus headed for training: per user, the SUSTAINED
     event rate (events per minute over the user's full active span),
-    flagged when it exceeds {BOT_RATE_MULT}× the corpus MEDIAN rate
-    (over ≥{BOT_MIN_EVENTS} events; single-instant users are unrated).
+    flagged when it exceeds 1.2× the corpus MEDIAN rate
+    (over ≥20 events; single-instant users are unrated).
     The threshold is corpus-ADAPTIVE, not absolute — the same design
     lesson as the triangle edge cut (graph.py): any constant
     events/minute bar that catches bots at one traffic level is
@@ -550,14 +550,14 @@ EWMA_LAGS = 8  #: finite EWMA horizon (weights 0.5^j, j < EWMA_LAGS)
 )
 def events_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EWMA trend smoothing — the monitoring/forecasting primitive: per
-    event type, each hour's count blended with its {EWMA_LAGS}-hour
+    event type, each hour's count blended with its 8-hour
     history under geometric decay 0.5^j, renormalized over the lags
     that actually exist (so early hours aren't biased toward zero).
     The infinite-memory EWMA recurrence y_t = αx_t + (1−α)y_{{t−1}} is
     inherently sequential; truncating to a finite horizon makes it a
-    BOUNDED window expression — {EWMA_LAGS} ``lag()`` taps over one
+    BOUNDED window expression — 8 ``lag()`` taps over one
     (type, hour)-ordered window — which is embarrassingly parallel and
-    ANSI-verifiable, at the cost of a ≤0.5^{EWMA_LAGS} ≈ 0.4% tail
+    ANSI-verifiable, at the cost of a ≤0.5^8 ≈ 0.4% tail
     truncation. Aggregate-first discipline: the raw stream collapses to
     the (type, hour) micro relation in one partial-aggregated pass;
     the window runs over thousands of rows regardless of corpus size.
@@ -1090,7 +1090,7 @@ def events_top_paths_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pairs → 3-grams): per user timeline (lead windows partitioned by
     user — one shuffle on user_id, sequences never leave their
     partition), every consecutive 3-step path, counted corpus-wide with
-    map-side partials, top-{PATH_TOPK} as TakeOrderedAndProject with a
+    map-side partials, top-20 as TakeOrderedAndProject with a
     path tie-break. The n-gram-over-sessions shape generalizes: swap
     event_type for page/SKU/prompt-template ids unchanged. Ordering ties
     inside a user timeline break on event_id in both engines."""
@@ -1231,7 +1231,7 @@ def events_ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Experiment readout: a deterministic hash split (user_id parity —
     in production, bucket a salted hash; parity keeps the oracle
     engine-exact), per-user conversion (largest purchase above
-    {AB_CONV_MIN_VALUE}), and the pooled two-proportion z-test both
+    150.0), and the pooled two-proportion z-test both
     engines evaluate to the same doubles because the formula is spelled
     identically on both sides. The zero-variance corner (pooled rate 0
     or 1) yields NULL z / NULL significance via NULLIF rather than a
@@ -1247,7 +1247,7 @@ def events_ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     uplift/holdout readout pays anyway; k-bucket experiments widen the
     conditional aggregate. Stats caveat documented, not hidden: pooled
     z is valid at these counts (n·p >> 5); SIGNIFICANT compares |z| to
-    the two-sided 95% critical value {AB_Z_CRIT}."""
+    the two-sided 95% critical value 1.96."""
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         (
@@ -1691,8 +1691,8 @@ _DYN_GAP_SQL = f"""CASE event_type
 def events_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``session_window`` with a DYNAMIC gap expression (SPARK-36465):
     each event holds its session open for a type-dependent duration
-    (purchases/signups {DYN_GAP_LONG} min, errors {DYN_GAP_SHORT} min,
-    browsing {DYN_GAP_MED}) — the real sessionization policy product
+    (purchases/signups 45 min, errors 5 min,
+    browsing 20) — the real sessionization policy product
     analytics uses, inexpressible with the fixed-gap entry. Merge
     semantics are interval-union: each event claims [ts, ts+gap), a
     new session starts exactly when an event's ts clears the running

@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 
 from spark_jdbc_limit_spark.operators.dedup import (
     INCR_BATCH_MOD,
+    corpus_probe_index,
     minhash_band_buckets,
 )
 from spark_jdbc_limit_spark.sources.catalog import load_table
@@ -84,22 +85,16 @@ def materialize_corpus_index(spark: SparkSession, sf_dir: str, out_dir: str) -> 
     the part of the derived-relation formulation whose cost grows with
     corpus size (measured by the ``stream_ingest_static_index`` lever,
     ``bench.py --levers``)."""
-    corpus = load_table(spark, sf_dir, "documents").filter(
-        F.pmod(F.col("doc_id"), F.lit(INCR_BATCH_MOD)) != 0
-    )
-    corpus.select(F.md5(F.col("text").cast("binary")).alias("h")).distinct().write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/digests.parquet")
-    minhash_band_buckets(corpus).select(
-        "band_id", "band_hash"
-    ).distinct().write.mode("overwrite").parquet(f"{out_dir}/bands.parquet")
+    digests, bands = corpus_probe_index(load_table(spark, sf_dir, "documents"))
+    digests.write.mode("overwrite").parquet(f"{out_dir}/digests.parquet")
+    bands.write.mode("overwrite").parquet(f"{out_dir}/bands.parquet")
 
 
 def stream_ingest_dedup_gate(
     spark: SparkSession, sf_dir: str, index_dir: str | None = None
 ) -> DataFrame:
-    """Per newly-ingested document (the deterministic doc_id %
-    {INCR_BATCH_MOD} == 0 slice of the stream): ``is_exact_dup`` (its
+    """Per newly-ingested document (the deterministic doc_id % 5 == 0
+    slice of the stream, ``INCR_BATCH_MOD``): ``is_exact_dup`` (its
     content digest exists in the standing corpus) and
     ``has_near_dup_candidate`` (any of its minhash band buckets is
     occupied by the corpus). Same flags, same integer arithmetic, same
@@ -117,32 +112,15 @@ def stream_ingest_dedup_gate(
         F.pmod(F.col("doc_id"), F.lit(INCR_BATCH_MOD)) == 0
     )
     if index_dir is not None:
-        cmd5 = spark.read.parquet(f"{index_dir}/digests.parquet").withColumn(
-            "e_hit", F.lit(1)
-        )
-        cbands = spark.read.parquet(f"{index_dir}/bands.parquet").withColumn(
-            "n_hit", F.lit(1)
-        )
+        cmd5 = spark.read.parquet(f"{index_dir}/digests.parquet")
+        cbands = spark.read.parquet(f"{index_dir}/bands.parquet")
     else:
-        corpus = load_table(spark, sf_dir, "documents").filter(
-            F.pmod(F.col("doc_id"), F.lit(INCR_BATCH_MOD)) != 0
-        )
-        cmd5 = (
-            corpus.select(F.md5(F.col("text").cast("binary")).alias("h"))
-            .distinct()
-            .withColumn("e_hit", F.lit(1))
-        )
-        cbands = (
-            minhash_band_buckets(corpus)
-            .select("band_id", "band_hash")
-            .distinct()
-            .withColumn("n_hit", F.lit(1))
-        )
+        cmd5, cbands = corpus_probe_index(load_table(spark, sf_dir, "documents"))
     exact_rows = (
         incoming.select(
             "doc_id", F.md5(F.col("text").cast("binary")).alias("h")
         )
-        .join(cmd5, "h", "left")
+        .join(cmd5.withColumn("e_hit", F.lit(1)), "h", "left")
         .select(
             "doc_id",
             F.coalesce("e_hit", F.lit(0)).alias("e"),
@@ -151,7 +129,7 @@ def stream_ingest_dedup_gate(
     )
     near_rows = (
         minhash_band_buckets(incoming, spread=False)
-        .join(cbands, ["band_id", "band_hash"], "left")
+        .join(cbands.withColumn("n_hit", F.lit(1)), ["band_id", "band_hash"], "left")
         .select(
             "doc_id",
             F.lit(0).alias("e"),
@@ -172,11 +150,11 @@ def stream_decontamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame
     """The eval-overlap decontamination screen run AT INGEST TIME — the
     other half of the curation-on-arrival story (the dedup gate above):
     each micro-batch of incoming training documents is screened against
-    the held-out eval set's {DUP_ANCHOR_L}-gram digests BEFORE it enters
+    the held-out eval set's 8-gram digests BEFORE it enters
     the corpus, so a leaked benchmark passage never needs a corpus-wide
     retroactive sweep. Semantics are EXACTLY the batch entry
     ``pipeline_decontaminate_eval_overlap`` (same anchors, same
-    {DECON_EVAL_MOD}-slice, same flags) — pinned stream==batch by
+    11-slice, same flags) — pinned stream==batch by
     tests/test_streaming.py.
 
     Plan: the incoming side explodes to (doc_id, gram-digest) rows

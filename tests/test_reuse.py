@@ -6,6 +6,7 @@ It is the operators' one reuse path: none of them uses Spark's cache."""
 from __future__ import annotations
 
 import ast
+import glob
 import os
 import re
 import sys
@@ -176,8 +177,9 @@ def test_minhash_verified_sees_documents_rewrite(spark, sf_dir, tmp_path):
 
 def test_warm_near_dup_builds_run_no_jobs(spark, sf_dir):
     """Once a session built the near-dup pipeline, rebuilding it runs no
-    job, and the connected-components entry reuses its checkpoints: a hit
-    on the near-dup kind and no new miss."""
+    job, and the connected-components entry and the minhash estimate
+    audit reuse its checkpoints: a hit each on the near-dup kind and no
+    new miss."""
     kind = "near_dup_candidates"
     verified = get_query("dedup_minhash_verified").builder
     verified(spark, sf_dir)
@@ -185,6 +187,8 @@ def test_warm_near_dup_builds_run_no_jobs(spark, sf_dir):
     hits, misses = reuse.hits[kind], reuse.misses[kind]
     get_query("dedup_connected_components").builder(spark, sf_dir)
     assert (reuse.hits[kind], reuse.misses[kind]) == (hits + 1, misses)
+    get_query("dedup_minhash_estimate_audit").builder(spark, sf_dir)
+    assert (reuse.hits[kind], reuse.misses[kind]) == (hits + 2, misses)
 
 
 @pytest.mark.parametrize("seed", [11, 21])
@@ -213,11 +217,20 @@ def test_ivf_recall_holds_on_low_recall_corpora(spark, tmp_path, seed):
     assert nprobe > IVF_NPROBE
 
 
-@pytest.mark.parametrize("module", ["graph", "dedup", "similarity"])
-def test_docstrings_hold_values_not_placeholders(module):
+PACKAGE = os.path.join(ROOT, "spark_jdbc_limit_spark")
+MODULES = sorted(glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True))
+
+
+def _module_id(path: str) -> str:
+    """``sinks.transactional``; an operator module by its bare name."""
+    name = os.path.relpath(path, PACKAGE)[: -len(".py")].replace(os.sep, ".")
+    return name.removesuffix(".__init__").removeprefix("operators.")
+
+
+@pytest.mark.parametrize("path", MODULES, ids=[_module_id(p) for p in MODULES])
+def test_docstrings_hold_values_not_placeholders(path):
     """Docstrings are plain strings: a ``{CONSTANT}`` in one is shown to
     readers as braces, never as the constant's value."""
-    path = os.path.join(ROOT, "spark_jdbc_limit_spark", "operators", f"{module}.py")
     tree = ast.parse(open(path).read())
     found = [
         (getattr(node, "name", "<module>"), m)

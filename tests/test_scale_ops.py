@@ -5,6 +5,7 @@ the value-hash differential alone wouldn't explain on failure."""
 from __future__ import annotations
 
 import dataclasses
+import itertools
 import json
 
 import pytest
@@ -12,6 +13,22 @@ from pyspark.sql import functions as F
 
 import rotation
 from spark_jdbc_limit_spark.operators import get_query
+from spark_jdbc_limit_spark.operators.relational import set_pairs
+
+
+def test_set_pairs_yields_each_pair_once_in_order(spark):
+    """A sorted set of n items expands to exactly its C(n, 2) pairs, each
+    with a < b, for n in {0, 1, 2, 5}; the row's other columns ride
+    along."""
+    sizes = [0, 1, 2, 5]
+    df = spark.createDataFrame(
+        [(n, list(range(10, 10 + n))) for n in sizes], "n int, s array<int>"
+    )
+    rows = set_pairs(df, "s", "a", "b").collect()
+    assert all(r.a < r.b for r in rows)
+    for n in sizes:
+        got = sorted((r.a, r.b) for r in rows if r.n == n)
+        assert got == list(itertools.combinations(range(10, 10 + n), 2))
 
 
 def test_global_rownum_is_a_permutation_and_monotone(spark, sf_correct):
